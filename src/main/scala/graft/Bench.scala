@@ -11,11 +11,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // events.ts is TIMESTAMP_MICROS today, but earlier testdata was
-    // TIMESTAMP(NANOS), readable only under this legacy conf — keep it
-    // set so a nanos regeneration doesn't abort the warm-up read below
-    // and dump all startup cost into the first timed events query
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // warm-up: touch every input table once so the first timed query does
     // not absorb file-listing, footer-read and codegen/JIT startup costs
     for (t <- Seq("events", "documents", "embeddings"))
@@ -321,16 +316,6 @@ object Bench {
     val runsJson = results.map { r =>
       "\"" + r._1 + "\":[" + r._4.mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // ... but ONLY for a full run: a SPARK_GRAFT_ONLY-restricted
-    // profiling pass must not clobber the complete committed baseline
-    // with a partial map (the tripwire would then silently lose the
-    // other keys' previous medians)
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"),
-        fullLine + "\n" + s"""{"metric":"runs","queries_runs":$runsJson}""" +
-          "\n" + canaryLine + "\n")
-      catch { case _: Throwable => () }
     // between the big map and the final summary so it survives the
     // driver's keep-the-tail stdout truncation
     println(canaryLine)
@@ -381,16 +366,19 @@ object Bench {
       s""""unit":"sec","runs":$Runs,"stream_runs":${Runs + 1},""" +
       s""""keys":${results.size},"sf":"$sfDir"}"""
     println(lastLine)
-    // mirror it into the committed artifact so the repo copy matches the
-    // stdout stream exactly; parsePrevBench keeps FIRST occurrence from
-    // the first `"queries":{` marker, which in this file is the
-    // full-precision line above, so baselines are unaffected
+    // one write, so the file never mixes lines from two rounds, and ONLY
+    // for a full run: a SPARK_GRAFT_ONLY-restricted profiling pass must
+    // not clobber the complete committed baseline with a partial map.
+    // parsePrevBench keeps the FIRST `"queries":{` occurrence, which here
+    // is the full-precision line, so the compact mirror of the last
+    // stdout line does not shift baselines
     if (only.isEmpty)
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"), lastLine + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => () }
+        java.nio.file.Paths.get("BENCH_FULL.json"),
+        Seq(fullLine, s"""{"metric":"runs","queries_runs":$runsJson}""",
+          canaryLine, lastLine).mkString("", "\n", "\n"))
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] BENCH_FULL.json not written: $e") }
   }
 
   /** Per-key rolling-best baseline: parse each artifact text and keep

@@ -4,7 +4,7 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{DataType, TimestampNTZType}
 
 /** Shared time-bucket alignment expressions and the canonical `points`
   * view over the driver testdata (SURVEY.md §1.3, FIXTURES.md §2).
@@ -70,38 +70,11 @@ object Buckets {
   def alignTs(tsS: Column, spp: Int): Column =
     (floor(tsS / spp) * spp).cast("long")
 
-  /** ts_s derivation for a raw `events.ts` column, by physical type:
-    * epoch-nanos LongType (legacy TIMESTAMP(NANOS) testdata read under
-    * `nanosAsLong`) divides down; TIMESTAMP / TIMESTAMP_NTZ (the current
-    * TIMESTAMP_MICROS testdata) goes through `unix_timestamp` (session
-    * tz pinned UTC, so NTZ wall-clock == UTC epoch, matching the DuckDB
-    * oracle's `epoch(date_trunc('second', ts))`).
-    */
-  private def tsSOf(dt: DataType): Column = dt match {
-    case LongType => expr("ts div 1000000000")
-    case _        => epochS(col("ts"))
-  }
+  /** `ts_s` of raw `events.ts`: the UTC session makes NTZ equal to epoch. */
+  private def rawTsS: Column = epochS(col("ts"))
 
-  /** Range predicate `fromS <= ts < untilS` expressed AGAINST THE RAW
-    * `ts` column in its native type, so Catalyst pushes it into the
-    * Parquet scan (`PushedFilters: [GreaterThanOrEqual(ts,…),
-    * LessThan(ts,…)]` → row-group pruning). A filter on the DERIVED
-    * `ts_s` (`unix_timestamp(ts)` / `ts div 1e9`) is an expression and
-    * never reaches the reader — at 100 TB that is the difference
-    * between reading one day and reading the table.
-    *
-    *  - LongType (epoch nanos): integer bounds, `ts_s >= f ⟺ ts >= f·1e9`
-    *    exactly (nanos are non-negative integers).
-    *  - TIMESTAMP_NTZ (current testdata, micros): [[LocalDateTime]]
-    *    literals — wall-clock compare, tz-free, identical to the UTC
-    *    epoch compare under the pinned UTC session.
-    *  - TIMESTAMP (tz-adjusted): [[Instant]] literals.
-    * Whisper timestamps are integer seconds, so second-resolution
-    * literal bounds are exact for every sub-second physical unit.
-    */
+  /** `fromS <= ts < untilS` on RAW `ts`: only that reaches `PushedFilters`. */
   private def tsRange(dt: DataType, fromS: Long, untilS: Long): Column = dt match {
-    case LongType =>
-      col("ts") >= fromS * 1000000000L && col("ts") < untilS * 1000000000L
     case TimestampNTZType =>
       col("ts") >= lit(LocalDateTime.ofEpochSecond(fromS, 0, ZoneOffset.UTC)) &&
         col("ts") < lit(LocalDateTime.ofEpochSecond(untilS, 0, ZoneOffset.UTC))
@@ -122,52 +95,32 @@ object Buckets {
     * §1.3 the role of whisper's point stream is played by
     * `events.parquet` with `metric := event_type`. Column-pruned select so
     * the Parquet scan reads only 3 of 6 columns.
-    *
-    * `events.ts` is currently TIMESTAMP_MICROS (NTZ) parquet; earlier
-    * driver testdata was TIMESTAMP(NANOS), which Spark 4 only reads via
-    * `spark.sql.legacy.parquet.nanosAsLong` (as epoch-nanos LongType).
-    * [[tsSOf]] handles both encodings; the conf stays set so a nanos
-    * regeneration keeps working unchanged.
     */
-  /** Set-once guard for the nanos-compat read conf: avoid rewriting
-    * session conf on every call (a surprise for shared sessions that
-    * watch conf-change events; hosts can pre-set it at session build).
-    */
-  private[ops] def ensureNanosConf(spark: SparkSession): Unit =
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  def points(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureNanosConf(spark)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    raw.select(col("event_type").as("metric"),
-      tsSOf(raw.schema("ts").dataType).as("ts_s"), col("value"))
-  }
+  def points(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/events.parquet")
+      .select(col("event_type").as("metric"), rawTsS.as("ts_s"), col("value"))
 
   /** The raw events frame with the canonical `ts_s` derivation appended
     * — for ops that need non-point columns (event_id, user_id) next to
     * the same epoch-seconds time the whole engine computes on.
     */
-  private[graft] def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureNanosConf(spark)
+  private[graft] def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/events.parquet").withColumn("ts_s", rawTsS)
+
+  /** The points view over `fromS <= ts_s < untilS` with a caller-chosen
+    * metric expression.
+    */
+  private def pointsRangeOf(spark: SparkSession, sfDir: String,
+      fromS: Long, untilS: Long, metric: Column): DataFrame = {
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    raw.withColumn("ts_s", tsSOf(raw.schema("ts").dataType))
+    raw.filter(tsRange(raw.schema("ts").dataType, fromS, untilS))
+      .select(metric.as("metric"), rawTsS.as("ts_s"), col("value"))
   }
 
-  /** [[points]] restricted to `fromS <= ts_s < untilS`, with the range
-    * predicate applied to the RAW parquet column via [[tsRange]] so it
-    * reaches `PushedFilters` / row-group pruning for every physical
-    * timestamp encoding (nanos-long, micros NTZ, tz-adjusted).
-    */
+  /** [[points]] restricted to `fromS <= ts_s < untilS`. */
   def pointsInRange(spark: SparkSession, sfDir: String,
-      fromS: Long, untilS: Long): DataFrame = {
-    ensureNanosConf(spark)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dt = raw.schema("ts").dataType
-    raw.filter(tsRange(dt, fromS, untilS))
-      .select(col("event_type").as("metric"), tsSOf(dt).as("ts_s"), col("value"))
-  }
+      fromS: Long, untilS: Long): DataFrame =
+    pointsRangeOf(spark, sfDir, fromS, untilS, col("event_type"))
 
   /** [[points]] as a STREAMING source: the same canonical
     * `points(metric, ts_s, value)` view over `readStream` (file source,
@@ -176,16 +129,13 @@ object Buckets {
     * oracle SQL applies to them verbatim.
     */
   def pointsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureNanosConf(spark)
-    val path = s"$sfDir/events.parquet"
-    val probe = spark.read.parquet(path)
-    val tsS = tsSOf(probe.schema("ts").dataType)
+    val probe = spark.read.parquet(s"$sfDir/events.parquet")
     // events.parquet may be a single FILE: FileStreamSource force-sets
     // basePath to a NON-glob path itself and then requires it to be a
     // directory — a brace glob selecting exactly this table sidesteps
     // that (basePath falls back to the parent dir)
     spark.readStream.schema(probe.schema).parquet(s"$sfDir/{events.parquet}")
-      .select(col("event_type").as("metric"), tsS.as("ts_s"), col("value"))
+      .select(col("event_type").as("metric"), rawTsS.as("ts_s"), col("value"))
   }
 
   /** DuckDB fragment equivalent of [[points]] — prefixed into oracle SQL
@@ -202,16 +152,10 @@ object Buckets {
     * names exercise neither the dot-bounded glob nor node arithmetic.
     */
   def pointsPathedInRange(spark: SparkSession, sfDir: String,
-      fromS: Long, untilS: Long): DataFrame = {
-    ensureNanosConf(spark)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dt = raw.schema("ts").dataType
-    raw.filter(tsRange(dt, fromS, untilS))
-      .select(
-        concat(lit("shard"), pmod(col("user_id"), lit(4)), lit("."),
-          col("event_type")).as("metric"),
-        tsSOf(dt).as("ts_s"), col("value"))
-  }
+      fromS: Long, untilS: Long): DataFrame =
+    pointsRangeOf(spark, sfDir, fromS, untilS,
+      concat(lit("shard"), pmod(col("user_id"), lit(4)), lit("."),
+        col("event_type")))
 
   /** DuckDB twin of [[pointsPathedInRange]]'s metric derivation, with a
     * caller-chosen CTE name so it can sit NEXT TO [[pointsSql]] (both
@@ -232,16 +176,9 @@ object Buckets {
     * name glob.
     */
   def pointsTaggedInRange(spark: SparkSession, sfDir: String,
-      fromS: Long, untilS: Long): DataFrame = {
-    ensureNanosConf(spark)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dt = raw.schema("ts").dataType
-    raw.filter(tsRange(dt, fromS, untilS))
-      .select(
-        concat(col("event_type"), lit(";shard=s"),
-          pmod(col("user_id"), lit(4))).as("metric"),
-        tsSOf(dt).as("ts_s"), col("value"))
-  }
+      fromS: Long, untilS: Long): DataFrame =
+    pointsRangeOf(spark, sfDir, fromS, untilS,
+      concat(col("event_type"), lit(";shard=s"), pmod(col("user_id"), lit(4))))
 
   /** DuckDB twin of [[pointsTaggedInRange]]'s metric derivation. */
   val pointsTaggedSql: String =

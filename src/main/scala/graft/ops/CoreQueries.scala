@@ -42,13 +42,11 @@ object CoreQueries {
     * reference has no scalar library at all, SURVEY.md §2.7). Pure
     * per-row projection; pushes column pruning to the scan.
     */
-  def scanPropsJson(s: SparkSession, dir: String): DataFrame = {
-    Buckets.ensureNanosConf(s)
+  def scanPropsJson(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
       .select(col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
       .orderBy("event_id")
-  }
 
   val scanPropsJsonSql: String =
     """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k

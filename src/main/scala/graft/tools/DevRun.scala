@@ -6,7 +6,9 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev harness: time registered queries and dump formatted plans.
   * Usage: runMain graft.tools.DevRun <key[,key...]> [sfDir]
-  *        [--explain] [--phases] [--codegen]
+  *        [--explain] [--phases] [--metrics] [--codegen]
+  * `--explain` prints plans through [[normalizePlan]], so the output of
+  * two revisions diffs cleanly.
   * Repeating a key in the list re-runs it codegen-warm — the cheap way
   * to split first-execution compilation from steady-state cost.
   */
@@ -64,7 +66,8 @@ object DevRun {
     }
     if (args.contains("--explain"))
       // scalastyle:off println
-      println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      println(normalizePlan(
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))))
     val t0 = System.nanoTime()
     val n = df.count()
     val dt = (System.nanoTime() - t0) / 1e9
@@ -120,5 +123,51 @@ object DevRun {
     }
     // scalastyle:on println
     spark.stop()
+  }
+
+  /** Make a formatted plan diff-stable across JVMs and edits. Catalyst
+    * expression ids, plan_ids and rdd ids are JVM-global counters, so
+    * each family is renumbered by FIRST APPEARANCE within the plan —
+    * deterministic for an unchanged plan shape, still distinct within a
+    * plan. Run-local parts (shared-index tmp root digest + pid, JVM
+    * identity hashes, RDD creation-site line numbers) are masked.
+    */
+  private[tools] def normalizePlan(plan: String): String = {
+    def renumber(s: String, pat: scala.util.matching.Regex,
+        fmt: Int => String): String = {
+      val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
+      pat.replaceAllIn(s, m =>
+        scala.util.matching.Regex.quoteReplacement(
+          fmt(ids.getOrElseUpdate(m.group(1), ids.size + 1))))
+    }
+    val exprIds = renumber(plan, "#(\\d+)".r, n => s"#$n")
+    val planIds = renumber(exprIds, "plan_id=(\\d+)".r, n => s"plan_id=$n")
+    // rdd ids renumber rather than mask: two distinct checkpointed RDDs
+    // must stay distinguishable so a subtree switching sources diffs.
+    // Both spellings ('rdd_12', 'MapPartitionsRDD[12]') count every RDD
+    // the JVM created before, including earlier queries'.
+    val rddIds = renumber(renumber(planIds, "rdd_([0-9]+)".r, n => s"rdd_$n"),
+      "RDD\\[([0-9]+)\\]".r, n => s"RDD[$n]")
+    rddIds
+      .replaceAll("(graft_[A-Za-z0-9_]+?)_[0-9a-f]{32}_p[0-9]+",
+        "$1_DIGEST_pPID")
+      // JVM object identities: typed-aggregate instances, broadcast
+      // byte arrays, ObjectMapPartitions lambdas
+      .replaceAll("\\$\\$Lambda\\$[0-9]+/0x[0-9a-fA-F]+", "\\$\\$Lambda")
+      // identity hashes only where the text looks like a JVM `toString`
+      // (a bare `\w@hex` mask would also rewrite a literal like 'a@cafe'):
+      // either the token before '@' is package/inner-class-qualified
+      // (contains '.' or '$'), or the hex run is 6+ digits
+      .replaceAll("([\\w$.\\]]*[.$][\\w$\\]]*)@[0-9a-fA-F]{1,16}\\b",
+        "$1@HASH")
+      // JVM array-type toStrings ('[B@4a2f', '[[J@ff') are bare (no
+      // dot/$) and can hash under 6 hex digits — mask them at ANY length
+      .replaceAll("(\\[+[BCDFIJSZ])@[0-9a-fA-F]{1,16}\\b", "$1@HASH")
+      .replaceAll("([\\w\\]])@[0-9a-fA-F]{6,16}\\b", "$1@HASH")
+      // RDD creation-site annotations ('... at localCheckpoint at
+      // Similarity.scala:539'): the line moves with every edit above the
+      // call site; the file name stays so a subtree switching sources
+      // still diffs
+      .replaceAll("(at [A-Za-z0-9_]+\\.scala):\\d+", "$1:LINE")
   }
 }

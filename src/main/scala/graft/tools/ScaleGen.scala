@@ -53,7 +53,6 @@ object ScaleGen {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def multiplied(table: String)(perturb: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions (SURVEY.md north star: pushdown, pruning and
@@ -23,11 +24,10 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("fetch queries push the time range into the parquet scan") {
-    // Pin BOTH bounds, on the RAW ts column, whatever its physical
-    // encoding (epoch-nanos long / micros NTZ / tz-adjusted): the
-    // 2026-08 testdata regen from NANOS to MICROS silently turned the
-    // range filter into an expression on unix_timestamp(ts) — correct
-    // answers, full-table scans. This test is the tripwire.
+    // Pin BOTH bounds, on the RAW ts column, in either timestamp
+    // encoding (micros NTZ / tz-adjusted): a range filter on the derived
+    // unix_timestamp(ts) gives correct answers from full-table scans.
+    // This test is the tripwire.
     for (q <- Seq(Fetch.fetchDenseSeries(spark, dir),
                   Fetch.fetchRelativeTz(spark, dir),
                   Fetch.fetchAsof(spark, dir),
@@ -39,6 +39,20 @@ class PlanSpec extends AnyFunSuite {
       assert(p.contains("LessThan(ts"),
         s"upper time bound did not reach the scan:\n$p")
     }
+  }
+
+  test("fact-view reads leave the caller's session conf untouched") {
+    // a library read must not change its caller's session conf
+    val s = spark.newSession()
+    val key = SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+    assert(!s.conf.getAll.contains(key), s"$key preset on a fresh session")
+    Buckets.points(s, dir)
+    Buckets.pointsInRange(s, dir, Buckets.FromS, Buckets.UntilS)
+    Buckets.eventsRaw(s, dir)
+    Buckets.pointsStream(s, dir)
+    CoreQueries.scanPropsJson(s, dir)
+    assert(s.conf.getAll.get(key).isEmpty,
+      s"a fact-view read set $key on the caller's session")
   }
 
   test("scan_points prunes to the three needed columns") {

@@ -2,10 +2,10 @@ package graft.tools
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The EXPLAIN.md normalizer (r15 verdict #5): a regeneration with no
-  * plan change must produce a byte-identical dump even though Catalyst
-  * expression ids / plan_ids are JVM-global counters and the shared
-  * tmp index roots carry a content digest + pid.
+/** The `DevRun --explain` normalizer: two runs with no plan change must
+  * print byte-identical plans even though Catalyst expression ids /
+  * plan_ids are JVM-global counters and the shared tmp index roots carry
+  * a content digest + pid.
   */
 class ExplainNormalizeSpec extends AnyFunSuite {
 
@@ -14,17 +14,17 @@ class ExplainNormalizeSpec extends AnyFunSuite {
       "Input [1]: [bucket_ts#910L]\nplan_id=4711"
     val b = "Output [2]: [bucket_ts#13L, value#27]\n" +
       "Input [1]: [bucket_ts#13L]\nplan_id=35"
-    assert(ExplainDump.normalizePlan(a) == ExplainDump.normalizePlan(b))
+    assert(DevRun.normalizePlan(a) == DevRun.normalizePlan(b))
     // same id → same number everywhere; distinct ids stay distinct
-    val n = ExplainDump.normalizePlan(a)
+    val n = DevRun.normalizePlan(a)
     assert(n.contains("bucket_ts#1L") && n.contains("value#2") &&
       n.contains("Input [1]: [bucket_ts#1L]") && n.contains("plan_id=1"))
   }
 
   test("normalization is idempotent") {
     val p = "x#42L y#7 plan_id=99 plan_id=99 x#42L"
-    val once = ExplainDump.normalizePlan(p)
-    assert(ExplainDump.normalizePlan(once) == once)
+    val once = DevRun.normalizePlan(p)
+    assert(DevRun.normalizePlan(once) == once)
   }
 
   test("identity hashes mask only in JVM-toString contexts (r17)") {
@@ -34,7 +34,7 @@ class ExplainNormalizeSpec extends AnyFunSuite {
     // the old bare \w@hex mask silently corrupted such plans)
     val p = "agg=graft.functions.TopKAgg@cafe, " +
       "obj=SomeClass$$anon$1@3f, buf=[J@1a2b3c4d, lit=a@cafe, m=x@beef"
-    val n = ExplainDump.normalizePlan(p)
+    val n = DevRun.normalizePlan(p)
     assert(n.contains("graft.functions.TopKAgg@HASH"), n)
     assert(n.contains("SomeClass$$anon$1@HASH"), n)
     assert(n.contains("[J@HASH"), n) // bare array type, but 8 hex digits
@@ -43,18 +43,18 @@ class ExplainNormalizeSpec extends AnyFunSuite {
     // array-type toStrings mask at ANY hex length — ~0.05% of
     // identities hash under 6 digits and would otherwise produce a
     // spurious diff on a zero-change regeneration (r17 review)
-    val arr = ExplainDump.normalizePlan("buf=[B@4a2f, mat=[[J@ff")
+    val arr = DevRun.normalizePlan("buf=[B@4a2f, mat=[[J@ff")
     assert(arr == "buf=[B@HASH, mat=[[J@HASH", arr)
   }
 
   test("run-local tmp root components mask; stable parts survive") {
     val p = "Location: InMemoryFileIndex [file:/tmp/" +
       "graft_carbon_0123456789abcdef0123456789abcdef_p4242/lines]"
-    val n = ExplainDump.normalizePlan(p)
+    val n = DevRun.normalizePlan(p)
     assert(n.contains("graft_carbon_DIGEST_pPID/lines"), n)
     // a real testdata path is NOT masked
     val q = "file:/root/testdata/sf0.001/events.parquet"
-    assert(ExplainDump.normalizePlan(q) == q)
+    assert(DevRun.normalizePlan(q) == q)
   }
 
   test("RDD creation-site line numbers mask; the file name survives") {
@@ -64,11 +64,23 @@ class ExplainNormalizeSpec extends AnyFunSuite {
     // so a subtree switching sources still shows in the diff
     val p = "Arguments: [q#1L], MapPartitionsRDD[534] at " +
       "localCheckpoint at Similarity.scala:539, ExistingRDD"
-    val n = ExplainDump.normalizePlan(p)
+    val n = DevRun.normalizePlan(p)
     assert(n.contains("at Similarity.scala:LINE,"), n)
     assert(!n.contains(":539"), n)
     // parquet paths and plain text with colons are untouched
     val q = "file:/root/testdata/sf0.001/events.parquet"
-    assert(ExplainDump.normalizePlan(q) == q)
+    assert(DevRun.normalizePlan(q) == q)
+  }
+
+  test("RDD ids renumber by first appearance, distinct ids stay distinct") {
+    // MapPartitionsRDD[N] counts every RDD the JVM created before, so a
+    // revision that runs one more job earlier shifts it
+    val a = "MapPartitionsRDD[3581] at x, MapPartitionsRDD[3590], " +
+      "MapPartitionsRDD[3581], rdd_3581"
+    val b = "MapPartitionsRDD[12] at x, MapPartitionsRDD[40], " +
+      "MapPartitionsRDD[12], rdd_7"
+    assert(DevRun.normalizePlan(a) == DevRun.normalizePlan(b))
+    assert(DevRun.normalizePlan(a) ==
+      "MapPartitionsRDD[1] at x, MapPartitionsRDD[2], MapPartitionsRDD[1], rdd_1")
   }
 }
