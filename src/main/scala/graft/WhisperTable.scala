@@ -4,6 +4,8 @@ import graft.model.{AggregationMethod, Retention, Retentions, WhisperSchema}
 import graft.ops.{Buckets, Fetch, Ingest, Rollup}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{
+  DateType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** One raw input point — the public write type (reference: whisper.go →
   * `type TimeSeriesPoint struct { Time int; Value float64 }`;
@@ -67,34 +69,54 @@ final class WhisperTable private (
 
   private def levelPath(r: Retention) = s"$path/points_${r.secondsPerPoint}s"
 
-  /** An absent level directory — or one holding no parquet files yet
-    * (dynamic overwrite of zero rows leaves the dir with only markers)
-    * — reads as empty: a table created but not yet written at this
-    * resolution (whisper pre-allocates, parquet materializes lazily).
-    * Every OTHER analysis failure (missing or renamed column, ambiguous
-    * foreign schema) is real corruption and must surface, not read as
-    * "no data".
+  /** An absent level directory reads as empty: a table created but not
+    * yet written at this resolution (whisper pre-allocates, parquet
+    * materializes lazily). A directory holding no parquet files yet
+    * (dynamic overwrite of zero rows leaves only markers) needs no
+    * recovery: the level schema is given, so it reads as zero rows.
     */
   private def missingPath(e: org.apache.spark.sql.AnalysisException): Boolean =
-    Option(e.getCondition).exists(c =>
-      c.contains("PATH_NOT_FOUND") || c.contains("UNABLE_TO_INFER_SCHEMA")) ||
-      e.getMessage.contains("Path does not exist")
+    Option(e.getCondition).contains("PATH_NOT_FOUND")
 
-  /** The shared read scaffold: open the level, apply the caller's
-    * partition filter BEFORE the column projection (so `day` predicates
-    * prune directories), and map a missing/empty level to the empty
-    * frame. Single-sourced so the missing-path recovery — which has
-    * already changed condition strings once (PATH_NOT_FOUND vs
-    * UNABLE_TO_INFER_SCHEMA) — is stated exactly once.
+  /** The shared read scaffold: open the level with the writer's fixed
+    * schema (no inference job), apply the caller's partition filter
+    * BEFORE the column projection (so `day` predicates prune
+    * directories), and map a missing level to the empty frame.
+    * A foreign level fails loudly instead of reading NULLs: the footer of
+    * its first listed file must hold every level column ([[checkLevelFile]]).
     */
   private def readLevelWith(r: Retention)(
       f: DataFrame => DataFrame): DataFrame =
-    try f(spark.read.parquet(levelPath(r)))
-      .select(col("metric"), col("bucket_ts"), col("value"))
-    catch {
+    try {
+      val level = spark.read.schema(WhisperTable.LevelSchema).parquet(levelPath(r))
+      level.inputFiles.minOption.foreach(checkLevelFile)
+      f(level).select(WhisperTable.LevelColumns.fieldNames.toSeq.map(col): _*)
+    } catch {
       case e: org.apache.spark.sql.AnalysisException if missingPath(e) =>
         emptyLevel
     }
+
+  /** Refuse a level file whose footer lacks a level column or stores it
+    * with another type — a schema-given read would serve such a column as
+    * NULLs. Read on the driver: one footer, no job.
+    */
+  private def checkLevelFile(file: String): Unit = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(new java.net.URI(file)),
+      spark.sessionState.newHadoopConf())
+    val footer = ParquetFooterReader.readFooter(in,
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)
+    val resolver = spark.sessionState.conf.resolver
+    for (c <- WhisperTable.LevelColumns
+         if !found.exists(g => resolver(g.name, c.name) && g.dataType == c.dataType))
+      throw new IllegalStateException(
+        s"level file $file has no column ${c.name} ${c.dataType.sql}: " +
+          s"its schema is ${found.toDDL}")
+  }
 
   private def readLevel(r: Retention): DataFrame =
     readLevelWith(r)(identity)
@@ -108,23 +130,30 @@ final class WhisperTable private (
   private def readLevelDays(r: Retention, days: Seq[String]): DataFrame =
     readLevelWith(r)(_.filter(col("day").cast("string").isin(days: _*)))
 
-  /** [[readLevel]] restricted to the day partitions overlapping a bucket
-    * range (both endpoints inclusive, in session-timezone days — the same
-    * derivation the writer used).
+  /** [[readLevel]] restricted to the buckets in [fromI, untilI), pruned to
+    * the day partitions overlapping that range (in session-timezone days —
+    * the same derivation the writer used).
     */
   private def readLevelRange(r: Retention, fromI: Long, untilI: Long): DataFrame =
     readLevelWith(r)(_.filter(col("day").between(
-      to_date(timestamp_seconds(lit(fromI))),
-      to_date(timestamp_seconds(lit(untilI))))))
+        to_date(timestamp_seconds(lit(fromI))),
+        to_date(timestamp_seconds(lit(untilI)))) &&
+      col("bucket_ts") >= fromI && col("bucket_ts") < untilI))
 
-  private def emptyLevel: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Double)].toDF("metric", "bucket_ts", "value")
-  }
+  private def emptyLevel: DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      WhisperTable.LevelColumns)
+
+  /** The writer's side of the level schema: every level file holds
+    * exactly [[WhisperTable.LevelColumns]] plus the `day` partition.
+    */
+  private def levelRows(df: DataFrame): DataFrame =
+    df.select(WhisperTable.LevelColumns.toSeq.map(c => col(c.name).cast(c.dataType)): _*)
+      .withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
 
   private[graft] def writeLevelFull(r: Retention, df: DataFrame): Unit =
-    df.select(col("metric"), col("bucket_ts"), col("value"))
-      .withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
+    levelRows(df)
       .write.mode("overwrite").partitionBy("day").parquet(levelPath(r))
 
   /** Incremental write: dynamically overwrite ONLY the day partitions in
@@ -132,8 +161,7 @@ final class WhisperTable private (
     * per day (repartition by day) — no tiny-file spray.
     */
   private def writeTouchedDays(r: Retention, df: DataFrame, days: Seq[String]): Unit =
-    df.select(col("metric"), col("bucket_ts"), col("value"))
-      .withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
+    levelRows(df)
       .filter(col("day").cast("string").isin(days: _*))
       .repartition(col("day"))
       .write.mode("overwrite")
@@ -336,13 +364,6 @@ final class WhisperTable private (
     UpdateResult(accepted, rejected)
   }
 
-  /** Q1 batched: dense series for MANY metrics in one plan — the
-    * one-table-many-series advantage over the reference's
-    * file-per-series `Fetch` loop: one partition-pruned level scan and
-    * one broadcast spine join serve every requested series (N fetches
-    * against the reference = N file opens; here = one query). Output:
-    * (metric, bucket_ts, value) dense per metric with NULL gaps.
-    */
   /** Shared fetch prologue — the reference's fetch endpoint semantics
     * stated ONCE for fetch/fetchMany/fetchGlob/checkEmpty (SURVEY §4.4
     * trap 1: the range require, the F1 clamp, archive selection and the
@@ -370,55 +391,63 @@ final class WhisperTable private (
     (archive, fromI, untilI)
   }
 
-  /** The one dense-fetch shape behind fetch/fetchMany/fetchGlob: spine ×
-    * requested metrics, left-joined to the partition-pruned, range- and
-    * metric-filtered level scan. Stated ONCE so an endpoint or
-    * null-handling fix can never reach one surface and skip another (the
-    * drift class the r13 note fixed in ops/Fetch.denseMany; the r15
-    * review found this facade had re-grown three copies).
+  /** The one dense-fetch shape behind fetch/fetchMany: a one-partition
+    * spine (every bucket × every requested metric) left-joined to a
+    * broadcast of the partition-pruned, range- and metric-filtered level
+    * scan. Every scan row is a spine key, so the broadcast is bounded by
+    * the output; the single spine partition already satisfies the global
+    * order, so no exchange or sampling job runs.
     */
   private def denseFetch(
-      archive: Retention, fromI: Long, untilI: Long,
-      mets: DataFrame, agg: DataFrame): DataFrame = {
-    val spine = spark.range(fromI, untilI, archive.secondsPerPoint.toLong)
-      .toDF("bucket_ts")
-      .crossJoin(broadcast(mets))
-    spine.join(agg, Seq("metric", "bucket_ts"), "left")
+      fromS: Long, untilS: Long, nowS: Long, metrics: Seq[String]): DataFrame = {
+    val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
+    val scan = readLevelRange(archive, fromI, untilI)
+      .filter(col("metric").isin(metrics: _*))
+    spark.range(fromI, untilI, archive.secondsPerPoint.toLong, 1)
+      .select(explode(typedLit(metrics)).as("metric"), col("id").as("bucket_ts"))
+      .join(broadcast(scan), Seq("metric", "bucket_ts"), "left")
       .select(col("metric"), col("bucket_ts"), col("value"))
       .orderBy("metric", "bucket_ts")
   }
 
+  /** Q1 batched: dense series for MANY metrics in one plan — the
+    * one-table-many-series advantage over the reference's
+    * file-per-series `Fetch` loop: one partition-pruned level scan and
+    * one spine join serve every requested series (N fetches
+    * against the reference = N file opens; here = one query). Output:
+    * (metric, bucket_ts, value) dense per metric with NULL gaps.
+    */
   def fetchMany(metrics: Seq[String], fromS: Long, untilS: Long, nowS: Long): DataFrame = {
     require(metrics.nonEmpty, "no metrics requested")
-    val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
-    import spark.implicits._
-    val agg = readLevelRange(archive, fromI, untilI)
-      .filter(col("metric").isin(metrics: _*) &&
-        col("bucket_ts") >= fromI && col("bucket_ts") < untilI)
-    denseFetch(archive, fromI, untilI, metrics.toDF("metric"), agg)
+    denseFetch(fromS, untilS, nowS, metrics)
   }
 
   /** Q1 glob: graphite's metric-find surface over ONE table —
-    * [[fetchMany]] without a driver-side metric list. The glob
+    * [[fetchMany]] without a metric list. The glob
     * ([[Fetch.globToRegex]]: `*`/`?` never cross dots, braces
-    * alternate) filters the level scan; the matched metric set is
-    * derived DISTRIBUTED (a distinct over the filtered scan, bounded by
-    * matches and broadcast under the spine), so resolving
-    * `servers.*.cpu.load` over a million-series table never builds a
-    * driver-side name list — where the reference layout walks the
-    * filesystem tree and opens one file per match.
+    * alternate) filters the level scan; one shuffle gathers the matches
+    * into a single partition, where each matched metric's group is
+    * densified from its own bucket → value map. The matched set never
+    * reaches the driver and the level is scanned once — where the
+    * reference layout walks the filesystem tree and opens one file per
+    * match.
     */
   def fetchGlob(pattern: String, fromS: Long, untilS: Long, nowS: Long): DataFrame = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
-    // pinned: the filtered scan has TWO consumers (the matched-metric
-    // distinct and the join side) and the two subplans differ, so
-    // exchange reuse cannot dedupe them — without the pin every glob
-    // fetch paid the partition-pruned scan + rlike twice
-    val agg = readLevelRange(archive, fromI, untilI)
-      .filter(col("metric").rlike(Fetch.globToRegex(pattern)) &&
-        col("bucket_ts") >= fromI && col("bucket_ts") < untilI)
-      .localCheckpoint(true)
-    denseFetch(archive, fromI, untilI, agg.select(col("metric")).distinct(), agg)
+    val spp = archive.secondsPerPoint.toLong
+    // guarded: an empty window's sequence would fold to an error at planning
+    val buckets =
+      if (untilI > fromI) sequence(lit(fromI), lit(untilI - spp), lit(spp))
+      else typedLit(Array.empty[Long])
+    readLevelRange(archive, fromI, untilI)
+      .filter(col("metric").rlike(Fetch.globToRegex(pattern)))
+      .repartition(1)
+      .groupBy("metric")
+      .agg(map_from_entries(collect_list(struct(col("bucket_ts"), col("value"))))
+        .as("values"))
+      .select(col("metric"), explode(buckets).as("bucket_ts"), col("values"))
+      .select(col("metric"), col("bucket_ts"), col("values")(col("bucket_ts")).as("value"))
+      .orderBy("metric", "bucket_ts")
   }
 
   /** Export every archive level as whisper `.wsp` binary files — one
@@ -455,18 +484,9 @@ final class WhisperTable private (
   /** Q1 `Fetch`: clamp the range, select the finest archive covering it,
     * return the dense fixed-step series with NULL gaps.
     */
-  def fetch(metric: String, fromS: Long, untilS: Long, nowS: Long): DataFrame = {
-    val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
-    import spark.implicits._
-    // day-partition pruning: the range reaches the scan as a filter on
-    // the PARTITION column, so only the overlapping day directories are
-    // listed (a bucket_ts predicate alone cannot prune them)
-    val agg = readLevelRange(archive, fromI, untilI)
-      .filter(col("metric") === metric &&
-        col("bucket_ts") >= fromI && col("bucket_ts") < untilI)
-    denseFetch(archive, fromI, untilI, Seq(metric).toDF("metric"), agg)
+  def fetch(metric: String, fromS: Long, untilS: Long, nowS: Long): DataFrame =
+    denseFetch(fromS, untilS, nowS, Seq(metric))
       .select(col("bucket_ts"), col("value"))
-  }
 
   /** Newer go-whisper's `CheckEmpty(from, until)`: does the clamped
     * range hold NO live points for the metric? Polarity (true = range
@@ -481,14 +501,21 @@ final class WhisperTable private (
       nowS: Long): Boolean = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
     readLevelRange(archive, fromI, untilI)
-      .filter(col("metric") === metric &&
-        col("bucket_ts") >= fromI && col("bucket_ts") < untilI &&
-        col("value").isNotNull)
+      .filter(col("metric") === metric && col("value").isNotNull)
       .limit(1).isEmpty
   }
 }
 
 object WhisperTable {
+
+  /** A level file's columns, fixed by the writer and given to the reader. */
+  private val LevelColumns = StructType(Seq(
+    StructField("metric", StringType),
+    StructField("bucket_ts", LongType),
+    StructField("value", DoubleType)))
+
+  /** [[LevelColumns]] plus the `day` partition column. */
+  private val LevelSchema = LevelColumns.add("day", DateType)
 
   /** On-disk header — the relational re-expression of whisper's binary
     * metadata block + retention block (reference: whisper.go →
@@ -564,11 +591,7 @@ object WhisperTable {
     finally out.close()
     if (!fs.rename(tmpP, headerP))
       throw new IllegalStateException(s"cannot commit header: $headerP")
-    import spark.implicits._
-    schema.retentions.foreach { r =>
-      t.writeLevelFull(r, Seq.empty[(String, Long, Double)]
-        .toDF("metric", "bucket_ts", "value"))
-    }
+    schema.retentions.foreach(r => t.writeLevelFull(r, t.emptyLevel))
     t
   }
 

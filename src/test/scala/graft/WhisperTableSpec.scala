@@ -135,9 +135,21 @@ class WhisperTableSpec extends AnyFunSuite {
       Seq("hosts.a.cpu", "servers.a.cpu", "servers.a.mem"))
     assert(names("servers.?.cpu") == Seq("servers.a.cpu", "servers.b.cpu"))
     // values ride along: the matched series carry their written points
-    val got = t.fetchGlob("servers.a.*", now - 300, now, now).collect()
-      .filter(!_.isNullAt(2)).map(r => (r.getString(0), r.getDouble(2))).toSeq
+    val rows = t.fetchGlob("servers.a.*", now - 300, now, now).collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
+    val got = rows.collect { case (m, _, Some(v)) => (m, v) }
     assert(got.toSet == Set(("servers.a.cpu", 10.0), ("servers.a.mem", 12.0)))
+    // each member holds one point of the range, served dense with NULL
+    // gaps over all 5 buckets, ordered by (metric, bucket_ts)
+    val buckets = (-4 to 0).map(now + 60L * _)
+    assert(rows == Seq(("servers.a.cpu", 10.0), ("servers.a.mem", 12.0)).flatMap {
+      case (m, v) => buckets.map(b => (m, b, Some(v).filter(_ => b == now - 120)))
+    })
+    // a glob matching no metric, and one whose metrics hold no data in
+    // the range, return no rows
+    assert(t.fetchGlob("nothing.*", now - 300, now, now).count() == 0)
+    assert(t.fetchGlob("servers.a.*", now - 3600, now - 600, now).count() == 0)
   }
 
   test("last write wins within and across updateMany batches") {
@@ -329,15 +341,69 @@ class WhisperTableSpec extends AnyFunSuite {
     t.updateMany(Seq(
       TimeSeriesPoint("a", now - 300, 1.0),
       TimeSeriesPoint("b", now - 240, 2.0)).toDS(), now)
-    val many = t.fetchMany(Seq("a", "b"), now - 600, now, now).collect()
+    // requested out of order, plus "c" with no data in the range
+    val many = t.fetchMany(Seq("c", "b", "a"), now - 600, now, now).collect()
       .map(r => (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-    // identical to the two single-metric fetches, concatenated
-    val single = Seq("a", "b").flatMap { m =>
+    // identical to the single-metric fetches, concatenated in
+    // (metric, bucket_ts) order
+    val single = Seq("a", "b", "c").flatMap { m =>
       series(t.fetch(m, now - 600, now, now)).map { case (ts, v) => (m, ts, v) }
     }
     assert(many.toSeq == single)
     assert(many.count(_._3.isDefined) == 2)
+    // each series is dense over the 10 buckets; "c" is all NULL
+    val buckets = (-9 to 0).map(now + 60L * _)
+    assert(single.filter(_._1 == "a").map(_._2) == buckets)
+    assert(many.filter(_._1 == "c").toSeq == buckets.map(b => ("c", b, None)))
+  }
+
+  test("a never-written or missing level reads as empty") {
+    val p = tmp()
+    val t = WhisperTable.create(spark, p, Retentions.std)
+    val buckets = (-9 to 0).map(now + 60L * _)
+    // created, never written: the level directory holds no parquet file
+    assert(series(t.fetch("m", now - 600, now, now)) == buckets.map((_, None)))
+    assert(t.checkEmpty("m", now - 600, now, now))
+    // a partial create leaves a level directory absent
+    val dir = new org.apache.hadoop.fs.Path(s"$p/points_60s")
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+    assert(series(t.fetch("m", now - 600, now, now)) == buckets.map((_, None)))
+    assert(t.fetchGlob("*", now - 600, now, now).count() == 0)
+    assert(t.checkEmpty("m", now - 600, now, now))
+  }
+
+  test("a level file without the level columns fails every read loudly") {
+    // a schema-given parquet read serves a missing column as NULLs; the
+    // reads must refuse the foreign file instead of answering NULL slots
+    import spark.implicits._
+    val p = tmp()
+    val t = WhisperTable.create(spark, p, Retentions.std)
+    Seq(("m", now - 60, 1.0)).toDF("metric", "bucket_ts", "val")
+      .write.parquet(s"$p/points_60s/day=2024-01-30")
+    def loud(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      assert(e.getMessage.contains("value"), e.getMessage)
+    }
+    loud(t.fetch("m", now - 600, now, now).collect())
+    loud(t.fetchMany(Seq("m"), now - 600, now, now).collect())
+    loud(t.fetchGlob("*", now - 600, now, now).collect())
+    loud(t.checkEmpty("m", now - 600, now, now))
+  }
+
+  test("a facade read runs at most two Spark jobs, three for a glob") {
+    // construction plus collect: no schema-inference job, no exchange or
+    // range-sampling job for the dense order
+    import spark.implicits._
+    val t = WhisperTable.create(spark, tmp(), Retentions.std)
+    t.updateMany((0 until 10).flatMap(i => Seq(
+      TimeSeriesPoint("h.a", now - 600 + 60 * i, i.toDouble),
+      TimeSeriesPoint("h.b", now - 600 + 60 * i, -i.toDouble))).toDS(), now)
+    def jobs(read: => Any): Int =
+      org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext)(read)
+    assert(jobs(t.fetch("h.a", now - 600, now, now).collect()) <= 2)
+    assert(jobs(t.fetchMany(Seq("h.a", "h.b"), now - 600, now, now).collect()) <= 2)
+    assert(jobs(t.fetchGlob("h.*", now - 600, now, now).collect()) <= 3)
   }
 
   test("fetch prunes day partitions via a partition filter") {
