@@ -34,6 +34,10 @@ import org.apache.spark.util.SerializableConfiguration
   * Scale design — a production whisper tree is millions of SMALL files
   * (file size is fixed by each series' retention config), the classic
   * many-small-files source:
+  *  - the planner is a driver-side walk of the tree — O(files) stat
+  *    traffic and ~100 bytes of driver heap per selected file, paid per
+  *    batch plan and per streaming micro-batch (whisper's tree IS the
+  *    index: graphite's finder walks it the same way);
   *  - files are bin-packed into input partitions up to
   *    `spark.sql.files.maxPartitionBytes`, so task count tracks data
   *    volume, not file count;
@@ -58,14 +62,6 @@ final class WspDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType, partitioning: Array[Transform], properties: JMap[String, String]): Table =
     new WspTable(WspTable.rootPaths(properties))
-}
-
-object WspScan {
-  /** A directory's cached listing is only trusted once its mtime is at
-    * least this old — within the quantum, an unchanged mtime proves
-    * nothing (see [[WspScan.listFilesWithMtime]]).
-    */
-  val QuiescenceMs: Long = 2000L
 }
 
 object WspTable {
@@ -123,25 +119,20 @@ final class WspTable(roots: Seq[String]) extends Table
       TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WspWriteBuilder(roots, info)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WspScanBuilder(roots, options.getBoolean("listingCache", false),
-      Option(options.get("metricRoot")),
-      options.getInt("readRetries", 0),
-      Option(options.get("metricGlob")),
-      options.getBoolean("manifest", false))
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // Spark ignores unknown options: a removed option must fail by name,
+    // not be read silently with a different meaning
+    Seq("manifest", "listingCache", "metricRoot", "readRetries")
+      .find(options.containsKey).foreach { o =>
+        throw new IllegalArgumentException(
+          s"wsp: read option '$o' is no longer supported; the only read option is metricGlob")
+      }
+    new WspScanBuilder(roots, Option(options.get("metricGlob")))
+  }
 }
 
 final class WspScanBuilder(
     roots: Seq[String],
-    listingCache: Boolean = false,
-    metricRoot: Option[String] = None,
-    // transient-absence retries per file open — 0 for batch scans (a
-    // missing file in a static tree should fail fast with the real
-    // error, not cost every task a ~1 s stall first); the streaming
-    // path overrides to a bounded retry (its documented contract
-    // absorbs the publish fallback's no-file window). The `readRetries`
-    // read option opts a batch scan of a LIVE tree into the same.
-    readRetries: Int = 0,
     // `metricGlob` read option: a graphite glob ([[graft.ops.Fetch
     // .globToRegex]] semantics — `*`/`?` dot-bounded, braces alternate)
     // applied as FILE pruning during the tree walk, exactly where the
@@ -149,12 +140,7 @@ final class WspScanBuilder(
     // million-file tree opens only the matching files. A read OPTION
     // (not a pushed filter) because DSv2's Filter vocabulary has no
     // regex/LIKE member to push an `rlike` through.
-    metricGlob: Option[String] = None,
-    // `manifest` read option: plan from the tree's `_wsp_manifest`
-    // parquet table ([[WspManifest]]) instead of walking the
-    // filesystem — the ≥1M-file path. Opt-in; fails loudly when the
-    // manifest is absent (never a silent fallback to the walk).
-    manifest: Boolean = false)
+    metricGlob: Option[String] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
@@ -207,8 +193,7 @@ final class WspScanBuilder(
     val spark = SparkSession.active
     new WspScan(roots, metrics, tsLo, tsHi, required,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      spark.sessionState.conf.filesMaxPartitionBytes, listingCache,
-      metricRoot, readRetries, metricGlob, manifest)
+      spark.sessionState.conf.filesMaxPartitionBytes, metricGlob)
   }
 }
 
@@ -223,14 +208,7 @@ final class WspScan(
     required: StructType,
     conf: SerializableConfiguration,
     maxPartitionBytes: Long,
-    listingCache: Boolean = false,
-    // metric names are derived relative to this dir instead of each root
-    // — lets a caller pass FILES as roots (a schema-grouped subset of a
-    // tree) and still get the tree's dotted metric names
-    metricRoot: Option[String] = None,
-    readRetries: Int = 0,
-    metricGlob: Option[String] = None,
-    manifest: Boolean = false) extends Scan with Batch {
+    metricGlob: Option[String] = None) extends Scan with Batch {
 
   // compiled once, applied driver-side during the listing walk
   private lazy val globRx: Option[java.util.regex.Pattern] =
@@ -247,57 +225,29 @@ final class WspScan(
   /** Every selected `.wsp` file with its size, derived metric name, and
     * modification time — metric pruning happens HERE, before any byte is
     * read (shared by the batch and streaming planners).
-    *
-    * Cost bound, stated plainly: this is a DRIVER-side walk of the whole
-    * tree — O(files) per batch plan, and the streaming `latestOffset`
-    * re-walks it every micro-batch. That is the classic file-source
-    * driver bottleneck; at millions of files the mitigation is the
-    * `listingCache` read option: each directory's child listing is
-    * cached keyed on the DIRECTORY's mtime, so an unchanged directory
-    * costs one stat instead of one full listing per walk (changed
-    * directories, and directories modified within the last
-    * [[WspScan.QuiescenceMs]] — inside the filesystem's mtime quantum,
-    * where "unchanged mtime" proves nothing — are re-listed).
-    *
-    * The cache is OPT-IN because it is only sound for rename-publish
-    * writers ([[WspWrite]]'s discipline — every replace updates the
-    * parent directory's mtime): a writer that updates file contents IN
-    * PLACE (a stock carbon daemon does) changes the file's mtime but not
-    * the directory's, and a cached listing would serve the stale file
-    * mtime and suppress change capture. Leave it off when tailing trees
-    * you don't write.
     */
   private[sources] def listFilesWithMtime(): Seq[((String, Long, String), Long)] =
-    if (manifest) manifestListing()
-    else {
-    // touched accumulates ACROSS roots and the eviction sweep runs ONCE
-    // after every root is walked: a per-root sweep evicted every OTHER
-    // root's entries on each walk (r15 review — a multi-root stream
-    // re-listed all trees in full every micro-batch, zero cache hits,
-    // and a file-root walk that touches no directory wiped the cache)
-    val touched = scala.collection.mutable.Set.empty[String]
-    val result = roots.flatMap { r =>
-      treeWalks += 1
+    roots.flatMap { r =>
       val root = new org.apache.hadoop.fs.Path(r)
       val fs = root.getFileSystem(conf.value)
       val qualified = fs.makeQualified(root)
-      val nameRoot = metricRoot.fold(qualified)(m =>
-        fs.makeQualified(new org.apache.hadoop.fs.Path(m)))
       val out = Seq.newBuilder[((String, Long, String), Long)]
       def emit(path: org.apache.hadoop.fs.Path, len: Long, mtime: Long): Unit =
         if (path.getName.endsWith(".wsp")) {
-          val metric = WspTable.metricFor(nameRoot, path)
+          val metric = WspTable.metricFor(qualified, path)
           if (metrics.forall(_.contains(metric)) &&
               globRx.forall(_.matcher(metric).matches))
             out += (((path.toString, len, metric), mtime))
         }
-      // ONE per-directory walk shape, parameterized by how a dir's
-      // children are listed — the cached and plain variants must stay
-      // in lockstep (same root-is-file handling, same emit contract)
-      def walkFrom(children: org.apache.hadoop.fs.Path =>
-          Array[org.apache.hadoop.fs.FileStatus]): Unit = {
+      if (Option(qualified.toUri.getScheme).forall(_ == "file")) {
+        // LOCAL filesystem: `listFiles(recursive)` materializes
+        // LocatedFileStatus, whose permission field forks `ls -ld` PER
+        // FILE on RawLocalFileSystem — measured ~14 ms/file, 70 s to
+        // plan a 5,000-file tree (WspScaleSpec caught it). A plain
+        // listStatus walk keeps the status lazy; this planner touches
+        // only path/len/mtime, so the walk is pure stat traffic.
         def walk(dir: org.apache.hadoop.fs.Path): Unit =
-          children(dir).foreach { st =>
+          fs.listStatus(dir).foreach { st =>
             if (st.isDirectory) walk(st.getPath)
             else emit(st.getPath, st.getLen, st.getModificationTime)
           }
@@ -305,18 +255,6 @@ final class WspScan(
         if (rootSt.isFile)
           emit(rootSt.getPath, rootSt.getLen, rootSt.getModificationTime)
         else walk(qualified)
-      }
-      if (listingCache) {
-        // per-directory walk so unchanged dirs can serve from cache
-        walkFrom { dir => touched += dir.toString; childrenOf(fs, dir) }
-      } else if (Option(qualified.toUri.getScheme).forall(_ == "file")) {
-        // LOCAL filesystem: `listFiles(recursive)` materializes
-        // LocatedFileStatus, whose permission field forks `ls -ld` PER
-        // FILE on RawLocalFileSystem — measured ~14 ms/file, 70 s to
-        // plan a 5,000-file tree (WspScaleSpec caught it). A plain
-        // listStatus walk keeps the status lazy; this planner touches
-        // only path/len/mtime, so the walk is pure stat traffic.
-        walkFrom(fs.listStatus)
       } else {
         // remote stores: ONE flat recursive listing — on object stores
         // a paged prefix LIST and on HDFS a streamed recursive
@@ -330,126 +268,11 @@ final class WspScan(
       }
       out.result()
     }
-    // evict entries no walk touched (deleted subtrees must not pin
-    // FileStatus arrays for the stream's life)
-    if (listingCache)
-      dirCache.keysIterator.filterNot(touched).toSeq
-        .foreach(dirCache.remove)
-    result
-  }
 
-  /** Listing cache (see [[listFilesWithMtime]]): dir path → (dir mtime,
-    * listing wall-clock ms, children). Driver-side state scoped to this
-    * scan — exactly the lifetime of a streaming query, whose
-    * per-micro-batch re-walk is the cost this pays down.
-    */
-  private val dirCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Long, Array[org.apache.hadoop.fs.FileStatus])]
-  /** Observability for tests: number of real child listings performed. */
-  private[sources] var listStatusCalls: Long = 0L
-  /** Observability for tests: number of filesystem TREE walks started —
-    * stays zero under the `manifest` option (the planning contract the
-    * option exists to provide). */
-  private[sources] var treeWalks: Long = 0L
-
-  /** Manifest-backed planning (`manifest` read option, [[WspManifest]]):
-    * one pruned columnar scan per root instead of a filesystem walk.
-    * Metric equality/`In` and the glob filter the RAW manifest rows —
-    * BELOW the per-path supersede-dedup, where the equality predicates
-    * reach the parquet reader (a filter above that aggregate cannot
-    * push; metric is a pure function of path, so pre-filtering
-    * commutes) — and only the matching live rows are collected. Runs on
-    * the driver (planning), like every DSv2 planner; the streaming
-    * offset path never comes here at all ([[maxMtime]]).
-    *
-    * `metricRoot` is a WALK concept (re-rooting names when ROOTS are a
-    * file subset of a tree) and is rejected here — manifest rows carry
-    * their tree-relative metric names already.
-    */
-  /** The metric/glob-pruned RAW manifest frame for one root — the ONE
-    * statement of the pruning contract (equality/`In` and the glob
-    * filter BELOW the supersede-dedup, where they reach the parquet
-    * reader; sound because metric is a pure function of path). Shared
-    * by [[manifestListing]] and [[maxMtime]] so the streaming offset
-    * and the batch plan can never diverge in which files they consider.
-    */
-  private def prunedRaw(spark: SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    var df = WspManifest.raw(spark, root)
-    metrics.foreach(ms =>
-      df = df.filter(org.apache.spark.sql.functions.col("metric")
-        .isin(ms.toSeq: _*)))
-    metricGlob.foreach(g =>
-      df = df.filter(org.apache.spark.sql.functions.col("metric")
-        .rlike(graft.ops.Fetch.globToRegex(g))))
-    df
-  }
-
-  private def manifestListing(): Seq[((String, Long, String), Long)] = {
-    require(metricRoot.isEmpty,
-      "wsp: the manifest option plans whole trees; metricRoot does not apply")
-    val spark = SparkSession.active
-    roots.flatMap { r =>
-      WspManifest.live(prunedRaw(spark, r))
-        .select("path", "len", "metric", "mtime").collect().map { row =>
-          ((row.getString(0), row.getLong(1), row.getString(2)), row.getLong(3))
-        }
-    }
-  }
-
-  /** Max file mtime over the selected tree — the streaming offset.
-    * Manifest mode answers with ONE distributed `max(mtime)` aggregate
-    * (nothing but the scalar reaches the driver — the whole point of
-    * the manifest at 1M files, where the listing-based form would haul
-    * every row back per micro-batch poll); walk mode keeps the listing
-    * (the walk is the cost either way, and metric pruning applies).
-    */
-  private[sources] def maxMtime(): Long =
-    if (manifest) {
-      // metric/glob pruning applies to the RAW rows before the max —
-      // superseded rows of a matching path still match (metric is a
-      // function of path), so max(filtered raw) == max(filtered live)
-      val spark = SparkSession.active
-      roots.map { r =>
-        val row = prunedRaw(spark, r)
-          .agg(org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.col("mtime"))).head()
-        if (row.isNullAt(0)) Long.MinValue else row.getLong(0)
-      }.foldLeft(Long.MinValue)(math.max)
-    } else {
-      val ms = listFilesWithMtime().map(_._2)
-      if (ms.isEmpty) Long.MinValue else ms.max
-    }
-
-  private def childrenOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
-    val mtime = fs.getFileStatus(dir).getModificationTime
-    val key = dir.toString
-    dirCache.get(key) match {
-      // trust requires an unchanged mtime AND that the cached listing
-      // was TAKEN after the dir's mtime quantum closed — a listing taken
-      // inside the quantum may predate a same-quantum change that never
-      // moves the mtime (the WspOffset blind spot), and merely aging
-      // does not make it complete. Quiescence compares the driver clock
-      // to the filesystem's mtime: the cache assumes they agree within
-      // [[WspScan.QuiescenceMs]] (skew re-opens the blind spot — another
-      // reason this stays opt-in).
-      case Some((m, listedAt, kids))
-          if m == mtime && listedAt - mtime > WspScan.QuiescenceMs =>
-        kids
-      case _ =>
-        listStatusCalls += 1
-        // clock taken BEFORE the listing: the quiescence guard must
-        // bound when the listing BEGAN — a slow listStatus that starts
-        // inside the dir's mtime quantum can miss a same-quantum
-        // rewrite, and stamping its END time would let the guard trust
-        // exactly that incomplete listing forever (r15 review)
-        val startedAt = System.currentTimeMillis()
-        val kids = fs.listStatus(dir)
-        dirCache.put(key, (mtime, startedAt, kids))
-        kids
-    }
+  /** Max file mtime over the selected tree — the streaming offset. */
+  private[sources] def maxMtime(): Long = {
+    val ms = listFilesWithMtime().map(_._2)
+    if (ms.isEmpty) Long.MinValue else ms.max
   }
 
   private[sources] def listFiles(): Seq[(String, Long, String)] =
@@ -483,16 +306,15 @@ final class WspScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WspReaderFactory(required, tsLo, tsHi, conf, readRetries)
+    new WspReaderFactory(required, tsLo, tsHi, conf)
 
   /** Reader factory for the STREAMING path: a live tree's publish
     * fallback (delete+rename schemes) can leave a planned file briefly
-    * absent, so streaming reads always retry transient absence at least
+    * absent, so streaming reads retry transient absence
     * [[WspRead.StreamRetries]] times before surfacing the error.
     */
   private[sources] def streamingReaderFactory(): PartitionReaderFactory =
-    new WspReaderFactory(required, tsLo, tsHi, conf,
-      math.max(readRetries, WspRead.StreamRetries))
+    new WspReaderFactory(required, tsLo, tsHi, conf, WspRead.StreamRetries)
 
   /** Streaming read: tail a LIVE whisper tree — the reverse direction of
     * [[graft.streaming.StreamIngest.wspWriter]] (a carbon daemon keeps

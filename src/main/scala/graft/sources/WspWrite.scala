@@ -69,13 +69,7 @@ object WspWrite {
         flushMetric(metric, acc, outDir, schema, mergeExisting, conf.value)
       }
       .toDF("metric", "n_points", "bytes")
-    val done = manifest.localCheckpoint(true) // run the write NOW, exactly once
-    // keep an EXISTING tree manifest fresh (WspManifest's incremental
-    // contract): one small distributed stat+append job per WRITE JOB —
-    // never per file — and only when the tree opted into a manifest
-    if (WspManifest.exists(s, outDir))
-      WspManifest.appendForMetrics(s, outDir, schema, done.select("metric"))
-    done
+    manifest.localCheckpoint(true) // run the write NOW, exactly once
   }
 
   /** One metric's pending ring state: one-pass slot-level LWW, O(ring)
@@ -195,9 +189,10 @@ object WspWrite {
     *  - anything else — delete + rename fallback: a crash between the
     *    two calls leaves the complete image in the orphaned tmp and NO
     *    visible file, and a concurrent reader can catch
-    *    FileNotFoundException for one listing; [[WspPartitionReader]]
-    *    retries opens to absorb exactly that window. Orphaned tmps are
-    *    swept by [[vacuumTmp]].
+    *    FileNotFoundException for one listing; the streaming reader
+    *    factory ([[WspScan.streamingReaderFactory]]) retries opens to
+    *    absorb exactly that window, while a batch scan fails fast.
+    *    Orphaned tmps are swept by [[vacuumTmp]].
     */
   private[sources] def publish(
       fs: org.apache.hadoop.fs.FileSystem,

@@ -83,15 +83,12 @@ class WspScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
-  test("100,000-file tree: planning stays seconds-scale and memory-bounded; the listing cache makes replans near-free") {
+  test("100,000-file tree: planning stays seconds-scale and memory-bounded") {
     // The r11 open question on the source: WspScaleSpec proved 5k files,
     // a real deployment is millions. This pins the next decade: 100k
     // files (100 shards x 100 hosts x 10 metrics — 10k directories) must
-    // PLAN driver-side in seconds, carry only (path, len, metric, mtime)
-    // per file (~100 MB/M files — driver-memory-bounded at 1M), and a
-    // REPLAN over an unchanged tree with listingCache on must serve from
-    // per-directory mtime cache. The 1M-file route beyond this is the
-    // manifest/catalog note in SURVEY.md §2.1.
+    // PLAN driver-side in seconds and carry only (path, len, metric,
+    // mtime) per file (~100 MB/M files — driver-memory-bounded at 1M).
     val dir = Files.createTempDirectory("wsp_scale100k").toString
     val info = WspCodec.archiveInfos(schema).head
     val bytes = WspCodec.emptyFile(schema)
@@ -106,81 +103,24 @@ class WspScaleSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", (1 << 20).toString)
 
-      def planned(options: Map[String, String]): (Int, Long) = {
-        val t0 = System.nanoTime()
-        val reader = options.foldLeft(spark.read.format("wsp")) {
-          case (r, (k, v)) => r.option(k, v)
-        }
-        val parts = reader.load(dir).rdd.getNumPartitions
-        (parts, (System.nanoTime() - t0) / 1000000L)
-      }
-
       // cold plan: the full driver-side walk of 10k dirs / 100k files.
       // Generous wall bound — shared CI boxes jitter — but an O(files)
       // pathology (per-file stat storms, quadratic listing) lands far
       // beyond it, and the 5k test already pins the packing arithmetic.
-      val (parts1, coldMs) = planned(Map.empty)
+      val t0 = System.nanoTime()
+      val parts1 = spark.read.format("wsp").load(dir).rdd.getNumPartitions
+      val coldMs = (System.nanoTime() - t0) / 1000000L
       val expect = math.ceil(nFiles.toDouble * FileBytes / (1 << 20)).toInt
       assert(parts1 >= expect && parts1 <= expect + 2,
         s"task count $parts1 does not track bytes at 100k files (~$expect)")
       assert(coldMs < 60000L,
         s"cold planning took ${coldMs} ms for 100k files — listing regressed")
 
-      // the listing cache is PER-SCAN state (it pays down a streaming
-      // query's per-micro-batch re-walks, not separate batch reads), so
-      // exercise it on one scan instance and assert the MECHANISM — the
-      // second walk must perform zero real child listings — instead of
-      // a wall-clock ordering that page cache and GC jitter can flip
-      // either way on a shared box. Sleep past QuiescenceMs first: a
-      // directory listed inside its mtime quantum is deliberately
-      // re-listed, which would make this pass vacuous on a fast box.
-      Thread.sleep(WspScan.QuiescenceMs + 200)
-      val spark2 = spark // stable reference for the conf below
-      val scan = new WspScan(Seq(dir), None, Long.MinValue, Long.MaxValue,
-        graft.sources.WspTable.Schema,
-        new org.apache.spark.util.SerializableConfiguration(
-          spark2.sessionState.newHadoopConf()),
-        1L << 20, listingCache = true)
-      val firstWalk = scan.listFilesWithMtime()
-      assert(firstWalk.size == nFiles)
-      val callsAfterSeed = scan.listStatusCalls
-      assert(callsAfterSeed >= 10000L, // 10k dirs + the 100 shard parents
-        s"seed walk listed only $callsAfterSeed directories")
-      val secondWalk = scan.listFilesWithMtime()
-      assert(secondWalk.size == nFiles)
-      assert(scan.listStatusCalls == callsAfterSeed,
-        s"unchanged-tree re-walk re-listed " +
-          s"${scan.listStatusCalls - callsAfterSeed} directories — the " +
-          "per-directory mtime cache is not serving")
-
       // the plan itself must stay file-count-free: a glob over one shard
       // prunes 99% of the tree at listing time, before any task exists
       val pruned = spark.read.format("wsp")
         .option("metricGlob", "shard42.*.*").load(dir)
       assert(pruned.select("metric").distinct().count() == 1000)
-
-      // manifest route at the same scale: the distributed rebuild must
-      // index all 100k files, and manifest planning must select the
-      // IDENTICAL (path, len, metric) set the walk selects — equivalence
-      // at real scale, not just the 2k-file mechanism test. (Timing is
-      // reported, never asserted — shared boxes jitter.)
-      val t0 = System.nanoTime()
-      assert(WspManifest.rebuild(spark, dir) == nFiles.toLong)
-      val rebuildMs = (System.nanoTime() - t0) / 1000000L
-      val mScan = new WspScan(Seq(dir), None, Long.MinValue, Long.MaxValue,
-        WspTable.Schema,
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()),
-        1L << 20, manifest = true)
-      val t1 = System.nanoTime()
-      val viaManifest = mScan.listFilesWithMtime().map(_._1).toSet
-      val manifestMs = (System.nanoTime() - t1) / 1000000L
-      // (`info` is shadowed by the archive-info val in this scope)
-      println(s"[wsp-scale] 100k files: rebuild ${rebuildMs} ms, " +
-        s"manifest plan ${manifestMs} ms, walk ${coldMs} ms")
-      assert(mScan.treeWalks == 0L)
-      assert(viaManifest == scan.listFilesWithMtime().map(_._1).toSet,
-        "manifest planning selected a different file set than the walk")
     } finally {
       spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
       // 100k files: sweep eagerly, not at JVM exit
@@ -190,127 +130,5 @@ class WspScaleSpec extends AnyFunSuite {
       }
       rm(new java.io.File(dir))
     }
-  }
-
-  test("manifest planning: pruned columnar plan, zero tree walks, writer-maintained") {
-    // The ≥1M-file route (SURVEY §2.1, r12 action #4): planning must be
-    // able to run off the parquet manifest with ZERO filesystem tree
-    // walks — metric pruning as parquet pushdown, the streaming offset
-    // as max(mtime) over the manifest — and a WspWrite publish against
-    // a manifested tree must keep it fresh without a rebuild.
-    val dir = Files.createTempDirectory("wsp_manifest").toString
-    val info = WspCodec.archiveInfos(schema).head
-    val n = 2000
-    for (s <- 0 until 20; h <- 0 until 100) {
-      val d = Paths.get(dir, s"shard$s", s"host$h")
-      Files.createDirectories(d)
-      val bytes = WspCodec.emptyFile(schema)
-      WspCodec.writeArchive(bytes, info, Seq((1000L, 1.0)))
-      Files.write(d.resolve("cpu.wsp"), bytes)
-    }
-    try {
-      // absent manifest fails loudly — never a silent walk fallback
-      val err = intercept[Exception] {
-        spark.read.format("wsp").option("manifest", "true").load(dir).count()
-      }
-      assert(err.getMessage.contains("manifest"), s"wrong error: $err")
-
-      assert(WspManifest.rebuild(spark, dir) == n.toLong)
-
-      def manifestScan(metrics: Option[Set[String]] = None,
-          glob: Option[String] = None): WspScan =
-        new WspScan(Seq(dir), metrics, Long.MinValue, Long.MaxValue,
-          WspTable.Schema,
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()),
-          1L << 20, metricGlob = glob, manifest = true)
-
-      // full plan off the manifest: all files, ZERO tree walks
-      val scan = manifestScan()
-      val files = scan.listFilesWithMtime()
-      assert(files.size == n)
-      assert(scan.treeWalks == 0L,
-        s"manifest planning walked the tree ${scan.treeWalks} times")
-
-      // metric/glob pruning happens in the manifest scan
-      val one = manifestScan(metrics = Some(Set("shard3.host42.cpu")))
-      assert(one.listFilesWithMtime().map(_._1._3) == Seq("shard3.host42.cpu"))
-      val globbed = manifestScan(glob = Some("shard7.*.cpu"))
-      assert(globbed.listFilesWithMtime().size == 100)
-      assert(one.treeWalks + globbed.treeWalks == 0L)
-
-      // end-to-end read correctness through the DSv2 option
-      val df = spark.read.format("wsp").option("manifest", "true").load(dir)
-      assert(df.count() == n) // one live point per file
-      assert(df.filter(col("metric") === "shard3.host42.cpu").count() == 1)
-
-      // streaming latestOffset: ONE distributed max(mtime) aggregate —
-      // nothing but the scalar reaches the driver, no walk, no collect
-      val stream = new WspMicroBatchStream(manifestScan())
-      val expectMax = files.map(_._2).max
-      assert(stream.latestOffset() == WspOffset(expectMax))
-      // ... and metric pruning applies to the offset too
-      val prunedScan = manifestScan(metrics = Some(Set("shard3.host42.cpu")))
-      assert(prunedScan.maxMtime() ==
-        one.listFilesWithMtime().map(_._2).max)
-
-      // the metric predicate reaches the manifest's PARQUET SCAN: it
-      // must sit below the per-path supersede-dedup aggregate (a filter
-      // above that groupBy cannot push — the r13 review finding)
-      val prunedPlan = WspManifest.live(
-        WspManifest.raw(spark, dir)
-          .filter(col("metric") === "shard3.host42.cpu"))
-        .queryExecution.executedPlan.toString
-      assert(prunedPlan.contains("PushedFilters: [IsNotNull(metric), EqualTo(metric,shard3.host42.cpu)]"),
-        s"metric filter did not reach the manifest scan:\n$prunedPlan")
-
-      // writer maintenance: a merge against the manifested tree appends
-      // rows — the NEW metric appears and the touched one does not
-      // duplicate, all still without a walk or rebuild
-      import spark.implicits._
-      val pts = Seq(("shardnew.hostx.cpu", 0, 1000L, 2.0),
-          ("shard3.host42.cpu", 0, 1010L, 3.0))
-        .toDF("metric", "archive", "bucket_ts", "value")
-      WspWrite.merge(pts, dir, schema)
-      val after = manifestScan()
-      val listed = after.listFilesWithMtime()
-      assert(listed.size == n + 1, s"expected ${n + 1} files, got ${listed.size}")
-      assert(listed.map(_._1._3).count(_ == "shard3.host42.cpu") == 1,
-        "re-published metric duplicated in the manifest view")
-      assert(after.treeWalks == 0L)
-      val df2 = spark.read.format("wsp").option("manifest", "true").load(dir)
-      assert(df2.filter(col("metric") === "shardnew.hostx.cpu").count() == 1)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
-
-  test("manifest live(): equal-mtime re-publishes resolve by a total order") {
-    // the r13 ADVICE tie-break, pinned: coarse-mtime ties pick the row
-    // that is max under (mtime, len, schema_digest) — deterministic
-    // across runs, larger payload winning — never max_by's arbitrary
-    // equal-key choice
-    import spark.implicits._
-    val rows = Seq(
-      // path a: four rows in ONE mtime tick — len breaks first, then
-      // digest among equal (mtime, len)
-      ("m.a", "/t/a.wsp", 100L, 5000L, "dig1"),
-      ("m.a", "/t/a.wsp", 164L, 5000L, "dig0"),
-      ("m.a", "/t/a.wsp", 160L, 5000L, "dig9"),
-      ("m.a", "/t/a.wsp", 164L, 5000L, "dig7"),
-      // path b: a strictly newer mtime wins regardless of len/digest
-      ("m.b", "/t/b.wsp", 9000L, 4000L, "zz"),
-      ("m.b", "/t/b.wsp", 10L, 6000L, "aa")
-    ).toDF("metric", "path", "len", "mtime", "schema_digest")
-    val live = WspManifest.live(rows).collect()
-      .map(r => r.getAs[String]("path") ->
-        ((r.getAs[Long]("len"), r.getAs[Long]("mtime"),
-          r.getAs[String]("schema_digest")))).toMap
-    assert(live("/t/a.wsp") == ((164L, 5000L, "dig7")))
-    assert(live("/t/b.wsp") == ((10L, 6000L, "aa")))
   }
 }

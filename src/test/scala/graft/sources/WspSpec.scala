@@ -4,7 +4,7 @@ import graft.model.{AggregationMethod, Retentions, WhisperSchema}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Codec goldens (hand-computed big-endian bytes), ring-lap overwrite,
   * Spark write→read round trips, and the DSv2 pushdown surface (file
@@ -684,44 +684,6 @@ class WspSpec extends AnyFunSuite {
     assert(!err.getMessage.contains("corrupt archive table"), err.getMessage)
   }
 
-  test("listingCache: quiescent unchanged directories are stat-ed, not re-listed") {
-    import spark.implicits._
-    val root = tmp()
-    WspWrite.export(Seq(("cpu", 0, 1000L, 1.0))
-      .toDF("metric", "archive", "bucket_ts", "value"), s"$root/a", schema)
-    WspWrite.export(Seq(("mem", 0, 1000L, 2.0))
-      .toDF("metric", "archive", "bucket_ts", "value"), s"$root/b", schema)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def age(p: String): Unit = fs.setTimes(new org.apache.hadoop.fs.Path(p),
-      System.currentTimeMillis() - 60000, -1)
-    Seq(root, s"$root/a", s"$root/b").foreach(age)
-
-    val scan = new WspScanBuilder(Seq(root), listingCache = true)
-      .build().asInstanceOf[WspScan]
-    val first = scan.listFilesWithMtime()
-    assert(first.map(_._1._3).toSet == Set("a.cpu", "b.mem"))
-    val c1 = scan.listStatusCalls
-    assert(c1 == 3) // root, a, b — cold walk lists everything
-
-    // unchanged + quiescent: the second walk stats 3 dirs, lists none
-    assert(scan.listFilesWithMtime().size == 2)
-    assert(scan.listStatusCalls == c1)
-
-    // a change in ONE directory re-lists exactly that directory (its
-    // mtime moved; it is also no longer quiescent)
-    WspWrite.export(Seq(("gpu", 0, 1000L, 3.0))
-      .toDF("metric", "archive", "bucket_ts", "value"), s"$root/b", schema)
-    val third = scan.listFilesWithMtime()
-    assert(third.map(_._1._3).toSet == Set("a.cpu", "b.mem", "b.gpu"))
-    assert(scan.listStatusCalls == c1 + 1)
-
-    // parity: cache on ≡ cache off
-    val plain = new WspScanBuilder(Seq(root)).build().asInstanceOf[WspScan]
-    assert(plain.listFilesWithMtime().map(_._1).toSet ==
-      third.map(_._1).toSet)
-  }
-
   test("WspTools.fill: dst slots win, gaps take src, missing metrics appear") {
     import spark.implicits._
     val (src, dst) = (tmp(), tmp())
@@ -989,6 +951,89 @@ class WspSpec extends AnyFunSuite {
       .asInstanceOf[WspReaderFactory].retries == 0)
     assert(scan.streamingReaderFactory()
       .asInstanceOf[WspReaderFactory].retries == WspRead.StreamRetries)
+  }
+
+  test("removed read options fail loudly by name") {
+    import spark.implicits._
+    val dir = tmp()
+    WspWrite.export(Seq(("cpu", 0, 1000L, 1.0))
+      .toDF("metric", "archive", "bucket_ts", "value"), dir, schema)
+    Seq("manifest", "listingCache", "metricRoot", "readRetries").foreach { o =>
+      val err = intercept[IllegalArgumentException] {
+        spark.read.format("wsp").option(o, "true").load(dir).collect()
+      }
+      assert(err.getMessage.contains(s"'$o'"), err.getMessage)
+    }
+  }
+
+  test("a corrupt file fails the scan and names itself; a glob around it reads the rest") {
+    import spark.implicits._
+    val dir = tmp()
+    val good = Seq(("ok.a", 0, 1000L, 1.0), ("ok.a", 0, 1010L, 2.0), ("ok.b", 1, 960L, 3.0))
+    WspWrite.export(good.toDF("metric", "archive", "bucket_ts", "value"), dir, schema)
+    // cut inside the 16-byte metadata block
+    val bad = Paths.get(dir, "bad.wsp")
+    Files.write(bad, java.util.Arrays.copyOf(WspCodec.emptyFile(schema), 10))
+    val err = intercept[Exception] { spark.read.format("wsp").load(dir).collect() }
+    assert(err.getMessage.contains(bad.toString), err.getMessage)
+
+    val rest = spark.read.format("wsp").option("metricGlob", "ok.*").load(dir)
+      .select("metric", "archive", "ts_s", "value").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(rest.sorted.toSeq == good.sorted)
+  }
+
+  test("a file deleted between planning and read fails the batch scan fast, by name") {
+    import spark.implicits._
+    val dir = tmp()
+    WspWrite.export(Seq(("cpu", 0, 1000L, 1.0), ("mem", 0, 1000L, 2.0))
+      .toDF("metric", "archive", "bucket_ts", "value"), dir, schema)
+    // a warm read first, so the timed job pays no first-job set-up
+    assert(spark.read.format("wsp").load(dir).count() == 2)
+
+    val df = spark.read.format("wsp").load(dir)
+    val planned = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.get.flatMap(_.asInstanceOf[WspInputPartition].files.map(_._1))
+    assert(planned.size == 2)
+    val gone = new org.apache.hadoop.fs.Path(planned.find(_.endsWith("/cpu.wsp")).get)
+      .toUri.getPath
+    Files.delete(Paths.get(gone))
+
+    val t0 = System.nanoTime()
+    val err = intercept[Exception] { df.collect() }
+    val secs = (System.nanoTime() - t0) / 1e9
+    val missing = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: java.io.FileNotFoundException => e }
+    assert(missing.exists(_.getMessage.contains(gone)), err)
+    assert(secs < 0.5, s"a missing file took $secs s to fail the scan")
+  }
+
+  test("an orphaned temp image from a crashed publish is invisible to scans and vacuumed by age") {
+    import spark.implicits._
+    val dir = tmp()
+    WspWrite.export(Seq(("cpu", 0, 1000L, 1.0))
+      .toDF("metric", "archive", "bucket_ts", "value"), dir, schema)
+    // the complete image a task killed between temp write and rename
+    // leaves beside the published file, with a different value
+    val image = WspCodec.emptyFile(schema)
+    WspCodec.writeArchive(image, WspCodec.archiveInfos(schema).head, Seq((1000L, 99.0)))
+    val orphan = Paths.get(dir, ".cpu.wsp.tmp.deadbeef")
+    val young = Paths.get(dir, ".cpu.wsp.tmp.cafef00d")
+    Files.write(orphan, image)
+    Files.write(young, image)
+    Files.setLastModifiedTime(orphan, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 2 * 3600L * 1000))
+
+    def points() = spark.read.format("wsp").load(dir)
+      .select("metric", "ts_s", "value").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(points() == Seq(("cpu", 1000L, 1.0)))
+
+    assert(WspWrite.vacuumTmp(spark, dir, olderThanMs = 3600L * 1000) == 1L)
+    assert(!Files.exists(orphan))
+    assert(Files.exists(young), "a tmp younger than the cutoff must survive")
+    assert(points() == Seq(("cpu", 1000L, 1.0)))
   }
 
   test("bin-packing groups many small files into few partitions") {
