@@ -42,8 +42,9 @@ object SparkEntry {
     * r18, r17 verdict #7 — prototyped on the render family at a
     * measured 100 % planning cut with byte-identical plans, then
     * extended to every key that passes the purity audit above).
-    * Streaming keys hold per-invocation state and the wsp family's
-    * datasource resolution collects manifests — both stay unwrapped.
+    * Streaming keys hold per-invocation state, and a wsp scan lists its
+    * tree when it is planned, so a memoized wsp plan would serve a stale
+    * listing — both stay unwrapped.
     */
   private def planCacheable(k: String): Boolean =
     !k.startsWith("stream_") && !k.startsWith("wsp_") &&

@@ -434,19 +434,10 @@ final class WhisperTable private (
     */
   def fetchGlob(pattern: String, fromS: Long, untilS: Long, nowS: Long): DataFrame = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
-    val spp = archive.secondsPerPoint.toLong
-    // guarded: an empty window's sequence would fold to an error at planning
-    val buckets =
-      if (untilI > fromI) sequence(lit(fromI), lit(untilI - spp), lit(spp))
-      else typedLit(Array.empty[Long])
-    readLevelRange(archive, fromI, untilI)
-      .filter(col("metric").rlike(Fetch.globToRegex(pattern)))
-      .repartition(1)
-      .groupBy("metric")
-      .agg(map_from_entries(collect_list(struct(col("bucket_ts"), col("value"))))
-        .as("values"))
-      .select(col("metric"), explode(buckets).as("bucket_ts"), col("values"))
-      .select(col("metric"), col("bucket_ts"), col("values")(col("bucket_ts")).as("value"))
+    Buckets.densify(readLevelRange(archive, fromI, untilI)
+        .filter(col("metric").rlike(Fetch.globToRegex(pattern)))
+        .repartition(1),
+      fromI, untilI, archive.secondsPerPoint.toLong)
       .orderBy("metric", "bucket_ts")
   }
 

@@ -91,6 +91,24 @@ object Buckets {
   def fetchInterval(tSeconds: Long, spp: Int): Long =
     Math.floorDiv(tSeconds, spp.toLong) * spp + spp
 
+  /** Dense `(metric, bucket_ts, value)` frame of a sparse one: each
+    * metric of `sparse` on every bucket of `[fromI, untilI)` step `spp`,
+    * gaps NULL; a metric with no row is absent. One group-by of the input
+    * builds the metric list and the lookup map together, so densifying
+    * costs no second pass over the input and no spine join. The bucket
+    * sequence is guarded: an empty one would fold to an error at planning.
+    */
+  def densify(sparse: DataFrame, fromI: Long, untilI: Long, spp: Long): DataFrame = {
+    val buckets =
+      if (untilI <= fromI) typedLit(Array.empty[Long])
+      else sequence(lit(fromI), lit(untilI - 1 - (untilI - 1 - fromI) % spp), lit(spp))
+    sparse.groupBy(col("metric"))
+      .agg(map_from_entries(collect_list(struct(col("bucket_ts"), col("value"))))
+        .as("values"))
+      .select(col("metric"), explode(buckets).as("bucket_ts"), col("values"))
+      .select(col("metric"), col("bucket_ts"), col("values")(col("bucket_ts")).as("value"))
+  }
+
   /** The canonical `points(metric, ts_s, value)` fact view. Per SURVEY.md
     * §1.3 the role of whisper's point stream is played by
     * `events.parquet` with `metric := event_type`. Column-pruned select so

@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   *    step, exactly as graphite's TimeSeries carries `step`.
   *
   * Scale: every stage is the corresponding [[Fetch]] plan shape — the
-  * leaf is one glob-pruned scan + broadcast-spine dense join (density
-  * then propagates through group-bys for free, no further spine joins),
+  * leaf is one glob-pruned scan whose per-metric group explodes onto
+  * the request grid (density then propagates through group-bys for
+  * free, no further densify),
   * windows partition by metric, and all cardinalities are bounded by
   * the request range, never data volume.
   */
@@ -912,7 +913,7 @@ object RenderTarget {
     // aggregate once per target, not once per leaf — a multi-glob
     // dashboard target no longer multiplies the scan (at 100 TB the
     // scan IS the cost; the per-leaf work above the exchange is bounded
-    // by series × buckets).
+    // by series × buckets). Leaves densify from it too ([[densify]]).
     val leafRx = leafGlobs(expr0).distinct.map(Fetch.globToRegex)
     val sharedAgg = {
       // tag-selected targets cannot pre-filter by glob (the tag
@@ -951,17 +952,17 @@ object RenderTarget {
     def leafSelect(rx: String): DataFrame =
       sharedAgg.filter(fenced(col("metric").rlike(rx)))
 
+    // Dense frame of a selection off [[sharedAgg]] on the base grid.
+    // Grouping the selection itself keeps one scan: a `distinct` beside
+    // it plans straight over the scan and escapes exchange reuse.
+    def densify(sel: DataFrame): DataFrame =
+      Buckets.densify(sel, extFromI, untilI, spp.toLong)
+
     // (dense series frame, step): every bucket of the node's grid has a
     // row; gaps are NULL values — graphite's None
     def eval(e: Expr): (DataFrame, Long) = e match {
       case Leaf(glob) =>
-        val agg = leafSelect(Fetch.globToRegex(glob))
-        val metrics = agg.select(col("metric")).distinct()
-        val dense = spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
-          .crossJoin(metrics)
-          .join(agg, Seq("metric", "bucket_ts"), "left")
-          .select(col("metric"), col("bucket_ts"), col("value"))
-        (dense, spp.toLong)
+        (densify(leafSelect(Fetch.globToRegex(glob))), spp.toLong)
       case Call("perSecond", Seq(c), args) =>
         // counter → rate; optional maxValue recovers wraps, as
         // nonNegativeDerivative
@@ -1536,13 +1537,8 @@ object RenderTarget {
             "seriesByTag('name=cpu', 'dc=~us-.*')")
         // fenced like leafSelect: an unfenced deterministic predicate
         // would push below the shared aggregate and fork the scan
-        val agg = sharedAgg.filter(fenced(exprs.map(tagPredicate).reduce(_ && _)))
-        val metrics = agg.select(col("metric")).distinct()
-        val dense = spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
-          .crossJoin(metrics)
-          .join(agg, Seq("metric", "bucket_ts"), "left")
-          .select(col("metric"), col("bucket_ts"), col("value"))
-        (dense, spp.toLong)
+        (densify(sharedAgg.filter(fenced(exprs.map(tagPredicate).reduce(_ && _)))),
+          spp.toLong)
       case Call("groupByTags", Seq(c), args) =>
         // re-aggregate keyed by (name, selected tags) — the tagged twin
         // of groupByNodes; output names keep graphite's
@@ -2476,13 +2472,7 @@ object RenderTarget {
           .select(regexp_replace(col("metric"),
             java.util.regex.Pattern.quote(search),
             java.util.regex.Matcher.quoteReplacement(replace)).as("metric"))
-        val agg2 = sharedAgg
-          .join(broadcast(rewritten), Seq("metric"), "left_semi")
-        val metrics = agg2.select(col("metric")).distinct()
-        (spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
-          .crossJoin(metrics)
-          .join(agg2, Seq("metric", "bucket_ts"), "left")
-          .select(col("metric"), col("bucket_ts"), col("value")),
+        (densify(sharedAgg.join(broadcast(rewritten), Seq("metric"), "left_semi")),
           spp.toLong)
       case Call("powSeries", cs, _) if cs.nonEmpty =>
         // left-fold power across members in name order (graphite's
@@ -2549,7 +2539,8 @@ object RenderTarget {
           .select(col("metric"), col("bucket_ts"),
             when(col("known") >= col("total") * xff, col("cv")).as("value"))
       }
-    consolidated.orderBy("metric", "bucket_ts")
+    // the request-bounded response body: one sorted partition, no sampling job
+    consolidated.repartition(1).sortWithinPartitions("metric", "bucket_ts")
   }
 
   /** graphite's PIE mode — the render API's second output form

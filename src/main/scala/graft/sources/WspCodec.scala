@@ -192,11 +192,15 @@ object WspCodec {
     * real point at epoch 0 by construction). Raw dump semantics: emits
     * what the ring holds; query-time range filters play the role of the
     * reference's expected-interval staleness check (F2), which is only
-    * defined relative to a requested range.
+    * defined relative to a requested range. `decodes(archive, spp)`
+    * chooses the archives to decode; the other rings are skipped.
     */
-  def decodePoints(file: Array[Byte], name: String = "<wsp>"): Iterator[WspPoint] = {
+  def decodePoints(file: Array[Byte], name: String = "<wsp>",
+      decodes: (Int, Int) => Boolean = (_, _) => true): Iterator[WspPoint] = {
     val header = readHeader(file, name)
-    header.archives.iterator.zipWithIndex.flatMap { case (a, idx) =>
+    header.archives.iterator.zipWithIndex.filter { case (a, idx) =>
+      decodes(idx, a.secondsPerPoint)
+    }.flatMap { case (a, idx) =>
       val buf = java.nio.ByteBuffer.wrap(file).order(java.nio.ByteOrder.BIG_ENDIAN)
       buf.position(a.offset)
       (0 until a.numberOfPoints).iterator.flatMap { _ =>

@@ -50,10 +50,13 @@ import org.apache.spark.util.SerializableConfiguration
   *    the range are never materialized — and the range filter is exactly
   *    the reference's F2 staleness semantics, which is only defined
   *    relative to a requested range);
+  *  - `spp`/`archive` predicates (`EqualTo`/`In`) push into the decoder
+  *    as an archive choice: the other archives' rings are skipped, never
+  *    decoded (a render at one resolution reads one ring per file);
   *  - column pruning is honored (a `count(*)` decodes no strings).
   *
-  * Pushed `metric`/`ts_s` filters are absorbed exactly (not re-evaluated
-  * above the scan); everything else stays in Catalyst.
+  * Pushed `metric`/`ts_s`/`spp`/`archive` filters are absorbed exactly
+  * (not re-evaluated above the scan); everything else stays in Catalyst.
   */
 final class WspDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "wsp"
@@ -148,12 +151,13 @@ final class WspScanBuilder(
 
   // metric ∈ metrics (None = unconstrained) — applied as FILE pruning
   private var metrics: Option[Set[String]] = None
-  // ts_s ∈ [lo, hi] — applied inside the slot decoder
-  private var tsLo: Long = Long.MinValue
-  private var tsHi: Long = Long.MaxValue
+  // ts_s ∈ [lo, hi] and the archive choice — applied inside the decoder
+  private var slots = WspSlots()
 
   private def intersect(vs: Set[String]): Unit =
     metrics = Some(metrics.fold(vs)(_ intersect vs))
+  // a NULL list element matches no row
+  private def ints(vs: Array[Any]): Set[Int] = vs.collect { case i: Int => i }.toSet
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (supported, residual) = filters.partition {
@@ -161,24 +165,29 @@ final class WspScanBuilder(
       case EqualTo("ts_s", _: Long) => true
       case GreaterThan("ts_s", _: Long) | GreaterThanOrEqual("ts_s", _: Long) => true
       case LessThan("ts_s", _: Long) | LessThanOrEqual("ts_s", _: Long) => true
+      case EqualTo("spp" | "archive", _: Int) => true
+      case In("spp" | "archive", vs) => vs.forall(v => v == null || v.isInstanceOf[Int])
       case _ => false
     }
     supported.foreach {
       case EqualTo("metric", v: String) => intersect(Set(v))
       case In("metric", vs) => intersect(vs.collect { case s: String => s }.toSet)
-      case EqualTo("ts_s", v: Long) =>
-        tsLo = math.max(tsLo, v); tsHi = math.min(tsHi, v)
+      case EqualTo("ts_s", v: Long) => slots = slots.atLeast(v).atMost(v)
       // strict bounds at the Long extremes: v±1 would wrap and silently
       // turn a provably-empty predicate into an unbounded scan (these
       // filters are absorbed, nothing above re-checks them)
       case GreaterThan("ts_s", v: Long) =>
-        if (v == Long.MaxValue) { tsLo = 1; tsHi = 0 } // empty range
-        else tsLo = math.max(tsLo, v + 1)
-      case GreaterThanOrEqual("ts_s", v: Long) => tsLo = math.max(tsLo, v)
+        slots = if (v == Long.MaxValue) slots.copy(tsLo = 1, tsHi = 0) // empty range
+          else slots.atLeast(v + 1)
+      case GreaterThanOrEqual("ts_s", v: Long) => slots = slots.atLeast(v)
       case LessThan("ts_s", v: Long) =>
-        if (v == Long.MinValue) { tsLo = 1; tsHi = 0 } // empty range
-        else tsHi = math.min(tsHi, v - 1)
-      case LessThanOrEqual("ts_s", v: Long) => tsHi = math.min(tsHi, v)
+        slots = if (v == Long.MinValue) slots.copy(tsLo = 1, tsHi = 0) // empty range
+          else slots.atMost(v - 1)
+      case LessThanOrEqual("ts_s", v: Long) => slots = slots.atMost(v)
+      case EqualTo("spp", v: Int) => slots = slots.sppIn(Set(v))
+      case In("spp", vs) => slots = slots.sppIn(ints(vs))
+      case EqualTo("archive", v: Int) => slots = slots.archiveIn(Set(v))
+      case In("archive", vs) => slots = slots.archiveIn(ints(vs))
       case _ => ()
     }
     pushed = supported
@@ -191,7 +200,7 @@ final class WspScanBuilder(
 
   override def build(): Scan = {
     val spark = SparkSession.active
-    new WspScan(roots, metrics, tsLo, tsHi, required,
+    new WspScan(roots, metrics, slots, required,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       spark.sessionState.conf.filesMaxPartitionBytes, metricGlob)
   }
@@ -200,11 +209,30 @@ final class WspScanBuilder(
 /** One planned slice of files (path, length, metric). */
 final case class WspInputPartition(files: Seq[(String, Long, String)]) extends InputPartition
 
+/** The pushed slot predicates the decoder applies to every file: the
+  * `ts_s` range `[tsLo, tsHi]` and, when pushed, the archive indexes and
+  * resolutions to decode (None = every archive).
+  */
+final case class WspSlots(
+    tsLo: Long = Long.MinValue,
+    tsHi: Long = Long.MaxValue,
+    archives: Option[Set[Int]] = None,
+    spps: Option[Set[Int]] = None) {
+  def atLeast(v: Long): WspSlots = copy(tsLo = math.max(tsLo, v))
+  def atMost(v: Long): WspSlots = copy(tsHi = math.min(tsHi, v))
+  def archiveIn(vs: Set[Int]): WspSlots = copy(archives = Some(archives.fold(vs)(_ intersect vs)))
+  def sppIn(vs: Set[Int]): WspSlots = copy(spps = Some(spps.fold(vs)(_ intersect vs)))
+  def decodes(archive: Int, spp: Int): Boolean =
+    archives.forall(_(archive)) && spps.forall(_(spp))
+  def describe: String =
+    s"ts_s=[$tsLo,$tsHi]" + archives.fold("")(a => s" archive=${a.toSeq.sorted.mkString(",")}") +
+      spps.fold("")(p => s" spp=${p.toSeq.sorted.mkString(",")}")
+}
+
 final class WspScan(
     roots: Seq[String],
     metrics: Option[Set[String]],
-    tsLo: Long,
-    tsHi: Long,
+    slots: WspSlots,
     required: StructType,
     conf: SerializableConfiguration,
     maxPartitionBytes: Long,
@@ -219,7 +247,7 @@ final class WspScan(
   override def description(): String = {
     val m = metrics.fold("*")(_.mkString(","))
     val g = metricGlob.fold("")(g => s" glob=$g")
-    s"wsp ${roots.mkString(",")} metric=$m$g ts_s=[$tsLo,$tsHi]"
+    s"wsp ${roots.mkString(",")} metric=$m$g ${slots.describe}"
   }
 
   /** Every selected `.wsp` file with its size, derived metric name, and
@@ -306,7 +334,7 @@ final class WspScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WspReaderFactory(required, tsLo, tsHi, conf)
+    new WspReaderFactory(required, slots, conf)
 
   /** Reader factory for the STREAMING path: a live tree's publish
     * fallback (delete+rename schemes) can leave a planned file briefly
@@ -314,7 +342,7 @@ final class WspScan(
     * [[WspRead.StreamRetries]] times before surfacing the error.
     */
   private[sources] def streamingReaderFactory(): PartitionReaderFactory =
-    new WspReaderFactory(required, tsLo, tsHi, conf, WspRead.StreamRetries)
+    new WspReaderFactory(required, slots, conf, WspRead.StreamRetries)
 
   /** Streaming read: tail a LIVE whisper tree — the reverse direction of
     * [[graft.streaming.StreamIngest.wspWriter]] (a carbon daemon keeps
@@ -403,13 +431,12 @@ final class WspMicroBatchStream(scan: WspScan)
 
 final class WspReaderFactory(
     required: StructType,
-    tsLo: Long,
-    tsHi: Long,
+    slots: WspSlots,
     conf: SerializableConfiguration,
     private[sources] val retries: Int = 0) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WspPartitionReader(
-      partition.asInstanceOf[WspInputPartition], required, tsLo, tsHi, conf, retries)
+      partition.asInstanceOf[WspInputPartition], required, slots, conf, retries)
 
   // the scan is COLUMNAR: ring slots decode straight into column
   // vectors, so downstream whole-stage codegen consumes vectorized
@@ -420,7 +447,7 @@ final class WspReaderFactory(
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new WspColumnarReader(
-      partition.asInstanceOf[WspInputPartition], required, tsLo, tsHi, conf, retries)
+      partition.asInstanceOf[WspInputPartition], required, slots, conf, retries)
 }
 
 private[sources] object WspRead {
@@ -463,14 +490,14 @@ private[sources] object WspRead {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Per-file image read + slot decode + pushed ts filter — the shared
-    * front half of both the row and columnar readers. Returns the
-    * file's metric name and its filtered point iterator.
+  /** Per-file image read + decode of the chosen archives + pushed ts
+    * filter — the shared front half of both the row and columnar
+    * readers. Returns the file's metric name and its filtered point
+    * iterator.
     */
   def openFile(
       file: (String, Long, String),
-      tsLo: Long,
-      tsHi: Long,
+      slots: WspSlots,
       conf: SerializableConfiguration,
       retries: Int): (String, Iterator[WspPoint]) = {
     val (path, len, metric) = file
@@ -482,8 +509,8 @@ private[sources] object WspRead {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf.value)
     val bytes = readWithRetry(fs, p, len.toInt, path, retries)
-    (metric, WspCodec.decodePoints(bytes, path)
-      .filter(pt => pt.tsS >= tsLo && pt.tsS <= tsHi))
+    (metric, WspCodec.decodePoints(bytes, path, slots.decodes)
+      .filter(pt => pt.tsS >= slots.tsLo && pt.tsS <= slots.tsHi))
   }
 }
 
@@ -495,8 +522,7 @@ private[sources] object WspRead {
 final class WspColumnarReader(
     partition: WspInputPartition,
     required: StructType,
-    tsLo: Long,
-    tsHi: Long,
+    slots: WspSlots,
     conf: SerializableConfiguration,
     retries: Int = 0)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
@@ -527,7 +553,7 @@ final class WspColumnarReader(
 
   private def nextFile(): Boolean = {
     if (!files.hasNext) return false
-    val (metric, pts) = WspRead.openFile(files.next(), tsLo, tsHi, conf, retries)
+    val (metric, pts) = WspRead.openFile(files.next(), slots, conf, retries)
     metricBytes = metric.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     points = pts
     true
@@ -571,8 +597,7 @@ object WspColumnarReader {
 final class WspPartitionReader(
     partition: WspInputPartition,
     required: StructType,
-    tsLo: Long,
-    tsHi: Long,
+    slots: WspSlots,
     conf: SerializableConfiguration,
     retries: Int = 0) extends PartitionReader[InternalRow] {
 
@@ -600,7 +625,7 @@ final class WspPartitionReader(
 
   private def nextFile(): Boolean = {
     if (!files.hasNext) return false
-    val (metric, pts) = WspRead.openFile(files.next(), tsLo, tsHi, conf, retries)
+    val (metric, pts) = WspRead.openFile(files.next(), slots, conf, retries)
     metricU8 = UTF8String.fromString(metric)
     points = pts
     true

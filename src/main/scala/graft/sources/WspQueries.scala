@@ -114,8 +114,9 @@ object WspQueries {
     * during the tree walk (passed as the scan's `metricGlob` option via
     * [[graft.ops.RenderTarget.leafGlobs]]), then metric find, per-minute
     * fetch, counter rates and 10-minute totals all run from that one
-    * pruned scan: a graphite user points an existing dashboard at the
-    * tree and the target runs unchanged.
+    * pruned scan — the dense series and their metric list both derive
+    * from its per-minute aggregate: a graphite user points an existing
+    * dashboard at the tree and the target runs unchanged.
     */
   def wspRenderTarget(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.RenderTarget

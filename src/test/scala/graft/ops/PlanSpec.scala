@@ -98,12 +98,20 @@ class PlanSpec extends AnyFunSuite {
   test("render pointwise tier adds no shuffle over the bare rate plan") {
     // scale(nonNegativeDerivative(g), 60) must cost exactly what
     // perSecond(g) costs: the arithmetic fuses into the window's
-    // downstream projection — same number of exchanges
+    // downstream projection — same number of exchanges; and the render
+    // rate plan costs no more than the hand-built rate fetch
     def exchanges(p: String) = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(p).size
     val rate = plan(RenderTarget.renderTargetRate(spark, dir))
+    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
+    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val perSecond = plan(RenderTarget.evaluate(spark,
+      Buckets.pointsInRange(spark, dir, fromI, untilI),
+      s"perSecond(${Fetch.GlobPattern})", Buckets.FromS, Buckets.UntilS, 60))
     val bare = plan(Fetch.fetchPerSecond(spark, dir))
-    assert(exchanges(rate) == exchanges(bare),
+    assert(exchanges(rate) == exchanges(perSecond),
       s"pointwise transforms added a shuffle:\n$rate")
+    assert(exchanges(rate) <= exchanges(bare),
+      s"the render rate plan shuffles more than the rate fetch:\n$rate")
   }
 
   test("multi-leaf render targets execute one base-table scan") {

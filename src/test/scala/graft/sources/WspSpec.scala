@@ -1049,4 +1049,122 @@ class WspSpec extends AnyFunSuite {
     // and the packed partition still reads everything
     assert(spark.read.format("wsp").load(dir).count() == 20)
   }
+
+  // 60s:2h, 5m:4h, 1h:1d — a three-archive tree as a render serves it
+  private val schema3 = WhisperSchema(
+    Seq(graft.model.Retention(60, 120), graft.model.Retention(300, 48),
+      graft.model.Retention(3600, 24)),
+    AggregationMethod.Average, 0.0)
+  private val T0 = 1699999200L // hour-aligned
+
+  /** host.a holds 1m data for minutes 0..39, host.b for 25..69, host.c
+    * only coarse data; every host has 5m and 1h points. Returns the tree
+    * and its 1m points. */
+  private def renderTree(): (String, Map[(String, Long), Double]) = {
+    import spark.implicits._
+    val dir = tmp()
+    val fine = (0 until 40).map(i => ("host.a", T0 + 60L * i, i * 1.5)) ++
+      (25 until 70).map(i => ("host.b", T0 + 60L * i, 100 - i * 0.25))
+    val coarse = Seq("host.a", "host.b", "host.c").flatMap { m =>
+      (0 until 14).map(k => (m, 1, T0 + 300L * k, k.toDouble)) ++
+        Seq((m, 2, T0, 7.0), (m, 2, T0 + 3600, 8.0))
+    }
+    WspWrite.export((fine.map { case (m, t, v) => (m, 0, t, v) } ++ coarse)
+      .toDF("metric", "archive", "bucket_ts", "value"), dir, schema3)
+    (dir, fine.map { case (m, t, v) => (m, t) -> v }.toMap)
+  }
+
+  private def renderPoints(dir: String) =
+    spark.read.format("wsp").option("metricGlob", "host.*").load(dir)
+      .filter(org.apache.spark.sql.functions.col("spp") === 60)
+      .select("metric", "ts_s", "value")
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Number].doubleValue)))
+
+  test("a render over a wsp glob runs one scan in at most five jobs") {
+    import graft.ops.RenderTarget
+    val (dir, _) = renderTree()
+    val q = RenderTarget.evaluate(spark, renderPoints(dir), "sumSeries(host.*)",
+      T0 + 600, T0 + 3600, 60)
+    // warm: the timed count must not include first-use set-up jobs
+    RenderTarget.evaluate(spark, renderPoints(dir), "sumSeries(host.*)",
+      T0 + 600, T0 + 3600, 60).collect()
+    val jobs = org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext)(q.collect())
+    assert(jobs <= 5, s"render ran $jobs jobs")
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(s.plan)
+      case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => 1
+      case o => (o.children ++ o.subqueries).map(scans).sum
+    }
+    val n = scans(q.queryExecution.executedPlan)
+    assert(n == 1, s"$n wsp scans in the final plan:\n${q.queryExecution.executedPlan}")
+  }
+
+  test("render densify: partial members, history window, empty windows") {
+    import graft.ops.{Buckets, RenderTarget}
+    val (dir, fine) = renderTree()
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val (fromS, untilS) = (T0 + 630, T0 + 3600)
+    val fromI = Buckets.fetchInterval(fromS, 60)
+    val untilI = Buckets.fetchInterval(untilS, 60)
+    // movingAverage(_, 3) extends the leaf three buckets back; each
+    // bucket averages the known sums of the three buckets before it
+    val grid = (fromI - 180 until untilI by 60).toVector
+    val sums = grid.map { b =>
+      val vs = Seq("host.a", "host.b").flatMap(m => fine.get((m, b)))
+      if (vs.isEmpty) None else Some(vs.sum)
+    }
+    val expect = grid.indices.filter(grid(_) >= fromI).map { i =>
+      val known = sums.slice(i - 3, i).flatten
+      ("sumSeries", grid(i), if (known.isEmpty) None else Some(r6(known.sum / known.size)))
+    }
+    assert(rows(RenderTarget.evaluate(spark, renderPoints(dir),
+      "movingAverage(sumSeries(host.*), 3)", fromS, untilS, 60)) == expect)
+    // a glob leaf: host.c holds no 1m point in range and is absent;
+    // the others are dense with NULL gaps
+    val dense = rows(RenderTarget.evaluate(spark, renderPoints(dir), "host.*", fromS, untilS, 60))
+    assert(dense == Seq("host.a", "host.b").flatMap(m =>
+      (fromI until untilI by 60).map(b => (m, b, fine.get((m, b))))))
+    // an empty window (until <= the extended from) is 0 rows, no error
+    for (t <- Seq("host.*", "sumSeries(host.*)", "movingAverage(host.*, 3)");
+         (f, u) <- Seq((T0 + 1200, T0 + 1200), (T0 + 1800, T0 + 1200)))
+      assert(RenderTarget.evaluate(spark, renderPoints(dir), t, f, u, 60)
+        .collect().isEmpty, s"$t over [$f, $u)")
+  }
+
+  test("pushed spp/archive filters choose the decoded archives, exactly") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.sources.{EqualTo, In}
+    val (dir, _) = renderTree()
+    val all = spark.read.format("wsp").load(dir)
+      .select("metric", "archive", "spp", "ts_s", "value").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getDouble(4))).toSeq
+    def read(f: org.apache.spark.sql.Column) = {
+      val q = spark.read.format("wsp").load(dir).filter(f)
+      // absorbed by the source: no Filter node re-checks it
+      assert(q.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f
+      }.isEmpty, q.queryExecution.executedPlan)
+      (q.queryExecution.executedPlan.toString,
+        q.select("metric", "archive", "spp", "ts_s", "value").collect()
+          .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getDouble(4)))
+          .toSeq.sorted)
+    }
+    val (p300, got300) = read(col("spp") === 300)
+    assert(p300.contains("spp=300"), p300)
+    assert(got300.nonEmpty && got300 == all.filter(_._3 == 300).sorted)
+    val (pArch, gotArch) = read(col("archive").isin(0, 2))
+    assert(pArch.contains("archive=0,2"), pArch)
+    assert(gotArch == all.filter(r => Set(0, 2)(r._2)).sorted)
+    assert(read(col("spp") === 300 && col("archive") === 0)._2.isEmpty)
+
+    val sb = new WspScanBuilder(Seq(dir))
+    val pushed = Array[org.apache.spark.sql.sources.Filter](
+      EqualTo("spp", 300), In("archive", Array(0, 1)))
+    assert(sb.pushFilters(pushed).isEmpty)
+    assert(sb.pushedFilters().toSeq == pushed.toSeq)
+  }
 }
