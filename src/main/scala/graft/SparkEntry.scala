@@ -29,13 +29,8 @@ object SparkEntry {
     // eager per-iteration localCheckpoints: a cache clear between bench
     // reps would evict blocks whose TRUNCATED lineage cannot recompute
     "token_bpe_merges", "token_bpe_apply",
-    // construction collects the verified-pair graph for the driver
-    // union-find — a memoized handle would embed that RESULT across
-    // invocations, which is result caching, not plan caching
-    "dedup_cluster", "dedup_collapse", "curate", "curate_funnel",
-    "split_assign_safe",
-    // construction sizes blocks from an observed-id-range head() — the
-    // same embedded-result concern
+    // construction sizes blocks from an observed-id-range head(): a
+    // memoized handle would embed that result across invocations
     "shard_pack_scalable")
 
   /** Pure-DAG keys get their analyzed plan memoized ([[PlanCache]];

@@ -782,9 +782,8 @@ object Curation {
     // of a per-invocation localCheckpoint: the checkpoint pinned its
     // blocks in executor storage with NO release path, so repeated
     // invocations in a long-lived session accumulated a generation per
-    // call (r16 review — the distributedCluster leak class); both
-    // selection forms now scan one small parquet, and the build lands
-    // in the bench's staging phase like the other indexes
+    // call; both selection forms now scan one small parquet, and the
+    // build lands in the bench's staging phase like the other indexes
     s.read.parquet(Dedup.sharedIndexPath(
         s, dir, "documents.parquet", "dsir_scored") { p =>
       dsirScoredImpl(s, dir).write.mode("overwrite").parquet(p)

@@ -1,5 +1,9 @@
 package graft.ops
 
+import java.util.Arrays
+
+import scala.collection.mutable.ArrayBuilder
+
 import graft.functions.BloomMightContain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1141,151 +1145,52 @@ object Dedup {
 
   // --------------------------------------------- near-dup cluster collapse
 
-  /** `dedup_cluster`: connected components over the near-duplicate pair
-    * graph — the step a real dedup pipeline runs after candidate
-    * verification, collapsing each transitive duplicate cluster to one
-    * canonical document (the minimum doc_id, the standard deterministic
-    * choice). The pair source is [[dedupMinhash]]'s LSH-verified pairs —
-    * the same candidate-generation path that runs at 100 TB — and the
-    * oracle rebuilds the identical LSH pair set (MD5 MinHash CTEs) before
-    * its recursive closure, so the whole lineage is the production shape.
-    * Below [[DriverClusterMaxPairs]] the tiny verified-pair graph is
-    * contracted on the driver (broadcast-scale, like a broadcast join);
-    * above it, [[distributedCluster]] runs alternating large-star /
-    * small-star contraction with all shuffles keyed by node id.
+  /** `dedup_cluster`: connected components over [[dedupMinhash]]'s
+    * LSH-verified pair graph, each document labelled with its
+    * component's minimum doc_id (the canonical member a collapse keeps).
+    * The oracle rebuilds the same pair set before its recursive closure.
     */
-  /** Pair-set size up to which components are solved with driver-side
-    * union-find (~16 MB of longs — broadcast scale). The expensive work
-    * (shingling, LSH/exact pair generation, Jaccard verification) is
-    * always distributed; only the final tiny-graph contraction runs on
-    * the driver, exactly the size-gated decision Spark itself makes for
-    * broadcast joins. Above the threshold the distributed min-label loop
-    * below takes over.
-    */
-  val DriverClusterMaxPairs: Long = 1L << 20
-
   def dedupCluster(s: SparkSession, dir: String): DataFrame =
-    dedupClusterImpl(s, dir, DriverClusterMaxPairs)
+    components(minhashPairsShared(s, dir))
 
-  private[graft] def dedupClusterImpl(
-      s: SparkSession, dir: String, driverMaxPairs: Long): DataFrame = {
-    // the shared materialized pair index: both component paths read it
-    // repeatedly, each read is a cheap parquet scan
-    val pairs = minhashPairsShared(s, dir).select(col("doc_a"), col("doc_b"))
-    // ONE driver job instead of two (r18, guide §1.2 "don't compute
-    // things you throw away"): collecting cap+1 rows answers the size
-    // gate AND supplies the edges — the previous count()-then-collect()
-    // ran two jobs over the pair index per construction. The decision
-    // boundary is identical (|pairs| ≤ cap ⟺ a cap+1-row limit returns
-    // ≤ cap rows) up to Int.MaxValue−1, past which the distributed path
-    // is taken unconditionally — the regime where the old code would
-    // have attempted a >2³¹-row driver collect; both component paths
-    // are pinned result-equal by spec, so the gate shift cannot change
-    // results. The capped collect is bounded (~16 MB of long pairs at
-    // the default gate) even when the distributed path is about to win.
-    val cap = math.min(driverMaxPairs, Int.MaxValue - 1L).toInt
-    val capped = pairs.limit(cap + 1).collect()
-    if (capped.length <= cap) {
-      import s.implicits._
-      val edgeArr = capped.map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      // iterative two-pass find (walk to root, then compress): a chain-
-      // shaped pair ordering near the 2^20 gate must not overflow the
-      // driver stack. Unions always point larger → smaller, so the root
-      // is the component minimum — rank/size union would break that.
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrElse(x, x) != x) x = parent(x)
-        val root = x
-        var y = x0
-        while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = root; y = n }
-        root
-      }
-      for ((a, b) <- edgeArr) {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edgeArr.flatMap { case (a, b) => Seq(a, b) }.distinct
-      // roots are component minima: unions always point larger → smaller
-      nodes.map(n => (n, find(n))).sortBy(_._1).toSeq
-        .toDF("doc_id", "cluster_id")
-        .orderBy("doc_id")
-    } else distributedCluster(pairs)
-  }
-
-  /** Alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC '14). Every
-    * round is a `groupBy(node)` min-aggregation plus an equi-join back on
-    * the node id — shuffles keyed by doc_id only, NO broadcast of the
-    * label frame (at 100 TB the docs-in-near-dup-pairs set is a large
-    * fraction of the corpus, far past broadcast scale). Converges to
-    * per-component stars centered at the minimum doc_id; round count is
-    * O(log²) in component size.
+  /** `(doc_id, cluster_id)` for every endpoint of the `(doc_a, doc_b)`
+    * edges, cluster_id = component minimum. One task runs union-find in
+    * memory O(edges + distinct endpoints); its single partition needs no
+    * exchange, so the final sort runs no sampling job either.
     */
-  /** Best-effort release of a localCheckpoint's storage blocks.
-    * `Dataset.unpersist` only uncaches catalog-cache entries — the
-    * checkpoint RDD lives OUTSIDE it (the Bench quiesce note), behind
-    * the plan's LogicalRDD leaf, which is `private[sql]`; reflection
-    * reaches its `rdd` without tracking persistent-RDD ids globally
-    * (a global sweep could release a concurrent session's blocks).
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach { node =>
-      if (node.getClass.getSimpleName == "LogicalRDD")
-        node.getClass.getMethod("rdd").invoke(node) match {
-          case r: org.apache.spark.rdd.RDD[_] => r.unpersist(false); ()
-          case _ => ()
+  private[graft] def components(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]
+      .coalesce(1)
+      .mapPartitions { edges =>
+        val (as, bs) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+        edges.foreach { case (a, b) => as += a; bs += b }
+        val (ea, eb) = (as.result(), bs.result())
+        // dense ids: the sorted distinct endpoints, so id order is doc order
+        val ids = ea ++ eb
+        Arrays.sort(ids)
+        var n = 0
+        for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+        def id(x: Long): Int = Arrays.binarySearch(ids, 0, n, x)
+        val parent = Array.range(0, n)
+        // iterative (a long chain must not overflow the stack), with path
+        // compression
+        def find(x0: Int): Int = {
+          var r = x0
+          while (parent(r) != r) r = parent(r)
+          var x = x0
+          while (parent(x) != r) { val up = parent(x); parent(x) = r; x = up }
+          r
         }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private[graft] def distributedCluster(pairs: DataFrame): DataFrame = {
-    val nodes = pairs.select(col("doc_a").as("doc_id"))
-      .unionAll(pairs.select(col("doc_b").as("doc_id")))
-      .distinct().localCheckpoint(true)
-    // large-star: for each node u, link every strictly-larger neighbor v
-    // to m = min(Γ(u) ∪ {u})
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      sym.join(m, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    // small-star: orient edges downward (u > v), then link each node's
-    // smaller neighborhood N — and u itself — to min(N)
-    def smallStar(e: DataFrame): DataFrame = {
-      val dn = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val m = dn.groupBy("u").agg(min("v").as("m"))
-      dn.join(m, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(m.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    var edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    var converged = false
-    while (!converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      // exact fixpoint test: symmetric difference of the edge sets —
-      // cost tracks the (shrinking) pair graph, not the corpus
-      val changed =
-        next.exceptAll(edges).count() + edges.exceptAll(next).count()
-      // release the superseded round's checkpoint blocks NOW: the
-      // O(log²) rounds would otherwise pin every generation in block
-      // storage for the life of the job — peak = SUM of all rounds'
-      // edge sets instead of two (r16 review)
-      releaseLocalCheckpoint(edges)
-      edges = next
-      converged = changed == 0
-    }
-    // fixpoint = stars (u → component-min); roots label themselves
-    nodes
-      .join(edges.select(col("u").as("doc_id"), col("v").as("root")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("root"), col("doc_id")).as("cluster_id"))
+        // larger root under smaller, never by rank: the root stays the
+        // component minimum
+        for (i <- ea.indices) {
+          val (ra, rb) = (find(id(ea(i))), find(id(eb(i))))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+      }
+      .toDF("doc_id", "cluster_id")
       .orderBy("doc_id")
   }
 

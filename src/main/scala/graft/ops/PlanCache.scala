@@ -37,8 +37,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * localCheckpoint (a later cache clear would evict its blocks
   * UNRECOVERABLY: truncated lineage cannot recompute), no
   * construction-time collect/head whose embedded result would outlive
-  * the invocation (driver union-find, observed-range sizing), and not
-  * the wsp family (manifest collects inside datasource resolution).
+  * the invocation (observed-range sizing), and not the wsp family (its
+  * scan lists the tree when it is planned, so a memoized plan would
+  * serve a stale listing).
   * Kill switch: SPARK_GRAFT_PLAN_CACHE=0 (value semantics, [[enabled]]).
   */
 object PlanCache {

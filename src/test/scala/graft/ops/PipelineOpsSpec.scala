@@ -95,15 +95,16 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(scrub("mail.co alone") == "mail.co alone") // needs an @
   }
 
-  test("dedup_cluster driver and distributed paths agree exactly") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    // driverMaxPairs = 0 forces the distributed star-contraction loop
-    assert(rows(Dedup.dedupClusterImpl(spark, dir, 0L)) ==
-      rows(Dedup.dedupClusterImpl(spark, dir, Long.MaxValue)))
+  test("dedup_cluster adds no Spark job to the pair-index read at construction") {
+    import org.apache.spark.graftprobe.Jobs
+    Dedup.minhashPairsShared(spark, dir).collect() // warm the shared index
+    val read = Jobs.counted(spark.sparkContext)(Dedup.minhashPairsShared(spark, dir))
+    val cluster = Jobs.counted(spark.sparkContext)(Dedup.dedupCluster(spark, dir))
+    assert(read == 1) // the parquet schema-inference job
+    assert(cluster == read)
   }
 
-  test("distributed star-contraction matches union-find on adversarial graphs") {
+  test("components matches a reference union-find on adversarial graphs") {
     import spark.implicits._
     // reference labels by plain union-find over the edge list
     def expected(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -122,15 +123,22 @@ class PipelineOpsSpec extends AnyFunSuite {
     val chains = (1L to 40L).sliding(2).map(s => (s(1), s.head)).toSeq // descending-order long chain
     val star = (2L to 30L).map(i => (100L + i, 100L)) // big star, hub = min
     // hub 300 is the component MAXIMUM — the whole star must re-root onto
-    // leaf 280 (the min), the case small-star specifically exists for
+    // leaf 280 (the min)
     val revStar = (1L to 20L).map(i => (300L, 300L - i))
     // merge chains+star+revStar into one component, plus an isolated pair
     val bridged = Seq((40L, 100L + 2), (39L, 285L), (200L, 1000L))
-    for (g <- Seq(chains, star, revStar, chains ++ star ++ revStar ++ bridged)) {
-      val got = Dedup.distributedCluster(g.toDF("doc_a", "doc_b"))
+    def labels(g: Seq[(Long, Long)]): Map[Long, Long] =
+      Dedup.components(g.toDF("doc_a", "doc_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected(g), s"graph $g")
+    for (g <- Seq(Seq.empty, chains, star, revStar,
+        chains ++ star ++ revStar ++ bridged)) {
+      assert(labels(g) == expected(g), s"graph $g")
     }
+    // a 200k-node chain fed from the top: every union lands on a fresh
+    // root, so find must neither recurse nor walk the chain per node
+    val n = 200000L
+    val chain = labels((n to 2L by -1L).map(i => (i, i - 1)))
+    assert(chain.size == n && chain.values.forall(_ == 1L))
   }
 
   test("dedup_cluster is a consistent clustering of the near-dup graph") {
