@@ -138,6 +138,7 @@ object Bench {
     def compileCount(): Long =
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount
+    var failedRuns = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -159,28 +160,34 @@ object Bench {
           spark.sparkContext.setJobDescription(s"bench:$name#$i")
           val g0 = if (probe) gcMs() else 0L
           val c0 = if (probe) compileCount() else 0L
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          val dt = (System.nanoTime() - t0) / 1e9
+          val dt = timed(fn(spark, sfDir).count())
           val gd = if (probe) gcMs() - g0 else 0L
           val cd = if (probe) compileCount() - c0 else 0L
           quiesce()
           (dt, gd, cd)
         }
         spark.sparkContext.setJobDescription(null)
-        val times = samples.map(_._1)
         if (probe)
           println(s"""{"metric":"probe","key":"$name","gc_ms":[${
             samples.map(_._2).mkString(",")}],"compile_n":[${
             samples.map(_._3).mkString(",")}]}""")
-        val steady = if (warmable(name)) times else times.tail
+        // a failed run is reported and never timed: its time-to-failure
+        // would read as a (fast) timing
+        val runs = samples.map(_._1)
+        for ((Left(e), i) <- runs.zipWithIndex) {
+          failedRuns += 1
+          println(errorRecord(name, i, e))
+        }
+        val times = runs.collect { case Right(t) => t }
+        val steady = (if (warmable(name)) runs else runs.tail)
+          .collect { case Right(t) => t }
         // `times` keeps ALL runs (the runs file diagnoses memoization
         // misses by the ingest run's size); `steady` is the ONE served
         // view the median here and the tripwire below both judge —
         // carried in the tuple so the rule cannot fork between them
-        (name, steady.sorted.apply(steady.size / 2), times.head, times,
-          steady)
-      }
+        Option.when(steady.nonEmpty)((name, steady.sorted.apply(steady.size / 2),
+          times.head, times, steady))
+      }.flatten
     // regression tripwire: diff per-key medians against the rolling BEST
     // (per-key MIN) over the last three driver artifacts (BENCH_r*.json)
     // plus the committed BENCH_FULL.json. The r16 predecessor compared
@@ -379,13 +386,32 @@ object Bench {
           canaryLine, lastLine).mkString("", "\n", "\n"))
       catch { case e: java.io.IOException =>
         System.err.println(s"[bench] BENCH_FULL.json not written: $e") }
+    if (failedRuns > 0) {
+      System.err.println(s"[bench] $failedRuns run(s) failed: see the error records")
+      sys.exit(1)
+    }
   }
 
-  /** Per-key rolling-best baseline: parse each artifact text and keep
-    * the MINIMUM positive median seen for every key. Zero/negative
-    * entries (a key that errored that round times near 0 or -1) are
-    * dropped so they can never become an unbeatable baseline.
+  /** One timed rep: the seconds `run` took, or the error it threw — a
+    * failing key's time-to-failure is never a timing.
     */
+  private[graft] def timed(run: => Any): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { run; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case scala.util.control.NonFatal(e) => Left(e) }
+  }
+
+  /** The stdout record of a failed rep: the key, the rep and the error. */
+  private[graft] def errorRecord(key: String, rep: Int, e: Throwable): String = {
+    val msg = e.toString.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    s"""{"metric":"error","key":"$key","rep":$rep,"error":"$msg"}"""
+  }
+
   /** Value semantics for SPARK_GRAFT_PROBE, not presence: `=0`, empty,
     * or `false` (any case, e.g. exported-but-disabled in a prior shell)
     * mean OFF — extracted pure for the unit pin (r17 review #3).
@@ -393,6 +419,11 @@ object Bench {
   private[graft] def probeEnabled(v: Option[String]): Boolean =
     v.exists(s => s.nonEmpty && s != "0" && !s.equalsIgnoreCase("false"))
 
+  /** Per-key rolling-best baseline: parse each artifact text and keep
+    * the MINIMUM positive median seen for every key. Zero/negative
+    * entries (older artifacts timed a key that errored near 0 or at -1)
+    * are dropped so they can never become an unbeatable baseline.
+    */
   private[graft] def bestBaseline(artifacts: Seq[String]): Map[String, Double] =
     artifacts.map(parsePrevBench)
       .foldLeft(Map.empty[String, Double]) { (acc, m) =>
@@ -421,7 +452,7 @@ object Bench {
   private[graft] def parsePrevBench(raw: String): Map[String, Double] = {
     val txt = raw.replace("\\\"", "\"")
     val meta = Set("n", "rc", "cpus", "sf", "value", "total_cold", "runs",
-      "stream_runs", "keys", "prev", "now", "ratio", "norm")
+      "stream_runs", "keys", "prev", "now", "ratio", "norm", "rep")
     val pair = "\"([A-Za-z0-9_]+)\":([0-9]+\\.?[0-9]*(?:[Ee][+-]?[0-9]+)?)".r
     def scan(section: String): Map[String, Double] =
       pair.findAllMatchIn(section)

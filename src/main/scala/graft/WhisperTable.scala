@@ -2,7 +2,7 @@ package graft
 
 import graft.model.{AggregationMethod, Retention, Retentions, WhisperSchema}
 import graft.ops.{Buckets, Fetch, Ingest, Rollup}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{
   DateType, DoubleType, LongType, StringType, StructField, StructType}
@@ -46,11 +46,13 @@ final case class UpdateResult(accepted: Long, rejected: Long)
   * intersecting intervals written this cycle (whisper propagates the
   * current update's intervals, not the whole archive) — gated by xFF.
   *
-  * Scale notes: each write cycle rewrites only the day-partitions its
-  * batch touches (dynamic partition overwrite), not the whole level; all
-  * merges are hash aggregations on (metric, bucket); propagation input is
-  * a broadcast semi-join against the (small) touched-bucket set; fetch
-  * prunes partitions via the day directory layout and row-group stats.
+  * Scale notes: a write cycle pins each level's fresh rows once and
+  * rewrites only the day partitions they fall in (dynamic partition
+  * overwrite), never the whole level; a level with no fresh rows is not
+  * read or written. All merges are hash aggregations on (metric,
+  * bucket); propagation input is a broadcast semi-join against the
+  * coarse buckets of the fresh rows; fetch prunes partitions via the day
+  * directory layout and row-group stats.
   * Whole-day partitions older than the archive's retention are vacuumed
   * on write; rows expiring mid-day stay on disk until their day ages out,
   * which fetch never observes (archive selection clamps every read range
@@ -135,9 +137,7 @@ final class WhisperTable private (
     * the same derivation the writer used).
     */
   private def readLevelRange(r: Retention, fromI: Long, untilI: Long): DataFrame =
-    readLevelWith(r)(_.filter(col("day").between(
-        to_date(timestamp_seconds(lit(fromI))),
-        to_date(timestamp_seconds(lit(untilI)))) &&
+    readLevelWith(r)(_.filter(col("day").between(dayOf(lit(fromI)), dayOf(lit(untilI))) &&
       col("bucket_ts") >= fromI && col("bucket_ts") < untilI))
 
   private def emptyLevel: DataFrame =
@@ -145,12 +145,18 @@ final class WhisperTable private (
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       WhisperTable.LevelColumns)
 
+  /** The day partition of an epoch-second column, in the session
+    * timezone: the one derivation behind the writer's `day` column, read
+    * pruning and a write cycle's day sets.
+    */
+  private def dayOf(s: Column): Column = to_date(timestamp_seconds(s))
+
   /** The writer's side of the level schema: every level file holds
     * exactly [[WhisperTable.LevelColumns]] plus the `day` partition.
     */
   private def levelRows(df: DataFrame): DataFrame =
     df.select(WhisperTable.LevelColumns.toSeq.map(c => col(c.name).cast(c.dataType)): _*)
-      .withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
+      .withColumn("day", dayOf(col("bucket_ts")))
 
   private[graft] def writeLevelFull(r: Retention, df: DataFrame): Unit =
     levelRows(df)
@@ -175,8 +181,8 @@ final class WhisperTable private (
     * Hadoop `FileSystem`, not `java.io.File`: at 100 TB the table lives
     * on HDFS/S3, and vacuum must speak whatever scheme `path` carries.
     * The partition's end second is derived in the SESSION timezone — the
-    * same zone `to_date(timestamp_seconds(...))` used when the writer
-    * derived the day column; hard-coding UTC would let a west-of-UTC
+    * same zone [[dayOf]] used when the writer derived the day column;
+    * hard-coding UTC would let a west-of-UTC
     * session delete a day directory that still holds in-retention rows.
     */
   private def vacuumLevel(r: Retention, nowS: Long): Unit = {
@@ -217,13 +223,8 @@ final class WhisperTable private (
   def updateMany(
       points: Dataset[TimeSeriesPoint],
       nowS: Long,
-      strict: Boolean = false): UpdateResult = {
-    val routed = points.toDF()
-      .select(col("metric"), col("time").as("ts_s"), col("value"))
-      .withColumn("archive", Ingest.archiveColumn(schema, nowS))
-      .localCheckpoint(true) // routing reused by the F3 counts + every level
-    writeCycle(routed, nowS, strict)
-  }
+      strict: Boolean = false): UpdateResult =
+    writeCycle(points, Ingest.archiveColumn(schema, nowS), nowS, strict)
 
   /** `UpdateManyForArchive` (reference: whisper.go →
     * `func (whisper *Whisper) UpdateManyForArchive`): write a batch into
@@ -242,126 +243,112 @@ final class WhisperTable private (
     val i = schema.retentions.indexWhere(_.secondsPerPoint == secondsPerPoint)
     require(i >= 0,
       s"no archive with ${secondsPerPoint}s resolution in $schema")
-    val ret = schema.retentions(i).maxRetentionSeconds
     val age = lit(nowS) - col("ts_s")
-    val routed = points.toDF()
-      .select(col("metric"), col("time").as("ts_s"), col("value"))
-      .withColumn("archive",
-        when(age >= 0 && age < ret, lit(i + 1)).otherwise(lit(0)))
-      .localCheckpoint(true)
-    writeCycle(routed, nowS, strict)
+    writeCycle(points,
+      when(age >= 0 && age < schema.retentions(i).maxRetentionSeconds, lit(i + 1))
+        .otherwise(lit(0)),
+      nowS, strict)
   }
 
-  /** One whisper write cycle over pre-routed points (`archive` = 1-based
-    * level index, 0 = rejected).
+  /** One whisper write cycle: route every point by `archive` (a column
+    * over `ts_s`: 1-based level index, 0 = rejected), then write the
+    * levels finest→coarsest, each from its fresh rows — the direct
+    * writes routed to it and the buckets propagated from the finer level.
     */
   private def writeCycle(
-      routed: DataFrame, nowS: Long, strict: Boolean): UpdateResult = {
-    val cnts = routed.agg(
-      sum(when(col("archive") > 0, 1L).otherwise(0L)),
-      sum(when(col("archive") === 0, 1L).otherwise(0L))).head()
-    val accepted = if (cnts.isNullAt(0)) 0L else cnts.getLong(0)
-    val rejected = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
-    if (strict && rejected > 0)
+      points: Dataset[TimeSeriesPoint], archive: Column,
+      nowS: Long, strict: Boolean): UpdateResult = {
+    val levels = schema.retentions.indices
+    val counts = Observation("whisper_route")
+    val routed = points.toDF()
+      .select(col("metric"), col("time").as("ts_s"), col("value"))
+      .withColumn("archive", archive)
+      // count(when), not sum(when): a sum over zero rows is NULL
+      .observe(counts, count(when(col("archive") === 0, 1L)).as("rejected"),
+        levels.map(i => count(when(col("archive") === i + 1, 1L)).as(s"direct$i")): _*)
+      .localCheckpoint(true) // read by every level
+    val n = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
+    if (strict && n("rejected") > 0)
       throw new IllegalArgumentException(
         "Timestamp not covered by any archives in this database")
-    val pts = routed.filter(col("archive") > 0)
-    // walk finest→coarsest: each level = LWW(existing-in-affected-days ∪
-    // propagated-from-finer ∪ direct writes routed here); only touched
-    // day-partitions are read AND rewritten, and only touched coarse
-    // buckets propagate onward — write-cycle cost tracks the batch's day
-    // footprint, never the archive size
-    var propagated: Option[DataFrame] = None
-    for ((r, i) <- schema.retentions.zipWithIndex) {
-      val spp = r.secondsPerPoint
-      val direct = Ingest.lwwAlign(
-        pts.filter(col("archive") === i + 1).drop("archive"), spp)
-      val propDf = propagated.getOrElse(emptyLevel)
-      // the buckets this cycle writes at this level — drives the day
-      // pruning and the next level's propagation scope (pinned: tiny,
-      // three consumers)
-      val touched = direct.select("metric", "bucket_ts")
-        .unionAll(propDf.select("metric", "bucket_ts"))
-        .distinct()
-        .localCheckpoint(true)
-      val touchedDays = touched
-        .select(date_format(timestamp_seconds(col("bucket_ts")), "yyyy-MM-dd").as("day"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      // next-coarser buckets this cycle will re-derive (whisper
-      // propagates the current update's intervals, not the archive);
-      // buckets whose finer source window is partially expired are
-      // excluded — their full-window aggregate is no longer derivable,
-      // so the stored coarse value stands
-      val nextOpt = schema.retentions.lift(i + 1)
-      val coarseKeys = nextOpt.map { next =>
-        val nspp = next.secondsPerPoint
-        touched
-          .select(col("metric").as("ck_metric"),
-            Buckets.alignTs(col("bucket_ts"), nspp).as("ck_bucket"))
-          .distinct()
-          .filter(col("ck_bucket") >= nowS - r.maxRetentionSeconds)
-          .localCheckpoint(true) // tiny; drives srcDays AND the semi-join
-      }
-      // days whose rows the merge must SEE: the days being written plus
-      // the full source windows of the coarse buckets re-derived below
-      // (identical to touchedDays while windows stay within one day;
-      // wider only for super-day resolutions)
-      // collected as STRINGS via date_format, like touchedDays above —
-      // Row.getDate on a DateType column throws under
-      // spark.sql.datetime.java8API.enabled=true (LocalDate external
-      // type), and this path runs on every multi-level write
-      val srcDays = (nextOpt, coarseKeys) match {
-        case (Some(next), Some(ck)) =>
-          ck.select(explode(sequence(
-              to_date(timestamp_seconds(col("ck_bucket"))),
-              to_date(timestamp_seconds(col("ck_bucket") + next.secondsPerPoint - 1))))
-              .as("day"))
-            .select(date_format(col("day"), "yyyy-MM-dd").as("day"))
-            .distinct().collect().map(_.getString(0)).toSeq
-        case _ => Nil
-      }
-      val mergeDays = (touchedDays ++ srcDays).distinct
-      val existing =
-        if (mergeDays.isEmpty) emptyLevel else readLevelDays(r, mergeDays)
-      // whisper write order in one update cycle (whisper.py
-      // file_update_many, mirrored by go-whisper's UpdateMany): the
-      // FINEST archive is written and propagated into the coarser rings
-      // FIRST, and only then are the older points packed DIRECTLY into
-      // the coarser archive — so on a contested coarse slot (a batch
-      // whose fresh and just-too-old points align to one coarse bucket,
-      // possible exactly when the finer retention boundary cuts through
-      // it) the DIRECT write lands last and wins; propagation beats only
-      // prior content (max_by on a priority column). The r12 review
-      // caught the previous inverted order.
-      val merged = Seq(
-        existing.withColumn("prio", lit(0)),
-        propDf.withColumn("prio", lit(1)),
-        direct.withColumn("prio", lit(2)))
-        .reduce(_ unionAll _)
-        .groupBy("metric", "bucket_ts")
-        .agg(max_by(col("value"), col("prio")).as("value"))
-      val expired = Rollup.retentionExpiry(merged, r.maxRetentionSeconds, nowS)
-        .localCheckpoint(true) // read below AND written over its own input
-      if (touchedDays.nonEmpty) {
-        writeTouchedDays(r, expired, touchedDays)
-        vacuumLevel(r, nowS)
-      }
-      // R1/R2: re-derive exactly the touched coarse buckets from this
-      // level's merged content
-      (nextOpt, coarseKeys) match {
-        case (Some(next), Some(ck)) =>
-          val nspp = next.secondsPerPoint
-          val src = expired.join(broadcast(ck),
-            col("metric") === col("ck_metric") &&
-              Buckets.alignTs(col("bucket_ts"), nspp) === col("ck_bucket"),
-            "left_semi")
-          propagated = Some(
-            Rollup.propagate(src, spp, nspp, schema.method, schema.xFilesFactor)
-              .select(col("metric"), col("bucket_ts"), col("value")))
-        case _ => ()
-      }
+    // whisper write order in one update cycle (whisper.py
+    // file_update_many, mirrored by go-whisper's UpdateMany): the FINEST
+    // archive is written and propagated into the coarser rings FIRST, and
+    // only then are the older points packed DIRECTLY into the coarser
+    // archive — so on a contested coarse slot (a batch whose fresh and
+    // just-too-old points align to one coarse bucket, possible exactly
+    // when the finer retention boundary cuts through it) the DIRECT write
+    // lands last and wins; propagation beats only prior content (max_by
+    // on a priority column)
+    levels.foldLeft(Option.empty[DataFrame]) { (propagated, i) =>
+      val direct = Option.when(n(s"direct$i") > 0)(Ingest.lwwAlign(
+        routed.filter(col("archive") === i + 1).drop("archive"),
+        schema.retentions(i).secondsPerPoint))
+      writeLevel(i,
+        propagated.map(_.withColumn("prio", lit(1))).toSeq ++
+          direct.map(_.withColumn("prio", lit(2))),
+        nowS)
     }
-    UpdateResult(accepted, rejected)
+    UpdateResult(levels.map(i => n(s"direct$i")).sum, n("rejected"))
+  }
+
+  /** One level of a write cycle: LWW-merge the fresh rows (`prio`-tagged)
+    * over the level's content in the days they touch, rewrite those days
+    * and return the rows this cycle propagates into the next level. A
+    * level with no fresh rows reads, writes and propagates nothing.
+    */
+  private def writeLevel(
+      i: Int, fresh: Seq[DataFrame], nowS: Long): Option[DataFrame] = {
+    if (fresh.isEmpty) return None
+    val r = schema.retentions(i)
+    val next = schema.retentions.lift(i + 1)
+    val bucket = col("bucket_ts")
+    // the next-coarser bucket a fresh row re-derives (whisper propagates
+    // the current update's intervals, not the archive); NULL where its
+    // finer source window is partially expired — that full-window
+    // aggregate is no longer derivable, so the stored coarse value stands
+    def coarseKey(n: Retention): Column = {
+      val ck = Buckets.alignTs(bucket, n.secondsPerPoint)
+      when(ck >= nowS - r.maxRetentionSeconds, ck)
+    }
+    // the seconds whose days the merge must see for a fresh row: its own
+    // bucket, widened to its coarse bucket's full source window (wider
+    // than one day only for super-day windows)
+    val (lo, hi) = next.fold((bucket, bucket))(n =>
+      (coalesce(coarseKey(n), bucket),
+        coalesce(coarseKey(n) + (n.secondsPerPoint - 1), bucket)))
+    // the day sets ride the pin, as STRINGS: Row.getDate throws under
+    // spark.sql.datetime.java8API.enabled (LocalDate external type)
+    val days = Observation(s"whisper_days_${r.secondsPerPoint}s")
+    val pinned = fresh.reduce(_ unionAll _)
+      .observe(days,
+        collect_set(dayOf(bucket).cast("string")).as("write"),
+        array_distinct(flatten(collect_set(
+          sequence(dayOf(lo), dayOf(hi)).cast("array<string>")))).as("read"))
+      .localCheckpoint(true) // read by the merge and the next level's keys
+    val d = days.get.view.mapValues(_.asInstanceOf[Seq[String]]).toMap
+    if (d("write").isEmpty) return None // no propagated bucket passed xFF
+    val merged = readLevelDays(r, d("read")).withColumn("prio", lit(0))
+      .unionAll(pinned)
+      .groupBy("metric", "bucket_ts")
+      .agg(max_by(col("value"), col("prio")).as("value"))
+    val expired = Rollup.retentionExpiry(merged, r.maxRetentionSeconds, nowS)
+      .localCheckpoint(true) // read below AND written over its own input
+    writeTouchedDays(r, expired, d("write"))
+    vacuumLevel(r, nowS)
+    // R1/R2: re-derive exactly the fresh rows' coarse buckets from this
+    // level's merged content
+    next.map { n =>
+      val keys = pinned.select(col("metric").as("ck_metric"), coarseKey(n).as("ck_bucket"))
+        .filter(col("ck_bucket").isNotNull).distinct()
+      val src = expired.join(broadcast(keys),
+        col("metric") === col("ck_metric") &&
+          Buckets.alignTs(bucket, n.secondsPerPoint) === col("ck_bucket"),
+        "left_semi")
+      Rollup.propagate(src, r.secondsPerPoint, n.secondsPerPoint,
+          schema.method, schema.xFilesFactor)
+        .select(col("metric"), col("bucket_ts"), col("value"))
+    }
   }
 
   /** Shared fetch prologue — the reference's fetch endpoint semantics
@@ -640,9 +627,6 @@ object WhisperTable {
     new WhisperTable(spark, path, schema)
   }
 
-  /** Parse a WhisperSchema from one `.wsp` file's binary header — the
-    * schema side of `Open`/`readHeader` against real reference storage.
-    */
   /** Bounded two-read of a `.wsp` file's header region: the 16-byte
     * metadata first for the archive COUNT, then exactly
     * `headerSize(count)` — a fixed 64-archive guess would reject a
@@ -670,6 +654,9 @@ object WhisperTable {
     graft.sources.WspCodec.readHeader(bytes, name, totalLen)
   }
 
+  /** Parse a WhisperSchema from one `.wsp` file's binary header — the
+    * schema side of `Open`/`readHeader` against real reference storage.
+    */
   def schemaFromWspFile(spark: SparkSession, file: String): WhisperSchema = {
     val (fs, p) = fsOf(spark, file)
     val h = headerOf(fs, p, fs.getFileStatus(p).getLen, file)
@@ -679,15 +666,6 @@ object WhisperTable {
       h.xFilesFactor.toDouble)
   }
 
-  /** Migrate an EXISTING whisper tree into the engine in one call: adopt
-    * the tree's schema from its first file's binary header, create the
-    * table, and bulk-load every archive level through the `wsp` source —
-    * the "switch to this library" motion for a reference user, no manual
-    * schema and no conversion scripts. Assumes a homogeneous tree (one
-    * retention config — whisper deployments vary config per
-    * storage-schemas.conf pattern; import each such subtree separately);
-    * files with a different ring geometry fail loudly in the scan.
-    */
   /** The one recursive `.wsp` walk (file-only, `.wsp` suffix) — shared
     * by [[firstWspFile]] and [[importWspGrouped]] so a future skip rule
     * (hidden dirs, tmp-image names) can never apply to one walk and not
@@ -716,6 +694,15 @@ object WhisperTable {
     else throw new IllegalStateException(s"no .wsp files under $treeDir")
   }
 
+  /** Migrate an EXISTING whisper tree into the engine in one call: adopt
+    * the tree's schema from its first file's binary header, create the
+    * table, and bulk-load every archive level through the `wsp` source —
+    * the "switch to this library" motion for a reference user, no manual
+    * schema and no conversion scripts. Assumes a homogeneous tree (one
+    * retention config — whisper deployments vary config per
+    * storage-schemas.conf pattern; import each such subtree separately);
+    * files with a different ring geometry fail loudly in the scan.
+    */
   def importWsp(spark: SparkSession, treeDir: String, tablePath: String): WhisperTable = {
     val schema = schemaFromWspFile(spark, firstWspFile(spark, treeDir))
     val t = create(spark, tablePath, schema)

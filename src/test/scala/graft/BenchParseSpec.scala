@@ -147,4 +147,22 @@ class BenchParseSpec extends AnyFunSuite {
       assert(l == l.distinct && l == l.sorted, s"strictly increasing (k=$k)")
     }
   }
+
+  test("a failing rep yields its error record, never a time") {
+    val boom = new IllegalStateException("bad \"plan\"\n\tat C:\\x")
+    assert(Bench.timed(throw boom) == Left(boom))
+    assert(Bench.timed(42L).exists(_ >= 0.0))
+    // one JSON line naming the key, the rep and the exception
+    val rec = Bench.errorRecord("q_a", 2, boom)
+    assert(!rec.contains("\n"))
+    import org.json4s._
+    implicit val formats: Formats = DefaultFormats
+    val j = org.json4s.jackson.JsonMethods.parse(rec)
+    assert((j \ "metric").extract[String] == "error")
+    assert((j \ "key").extract[String] == "q_a")
+    assert((j \ "rep").extract[Int] == 2)
+    assert((j \ "error").extract[String] == boom.toString)
+    // and it never enters a baseline as a key's timing
+    assert(Bench.parsePrevBench(rec).isEmpty)
+  }
 }

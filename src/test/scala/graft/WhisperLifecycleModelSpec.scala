@@ -276,7 +276,7 @@ class WhisperLifecycleModelSpec extends AnyFunSuite {
 
   test("super-day windows: day-partition bookkeeping matches the day-free model") {
     // 6h:7d cascading into 2d:24d — every consolidation window spans
-    // THREE day partitions, so the write cycle's srcDays broadening
+    // THREE day partitions, so the write cycle's read-day widening
     // (reading the full source window beyond the touched days) and the
     // day-level vacuum both run; the model has no notion of days, which
     // is the point: any bookkeeping slip shows as a fetch mismatch
@@ -306,6 +306,48 @@ class WhisperLifecycleModelSpec extends AnyFunSuite {
       checkFetch(table, model, m, now - 2 * 86400L, now, now, s"super-day 2d $m")
     }
     org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("a +05:30 session: 1h windows straddling local midnight match the model") {
+    // under Asia/Kolkata local midnight is 18:30 UTC, so the 1h bucket
+    // 18:00 UTC consolidates 5m buckets from two day partitions. Batch 1
+    // writes only the local day before midnight, batch 2 only the day
+    // after: re-deriving 18:00 must read the day batch 2 never writes
+    import spark.implicits._
+    val schema = graft.model.Retentions.std // 1m:1d, 5m:7d, 1h:30d
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try {
+      val dir = Files.createTempDirectory("graft_life_kolkata").toFile
+      dir.delete()
+      val table = WhisperTable.create(spark, dir.getAbsolutePath, schema)
+      val model = new Model(schema)
+      val rnd = new Random(530)
+      val midnight = Math.floorDiv(Base + 19800, 86400L) * 86400 - 19800
+      def minutes(from: Long, n: Int): Seq[TimeSeriesPoint] =
+        for (m <- Seq("m.a", "m.b"); k <- 0 until n) yield TimeSeriesPoint(
+          m, from + 60L * k + rnd.nextInt(60), (rnd.nextInt(4001) - 2000) / 4.0)
+      var now = Base
+      for (batch <- 1 to 3) {
+        now += rnd.nextInt(3600).toLong
+        val pts = batch match {
+          case 1 => minutes(midnight - 3600, 60)
+          case 2 => minutes(midnight, 30)
+          case _ => randPoints(rnd, schema, now) ++ minutes(midnight - 1800, 60)
+        }
+        val got = table.updateMany(pts.toDS(), now)
+        val (acc, rej) = model.updateMany(pts, now)
+        assert((got.accepted, got.rejected) == ((acc, rej)), s"batch $batch split")
+        for (m <- Seq("m.a", "m.b")) {
+          checkFetch(table, model, m, now - schema.maxRetentionSeconds, now, now,
+            s"kolkata batch $batch full $m")
+          schema.retentions.foreach { r =>
+            checkFetch(table, model, m, now - r.maxRetentionSeconds + 1, now, now,
+              s"kolkata batch $batch $m@${r.secondsPerPoint}s")
+          }
+        }
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
   test("strict update raises whisper's out-of-retention error") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Golden round-trip tests in the reference's own style (SURVEY.md §5.1:
   * Create → Update/UpdateMany → Fetch on temp storage, asserting exact
@@ -451,6 +452,65 @@ class WhisperTableSpec extends AnyFunSuite {
     assert(got.flatMap(_._2).toSet == Set(3.0, 5.0))
   }
 
+  test("an empty or all-rejected batch counts its points and touches no level") {
+    // the counts are observed with count(when): a sum over zero rows
+    // would be NULL
+    import spark.implicits._
+    val p = tmp()
+    val t = WhisperTable.create(spark, p, Retentions.std)
+    def snapshot() = t.retentions.flatMap { r =>
+      val dir = java.nio.file.Paths.get(s"$p/points_${r.secondsPerPoint}s")
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.map(f =>
+          (dir.relativize(f).toString, f.toFile.lastModified(), f.toFile.length())).toSet
+      finally walk.close()
+    }.toSet
+    val before = snapshot()
+    assert(t.updateMany(Seq.empty[TimeSeriesPoint].toDS(), now) == UpdateResult(0, 0))
+    val rejected = Seq(
+      TimeSeriesPoint("m", now + 60, 1.0),            // future
+      TimeSeriesPoint("m", now - 40 * 86400, 2.0))    // older than 30d
+    assert(t.updateMany(rejected.toDS(), now) == UpdateResult(0, 2))
+    intercept[IllegalArgumentException](
+      t.updateMany(rejected.toDS(), now, strict = true))
+    // strict refuses the whole batch before any write, the good point too
+    intercept[IllegalArgumentException](t.updateMany(
+      (rejected :+ TimeSeriesPoint("m", now - 60, 3.0)).toDS(), now, strict = true))
+    assert(snapshot() == before)
+  }
+
+  test("a write cycle runs a bounded number of Spark jobs per level") {
+    // each level pins its fresh rows once and derives its day sets on
+    // that pin; a level with no fresh rows runs no job at all
+    import spark.implicits._
+    val t = WhisperTable.create(spark, tmp(), Retentions.std)
+    val ids = 0 until 1000
+    // one point per series in one minute: 1 of 5 slots is under the 5m
+    // level's xFF of 0.5, so only the 1m level writes
+    val live = ids.map(s => TimeSeriesPoint(s"s.$s", now - 50, s.toDouble))
+    // a direct write into every level
+    val all = ids.flatMap(s => Seq(
+      TimeSeriesPoint(s"s.$s", now - 30, 1.0),
+      TimeSeriesPoint(s"s.$s", now - 2 * 86400, 2.0),
+      TimeSeriesPoint(s"s.$s", now - 10 * 86400, 3.0)))
+    t.updateMany(live.toDS(), now) // the levels hold data before counting
+    def jobs(pts: Seq[TimeSeriesPoint]): Int = {
+      val ds = pts.toDS()
+      var res = UpdateResult(-1, -1)
+      val n = org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext) {
+        res = t.updateMany(ds, now)
+      }
+      assert(res == UpdateResult(pts.size, 0))
+      n
+    }
+    val liveJobs = jobs(live)
+    assert(liveJobs <= 18, s"live-shaped cycle ran $liveJobs jobs")
+    val allJobs = jobs(all)
+    assert(allJobs <= 34, s"all-level cycle ran $allJobs jobs")
+    assert(series(t.fetch("s.7", now - 10 * 86400 - 3600, now - 10 * 86400, now))
+      .flatMap(_._2) == Seq(3.0))
+  }
+
   test("incremental write: untouched day partitions are not rewritten") {
     import spark.implicits._
     val p = tmp()
@@ -499,5 +559,18 @@ class WhisperTableSpec extends AnyFunSuite {
     t.updateMany(Seq(TimeSeriesPoint("m", old + 10, 42.0)).toDS(), now)
     val got = series(t.fetch("m", now - 4 * 86400, now - 3 * 86400 + 600, now)).toMap
     assert(got(old) == Some(42.0)) // 5m bucket of `old+10` is `old` (aligned)
+  }
+
+  test("a contested coarse slot keeps the direct write over the propagated value") {
+    // the one instant a coarse bucket takes both in one cycle: a direct
+    // point exactly at the finest horizon, on a coarse step, beside finer
+    // points in the same bucket. whisper packs the direct points into
+    // the coarse archive after propagating, so the direct write wins
+    import spark.implicits._
+    val t = WhisperTable.create(spark, tmp(), Retentions.tight) // 1s:120, 10s:1h, Sum
+    val now1 = 1200L
+    t.updateMany((TimeSeriesPoint("m", now1 - 120, 100.0) +: // age 120: the 10s level
+      (1081L to 1089L).map(ts => TimeSeriesPoint("m", ts, 1.0))).toDS(), now1)
+    assert(series(t.fetch("m", 1070, 1085, now1)) == Seq(1080L -> Some(100.0)))
   }
 }
