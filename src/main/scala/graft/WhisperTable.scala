@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.BoundParam.param
+import graft.functions.RegexFind
 import graft.model.{AggregationMethod, Retention, Retentions, WhisperSchema}
 import graft.ops.{Buckets, Fetch, Ingest, Rollup}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
@@ -52,7 +54,9 @@ final case class UpdateResult(accepted: Long, rejected: Long)
   * read or written. All merges are hash aggregations on (metric,
   * bucket); propagation input is a broadcast semi-join against the
   * coarse buckets of the fresh rows; fetch prunes partitions via the day
-  * directory layout and row-group stats.
+  * directory layout. A fetch's bucket bounds are bound parameters, not
+  * pushed parquet filters, so no read compiles code per window; with one
+  * unsorted file per written day, row-group stats rarely skipped a group.
   * Whole-day partitions older than the archive's retention are vacuumed
   * on write; rows expiring mid-day stay on disk until their day ages out,
   * which fetch never observes (archive selection clamps every read range
@@ -134,11 +138,13 @@ final class WhisperTable private (
 
   /** [[readLevel]] restricted to the buckets in [fromI, untilI), pruned to
     * the day partitions overlapping that range (in session-timezone days —
-    * the same derivation the writer used).
+    * the same derivation the writer used). The day filter stays literal:
+    * the file index applies it and it never reaches generated code. The
+    * bucket bounds are bound parameters, so a new window compiles nothing.
     */
   private def readLevelRange(r: Retention, fromI: Long, untilI: Long): DataFrame =
     readLevelWith(r)(_.filter(col("day").between(dayOf(lit(fromI)), dayOf(lit(untilI))) &&
-      col("bucket_ts") >= fromI && col("bucket_ts") < untilI))
+      col("bucket_ts") >= param(fromI) && col("bucket_ts") < param(untilI)))
 
   private def emptyLevel: DataFrame =
     spark.createDataFrame(
@@ -383,15 +389,18 @@ final class WhisperTable private (
     * broadcast of the partition-pruned, range- and metric-filtered level
     * scan. Every scan row is a spine key, so the broadcast is bounded by
     * the output; the single spine partition already satisfies the global
-    * order, so no exchange or sampling job runs.
+    * order, so no exchange or sampling job runs. The spine explodes array
+    * literals over one row, which generated code holds by reference.
     */
   private def denseFetch(
       fromS: Long, untilS: Long, nowS: Long, metrics: Seq[String]): DataFrame = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
     val scan = readLevelRange(archive, fromI, untilI)
       .filter(col("metric").isin(metrics: _*))
-    spark.range(fromI, untilI, archive.secondsPerPoint.toLong, 1)
-      .select(explode(typedLit(metrics)).as("metric"), col("id").as("bucket_ts"))
+    spark.range(0, 1, 1, 1)
+      .select(explode(typedLit(metrics)).as("metric"))
+      .select(col("metric"),
+        explode(Buckets.spine(fromI, untilI, archive.secondsPerPoint.toLong)).as("bucket_ts"))
       .join(broadcast(scan), Seq("metric", "bucket_ts"), "left")
       .select(col("metric"), col("bucket_ts"), col("value"))
       .orderBy("metric", "bucket_ts")
@@ -422,7 +431,7 @@ final class WhisperTable private (
   def fetchGlob(pattern: String, fromS: Long, untilS: Long, nowS: Long): DataFrame = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
     Buckets.densify(readLevelRange(archive, fromI, untilI)
-        .filter(col("metric").rlike(Fetch.globToRegex(pattern)))
+        .filter(RegexFind.find(col("metric"), Fetch.globToRegex(pattern)))
         .repartition(1),
       fromI, untilI, archive.secondsPerPoint.toLong)
       .orderBy("metric", "bucket_ts")

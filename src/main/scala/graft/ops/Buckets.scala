@@ -95,19 +95,23 @@ object Buckets {
     * metric of `sparse` on every bucket of `[fromI, untilI)` step `spp`,
     * gaps NULL; a metric with no row is absent. One group-by of the input
     * builds the metric list and the lookup map together, so densifying
-    * costs no second pass over the input and no spine join. The bucket
-    * sequence is guarded: an empty one would fold to an error at planning.
+    * costs no second pass over the input and no spine join.
     */
-  def densify(sparse: DataFrame, fromI: Long, untilI: Long, spp: Long): DataFrame = {
-    val buckets =
-      if (untilI <= fromI) typedLit(Array.empty[Long])
-      else sequence(lit(fromI), lit(untilI - 1 - (untilI - 1 - fromI) % spp), lit(spp))
+  def densify(sparse: DataFrame, fromI: Long, untilI: Long, spp: Long): DataFrame =
     sparse.groupBy(col("metric"))
       .agg(map_from_entries(collect_list(struct(col("bucket_ts"), col("value"))))
         .as("values"))
-      .select(col("metric"), explode(buckets).as("bucket_ts"), col("values"))
+      .select(col("metric"), explode(spine(fromI, untilI, spp)).as("bucket_ts"), col("values"))
       .select(col("metric"), col("bucket_ts"), col("values")(col("bucket_ts")).as("value"))
-  }
+
+  /** The buckets of `[fromI, untilI)` step `spp` as an array column that
+    * folds to an array literal, which generated code holds by reference
+    * (a `range` inlines its bounds). Guarded: an empty `sequence` would
+    * fold to an error at planning.
+    */
+  def spine(fromI: Long, untilI: Long, spp: Long): Column =
+    if (untilI <= fromI) typedLit(Array.empty[Long])
+    else sequence(lit(fromI), lit(untilI - 1 - (untilI - 1 - fromI) % spp), lit(spp))
 
   /** The canonical `points(metric, ts_s, value)` fact view. Per SURVEY.md
     * §1.3 the role of whisper's point stream is played by

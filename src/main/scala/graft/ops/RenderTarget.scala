@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.functions.BoundParam.param
+import graft.functions.RegexFind
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -921,7 +923,7 @@ object RenderTarget {
       // no real globs either — scan unfiltered in those cases
       val matchesAny =
         if (leafRx.isEmpty || hasTagSelection(expr0)) lit(true)
-        else leafRx.map(col("metric").rlike(_)).reduce(_ || _)
+        else leafRx.map(RegexFind.find(col("metric"), _)).reduce(_ || _)
       pts.filter(col("ts_s") >= extFromI && col("ts_s") < untilI && matchesAny)
         .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
         // the pinned grid mean (exact fixed-point sum + shared round6):
@@ -930,27 +932,17 @@ object RenderTarget {
         .agg(Rollup.mean6(col("value")).as("value"))
     }
 
-    // Per-leaf selection over [[sharedAgg]]. Multi-glob targets wrap the
-    // regex in [[graft.functions.OptimizerFence]]: a plain `rlike`
-    // predicate gets pushed back down through the shared aggregate to
-    // the scan, the leaf subtrees stop being canonically identical, and
-    // exchange reuse cannot dedupe them (observed: 2 scans per leaf).
-    // The fence is an identity expression flagged non-deterministic —
-    // the one property pushdown rules respect contractually — so the
-    // predicate stays ABOVE the aggregate and every leaf reuses one
-    // scan + one shuffle (PlanSpec pins the ReusedExchange, and pins
-    // the plan rand()-free). Single-glob targets keep the fully-pushed
-    // plan: there is nothing to share.
-    // fence whenever the shared aggregate has >= 2 consumers of ANY
-    // kind — glob leaves AND seriesByTag selections both count: one
-    // glob plus one tag selection unfenced split back into two full
-    // scans (r15 review), exactly the cost the fence exists to prevent
+    // Per-leaf selection over [[sharedAgg]]. With two or more selectors
+    // (glob leaves and seriesByTag selections both count) the predicate
+    // is wrapped in [[graft.functions.OptimizerFence]], so it stays above
+    // the aggregate and every leaf reuses one scan and one shuffle; an
+    // unfenced predicate is pushed to the scan and each leaf scans again.
     val selectorCount = leafRx.size + tagSelectionCount(expr0)
     def fenced(pred: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       if (selectorCount < 2) pred
       else graft.functions.OptimizerFence.fence(pred)
     def leafSelect(rx: String): DataFrame =
-      sharedAgg.filter(fenced(col("metric").rlike(rx)))
+      sharedAgg.filter(fenced(RegexFind.find(col("metric"), rx)))
 
     // Dense frame of a selection off [[sharedAgg]] on the base grid.
     // Grouping the selection itself keeps one scan: a `distinct` beside
@@ -972,7 +964,7 @@ object RenderTarget {
         // trailing window, one metric-partitioned sort shared by the
         // whole family; nulls are skipped natively (all-null window →
         // null). Frame edges are graphite's own, which DIFFER inside
-        // the family (r13 review): the moving* functions slice
+        // the family: the moving* functions slice
         // `bootstrap[i+offset-windowPoints : i+offset]` — the n points
         // strictly BEFORE each point, current EXCLUDED — while stdev
         // (a separate lineage in functions.py) accumulates the last n
@@ -1093,12 +1085,8 @@ object RenderTarget {
             col("bucket_ts"))
           .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), step)
       case Call("aliasByNode", Seq(c), args) =>
-        // graphite's signature is aliasByNode(seriesList, *nodes): ALL
-        // node indices join with '.' — using only the first silently
-        // collapsed distinct series to one legend name (r15 review).
-        // Nodes use Python list semantics: -1 is the LAST dot-node
-        // (ubiquitous in dashboards) — nodeAt resolves negatives from
-        // the end instead of silently dropping them (r15 advice)
+        // aliasByNode(seriesList, *nodes): ALL node indices join with
+        // '.'; nodes use Python list semantics (-1 is the LAST dot-node)
         val nodes = args.map(_.toInt)
         val (df, step) = eval(c)
         val parts = split(col("metric"), "\\.")
@@ -1462,9 +1450,8 @@ object RenderTarget {
         // re-densify onto the child's grid: the isNotNull pre-filter +
         // inner pair join DROP buckets where every member is a gap, and
         // a sparse frame breaks the dense-grid invariant every combine
-        // and rows-window stage above relies on (r15 review — a
-        // movingAverage over this silently spanned the gap). The value
-        // side is dense per metric, so its distinct buckets ARE the grid.
+        // and rows-window stage above relies on. The value side is
+        // dense per metric, so its distinct buckets ARE the grid.
         (dv.select(col("bucket_ts")).distinct()
           .join(sparse, Seq("bucket_ts"), "left")
           .select(lit("weightedAverage").as("metric"), col("bucket_ts"),
@@ -1589,7 +1576,7 @@ object RenderTarget {
         // no-op when already aligned): generator buckets must sit on
         // the SAME k·step grid as summarize/alignTs buckets, or an
         // equal-step combine pairs nothing and sums interleave on two
-        // offset grids (r15 review)
+        // offset grids
         val genFrom = -Math.floorDiv(-extFromI, stepArg) * stepArg
         (spark.range(genFrom, untilI, stepArg).toDF("bucket_ts")
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
@@ -1634,9 +1621,7 @@ object RenderTarget {
         // '*' in ANY position is the all-events wildcard: it clears the
         // whole tag filter rather than dropping out of the list (else
         // events('view','*') would silently narrow to just 'view').
-        // Empty-string tags are ignored in every position (spec-pinned;
-        // r9 ignored a first-position '' but matched-nothing on later
-        // positions — a position-dependence nobody could want)
+        // Empty-string tags are ignored in every position.
         val named = (cs.collect { case Leaf(n) => unquote(n) } ++
           args.map(unquote)).filter(_.nonEmpty)
         val tags = if (named.contains("*")) Seq.empty[String] else named
@@ -1703,8 +1688,7 @@ object RenderTarget {
         // the file's ONE pinned 6-decimal rounding FORM (hwR6's
         // floor(x·1e6 + 0.5)/1e6 three ops, inlined: the executor
         // closure must not capture the enclosing object) — a local
-        // BigDecimal HALF_UP disagreed on binary near-midpoints and
-        // would desync any future EMA oracle (r15 review)
+        // BigDecimal HALF_UP disagrees on binary near-midpoints
         def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
         import spark.implicits._
         val typed = df.select(col("metric"), col("bucket_ts"),
@@ -1802,7 +1786,7 @@ object RenderTarget {
         // the replacement is PYTHON re.sub syntax in graphite (\1 =
         // backreference) — route through pyReplacement like aliasQuery,
         // or Java's replaceAll reads \1 as a literal '1' and throws on
-        // a bare '$' (r15 review)
+        // a bare '$'
         val (df, step) = eval(c)
         (df.withColumn("metric",
           regexp_replace(col("metric"), args(0), pyReplacement(args(1)))), step)
@@ -2096,8 +2080,7 @@ object RenderTarget {
         // Spark; diff is first-by-name minus the rest). The optional
         // xFilesFactor gates each bucket on its known-member fraction;
         // the strict/signed shapes have no known-values form to gate,
-        // so a non-default xff there is rejected loudly rather than
-        // silently ignored (ADVICE r9).
+        // so a non-default xff there is rejected loudly.
         val func = args.head
         val xff = args.lift(1).map(a => unquote(a).toDouble).getOrElse(0.0)
         val (df, step) = eval(c)
@@ -2466,7 +2449,7 @@ object RenderTarget {
         val thr = thrS.toDouble
         val (df, step) = eval(c)
         val lo = Math.floorDiv(fromI, step) * step
-        val rewritten = df.filter(col("bucket_ts") >= lo)
+        val rewritten = df.filter(col("bucket_ts") >= param(lo))
           .groupBy(col("metric")).agg(max(col("value")).as("max_v"))
           .filter(col("max_v") > thr)
           .select(regexp_replace(col("metric"),
@@ -2515,7 +2498,7 @@ object RenderTarget {
     val (out, finalStep) = eval(expr0)
     // keep the (possibly partial) final-step bucket containing `from`
     val lo = Math.floorDiv(fromI, finalStep) * finalStep
-    val trimmed = out.filter(col("bucket_ts") >= lo)
+    val trimmed = out.filter(col("bucket_ts") >= param(lo))
     // maxDataPoints consolidation (graphite's render-frame cap): when
     // the grid exceeds the cap, merge runs of ceil(buckets/cap) slots —
     // anchored at `lo`, graphite chunks from the range start — using

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -34,10 +35,15 @@ import org.apache.spark.util.SerializableConfiguration
   * Scale design — a production whisper tree is millions of SMALL files
   * (file size is fixed by each series' retention config), the classic
   * many-small-files source:
-  *  - the planner is a driver-side walk of the tree — O(files) stat
-  *    traffic and ~100 bytes of driver heap per selected file, paid per
-  *    batch plan and per streaming micro-batch (whisper's tree IS the
-  *    index: graphite's finder walks it the same way);
+  *  - the planner is a driver-side walk of the tree, paid per batch plan
+  *    and per streaming micro-batch (whisper's tree IS the index:
+  *    graphite's finder walks it the same way). On the local filesystem
+  *    it descends only into directories whose dotted prefix can still
+  *    extend to a selected metric, so its stat traffic is O(directories
+  *    on the selected paths + their entries); a remote store is listed
+  *    flat, O(files). The driver holds ~100 bytes per selected file, and
+  *    the scan node reports directories listed, files seen and files
+  *    selected;
   *  - files are bin-packed into input partitions up to
   *    `spark.sql.files.maxPartitionBytes`, so task count tracks data
   *    volume, not file count;
@@ -206,6 +212,23 @@ final class WspScanBuilder(
   }
 }
 
+/** Driver-side listing figures of a wsp scan, shown on its scan node:
+  * listing calls (one per directory walked, one per remote root), files
+  * the listings returned, and files the scan selected.
+  */
+final class WspDirsListed extends CustomSumMetric {
+  override def name(): String = "dirsListed"
+  override def description(): String = "directories listed"
+}
+final class WspFilesSeen extends CustomSumMetric {
+  override def name(): String = "filesSeen"
+  override def description(): String = "files seen"
+}
+final class WspFilesSelected extends CustomSumMetric {
+  override def name(): String = "filesSelected"
+  override def description(): String = "files selected"
+}
+
 /** One planned slice of files (path, length, metric). */
 final case class WspInputPartition(files: Seq[(String, Long, String)]) extends InputPartition
 
@@ -242,6 +265,14 @@ final class WspScan(
   private lazy val globRx: Option[java.util.regex.Pattern] =
     metricGlob.map(g => java.util.regex.Pattern.compile(graft.ops.Fetch.globToRegex(g)))
 
+  // every proper dotted prefix of a pushed metric name: the directories
+  // that can hold a selected file
+  private lazy val metricDirs: Option[Set[String]] =
+    metrics.map(_.flatMap(m => m.indices.filter(m(_) == '.').map(m.take)))
+
+  // the last listing's figures, by custom metric name
+  @volatile private var listed = Map.empty[String, Long]
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
@@ -250,43 +281,75 @@ final class WspScan(
     s"wsp ${roots.mkString(",")} metric=$m$g ${slots.describe}"
   }
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new WspDirsListed, new WspFilesSeen, new WspFilesSelected)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    listed.map { case (n, v) =>
+      new CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }: CustomTaskMetric
+    }.toArray
+
+  /** Can a directory whose files are named `prefix.<name>` hold a
+    * selected file? `hitEnd` after a failed match means more input could
+    * still match: the prefix extends to a selected metric.
+    */
+  private def descends(prefix: String): Boolean =
+    metricDirs.forall(_(prefix)) && globRx.forall { rx =>
+      val m = rx.matcher(prefix + ".")
+      m.matches() || m.hitEnd()
+    }
+
   /** Every selected `.wsp` file with its size, derived metric name, and
     * modification time — metric pruning happens HERE, before any byte is
     * read (shared by the batch and streaming planners).
     */
-  private[sources] def listFilesWithMtime(): Seq[((String, Long, String), Long)] =
-    roots.flatMap { r =>
+  private[sources] def listFilesWithMtime(): Seq[((String, Long, String), Long)] = {
+    var dirs, seen = 0L
+    val files = roots.flatMap { r =>
       val root = new org.apache.hadoop.fs.Path(r)
       val fs = root.getFileSystem(conf.value)
       val qualified = fs.makeQualified(root)
       val out = Seq.newBuilder[((String, Long, String), Long)]
-      def emit(path: org.apache.hadoop.fs.Path, len: Long, mtime: Long): Unit =
+      def emit(path: org.apache.hadoop.fs.Path, len: Long, mtime: Long): Unit = {
+        seen += 1
         if (path.getName.endsWith(".wsp")) {
           val metric = WspTable.metricFor(qualified, path)
           if (metrics.forall(_.contains(metric)) &&
               globRx.forall(_.matcher(metric).matches))
             out += (((path.toString, len, metric), mtime))
         }
+      }
       if (Option(qualified.toUri.getScheme).forall(_ == "file")) {
-        // LOCAL filesystem: `listFiles(recursive)` materializes
-        // LocatedFileStatus, whose permission field forks `ls -ld` PER
-        // FILE on RawLocalFileSystem — measured ~14 ms/file, 70 s to
-        // plan a 5,000-file tree (WspScaleSpec caught it). A plain
-        // listStatus walk keeps the status lazy; this planner touches
-        // only path/len/mtime, so the walk is pure stat traffic.
-        def walk(dir: org.apache.hadoop.fs.Path): Unit =
+        // a listStatus walk: `listFiles(recursive)` on the local
+        // filesystem forks `ls -ld` per file for its permission field.
+        // It follows directory links (aliasing a subtree is legitimate)
+        // and fails on a link back to a directory on its own path.
+        def walk(dir: org.apache.hadoop.fs.Path, prefix: String,
+            above: Set[java.nio.file.Path]): Unit = {
+          val real = new java.io.File(dir.toUri.getPath).toPath.toRealPath()
+          if (above(real))
+            throw new IllegalStateException(
+              s"wsp tree $qualified has a directory cycle: $dir links to $real, above it")
+          dirs += 1
           fs.listStatus(dir).foreach { st =>
-            if (st.isDirectory) walk(st.getPath)
-            else emit(st.getPath, st.getLen, st.getModificationTime)
+            if (st.isDirectory) {
+              val p = if (prefix.isEmpty) st.getPath.getName else s"$prefix.${st.getPath.getName}"
+              if (descends(p)) walk(st.getPath, p, above + real)
+            } else emit(st.getPath, st.getLen, st.getModificationTime)
           }
+        }
         val rootSt = fs.getFileStatus(qualified)
         if (rootSt.isFile)
           emit(rootSt.getPath, rootSt.getLen, rootSt.getModificationTime)
-        else walk(qualified)
+        else walk(qualified, "", Set.empty)
       } else {
         // remote stores: ONE flat recursive listing — on object stores
         // a paged prefix LIST and on HDFS a streamed recursive
         // getListing, both far cheaper than a per-directory RPC walk
+        dirs += 1
         val it = fs.listFiles(qualified, true)
         while (it.hasNext) {
           val st = it.next()
@@ -296,6 +359,9 @@ final class WspScan(
       }
       out.result()
     }
+    listed = Map("dirsListed" -> dirs, "filesSeen" -> seen, "filesSelected" -> files.size.toLong)
+    files
+  }
 
   /** Max file mtime over the selected tree — the streaming offset. */
   private[sources] def maxMtime(): Long = {

@@ -121,6 +121,12 @@ class WspScaleSpec extends AnyFunSuite {
       val pruned = spark.read.format("wsp")
         .option("metricGlob", "shard42.*.*").load(dir)
       assert(pruned.select("metric").distinct().count() == 1000)
+      // the walk descends only where a match can lie: the root, shard42
+      // and its 100 hosts — not all 10,101 directories
+      val walk = new WspScanBuilder(Seq(dir), metricGlob = Some("shard42.*.*"))
+        .build().asInstanceOf[WspScan]
+      assert(walk.listFiles().size == 1000)
+      assert(walk.reportDriverMetrics().find(_.name == "dirsListed").map(_.value) == Some(102L))
     } finally {
       spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
       // 100k files: sweep eagerly, not at JVM exit

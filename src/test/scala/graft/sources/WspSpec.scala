@@ -136,6 +136,80 @@ class WspSpec extends AnyFunSuite {
     assert(bad.delete())
   }
 
+  /** One-point `.wsp` files at the given dotted names, as a tree. */
+  private def nameTree(names: String*): String = {
+    val dir = tmp()
+    val bytes = WspCodec.emptyFile(schema)
+    WspCodec.writeArchive(bytes, WspCodec.archiveInfos(schema).head, Seq((1000L, 1.0)))
+    for (n <- names) {
+      val f = Paths.get(dir, n.split('.').toSeq: _*)
+      Files.createDirectories(f.getParent)
+      Files.write(f.resolveSibling(f.getFileName.toString + ".wsp"), bytes)
+    }
+    dir
+  }
+
+  private def listing(scan: WspScan): Map[String, Long] =
+    scan.reportDriverMetrics().map(m => m.name() -> m.value()).toMap
+
+  test("the pruned walk selects exactly the full walk's files that the filter keeps") {
+    val names = Seq("a.b.c", "a.bc.c", "a.x.c", "a.b", "ab.c", "a.b.c.d", "b.b.c",
+      "c.q", "c.r.s", "a.d.c", "a.[.c", "a.!.c", "x.y.z.w", "c")
+    val dir = nameTree(names: _*)
+    val full = new WspScanBuilder(Seq(dir)).build().asInstanceOf[WspScan]
+    val all = full.listFiles().map(_._3)
+    assert(all.sorted == names.sorted)
+    val fullDirs = listing(full)("dirsListed")
+    for (g <- Seq("*", "*.*.*", "a.*.c", "a.?.c", "a.{b,x}.c", "{a.b,c}.*", "{a.b,c}",
+        "a.[bx].c", "a.[!bx].c", "a.[a-c]*", "a.[!]].c", "*.b.*", "a?b.c", "x.y.z.*", "nope.*")) {
+      val rx = java.util.regex.Pattern.compile(graft.ops.Fetch.globToRegex(g))
+      val scan = new WspScanBuilder(Seq(dir), metricGlob = Some(g)).build().asInstanceOf[WspScan]
+      val got = scan.listFiles().map(_._3)
+      assert(got.sorted == all.filter(rx.matcher(_).matches).sorted, s"glob $g")
+      val m = listing(scan)
+      assert(m("filesSelected") == got.size && m("dirsListed") <= fullDirs, s"glob $g: $m")
+    }
+    val sb = new WspScanBuilder(Seq(dir))
+    sb.pushFilters(Array(org.apache.spark.sql.sources.In("metric",
+      Array("a.b.c", "c.r.s", "c", "zz.top"))))
+    val pushed = sb.build().asInstanceOf[WspScan]
+    assert(pushed.listFiles().map(_._3).sorted == Seq("a.b.c", "c", "c.r.s"))
+    // root, a, a/b, c, c/r — never b, x, ab or a/{bc,x,d,[,!}
+    assert(listing(pushed)("dirsListed") == 5)
+  }
+
+  test("a one-host glob lists only the directories on its path (scan node metrics)") {
+    val hosts = for (d <- 0 until 2; h <- 0 until 5; m <- Seq("cpu", "mem"))
+      yield s"servers.dc$d.host00$h.$m"
+    val dir = nameTree(hosts: _*)
+    val q = spark.read.format("wsp").option("metricGlob", "servers.dc1.host003.*").load(dir)
+      .select("metric")
+    assert(q.collect().map(_.getString(0)).toSet ==
+      Set("servers.dc1.host003.cpu", "servers.dc1.host003.mem"))
+    val scan = q.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get
+    // root, servers, dc1, host003 — not the other 2 + 10 directories
+    assert(scan.metrics("dirsListed").value == 4)
+    assert(scan.metrics("filesSeen").value == 2 && scan.metrics("filesSelected").value == 2)
+  }
+
+  test("a directory link back to an ancestor fails the scan, naming the link; other links alias") {
+    val dir = nameTree("a.b.cpu")
+    Files.createSymbolicLink(Paths.get(dir, "alias"), Paths.get(dir, "a", "b"))
+    assert(new WspScanBuilder(Seq(dir)).build().asInstanceOf[WspScan].listFiles().map(_._3)
+      .sorted == Seq("a.b.cpu", "alias.cpu"))
+    Files.createSymbolicLink(Paths.get(dir, "a", "loop"), Paths.get(dir, "a"))
+    val e = intercept[IllegalStateException] {
+      new WspScanBuilder(Seq(dir)).build().asInstanceOf[WspScan].listFiles()
+    }
+    assert(e.getMessage.contains("a/loop") &&
+      e.getMessage.contains(Paths.get(dir, "a").toRealPath().toString), e.getMessage)
+    // a glob that never reaches the link still reads
+    assert(new WspScanBuilder(Seq(dir), metricGlob = Some("a.b.*")).build()
+      .asInstanceOf[WspScan].listFiles().map(_._3) == Seq("a.b.cpu"))
+  }
+
   test("pushed metric/ts filters are absorbed — no residual Filter node") {
     import spark.implicits._
     val dir = tmp()
