@@ -156,6 +156,16 @@ object RenderTarget {
     "verticalLine", "compressPeriodicGaps", "aliasQuery") ++
     HoltWintersFuncs ++ PresentationFuncs
 
+  /** graphite's threshold selectors as `filterSeries(series, stat, op, n)`:
+    * the mean and the current value keep a series that ties the
+    * threshold, the extremes compare strictly.
+    */
+  private val ThresholdAliases = Map(
+    "averageAbove" -> ("average", ">="), "averageBelow" -> ("average", "<="),
+    "currentAbove" -> ("current", ">="), "currentBelow" -> ("current", "<="),
+    "maximumAbove" -> ("max", ">"), "maximumBelow" -> ("max", "<"),
+    "minimumAbove" -> ("min", ">"), "minimumBelow" -> ("min", "<"))
+
   /** Parse a target string. Globs may contain commas only inside
     * braces (graphite's own constraint), so argument splitting tracks
     * brace/paren depth.
@@ -423,9 +433,10 @@ object RenderTarget {
     // literal substitution applied to the child's glob covers them
     // (the eval case applies the SAME literal substitution in-plan via
     // Pattern.quote, so the two sides agree by construction)
-    case Call("useSeriesAbove", cs, args) =>
+    case Call(f @ "useSeriesAbove", cs, args) =>
       val base = cs.flatMap(leafGlobs)
-      base ++ base.map(_.replace(unquote(args(1)), unquote(args(2))))
+      base ++ base.map(_.replace(unquote(argAt(f, args, 1, "search")),
+        unquote(argAt(f, args, 2, "replace"))))
     case Call(_, cs, _) => cs.flatMap(leafGlobs)
   }
 
@@ -610,12 +621,17 @@ object RenderTarget {
     case _ => false
   }
 
-  /** graphite 1.1's named-aggregator vocabulary as a per-group Column —
-    * shared by `summarize`, `aggregate`, `aggregateWithWildcards`,
-    * `movingWindow`, `sortBy`, `filterSeries`, `highest`/`lowest`,
-    * `aggregateLine`, `groupByNode(s)` and `groupByTags`. `last`/
-    * `current` pick the value at the latest known bucket (the
-    * surrounding plan always has `bucket_ts` in scope).
+  /** graphite 1.1's named-aggregator vocabulary as a per-group Column.
+    * Called directly by `highest`/`lowest` (with the aliases rewritten
+    * onto them: `highestMax`, `highestAverage`, `lowestAverage`,
+    * `mostDeviant`, `limit(sortByMaxima|sortByTotal|sortBy(…))`),
+    * `highestCurrent`/`lowestCurrent`, `filterSeries` (with the
+    * `*Above`/`*Below` aliases) and `movingWindow`; `summarize`,
+    * `aggregate`, `aggregateWithWildcards`, `aggregateLine`,
+    * `groupByNode(s)` and `groupByTags` reach it through
+    * [[summarizeAggOrdered]]. `last`/`current` pick the value at the
+    * latest known bucket (the surrounding plan always has `bucket_ts` in
+    * scope).
     */
   private def summarizeAgg(func: String, c: Column): Column = func match {
     case "sum" | "total" => sum(c)
@@ -731,6 +747,27 @@ object RenderTarget {
         s"window '$arg' must be a multiple of the series step")
       s / step
     }
+  }
+
+  /** Argument `i` of render function `f`: a target that lacks it fails
+    * naming the function and the argument, not with an index error.
+    */
+  private def argAt(f: String, args: Seq[String], i: Int, name: String): String =
+    args.lift(i).getOrElse(
+      throw new IllegalArgumentException(s"$f: missing argument '$name'"))
+
+  /** A selector's series count, its first argument: present and positive. */
+  private def countArg(f: String, args: Seq[String]): Int = {
+    val n = argAt(f, args, 0, "n").toInt
+    require(n > 0, s"$f count must be positive")
+    n
+  }
+
+  /** A percentile, the first argument: present and in (0, 100]. */
+  private def percentArg(f: String, args: Seq[String]): Double = {
+    val n = argAt(f, args, 0, "n").toDouble
+    require(n > 0 && n <= 100, s"$f n must be in (0, 100]")
+    n
   }
 
   /** The `consolidateBy` annotation in the tree, if any — graphite
@@ -950,6 +987,27 @@ object RenderTarget {
     def densify(sel: DataFrame): DataFrame =
       Buckets.densify(sel, extFromI, untilI, spp.toLong)
 
+    // The displayed window of a node with step `step` starts at the
+    // (possibly partial) bucket containing `from`. Rankings, thresholds
+    // and per-series statistics judge a series over it alone, never over
+    // the history extension below it. Window bounds reach generated code
+    // as bound parameters, so a render at a new window compiles no class.
+    def shownFrom(step: Long): Long = Math.floorDiv(fromI, step) * step
+    def shown(step: Long): Column = col("bucket_ts") >= param(shownFrom(step))
+    // one row per series: `stats` over its displayed window
+    def shownStats(df: DataFrame, step: Long, stats: Column*): DataFrame =
+      df.filter(shown(step)).groupBy(col("metric")).agg(stats.head, stats.tail: _*)
+    // every row of `df` beside its series' statistics, broadcast
+    def withShownStats(df: DataFrame, step: Long, stats: Column*): DataFrame =
+      df.join(broadcast(shownStats(df, step, stats: _*)), Seq("metric"), "left")
+    // the series of `df` that `sel` names, by a broadcast semi join
+    def keep(df: DataFrame, step: Long, sel: DataFrame): (DataFrame, Long) =
+      (df.join(broadcast(sel.select("metric")), Seq("metric"), "left_semi"), step)
+    // the `n` series of highest (or lowest) `stat_v`, ties by name
+    def firstN(stats: DataFrame, n: Int, highest: Boolean): DataFrame =
+      stats.orderBy(if (highest) col("stat_v").desc_nulls_last
+        else col("stat_v").asc_nulls_last, col("metric")).limit(n)
+
     // (dense series frame, step): every bucket of the node's grid has a
     // row; gaps are NULL values — graphite's None
     def eval(e: Expr): (DataFrame, Long) = e match {
@@ -1092,35 +1150,27 @@ object RenderTarget {
         val parts = split(col("metric"), "\\.")
         (df.withColumn("metric",
           concat_ws(".", nodes.map(nodeAt(parts, _)): _*)), step)
-      case Call(f @ ("highestMax" | "highestAverage"), Seq(c), args) =>
-        // keep the n series ranking highest by max/avg over the
-        // REQUESTED window (history-extension rows excluded from the
-        // ranking, as graphite ranks the displayed range). The ranking
-        // side is one row per series — broadcast left-semi join back.
-        val n = args.head.toInt
-        require(n > 0, s"$f count must be positive")
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val rankAgg =
-          if (f == "highestMax") max(col("value")) else avg(col("value"))
-        val ranked = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(rankAgg.as("rank_v"))
-          .orderBy(col("rank_v").desc_nulls_last, col("metric"))
-          .limit(n)
-        (df.join(broadcast(ranked.select("metric")), Seq("metric"), "left_semi"),
-          step)
-      case Call("summarize", Seq(c), args) =>
-        val iv = durationS(args.head)
+      // graphite's pure selector aliases, each rewritten onto its
+      // general form
+      case Call(f @ ("highestMax" | "highestAverage" | "lowestAverage"), Seq(c), args) =>
+        eval(Call(if (f == "lowestAverage") "lowest" else "highest", Seq(c),
+          Seq(argAt(f, args, 0, "n"), if (f == "highestMax") "max" else "average")))
+      case Call(f, Seq(c), args) if ThresholdAliases.contains(f) =>
+        val (stat, op) = ThresholdAliases(f)
+        eval(Call("filterSeries", Seq(c), Seq(stat, op, argAt(f, args, 0, "n"))))
+      case Call(f @ "summarize", Seq(c), args) =>
+        val ivArg = argAt(f, args, 0, "intervalString")
+        val iv = durationS(ivArg)
         val func = args.lift(1).getOrElse("sum")
         // graphite's 4th arg: alignToFrom=true anchors the coarse
         // buckets at the request start instead of the epoch grid
         val alignToFrom = args.lift(2).exists(_.toBoolean)
         val (df, step) = eval(c)
         require(iv % step == 0 && iv >= step,
-          s"summarize interval ${args.head} must be a multiple of the series step")
+          s"summarize interval $ivArg must be a multiple of the series step")
         val bucket =
           if (alignToFrom)
-            (lit(fromI) + floor((col("bucket_ts") - fromI) / iv) * iv)
+            (param(fromI) + floor((col("bucket_ts") - param(fromI)) / iv) * iv)
               .cast("long").as("bucket_ts")
           else (floor(col("bucket_ts") / iv) * iv).cast("long").as("bucket_ts")
         (df.groupBy(col("metric"), bucket)
@@ -1218,19 +1268,6 @@ object RenderTarget {
         (df.groupBy(col("metric"),
             (floor(col("bucket_ts") / iv) * iv).cast("long").as("bucket_ts"))
           .agg(round(sum(col("value") * step), 6).as("value")), iv)
-      case Call("averageAbove", Seq(c), args) =>
-        // keep series whose requested-window mean is ≥ n (inclusive —
-        // ties at the threshold stay, matching the "draws metrics with
-        // average above N" selection reading); same requested-window
-        // ranking scope and broadcast-semi shape as highestAverage
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val keep = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(avg(col("value")).as("rank_v"))
-          .filter(col("rank_v") >= n)
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
       case Call("diffSeries", cs, _) if cs.size >= 2 =>
         // series 1 minus the rest: tag member 0 positive, the rest
         // negated, then one null-skipping per-bucket sum — graphite's
@@ -1284,13 +1321,10 @@ object RenderTarget {
         val (df, step) = eval(c)
         (df.withColumn("value", round(col("value") * (sec / step), 6)), step)
       case Call("offsetToZero", Seq(c), _) =>
-        // shift each series down by its own requested-window minimum —
+        // shift each series down by its own displayed-window minimum —
         // per-series one-row frame, broadcast back
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val mins = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(min(col("value")).as("min_v")))
-        (df.join(mins, Seq("metric"), "left")
+        (withShownStats(df, step, min(col("value")).as("min_v"))
           .withColumn("value", round(col("value") - col("min_v"), 6))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
       case Call("isNonNull", Seq(c), _) =>
@@ -1307,76 +1341,34 @@ object RenderTarget {
             when(col("value").isNotNull && col("prev").isNotNull &&
               col("value") =!= col("prev"), 1.0).otherwise(0.0))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("removeBelowPercentile", Seq(c), args) =>
-        val n = args.head.toDouble
-        require(n > 0 && n <= 100, "removeBelowPercentile n must be in (0, 100]")
+      case Call(f @ ("removeBelowPercentile" | "removeAbovePercentile"), Seq(c), args) =>
+        // mask values beyond the series' OWN n-th percentile over the
+        // displayed window
+        val n = percentArg(f, args)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val thr = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric"))
-          .agg(percentile(col("value"), lit(n / 100)).as("thr_v")))
-        (df.join(thr, Seq("metric"), "left")
-          .withColumn("value", when(col("value") >= col("thr_v"), col("value")))
+        val v = col("value")
+        (withShownStats(df, step, percentile(v, lit(n / 100)).as("thr_v"))
+          .withColumn("value", when(
+            if (f == "removeBelowPercentile") v >= col("thr_v") else v <= col("thr_v"), v))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("nPercentile", Seq(c), args) =>
-        // each series becomes the flat line of its own requested-window
+      case Call(f @ "nPercentile", Seq(c), args) =>
+        // each series becomes the flat line of its own displayed-window
         // n-th percentile
-        val n = args.head.toDouble
-        require(n > 0 && n <= 100, "nPercentile n must be in (0, 100]")
+        val n = percentArg(f, args)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val pct = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric"))
-          .agg(round(percentile(col("value"), lit(n / 100)), 6).as("pct_v")))
-        (df.join(pct, Seq("metric"), "left")
+        (withShownStats(df, step,
+            round(percentile(col("value"), lit(n / 100)), 6).as("pct_v"))
           .select(col("metric"), col("bucket_ts"), col("pct_v").as("value")),
           step)
       case Call(f @ ("highestCurrent" | "lowestCurrent"), Seq(c), args) =>
-        // rank series by their last KNOWN value, keep the top/bottom n
-        val n = args.head.toInt
-        require(n > 0, s"$f count must be positive")
+        // `highest`/`lowest` by the last known value, but only series
+        // with a known value in the window rank: an all-None series is
+        // never selected, even when n exceeds the known series
+        val n = countArg(f, args)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val cur = df.filter(col("bucket_ts") >= lo && col("value").isNotNull)
-          .groupBy(col("metric"))
-          .agg(max_by(col("value"), col("bucket_ts")).as("cur_v"))
-        val ranked = (if (f == "highestCurrent")
-            cur.orderBy(col("cur_v").desc_nulls_last, col("metric"))
-          else cur.orderBy(col("cur_v").asc_nulls_last, col("metric")))
-          .limit(n).select(col("metric"))
-        (df.join(broadcast(ranked), Seq("metric"), "left_semi"), step)
-      case Call("lowestAverage", Seq(c), args) =>
-        val n = args.head.toInt
-        require(n > 0, "lowestAverage count must be positive")
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val ranked = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(avg(col("value")).as("rank_v"))
-          .orderBy(col("rank_v").asc_nulls_last, col("metric"))
-          .limit(n).select(col("metric"))
-        (df.join(broadcast(ranked), Seq("metric"), "left_semi"), step)
-      case Call("averageBelow", Seq(c), args) =>
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val keep = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(avg(col("value")).as("rank_v"))
-          .filter(col("rank_v") <= n)
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
-      case Call(f @ ("maximumAbove" | "maximumBelow" | "minimumAbove" |
-          "minimumBelow"), Seq(c), args) =>
-        // threshold selection on the series' requested-window extremum
-        // (graphite uses strict comparisons for these four)
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val ext = if (f.startsWith("maximum")) max(col("value")) else min(col("value"))
-        val keep = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(ext.as("ext_v"))
-          .filter(if (f.endsWith("Above")) col("ext_v") > n else col("ext_v") < n)
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
+        val cur = shownStats(df, step, summarizeAgg("current", col("value")).as("stat_v"))
+        keep(df, step, firstN(cur.filter(col("stat_v").isNotNull), n,
+          highest = f == "highestCurrent"))
       case Call("timeStack", Seq(c), args) =>
         // the N-copies week-over-week overlay: shifted copies of the
         // child for i in [start, end], each re-stamped forward by
@@ -1395,7 +1387,7 @@ object RenderTarget {
           df.withColumn("bucket_ts", col("bucket_ts") + i * delta)
             .withColumn("metric", concat(col("metric"), lit(s"@-$i")))
         }
-        (copies.reduce(_ unionByName _).filter(col("bucket_ts") < untilI), step)
+        (copies.reduce(_ unionByName _).filter(col("bucket_ts") < param(untilI)), step)
       case Call("group", cs, _) =>
         // plain union of series lists, every member keeps its own name.
         // verticalLine markers are step-exempt (stepS has the same
@@ -1456,63 +1448,46 @@ object RenderTarget {
           .join(sparse, Seq("bucket_ts"), "left")
           .select(lit("weightedAverage").as("metric"), col("bucket_ts"),
             col("value")), sv)
-      case Call("filterSeries", Seq(c), args) =>
+      case Call(f @ "filterSeries", Seq(c), args) =>
         // graphite 1.1's general series filter: keep series whose
-        // requested-window statistic satisfies `operator threshold` —
-        // subsumes the *Above/*Below idioms under one surface
-        val Seq(func, opStr, thrS) = args.take(3)
-        val thr = thrS.toDouble
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val stat = summarizeAgg(func, col("value"))
-        val stats = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(stat.as("stat_v"))
-        val keep = stats.filter(opStr match {
-          case ">"  => col("stat_v") > thr
-          case ">=" => col("stat_v") >= thr
-          case "<"  => col("stat_v") < thr
-          case "<=" => col("stat_v") <= thr
-          case "="  => col("stat_v") === thr
-          case "!=" => col("stat_v") =!= thr
+        // displayed-window statistic satisfies `operator threshold` —
+        // the *Above/*Below selectors rewrite onto it
+        val func = argAt(f, args, 0, "func")
+        val thr = argAt(f, args, 2, "threshold").toDouble
+        val stat = col("stat_v")
+        val pass = argAt(f, args, 1, "operator") match {
+          case ">"  => stat > thr
+          case ">=" => stat >= thr
+          case "<"  => stat < thr
+          case "<=" => stat <= thr
+          case "="  => stat === thr
+          case "!=" => stat =!= thr
           case o => throw new IllegalArgumentException(
             s"unknown filterSeries operator '$o'")
-        })
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
+        }
+        val (df, step) = eval(c)
+        keep(df, step,
+          shownStats(df, step, summarizeAgg(func, col("value")).as("stat_v")).filter(pass))
       case Call(f @ ("highest" | "lowest"), Seq(c), args) =>
-        // the general top/bottom-n by a chosen statistic (1.1's
-        // umbrella over highestMax/lowestAverage/…)
+        // the general top/bottom-n by a chosen statistic; highestMax,
+        // lowestAverage, limit(sortBy…) and mostDeviant rewrite onto it
         val n = args.headOption.map(_.toInt).getOrElse(1)
         require(n > 0, s"$f count must be positive")
         val func = args.lift(1).getOrElse("average")
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val ranked = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(summarizeAgg(func, col("value")).as("stat_v"))
-        val top = (if (f == "highest")
-            ranked.orderBy(col("stat_v").desc_nulls_last, col("metric"))
-          else ranked.orderBy(col("stat_v").asc_nulls_last, col("metric")))
-          .limit(n).select(col("metric"))
-        (df.join(broadcast(top), Seq("metric"), "left_semi"), step)
+        keep(df, step, firstN(
+          shownStats(df, step, summarizeAgg(func, col("value")).as("stat_v")),
+          n, highest = f == "highest"))
       case Call("removeEmptySeries", Seq(c), args) =>
-        // drop series with NO known value in the requested window; the
+        // drop series with NO known value in the displayed window; the
         // optional xFilesFactor arg raises the bar to a known-fraction
         // (graphite 1.1: removeEmptySeries(series, 0.1) keeps series
         // ≥10% populated)
         val xff = args.headOption.map(_.toDouble).getOrElse(0.0)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val live =
-          if (xff <= 0.0)
-            df.filter(col("bucket_ts") >= lo && col("value").isNotNull)
-              .select(col("metric")).distinct()
-          else
-            df.filter(col("bucket_ts") >= lo)
-              .groupBy(col("metric"))
-              .agg(count(col("value")).as("kn"), count(lit(1)).as("tot"))
-              .filter(col("kn").cast("double") / col("tot") >= xff)
-              .select(col("metric"))
-        (df.join(broadcast(live), Seq("metric"), "left_semi"), step)
+        keep(df, step,
+          shownStats(df, step, count(col("value")).as("kn"), count(lit(1)).as("tot"))
+            .filter(col("kn") > 0 && col("kn").cast("double") / col("tot") >= xff))
       case Call("seriesByTag", cs, args) =>
         // tag-DB selection over `name;tag=value` metrics: every quoted
         // argument is one tag expression, ALL must hold. Same dense
@@ -1648,14 +1623,10 @@ object RenderTarget {
         val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
         (df.withColumn("value", lag(col("value"), n).over(w)), step)
       case Call("minMax", Seq(c), _) =>
-        // per-series [0,1] normalisation over the requested window;
+        // per-series [0,1] normalisation over the displayed window;
         // a flat series maps to 0 (graphite's zero-range rule)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val ext = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric"))
-          .agg(min(col("value")).as("mn"), max(col("value")).as("mx")))
-        (df.join(ext, Seq("metric"), "left")
+        (withShownStats(df, step, min(col("value")).as("mn"), max(col("value")).as("mx"))
           .withColumn("value",
             when(col("value").isNotNull && col("mx") === col("mn"), 0.0)
               .when(col("value").isNotNull,
@@ -1755,24 +1726,20 @@ object RenderTarget {
           else lit(stop - start)
         (df.withColumn("metric",
           array_join(slice(parts, lit(start + 1), sliceLen), ".")), step)
-      case Call("averageOutsidePercentile", Seq(c), args) =>
-        // keep series whose requested-window average falls OUTSIDE the
+      case Call(f @ "averageOutsidePercentile", Seq(c), args) =>
+        // keep series whose displayed-window average falls OUTSIDE the
         // [100−n, n] percentile band of all the averages — the outlier
         // panel; stats frame is one row per series + a 1-row band
-        val n0 = args.head.toDouble
+        val n0 = argAt(f, args, 0, "n").toDouble
         val n = if (n0 < 50) 100 - n0 else n0
-        require(n > 0 && n <= 100, "averageOutsidePercentile n must be in (0, 100]")
+        require(n > 0 && n <= 100, s"$f n must be in (0, 100]")
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val avgs = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(avg(col("value")).as("avg_v"))
+        val avgs = shownStats(df, step, avg(col("value")).as("avg_v"))
         val bands = avgs.agg(
           percentile(col("avg_v"), lit((100 - n) / 100)).as("lo_v"),
           percentile(col("avg_v"), lit(n / 100)).as("hi_v"))
-        val keep = avgs.crossJoin(broadcast(bands))
-          .filter(col("avg_v") < col("lo_v") || col("avg_v") > col("hi_v"))
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
+        keep(df, step, avgs.crossJoin(broadcast(bands))
+          .filter(col("avg_v") < col("lo_v") || col("avg_v") > col("hi_v")))
       // --------------------------------------- series-name filters:
       // unanchored regex over the metric name (graphite's re.search
       // semantics — rlike searches, it doesn't anchor)
@@ -1819,91 +1786,42 @@ object RenderTarget {
             (pct(df.groupBy(col("bucket_ts"))
               .agg(sum(col("value")).as("tot_v"))), step)
         }
-      case Call(f @ ("currentAbove" | "currentBelow"), Seq(c), args) =>
-        // keep series by their LAST non-null value over the requested
-        // window (graphite's safeLast); an all-None series never passes
-        // the comparison. One row per series — broadcast semi join.
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val cur = df.filter(col("bucket_ts") >= lo && col("value").isNotNull)
-          .groupBy(col("metric"))
-          .agg(max_by(col("value"), col("bucket_ts")).as("cur_v"))
-        val keep = cur.filter(
-          if (f == "currentAbove") col("cur_v") >= n else col("cur_v") <= n)
-        (df.join(broadcast(keep.select("metric")), Seq("metric"), "left_semi"),
-          step)
-      case Call("percentileOfSeries", Seq(c), args) =>
+      case Call(f @ "percentileOfSeries", Seq(c), args) =>
         // per-bucket n-th percentile ACROSS member series → one series;
         // linear interpolation (percentile ⟷ quantile_cont), nulls
         // skipped, all-null bucket stays null
-        val n = args.head.toDouble
-        require(n > 0 && n <= 100, "percentileOfSeries n must be in (0, 100]")
+        val n = percentArg(f, args)
         val (df, step) = eval(c)
         (df.groupBy(col("bucket_ts"))
           .agg(round(percentile(col("value"), lit(n / 100)), 6).as("value"))
           .select(lit("percentileOfSeries").as("metric"), col("bucket_ts"),
             col("value")), step)
-      case Call("removeAbovePercentile", Seq(c), args) =>
-        // mask values above the series' OWN n-th percentile over the
-        // requested window; the per-series threshold frame is one row
-        // per series — broadcast join back
-        val n = args.head.toDouble
-        require(n > 0 && n <= 100, "removeAbovePercentile n must be in (0, 100]")
+      case Call("limit", Seq(Call("sortByMinima", Seq(c), _)), args) =>
+        // the n lowest minima among the series sortByMinima keeps
+        val n = countArg("limit", args)
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val thr = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric"))
-          .agg(percentile(col("value"), lit(n / 100)).as("thr_v")))
-        (df.join(thr, Seq("metric"), "left")
-          .withColumn("value", when(col("value") <= col("thr_v"), col("value")))
-          .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("limit", Seq(Call(sf @ ("sortByMaxima" | "sortByTotal" |
-          "sortByName" | "sortByMinima" | "sortBy"), Seq(c), sargs)), args) =>
+        keep(df, step, firstN(shownStats(df, step, min(col("value")).as("stat_v"),
+          max(col("value")).as("max_v")).filter(col("max_v") > 0), n, highest = false))
+      case Call("limit", Seq(Call(sf @ ("sortByMaxima" | "sortByTotal" | "sortBy"),
+          Seq(c), sargs)), args) =>
         // the selecting composition: sortByX orders the series list,
-        // limit keeps the first n — together a top-n series selection
-        // over the requested window (ranking scope as highestMax).
-        // sortBy is 1.1's general form (any named aggregator, optional
-        // reverse); sortByMinima ranks ascending by minimum and — per
-        // graphite — first drops series that never go positive.
-        val n = args.head.toInt
-        require(n > 0, "limit count must be positive")
-        val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val ranked = sf match {
-          case "sortByName" =>
-            df.select(col("metric")).distinct().orderBy(col("metric")).limit(n)
+        // limit keeps the first n — a top-n selection, rewritten onto
+        // highest/lowest (sortBy's optional reverse sorts descending)
+        val n = argAt("limit", args, 0, "n")
+        eval(sf match {
+          case "sortByMaxima" => Call("highest", Seq(c), Seq(n, "max"))
+          case "sortByTotal" => Call("highest", Seq(c), Seq(n, "sum"))
           case _ =>
-            val (rankAgg, asc) = sf match {
-              case "sortByMaxima" => (max(col("value")), false)
-              case "sortByTotal" => (sum(col("value")), false)
-              case "sortByMinima" => (min(col("value")), true)
-              case "sortBy" =>
-                val func = sargs.headOption.getOrElse("average")
-                val reverse = sargs.lift(1).exists(_.toBoolean)
-                (summarizeAgg(func, col("value")), !reverse)
-            }
-            val stats0 = df.filter(col("bucket_ts") >= lo)
-              .groupBy(col("metric")).agg(rankAgg.as("rank_v"),
-                max(col("value")).as("max_v"))
-            val stats =
-              if (sf == "sortByMinima") stats0.filter(col("max_v") > 0)
-              else stats0
-            stats.orderBy(
-                if (asc) col("rank_v").asc_nulls_last
-                else col("rank_v").desc_nulls_last, col("metric"))
-              .limit(n).select(col("metric"))
-        }
-        (df.join(broadcast(ranked), Seq("metric"), "left_semi"), step)
+            Call(if (sargs.lift(1).exists(_.toBoolean)) "highest" else "lowest",
+              Seq(c), Seq(n, sargs.headOption.getOrElse("average")))
+        })
       case Call("limit", Seq(c), args) =>
         // bare limit keeps the first n of the series list — list order
-        // in this engine is the output contract's name order
-        val n = args.head.toInt
-        require(n > 0, "limit count must be positive")
+        // in this engine is the output contract's name order, so
+        // limit(sortByName(…), n) is this case too
+        val n = countArg("limit", args)
         val (df, step) = eval(c)
-        val first = df.select(col("metric")).distinct()
-          .orderBy(col("metric")).limit(n)
-        (df.join(broadcast(first), Seq("metric"), "left_semi"), step)
+        keep(df, step, df.select(col("metric")).distinct().orderBy(col("metric")).limit(n))
       case Call("sortByMaxima" | "sortByTotal" | "sortByName" | "sortBy",
           Seq(c), _) =>
         // bare sort is presentational: the output contract already
@@ -1914,15 +1832,12 @@ object RenderTarget {
         // even bare, sortByMinima SELECTS: graphite drops series whose
         // maximum never goes positive before sorting
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val pos = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric")).agg(max(col("value")).as("max_v"))
-          .filter(col("max_v") > 0).select(col("metric"))
-        (df.join(broadcast(pos), Seq("metric"), "left_semi"), step)
-      case Call("mostDeviant", Seq(c), args) =>
+        keep(df, step, shownStats(df, step, max(col("value")).as("max_v"))
+          .filter(col("max_v") > 0))
+      case Call(f @ "mostDeviant", Seq(c), args) =>
         // the n series with the highest population deviation over the
-        // requested window — `highest(…, n, 'stddev')` in 1.1 vocabulary
-        eval(Call("highest", Seq(c), Seq(args.head, "stddev")))
+        // displayed window — `highest(…, n, 'stddev')` in 1.1 vocabulary
+        eval(Call("highest", Seq(c), Seq(argAt(f, args, 0, "n"), "stddev")))
       case Call("constantLine", Seq(Leaf(v)), _) =>
         // no series child — a synthetic constant on the request grid
         // (graphite draws 3 points; a full grid keeps the frame shape
@@ -2070,7 +1985,7 @@ object RenderTarget {
         require(delta % step == 0,
           s"timeShift offset ${args.head} must be a multiple of the series step")
         (df.withColumn("bucket_ts", col("bucket_ts") + delta)
-          .filter(col("bucket_ts") < untilI), step)
+          .filter(col("bucket_ts") < param(untilI)), step)
       // ------------------------------- graphite 1.1 umbrella forms:
       case Call("aggregate", Seq(c), args) =>
         // the 1.1 canonical combine: aggregate(list, 'func'[, xff]).
@@ -2247,7 +2162,7 @@ object RenderTarget {
         val (df, step) = eval(c)
         val lo = args.lift(0).map(unquote).filter(_.nonEmpty)
           .map(t => Math.floorDiv(AtTime.parse(t, untilS, tz), step) * step)
-          .getOrElse(Math.floorDiv(fromI, step) * step)
+          .getOrElse(shownFrom(step))
         val hi = args.lift(1).map(unquote).filter(_.nonEmpty)
           .map(t => Math.floorDiv(AtTime.parse(t, untilS, tz), step) * step + step)
           .getOrElse(untilI)
@@ -2260,18 +2175,17 @@ object RenderTarget {
         // endSourceAt>until works there; documented deviation.)
         require(hi <= untilI, "linearRegression: endSourceAt past the " +
           s"request until is unsupported (source [$lo, $hi) vs frame end $untilI)")
-        val x = col("bucket_ts") - lit(lo)
+        val x = col("bucket_ts") - param(lo)
         val fit = broadcast(df
-          .filter(col("bucket_ts") >= lo && col("bucket_ts") < hi)
+          .filter(col("bucket_ts") >= param(lo) && col("bucket_ts") < param(hi))
           .groupBy(col("metric"))
           .agg(regr_slope(col("value"), x).as("beta"),
             regr_intercept(col("value"), x).as("alpha")))
         (df.join(fit, Seq("metric"), "left")
           .select(col("metric"), col("bucket_ts"),
-            when(col("beta").isNotNull,
-              round(col("alpha") + col("beta") * (col("bucket_ts") - lit(lo)), 6))
+            when(col("beta").isNotNull, round(col("alpha") + col("beta") * x, 6))
               .as("value")), step)
-      case Call("timeSlice", Seq(c), args) =>
+      case Call(f @ "timeSlice", Seq(c), args) =>
         // None outside [start, end]: bounds are FULL attime strings
         // ([[AtTime]] — epochs, -durations, midnight/day-names/dates),
         // resolved against the request's `until` as the render-time
@@ -2281,22 +2195,19 @@ object RenderTarget {
           val t = a.trim
           if (t.isEmpty) dflt else AtTime.parse(t, untilS, tz)
         }
-        val startT = bound(args.head, fromS)
+        val startT = bound(argAt(f, args, 0, "startSliceAt"), fromS)
         val endT = args.lift(1).map(bound(_, untilS)).getOrElse(untilS)
         (df.withColumn("value",
-          when(col("bucket_ts") >= startT && col("bucket_ts") <= endT,
+          when(col("bucket_ts") >= param(startT) && col("bucket_ts") <= param(endT),
             col("value"))), step)
       case Call("aggregateLine", Seq(c), args) =>
         // each series flattened to the horizontal line of its own
-        // requested-window aggregate — per-series one-row stat,
+        // displayed-window aggregate — per-series one-row stat,
         // broadcast back across the grid
         val func = args.headOption.getOrElse("avg")
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val stat = broadcast(df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("metric"))
-          .agg(round(summarizeAggOrdered(func, col("value")), 6).as("line_v")))
-        (df.join(stat, Seq("metric"), "left")
+        (withShownStats(df, step,
+            round(summarizeAggOrdered(func, col("value")), 6).as("line_v"))
           .select(col("metric"), col("bucket_ts"),
             col("line_v").as("value")), step)
       case Call("threshold", Seq(Leaf(v)), args) =>
@@ -2320,30 +2231,27 @@ object RenderTarget {
           .join(broadcast(marker), Seq("present"), "left_anti")
           .drop("present")
         (df.unionByName(fallback), step)
-      case Call("removeBetweenPercentile", Seq(c), args) =>
+      case Call(f @ "removeBetweenPercentile", Seq(c), args) =>
         // keep series that ESCAPE the cross-series per-bucket n-th
-        // percentile band at least once in the requested window
+        // percentile band at least once in the displayed window
         // (graphite folds n below 50 to its mirror; the band is OPEN —
         // a value ON the edge escapes, graphite's `not lo < v < hi`).
         // Deliberate deviation: percentiles interpolate continuously
         // (Spark's percentile = DuckDB's quantile_cont) where
         // graphite's getPercentile picks a member value — the band
         // differs by at most one inter-member gap
-        val n0 = args.head.toDouble
+        val n0 = argAt(f, args, 0, "n").toDouble
         val n = if (n0 < 50) 100 - n0 else n0
-        require(n < 100, "removeBetweenPercentile n must be below 100")
+        require(n < 100, s"$f n must be below 100")
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val bands = df.filter(col("bucket_ts") >= lo)
-          .groupBy(col("bucket_ts"))
+        val inWindow = df.filter(shown(step))
+        val bands = inWindow.groupBy(col("bucket_ts"))
           .agg(percentile(col("value"), lit((100 - n) / 100)).as("lo_v"),
             percentile(col("value"), lit(n / 100)).as("hi_v"))
-        val outside = df.filter(col("bucket_ts") >= lo)
-          .join(bands, Seq("bucket_ts"))
+        keep(df, step, inWindow.join(bands, Seq("bucket_ts"))
           .filter(col("value").isNotNull &&
             !(col("value") > col("lo_v") && col("value") < col("hi_v")))
-          .select(col("metric")).distinct()
-        (df.join(broadcast(outside), Seq("metric"), "left_semi"), step)
+          .select(col("metric")).distinct())
       case Call("mapSeries", Seq(c), _) =>
         // grouping annotation: reduceSeries below reads the node
         // structure off the names directly, so the map is the identity
@@ -2431,8 +2339,8 @@ object RenderTarget {
           }
           (evald.reduce(_ unionByName _), step)
         }
-      case Call("useSeriesAbove", Seq(c), args) =>
-        // series whose requested-window MAX clears the threshold have
+      case Call(f @ "useSeriesAbove", Seq(c), args) =>
+        // series whose displayed-window MAX clears the threshold have
         // their names rewritten search→replace, and THOSE series serve
         // — graphite's two-round-trip form (inspect requests_per_sec,
         // fetch latency for the busy ones). The rewrite happens IN-PLAN
@@ -2445,12 +2353,11 @@ object RenderTarget {
         // the result is silently empty. Documented deviation: graphite
         // re.sub's regex semantics are not honored; the overwhelmingly
         // common dotted-name search ('req.count') is literal in both.
-        val Seq(thrS, search, replace) = args.take(3).map(unquote)
-        val thr = thrS.toDouble
+        val thr = unquote(argAt(f, args, 0, "value")).toDouble
+        val search = unquote(argAt(f, args, 1, "search"))
+        val replace = unquote(argAt(f, args, 2, "replace"))
         val (df, step) = eval(c)
-        val lo = Math.floorDiv(fromI, step) * step
-        val rewritten = df.filter(col("bucket_ts") >= param(lo))
-          .groupBy(col("metric")).agg(max(col("value")).as("max_v"))
+        val rewritten = shownStats(df, step, max(col("value")).as("max_v"))
           .filter(col("max_v") > thr)
           .select(regexp_replace(col("metric"),
             java.util.regex.Pattern.quote(search),
@@ -2497,8 +2404,8 @@ object RenderTarget {
 
     val (out, finalStep) = eval(expr0)
     // keep the (possibly partial) final-step bucket containing `from`
-    val lo = Math.floorDiv(fromI, finalStep) * finalStep
-    val trimmed = out.filter(col("bucket_ts") >= param(lo))
+    val lo = shownFrom(finalStep)
+    val trimmed = out.filter(shown(finalStep))
     // maxDataPoints consolidation (graphite's render-frame cap): when
     // the grid exceeds the cap, merge runs of ceil(buckets/cap) slots —
     // anchored at `lo`, graphite chunks from the range start — using
@@ -2515,7 +2422,8 @@ object RenderTarget {
         val xff = xffOf(expr0).getOrElse(0.0)
         trimmed
           .groupBy(col("metric"),
-            (lit(lo) + floor((col("bucket_ts") - lo) / cStep) * cStep)
+            (param(lo) + floor((col("bucket_ts") - param(lo)) / param(cStep)) *
+              param(cStep))
               .cast("long").as("bucket_ts"))
           .agg(round(consolidateAgg(func), 6).as("cv"),
             count(col("value")).as("known"), count(lit(1)).as("total"))

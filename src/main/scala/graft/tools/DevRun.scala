@@ -26,9 +26,9 @@ object DevRun {
     // drop empty segments (',key' / 'a,,b') and validate every key UP
     // FRONT: an unknown key used to throw a bare NoSuchElementException
     // mid-loop, after Spark startup cost was already paid (r17 advice)
-    val keys = pos(0).split(",").toSeq.filter(_.nonEmpty)
-    val unknown = keys.filterNot(SparkEntry.queries.keySet)
+    val keys = pos.headOption.toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
     require(keys.nonEmpty, "no query keys given")
+    val unknown = keys.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query key(s): ${unknown.mkString(", ")} — see SparkEntry.queries")
     val sfDir = pos.lift(1).getOrElse("/root/testdata/sf0.1")

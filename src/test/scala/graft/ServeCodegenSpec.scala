@@ -72,11 +72,29 @@ class ServeCodegenSpec extends AnyFunSuite {
     assert(secondReadCompiles { case ((f, u), h) => table.fetchGlob(s"$h.*", f, u, now) } == 0)
   }
 
-  test("a sumSeries render over the wsp source at a new window and host compiles no class") {
-    assert(secondReadCompiles { case ((f, u), h) =>
+  /** Classes a second wsp render of `target(<host>.*)` compiles. */
+  private def renderCompiles(target: String => String, maxDataPoints: Int = 0): Long =
+    secondReadCompiles { case ((f, u), h) =>
       val pts = spark.read.format("wsp").option("metricGlob", s"$h.*").load(tree)
         .filter(col("spp") === 60).select("metric", "ts_s", "value")
-      RenderTarget.evaluate(spark, pts, s"sumSeries($h.*)", f, u, 60)
-    } == 0)
+      RenderTarget.evaluate(spark, pts, target(s"$h.*"), f, u, 60, maxDataPoints)
+    }
+
+  test("a sumSeries render over the wsp source at a new window and host compiles no class") {
+    assert(renderCompiles(g => s"sumSeries($g)") == 0)
+  }
+
+  // each judges its series over the displayed window, or (the last)
+  // consolidates to fewer points than the window has buckets
+  for ((target, cap) <- Seq[(String => String, Int)](
+      (g => s"highestMax($g, 1)", 0),
+      (g => s"averageAbove($g, 0)", 0),
+      (g => s"removeAbovePercentile($g, 80)", 0),
+      (g => s"limit(sortByMaxima($g), 2)", 0),
+      (g => s"sumSeries($g)", 10))) {
+    val name = target("<host>.*") + (if (cap > 0) s" at maxDataPoints $cap" else "")
+    test(s"the render $name over the wsp source at a new window and host compiles no class") {
+      assert(renderCompiles(target, cap) == 0)
+    }
   }
 }

@@ -1224,6 +1224,74 @@ class RenderTargetSpec extends AnyFunSuite {
     assert(slices == Seq("m.a" -> Some(2.0)))
   }
 
+  test("a missing required argument fails naming the function and the argument") {
+    val p = pts(("m.a", 65L, 1.0))
+    for ((target, f, arg) <- Seq(
+        ("filterSeries(m.*, 'max', '>')", "filterSeries", "threshold"),
+        ("useSeriesAbove(m.*, 1)", "useSeriesAbove", "search"),
+        ("highestMax(m.*)", "highestMax", "n"),
+        ("currentBelow(m.*)", "currentBelow", "n"),
+        ("highestCurrent(m.*)", "highestCurrent", "n"),
+        ("limit(sortByMaxima(m.*))", "limit", "n"),
+        ("nPercentile(m.*)", "nPercentile", "n"),
+        ("timeSlice(m.*)", "timeSlice", "startSliceAt"))) {
+      val e = intercept[IllegalArgumentException](
+        RenderTarget.evaluate(spark, p, target, 0L, 120L, 60))
+      assert(e.getMessage == s"$f: missing argument '$arg'", target)
+    }
+  }
+
+  test("graphite's selector aliases return exactly the rows of their general forms") {
+    // seeded frames over values 0..4, so statistics tie often: m.b
+    // copies m.a (equal statistics on different names), m.c is flat at
+    // the threshold 2, and m.z is above the removeAboveValue cut
+    // everywhere, so it reaches the selectors as an all-None series
+    val s = "removeAboveValue(m.*, 100)"
+    val pairs = Seq(
+      s"highestMax($s, 2)" -> s"highest($s, 2, 'max')",
+      s"highestAverage($s, 2)" -> s"highest($s, 2, 'average')",
+      s"lowestAverage($s, 2)" -> s"lowest($s, 2, 'average')",
+      s"averageAbove($s, 2)" -> s"filterSeries($s, 'average', '>=', 2)",
+      s"averageBelow($s, 2)" -> s"filterSeries($s, 'average', '<=', 2)",
+      s"maximumAbove($s, 2)" -> s"filterSeries($s, 'max', '>', 2)",
+      s"maximumBelow($s, 2)" -> s"filterSeries($s, 'max', '<', 2)",
+      s"minimumAbove($s, 2)" -> s"filterSeries($s, 'min', '>', 2)",
+      s"minimumBelow($s, 2)" -> s"filterSeries($s, 'min', '<', 2)",
+      s"currentAbove($s, 2)" -> s"filterSeries($s, 'current', '>=', 2)",
+      s"currentBelow($s, 2)" -> s"filterSeries($s, 'current', '<=', 2)",
+      s"limit(sortByMaxima($s), 2)" -> s"highest($s, 2, 'max')",
+      s"limit(sortByTotal($s), 2)" -> s"highest($s, 2, 'sum')",
+      s"limit(sortBy($s, 'max'), 2)" -> s"lowest($s, 2, 'max')",
+      s"limit(sortBy($s, 'stddev', true), 2)" -> s"highest($s, 2, 'stddev')",
+      s"limit(sortByName($s), 2)" -> s"limit($s, 2)",
+      // the outer sort orders the list limit cuts
+      s"limit(sortByName(sortByMaxima($s)), 2)" -> s"limit($s, 2)",
+      s"limit(sortByMaxima(sortByName($s)), 2)" -> s"highest($s, 2, 'max')",
+      s"highestCurrent($s, 10)" -> s"highest(removeEmptySeries($s), 10, 'current')",
+      s"lowestCurrent($s, 2)" -> s"lowest(removeEmptySeries($s), 2, 'current')")
+    for (seed <- Seq(7, 8, 9)) {
+      val rnd = new scala.util.Random(seed)
+      def ts(i: Int) = i * 60L + 65
+      // a random series with each of the 5 slots known at odds 4 in 5
+      def random(m: String) = (0 until 5).filter(_ => rnd.nextInt(5) > 0)
+        .map(i => (m, ts(i), rnd.nextInt(5).toDouble))
+      val a = random("m.a")
+      val p = pts(a ++ a.map(_.copy(_1 = "m.b")) ++ random("m.d") ++ random("m.e") ++
+        Seq(0, 1, 3, 4).map(i => ("m.c", ts(i), 2.0)) ++
+        (0 until 5).map(i => ("m.z", ts(i), 500.0)): _*)
+      def run(t: String) = RenderTarget.evaluate(spark, p, t, 0L, 300L, 60)
+        .collect().map(r => (r.getString(0), r.getLong(1), Option(r.get(2)))).toSeq
+      for ((alias, general) <- pairs)
+        assert(run(alias) == run(general), s"seed $seed: $alias vs $general")
+      // the deliberate difference: highestCurrent never selects the
+      // all-None series, even with n above the number of known series,
+      // where highest(…, 'current') fills up with it
+      val known = run(s"highestCurrent($s, 10)").map(_._1).distinct
+      assert(!known.contains("m.z") && known.contains("m.c"), s"seed $seed: $known")
+      assert(run(s"highest($s, 10, 'current')").map(_._1).distinct.contains("m.z"))
+    }
+  }
+
   test("pyReplacement translates python re.sub syntax to Java") {
     // \1 → $1 (backreference), $ → \$ (literal), \\ stays an escaped
     // backslash — so graphite-style replacements work verbatim
