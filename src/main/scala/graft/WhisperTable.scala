@@ -752,8 +752,7 @@ object WhisperTable {
     val all = walk.map(st => (st.getPath.toString, st.getLen)).toSeq
     require(all.nonEmpty, s"no .wsp files under $treeDir")
 
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = graft.sources.WspTable.taskConf(spark)
     val rootStr = qualified.toString
     import spark.implicits._
     // (path, len) pairs ride from the driver's listing — the sweep is
@@ -769,7 +768,7 @@ object WhisperTable {
         val root = new org.apache.hadoop.fs.Path(rootStr)
         paths.flatMap { case (p, len) =>
           val path = new org.apache.hadoop.fs.Path(p)
-          val pfs = path.getFileSystem(conf.value)
+          val pfs = path.getFileSystem(conf.value.value)
           require(len <= Int.MaxValue,
             s"$p: $len bytes exceeds the 2 GB single-file limit")
           val bytes = new Array[Byte](len.toInt)

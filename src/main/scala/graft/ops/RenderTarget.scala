@@ -443,26 +443,27 @@ object RenderTarget {
   /** applyByNode's template argument (2nd arg; the 1st is the node). */
   private def applyTemplate(args: Seq[String]): String = unquote(args(1))
 
-  /** Whether the tree selects series by TAG anywhere — the shared scan
-    * then cannot pre-filter by glob regex (tag predicates are applied
-    * post-aggregation instead).
+  /** The tree's `seriesByTag` selections, each as its tag expressions.
+    * Their predicates join the glob regexes in the shared scan's
+    * pre-filter, and they count with the glob leaves toward the
+    * shared-scan fence decision (see leafSelect): a target mixing ONE
+    * glob with ONE tag selection still has two consumers of the shared
+    * aggregate, and an unfenced predicate on either side splits them
+    * back into two scans.
     */
-  def hasTagSelection(e: Expr): Boolean = e match {
-    case Leaf(_) => false
-    case Call("seriesByTag", _, _) => true
-    case Call(_, cs, _) => cs.exists(hasTagSelection)
+  private def tagSelections(e: Expr): Seq[Seq[String]] = e match {
+    case Leaf(_) => Nil
+    case Call("seriesByTag", cs, args) => Seq(tagExprs(cs, args))
+    case Call(_, cs, _) => cs.flatMap(tagSelections)
   }
 
-  /** Number of `seriesByTag` selections in the tree — counted with the
-    * glob leaves toward the shared-scan fence decision (see leafSelect):
-    * a target mixing ONE glob with ONE tag selection still has two
-    * consumers of the shared aggregate, and an unfenced predicate on
-    * either side splits them back into two scans.
-    */
-  private def tagSelectionCount(e: Expr): Int = e match {
-    case Leaf(_) => 0
-    case Call("seriesByTag", _, _) => 1
-    case Call(_, cs, _) => cs.map(tagSelectionCount).sum
+  /** seriesByTag's tag expressions: every quoted argument is one. */
+  private def tagExprs(cs: Seq[Expr], args: Seq[String]): Seq[String] = {
+    val exprs = cs.collect { case Leaf(g) => unquote(g) } ++ args
+    require(exprs.nonEmpty && cs.forall(_.isInstanceOf[Leaf]),
+      "seriesByTag takes quoted tag expressions, e.g. " +
+        "seriesByTag('name=cpu', 'dc=~us-.*')")
+    exprs
   }
 
   /** Compile one graphite tag expression (`tag=value`, `tag!=value`,
@@ -630,10 +631,10 @@ object RenderTarget {
     * `aggregate`, `aggregateWithWildcards`, `aggregateLine`,
     * `groupByNode(s)` and `groupByTags` reach it through
     * [[summarizeAggOrdered]]. `last`/`current` pick the value at the
-    * latest known bucket (the surrounding plan always has `bucket_ts` in
-    * scope).
+    * latest known bucket by the caller's ordering `lastBy`:
+    * [[lastInSeries]] or [[lastAcrossSeries]].
     */
-  private def summarizeAgg(func: String, c: Column): Column = func match {
+  private def summarizeAgg(func: String, c: Column, lastBy: Column): Column = func match {
     case "sum" | "total" => sum(c)
     case "avg" | "average" => avg(c)
     case "max" => max(c)
@@ -643,16 +644,23 @@ object RenderTarget {
     case "range" | "rangeOf" => max(c) - min(c)
     case "stddev" => stddev_pop(c)
     case "last" | "current" =>
-      // composite ordering key: in time-grouped contexts (summarize,
-      // movingWindow, per-series stats) the metric is constant and
-      // bucket_ts decides; in per-bucket combines (aggregate,
-      // groupByNode/Tags) bucket_ts is constant and the METRIC breaks
-      // the tie — graphite's safeLast over list (= name) order. A bare
-      // bucket_ts key would leave cross-series ties to encounter order
-      // and break hash determinism.
-      max_by(c, when(c.isNotNull, struct(col("bucket_ts"), col("metric"))))
+      max_by(c, when(c.isNotNull, lastBy))
     case f => throw new IllegalArgumentException(s"unknown aggregation '$f'")
   }
+
+  /** `last`/`current` within one series (summarize, movingWindow,
+    * per-series statistics): the bucket alone decides, and the scalar
+    * key keeps the aggregate a hash aggregate.
+    */
+  private def lastInSeries: Column = col("bucket_ts")
+
+  /** `last`/`current` in a per-bucket combine (aggregate,
+    * aggregateWithWildcards, groupByNode(s), groupByTags): every member
+    * shares the bucket, so the METRIC breaks the tie — graphite's
+    * safeLast over list (= name) order; a bare bucket key would leave
+    * the pick to encounter order. The struct key plans a sort aggregate.
+    */
+  private def lastAcrossSeries: Column = struct(col("bucket_ts"), col("metric"))
 
   /** [[summarizeAgg]] for OUTPUT-bearing grouped contexts: the one
     * order-sensitive float case, `avg`, is pinned to the shared exact
@@ -672,11 +680,11 @@ object RenderTarget {
     * the sf0.1 sweep is conclusive; the fold wrapper also cannot take
     * `.over`).
     */
-  private def summarizeAggOrdered(func: String, c: Column): Column =
+  private def summarizeAggOrdered(func: String, c: Column, lastBy: Column): Column =
     func match {
       case "avg" | "average" =>
         Rollup.gridMean6(c)
-      case _ => summarizeAgg(func, c)
+      case _ => summarizeAgg(func, c, lastBy)
     }
 
   /** Shared counter-delta kernel for nonNegativeDerivative/perSecond:
@@ -951,30 +959,59 @@ object RenderTarget {
     // IDENTICAL, so Spark's exchange reuse executes the scan + partial
     // aggregate once per target, not once per leaf — a multi-glob
     // dashboard target no longer multiplies the scan (at 100 TB the
-    // scan IS the cost; the per-leaf work above the exchange is bounded
-    // by series × buckets). Leaves densify from it too ([[densify]]).
+    // scan IS the cost). Leaves densify from it too ([[densify]]).
+    //
+    // The scan and the map-side partial aggregate stay parallel. When
+    // Spark estimates the aggregate at no more than AQE's minimum
+    // partition size (`spark.sql.adaptive.coalescePartitions
+    // .minPartitionSize`, 1 MB by default), below which AQE coalesces its
+    // shuffle into one partition anyway, the final aggregate GATHERS into
+    // one partition. Every densify, window, per-series statistic and
+    // cross-series combine above it then plans with no further exchange:
+    // a render is the scan's shuffle-map job plus one result job. The
+    // frame is bounded by matched series × buckets (the wsp scan reports
+    // that bound as its row estimate). A wider frame keeps the exchanges
+    // and their parallelism: gathered, a 2000-series × 1380-bucket
+    // render ran 1.4–1.6× slower on 4 cores, even where the target
+    // reduces it to one series. Member unions follow the same choice
+    // ([[gathered]]); the generators are one partition either way
+    // ([[grid]]).
     val leafRx = leafGlobs(expr0).distinct.map(Fetch.globToRegex)
-    val sharedAgg = {
-      // tag-selected targets cannot pre-filter by glob (the tag
-      // predicates apply post-aggregation); a pure-generator target has
-      // no real globs either — scan unfiltered in those cases
-      val matchesAny =
-        if (leafRx.isEmpty || hasTagSelection(expr0)) lit(true)
-        else leafRx.map(RegexFind.find(col("metric"), _)).reduce(_ || _)
-      pts.filter(col("ts_s") >= extFromI && col("ts_s") < untilI && matchesAny)
+    val tagSel = tagSelections(expr0)
+    def tagSelect(exprs: Seq[String]): Column = exprs.map(tagPredicate).reduce(_ && _)
+    // only series some selector names reach the aggregate: the union of
+    // the glob regexes and the tag selections (a pure-generator target
+    // has neither and reads no series from it)
+    val selectors = leafRx.map(RegexFind.find(col("metric"), _)) ++ tagSel.map(tagSelect)
+    val aggregated =
+      pts.filter(col("ts_s") >= extFromI && col("ts_s") < untilI &&
+          selectors.reduceOption(_ || _).getOrElse(lit(true)))
         .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
         // the pinned grid mean (exact fixed-point sum + shared round6):
         // per-bucket raw counts grow with data density, and power-of-two
         // counts land native round on cross-engine decimal midpoints
         .agg(Rollup.mean6(col("value")).as("value"))
-    }
+    val gathers = selectors.isEmpty ||
+      aggregated.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    def gather(df: DataFrame): DataFrame = if (gathers) df.coalesce(1) else df
+    val sharedAgg = gather(aggregated)
+    // member frames side by side
+    def gathered(members: Seq[DataFrame]): DataFrame = gather(members.reduce(_ unionByName _))
+    // the buckets of [from, until) step `step`, one partition: a spine
+    // exploded over one row folds to an array held by reference, so a
+    // generator compiles no class at a new window (a `range` inlines
+    // its bounds)
+    def grid(from: Long, until: Long, step: Long): DataFrame =
+      spark.range(0, 1, 1, 1).select(explode(Buckets.spine(from, until, step)).as("bucket_ts"))
 
     // Per-leaf selection over [[sharedAgg]]. With two or more selectors
     // (glob leaves and seriesByTag selections both count) the predicate
     // is wrapped in [[graft.functions.OptimizerFence]], so it stays above
     // the aggregate and every leaf reuses one scan and one shuffle; an
     // unfenced predicate is pushed to the scan and each leaf scans again.
-    val selectorCount = leafRx.size + tagSelectionCount(expr0)
+    val selectorCount = leafRx.size + tagSel.size
     def fenced(pred: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       if (selectorCount < 2) pred
       else graft.functions.OptimizerFence.fence(pred)
@@ -1093,7 +1130,7 @@ object RenderTarget {
         val steps = evald.map(_._2).distinct
         require(steps.size == 1,
           s"$f: member series must share one step (got ${steps.mkString(", ")})")
-        val df = evald.map(_._1).reduce(_ unionByName _)
+        val df = gathered(evald.map(_._1))
         val v = f match {
           // sum of 6-decimal member values: 7th decimal is zero, never a
           // round-half midpoint — the unordered sum is safe as-is
@@ -1141,7 +1178,8 @@ object RenderTarget {
         val (df, step) = eval(c)
         (df.groupBy(nodeAt(split(col("metric"), "\\."), n).as("metric"),
             col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), step)
+          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
+            .as("value")), step)
       case Call("aliasByNode", Seq(c), args) =>
         // aliasByNode(seriesList, *nodes): ALL node indices join with
         // '.'; nodes use Python list semantics (-1 is the LAST dot-node)
@@ -1174,7 +1212,7 @@ object RenderTarget {
               .cast("long").as("bucket_ts")
           else (floor(col("bucket_ts") / iv) * iv).cast("long").as("bucket_ts")
         (df.groupBy(col("metric"), bucket)
-          .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), iv)
+          .agg(round(summarizeAggOrdered(func, col("value"), lastInSeries), 6).as("value")), iv)
       // ------------------------------------------ pointwise transforms:
       // None propagates through null arithmetic for free; each keeps the
       // child's grid and step, so they fuse into the child's projection
@@ -1279,7 +1317,7 @@ object RenderTarget {
         val tagged = evald.zipWithIndex.map { case ((df, _), i) =>
           df.withColumn("value", if (i == 0) col("value") else -col("value"))
         }
-        (tagged.reduce(_ unionByName _)
+        (gathered(tagged)
           .groupBy(col("bucket_ts")).agg(round(sum(col("value")), 6).as("value"))
           .select(lit("diffSeries").as("metric"), col("bucket_ts"), col("value")),
           steps.head)
@@ -1293,7 +1331,7 @@ object RenderTarget {
         val steps = evald.map(_._2).distinct
         require(steps.size == 1,
           s"multiplySeries: member series must share one step (got ${steps.mkString(", ")})")
-        val u = evald.map(_._1).reduce(_ unionByName _)
+        val u = gathered(evald.map(_._1))
         (strictProduct(u, Seq(col("bucket_ts")), lit("multiplySeries")),
           steps.head)
       // --------------------------------------- pointwise math tier:
@@ -1366,7 +1404,8 @@ object RenderTarget {
         // never selected, even when n exceeds the known series
         val n = countArg(f, args)
         val (df, step) = eval(c)
-        val cur = shownStats(df, step, summarizeAgg("current", col("value")).as("stat_v"))
+        val cur = shownStats(df, step,
+          summarizeAgg("current", col("value"), lastInSeries).as("stat_v"))
         keep(df, step, firstN(cur.filter(col("stat_v").isNotNull), n,
           highest = f == "highestCurrent"))
       case Call("timeStack", Seq(c), args) =>
@@ -1387,7 +1426,7 @@ object RenderTarget {
           df.withColumn("bucket_ts", col("bucket_ts") + i * delta)
             .withColumn("metric", concat(col("metric"), lit(s"@-$i")))
         }
-        (copies.reduce(_ unionByName _).filter(col("bucket_ts") < param(untilI)), step)
+        (gathered(copies).filter(col("bucket_ts") < param(untilI)), step)
       case Call("group", cs, _) =>
         // plain union of series lists, every member keeps its own name.
         // verticalLine markers are step-exempt (stepS has the same
@@ -1399,8 +1438,7 @@ object RenderTarget {
         }.distinct
         require(steps.size <= 1,
           s"group: member series must share one step (got ${steps.mkString(", ")})")
-        (evald.map(_._2._1).reduce(_ unionByName _),
-          steps.headOption.getOrElse(1L))
+        (gathered(evald.map(_._2._1)), steps.headOption.getOrElse(1L))
       case Call("groupByNodes", Seq(c), args) =>
         // groupByNode's multi-node form: key = the selected dot-nodes
         // re-joined, one aggregate per (key, bucket)
@@ -1411,7 +1449,8 @@ object RenderTarget {
         val parts = split(col("metric"), "\\.")
         val key = concat_ws(".", nodes.map(n => nodeAt(parts, n)): _*)
         (df.groupBy(key.as("metric"), col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), step)
+          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
+            .as("value")), step)
       case Call("weightedAverage", Seq(cv, cw), args) =>
         // ONE output series: Σ(value·weight)/Σ(weight) per bucket, the
         // value and weight series paired by the n-th dot-node of their
@@ -1467,7 +1506,8 @@ object RenderTarget {
         }
         val (df, step) = eval(c)
         keep(df, step,
-          shownStats(df, step, summarizeAgg(func, col("value")).as("stat_v")).filter(pass))
+          shownStats(df, step, summarizeAgg(func, col("value"), lastInSeries).as("stat_v"))
+            .filter(pass))
       case Call(f @ ("highest" | "lowest"), Seq(c), args) =>
         // the general top/bottom-n by a chosen statistic; highestMax,
         // lowestAverage, limit(sortBy…) and mostDeviant rewrite onto it
@@ -1476,7 +1516,7 @@ object RenderTarget {
         val func = args.lift(1).getOrElse("average")
         val (df, step) = eval(c)
         keep(df, step, firstN(
-          shownStats(df, step, summarizeAgg(func, col("value")).as("stat_v")),
+          shownStats(df, step, summarizeAgg(func, col("value"), lastInSeries).as("stat_v")),
           n, highest = f == "highest"))
       case Call("removeEmptySeries", Seq(c), args) =>
         // drop series with NO known value in the displayed window; the
@@ -1492,15 +1532,10 @@ object RenderTarget {
         // tag-DB selection over `name;tag=value` metrics: every quoted
         // argument is one tag expression, ALL must hold. Same dense
         // frame shape as a glob Leaf, selected off the shared aggregate
-        // by the compiled tag predicates instead of a regex.
-        val exprs = cs.collect { case Leaf(g) => unquote(g) } ++ args
-        require(exprs.nonEmpty && cs.forall(_.isInstanceOf[Leaf]),
-          "seriesByTag takes quoted tag expressions, e.g. " +
-            "seriesByTag('name=cpu', 'dc=~us-.*')")
-        // fenced like leafSelect: an unfenced deterministic predicate
-        // would push below the shared aggregate and fork the scan
-        (densify(sharedAgg.filter(fenced(exprs.map(tagPredicate).reduce(_ && _)))),
-          spp.toLong)
+        // by the compiled tag predicates instead of a regex. Fenced like
+        // leafSelect: an unfenced deterministic predicate would push
+        // below the shared aggregate and fork the scan
+        (densify(sharedAgg.filter(fenced(tagSelect(tagExprs(cs, args))))), spp.toLong)
       case Call("groupByTags", Seq(c), args) =>
         // re-aggregate keyed by (name, selected tags) — the tagged twin
         // of groupByNodes; output names keep graphite's
@@ -1513,7 +1548,8 @@ object RenderTarget {
           substring_index(col("metric"), ";", 1) +:
             tags.flatMap(t => Seq(lit(s";$t="), tagValue(t))): _*)
         (df.groupBy(key.as("metric"), col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), step)
+          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
+            .as("value")), step)
       case Call("aliasByTags", Seq(c), args) =>
         require(args.nonEmpty, "aliasByTags needs at least one tag")
         val (df, step) = eval(c)
@@ -1541,7 +1577,7 @@ object RenderTarget {
         // grid (the quoted series name arrives as a quoted Leaf —
         // the grammar's series slot always parses as an expression)
         val _ = f
-        (spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
+        (grid(extFromI, untilI, spp.toLong)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             col("bucket_ts").cast("double").as("value")), spp.toLong)
       case Call("sinFunction" | "sin", Seq(Leaf(name)), args) =>
@@ -1553,7 +1589,7 @@ object RenderTarget {
         // equal-step combine pairs nothing and sums interleave on two
         // offset grids
         val genFrom = -Math.floorDiv(-extFromI, stepArg) * stepArg
-        (spark.range(genFrom, untilI, stepArg).toDF("bucket_ts")
+        (grid(genFrom, untilI, stepArg)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             round(sin(col("bucket_ts")) * amp, 6).as("value")), stepArg)
       case Call("randomWalk" | "randomWalkFunction", Seq(Leaf(name)), args) =>
@@ -1572,12 +1608,13 @@ object RenderTarget {
         // epoch-aligned spine, like sinFunction above (no-op when
         // extFromI is already a step multiple — the oracle keys' case)
         val genFrom = -Math.floorDiv(-extFromI, stepArg) * stepArg
-        val i = expr(s"(bucket_ts - $genFrom) div $stepArg")
+        // exact: bucket_ts - genFrom is a step multiple below 2^53
+        val i = ((col("bucket_ts") - param(genFrom)) / stepArg).cast("long")
         val h1 = (lit(48271L) * ((lit(seed) + i) % m)) % m
         val h2 = (lit(48271L) * h1) % m
         val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
           .rowsBetween(Window.unboundedPreceding, -1)
-        (spark.range(genFrom, untilI, stepArg).toDF("bucket_ts")
+        (grid(genFrom, untilI, stepArg)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             (h2.cast("double") / m - 0.5).as("inc"))
           .select(col("metric"), col("bucket_ts"),
@@ -1602,11 +1639,11 @@ object RenderTarget {
         val tags = if (named.contains("*")) Seq.empty[String] else named
         val name = s"events(${tags.mkString(",")})"
         val sel = if (tags.isEmpty) lit(true) else col("metric").isin(tags: _*)
-        val cnt = pts
+        val cnt = gather(pts
           .filter(sel && col("ts_s") >= extFromI && col("ts_s") < untilI)
           .groupBy(Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
-          .agg(count(lit(1)).cast("double").as("cnt"))
-        (spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
+          .agg(count(lit(1)).cast("double").as("cnt")))
+        (grid(extFromI, untilI, spp.toLong)
           .join(cnt, Seq("bucket_ts"), "left")
           .select(lit(name).as("metric"), col("bucket_ts"),
             coalesce(col("cnt"), lit(0.0)).as("value")), spp.toLong)
@@ -1843,7 +1880,7 @@ object RenderTarget {
         // (graphite draws 3 points; a full grid keeps the frame shape
         // uniform so combines over it behave)
         val k = v.toDouble
-        (spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
+        (grid(extFromI, untilI, spp.toLong)
           .select(lit(v).as("metric"), col("bucket_ts"),
             lit(k).as("value")), spp.toLong)
       case Call("verticalLine", Seq(Leaf(ts)), args) =>
@@ -1866,7 +1903,7 @@ object RenderTarget {
           s"verticalLine time $tsV is outside the rendered " +
             s"window [$fromI, $untilS]")
         val label = args.headOption.getOrElse(unquote(ts))
-        (spark.range(tsV, tsV + 2, 1L).toDF("bucket_ts")
+        (grid(tsV, tsV + 2, 1L)
           .select(lit(label).as("metric"), col("bucket_ts"),
             lit(1.0).as("value")), 1L)
       case Call("compressPeriodicGaps", Seq(c), _) =>
@@ -1923,7 +1960,7 @@ object RenderTarget {
           .select(col("metric"), col("bucket_ts"), col("value"))
         // the per-series step may now vary; the reported step stays the
         // child's (graphite's own return mixes steps the same way)
-        (compressed.unionByName(tooSparse), step)
+        (gathered(Seq(compressed, tooSparse)), step)
       case Call("aliasQuery", Seq(c), args) =>
         // graphite 1.1's legend-by-lookup: for each member series,
         // regex-rewrite its name into a NEW query, evaluate that query
@@ -2021,14 +2058,15 @@ object RenderTarget {
             }
           case _ if xff > 0.0 =>
             (df.groupBy(col("bucket_ts"))
-              .agg(round(summarizeAggOrdered(func, col("value")), 6).as("cv"),
+              .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6).as("cv"),
                 count(col("value")).as("kn"), count(lit(1)).as("tot"))
               .select(lit(s"${func}Series").as("metric"), col("bucket_ts"),
                 when(col("kn").cast("double") >= col("tot") * xff, col("cv"))
                   .as("value")), step)
           case _ =>
             (df.groupBy(col("bucket_ts"))
-              .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value"))
+              .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
+                .as("value"))
               .select(lit(s"${func}Series").as("metric"), col("bucket_ts"),
                 col("value")), step)
         }
@@ -2059,7 +2097,8 @@ object RenderTarget {
           (strictProduct(df, Seq(key, col("bucket_ts")), col("metric")), step)
         else
           (df.groupBy(key, col("bucket_ts"))
-            .agg(round(summarizeAggOrdered(func, col("value")), 6).as("value")), step)
+            .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
+              .as("value")), step)
       case Call("movingWindow", Seq(c), args) =>
         // the general trailing window: any named aggregator over the
         // last n points — the MovingFuncs family's umbrella (same
@@ -2081,7 +2120,7 @@ object RenderTarget {
           case "count" => count(col("value")).over(w).cast("double")
           case "range" | "rangeOf" =>
             max(col("value")).over(w) - min(col("value")).over(w)
-          case _ => summarizeAgg(func, col("value")).over(w)
+          case _ => summarizeAgg(func, col("value"), lastInSeries).over(w)
         }
         (df.withColumn("value", round(v, 6)), step)
       case Call("unique", cs, _) if cs.nonEmpty =>
@@ -2093,7 +2132,7 @@ object RenderTarget {
           s"unique: member series must share one step (got ${steps.mkString(", ")})")
         val tagged = evald.map(_._1).zipWithIndex.map { case (df, i) =>
           df.withColumn("src", lit(i)) }
-        val u = tagged.reduce(_ unionByName _)
+        val u = gathered(tagged)
         val firstSrc = u.groupBy(col("metric")).agg(min(col("src")).as("src"))
         (u.join(broadcast(firstSrc), Seq("metric", "src"), "left_semi")
           .select(col("metric"), col("bucket_ts"), col("value")), steps.head)
@@ -2207,7 +2246,7 @@ object RenderTarget {
         val func = args.headOption.getOrElse("avg")
         val (df, step) = eval(c)
         (withShownStats(df, step,
-            round(summarizeAggOrdered(func, col("value")), 6).as("line_v"))
+            round(summarizeAggOrdered(func, col("value"), lastInSeries), 6).as("line_v"))
           .select(col("metric"), col("bucket_ts"),
             col("line_v").as("value")), step)
       case Call("threshold", Seq(Leaf(v)), args) =>
@@ -2215,7 +2254,7 @@ object RenderTarget {
         // line real dashboards overlay
         val name = args.headOption.map(unquote).filter(_.nonEmpty).getOrElse(v)
         val k = v.toDouble
-        (spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
+        (grid(extFromI, untilI, spp.toLong)
           .select(lit(name).as("metric"), col("bucket_ts"),
             lit(k).as("value")), spp.toLong)
       case Call("fallbackSeries", Seq(c, fb), _) =>
@@ -2230,7 +2269,7 @@ object RenderTarget {
         val fallback = fdf.withColumn("present", lit(1))
           .join(broadcast(marker), Seq("present"), "left_anti")
           .drop("present")
-        (df.unionByName(fallback), step)
+        (gathered(Seq(df, fallback)), step)
       case Call(f @ "removeBetweenPercentile", Seq(c), args) =>
         // keep series that ESCAPE the cross-series per-bucket n-th
         // percentile band at least once in the displayed window
@@ -2337,7 +2376,7 @@ object RenderTarget {
             newName.fold(sub)(n =>
               sub.withColumn("metric", lit(n.replace("%", p))))
           }
-          (evald.reduce(_ unionByName _), step)
+          (gathered(evald), step)
         }
       case Call(f @ "useSeriesAbove", Seq(c), args) =>
         // series whose displayed-window MAX clears the threshold have
@@ -2373,7 +2412,7 @@ object RenderTarget {
         val steps = evald.map(_._2).distinct
         require(steps.size == 1,
           s"powSeries: member series must share one step (got ${steps.mkString(", ")})")
-        val u = evald.map(_._1).reduce(_ unionByName _)
+        val u = gathered(evald.map(_._1))
         (u.groupBy(col("bucket_ts"))
           .agg(sort_array(collect_list(struct(col("metric").as("m"),
             col("value").as("v")))).as("vs"),
@@ -2411,7 +2450,8 @@ object RenderTarget {
     // anchored at `lo`, graphite chunks from the range start — using
     // the target's consolidateBy function (default average) under its
     // xFilesFactor gate. Pure re-aggregation of the request-bounded
-    // frame: no new scan, no shuffle beyond the final group-by.
+    // frame: no new scan, no shuffle beyond the final group-by (none
+    // where the frame is gathered).
     val buckets = (untilI - lo + finalStep - 1) / finalStep
     val consolidated =
       if (maxDataPoints <= 0 || buckets <= maxDataPoints) trimmed
@@ -2430,8 +2470,10 @@ object RenderTarget {
           .select(col("metric"), col("bucket_ts"),
             when(col("known") >= col("total") * xff, col("cv")).as("value"))
       }
-    // the request-bounded response body: one sorted partition, no sampling job
-    consolidated.repartition(1).sortWithinPartitions("metric", "bucket_ts")
+    // the request-bounded response body: one sorted partition (without
+    // a shuffle where the frame is gathered), no sampling job
+    (if (gathers) consolidated.coalesce(1) else consolidated.repartition(1))
+      .sortWithinPartitions("metric", "bucket_ts")
   }
 
   /** graphite's PIE mode — the render API's second output form

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -59,7 +60,16 @@ import org.apache.spark.util.SerializableConfiguration
   *  - `spp`/`archive` predicates (`EqualTo`/`In`) push into the decoder
   *    as an archive choice: the other archives' rings are skipped, never
   *    decoded (a render at one resolution reads one ring per file);
-  *  - column pruning is honored (a `count(*)` decodes no strings).
+  *  - column pruning is honored (a `count(*)` decodes no strings);
+  *  - the Hadoop configuration reaches tasks as one broadcast per scan
+  *    ([[WspTable.taskConf]]), never inside the reader factory: the
+  *    factory rides in the scan node, which every task of every stage
+  *    above the scan deserializes, so a ~100 KB conf there is paid per
+  *    task, not per query;
+  *  - the scan reports a row bound from its listing (selected files ×
+  *    slots of the pushed range): Spark's size estimate, which a render
+  *    reads to decide whether its aggregate fits one partition. A batch
+  *    scan lists once for the estimate and its partitions.
   *
   * Pushed `metric`/`ts_s`/`spp`/`archive` filters are absorbed exactly
   * (not re-evaluated above the scan); everything else stays in Catalyst.
@@ -98,6 +108,13 @@ object WspTable {
     require(roots.nonEmpty, "wsp source requires a path: spark.read.format(\"wsp\").load(dir)")
     roots
   }
+
+  /** The session's Hadoop configuration as tasks read it: one broadcast
+    * per query, so no task closure or factory carries a `Configuration`.
+    * The wsp scan, writers and import all ship it this way.
+    */
+  private[graft] def taskConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   /** Metric name for a file inside a root: the relative path with
     * separators → dots and `.wsp` stripped (graphite's tree↔name rule);
@@ -206,8 +223,7 @@ final class WspScanBuilder(
 
   override def build(): Scan = {
     val spark = SparkSession.active
-    new WspScan(roots, metrics, slots, required,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+    new WspScan(roots, metrics, slots, required, WspTable.taskConf(spark),
       spark.sessionState.conf.filesMaxPartitionBytes, metricGlob)
   }
 }
@@ -257,9 +273,11 @@ final class WspScan(
     metrics: Option[Set[String]],
     slots: WspSlots,
     required: StructType,
-    conf: SerializableConfiguration,
+    // one per scan: the driver-side listing reads it, the batch and
+    // streaming reader factories ship it
+    conf: Broadcast[SerializableConfiguration],
     maxPartitionBytes: Long,
-    metricGlob: Option[String] = None) extends Scan with Batch {
+    metricGlob: Option[String] = None) extends Scan with Batch with SupportsReportStatistics {
 
   // compiled once, applied driver-side during the listing walk
   private lazy val globRx: Option[java.util.regex.Pattern] =
@@ -310,7 +328,7 @@ final class WspScan(
     var dirs, seen = 0L
     val files = roots.flatMap { r =>
       val root = new org.apache.hadoop.fs.Path(r)
-      val fs = root.getFileSystem(conf.value)
+      val fs = root.getFileSystem(conf.value.value)
       val qualified = fs.makeQualified(root)
       val out = Seq.newBuilder[((String, Long, String), Long)]
       def emit(path: org.apache.hadoop.fs.Path, len: Long, mtime: Long): Unit = {
@@ -382,7 +400,26 @@ final class WspScan(
     * gets its own task.
     */
   override def planInputPartitions(): Array[InputPartition] =
-    packFiles(listFiles())
+    packFiles(batchFiles)
+
+  // the batch listing, once per scan: statistics and partition planning
+  // share it (a streaming read lists per micro-batch instead)
+  private lazy val batchFiles = listFiles()
+
+  /** A bound on the rows the scan returns, from the listing: no file
+    * yields more points than it holds (12 bytes each), nor more than the
+    * pushed `ts_s` range has slots at each decoded resolution.
+    */
+  override def estimateStatistics(): Statistics = {
+    val inRange = slots.spps.filter(_ => slots.tsLo > Long.MinValue && slots.tsHi < Long.MaxValue)
+      .fold(Long.MaxValue)(_.toSeq.map(spp => (slots.tsHi - slots.tsLo) / spp + 1).sum)
+    val rows = batchFiles.map(f => math.min(f._2 / 12, inRange)).sum
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(rows * (8 + required.defaultSize))
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
+    }
+  }
 
   private[sources] def packFiles(selected: Seq[(String, Long, String)]): Array[InputPartition] = {
     val files = selected.sortBy(-_._2)
@@ -498,11 +535,11 @@ final class WspMicroBatchStream(scan: WspScan)
 final class WspReaderFactory(
     required: StructType,
     slots: WspSlots,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     private[sources] val retries: Int = 0) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WspPartitionReader(
-      partition.asInstanceOf[WspInputPartition], required, slots, conf, retries)
+      partition.asInstanceOf[WspInputPartition], required, slots, conf.value.value, retries)
 
   // the scan is COLUMNAR: ring slots decode straight into column
   // vectors, so downstream whole-stage codegen consumes vectorized
@@ -513,7 +550,7 @@ final class WspReaderFactory(
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new WspColumnarReader(
-      partition.asInstanceOf[WspInputPartition], required, slots, conf, retries)
+      partition.asInstanceOf[WspInputPartition], required, slots, conf.value.value, retries)
 }
 
 private[sources] object WspRead {
@@ -564,7 +601,7 @@ private[sources] object WspRead {
   def openFile(
       file: (String, Long, String),
       slots: WspSlots,
-      conf: SerializableConfiguration,
+      conf: org.apache.hadoop.conf.Configuration,
       retries: Int): (String, Iterator[WspPoint]) = {
     val (path, len, metric) = file
     // the format's u32 offsets bound a .wsp at 4 GB; a JVM byte array at
@@ -573,7 +610,7 @@ private[sources] object WspRead {
     // practice, but the failure mode should name itself)
     require(len <= Int.MaxValue, s"$path: $len bytes exceeds the 2 GB single-file limit")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     val bytes = readWithRetry(fs, p, len.toInt, path, retries)
     (metric, WspCodec.decodePoints(bytes, path, slots.decodes)
       .filter(pt => pt.tsS >= slots.tsLo && pt.tsS <= slots.tsHi))
@@ -589,7 +626,7 @@ final class WspColumnarReader(
     partition: WspInputPartition,
     required: StructType,
     slots: WspSlots,
-    conf: SerializableConfiguration,
+    conf: org.apache.hadoop.conf.Configuration,
     retries: Int = 0)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -664,7 +701,7 @@ final class WspPartitionReader(
     partition: WspInputPartition,
     required: StructType,
     slots: WspSlots,
-    conf: SerializableConfiguration,
+    conf: org.apache.hadoop.conf.Configuration,
     retries: Int = 0) extends PartitionReader[InternalRow] {
 
   private val files = partition.files.iterator

@@ -364,8 +364,7 @@ object WspTools {
     // rule added there must also govern which files get patched
     val all = graft.WhisperTable.wspWalk(spark, treeDir)._2
       .map(st => (st.getPath.toString, st.getLen)).toSeq
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = WspTable.taskConf(spark)
     val methodId = method.map(_.id)
     import spark.implicits._
     val manifest = spark.sparkContext
@@ -373,7 +372,7 @@ object WspTools {
       .mapPartitions { paths =>
         paths.map { case (p, len) =>
           val path = new org.apache.hadoop.fs.Path(p)
-          val pfs = path.getFileSystem(conf.value)
+          val pfs = path.getFileSystem(conf.value.value)
           require(len <= Int.MaxValue,
             s"$p: $len bytes exceeds the 2 GB single-file limit")
           val image = new Array[Byte](len.toInt)
@@ -395,7 +394,7 @@ object WspTools {
             xff.foreach(x => buf.putFloat(8, x.toFloat))
             val tmp = new org.apache.hadoop.fs.Path(path.getParent,
               s".${path.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-            WspWrite.publish(pfs, conf.value, tmp, path, image)
+            WspWrite.publish(pfs, conf.value.value, tmp, path, image)
           }
           (p, h.aggregationType, h.xFilesFactor.toDouble, !already)
         }

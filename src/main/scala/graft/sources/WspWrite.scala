@@ -3,7 +3,6 @@ package graft.sources
 import graft.model.WhisperSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Export a points DataFrame as a tree of `.wsp` files — one file per
   * metric, whisper's file-per-series layout (reference: whisper.go →
@@ -57,7 +56,7 @@ object WspWrite {
       mergeExisting: Boolean): DataFrame = {
     val s = points.sparkSession
     import s.implicits._
-    val conf = new SerializableConfiguration(s.sessionState.newHadoopConf())
+    val conf = WspTable.taskConf(s)
     val manifest = points
       .select(col("metric").cast("string"), col("archive").cast("int"),
         col("bucket_ts").cast("long"), col("value").cast("double"))
@@ -66,7 +65,7 @@ object WspWrite {
       .mapGroups { (metric, rows) =>
         val acc = new RingAccumulator(schema)
         rows.foreach { case (_, a, ts, v) => acc.add(metric, a, ts, v) }
-        flushMetric(metric, acc, outDir, schema, mergeExisting, conf.value)
+        flushMetric(metric, acc, outDir, schema, mergeExisting, conf.value.value)
       }
       .toDF("metric", "n_points", "bytes")
     manifest.localCheckpoint(true) // run the write NOW, exactly once

@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 write path for `.wsp` trees — the DSv2 twin of
@@ -98,8 +99,7 @@ final class WspWrite2(
 
   private def factory(): WspWriterFactory = {
     val session = org.apache.spark.sql.SparkSession.active
-    new WspWriterFactory(outDir, schema, inputSchema, mergeExisting,
-      new SerializableConfiguration(session.sessionState.newHadoopConf()))
+    new WspWriterFactory(outDir, schema, inputSchema, mergeExisting, WspTable.taskConf(session))
   }
 
   override def toBatch: BatchWrite = new BatchWrite {
@@ -139,17 +139,17 @@ final class WspWriterFactory(
     schema: WhisperSchema,
     inputSchema: StructType,
     mergeExisting: Boolean,
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WspBatchWriter(outDir, schema, inputSchema, mergeExisting, conf)
+    new WspBatchWriter(outDir, schema, inputSchema, mergeExisting, conf.value.value)
 
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     // every epoch after the first MUST merge — a fresh micro-batch
     // overwriting the tree would drop all prior epochs' points
-    new WspBatchWriter(outDir, schema, inputSchema, mergeExisting = true, conf)
+    new WspBatchWriter(outDir, schema, inputSchema, mergeExisting = true, conf.value.value)
 }
 
 object WspBatchWriter {
@@ -192,7 +192,7 @@ final class WspBatchWriter(
     schema: WhisperSchema,
     inputSchema: StructType,
     mergeExisting: Boolean,
-    conf: SerializableConfiguration) extends DataWriter[InternalRow] {
+    conf: org.apache.hadoop.conf.Configuration) extends DataWriter[InternalRow] {
 
   private val iMetric = inputSchema.fieldIndex("metric")
   private val iArchive = inputSchema.fieldIndex("archive")
@@ -250,7 +250,7 @@ final class WspBatchWriter(
 
   private def flushCurrent(): Unit = if (curMetric != null) {
     val merge = mergeExisting || flushed.contains(curMetric)
-    WspWrite.flushMetric(curMetric, curAcc, outDir, schema, merge, conf.value)
+    WspWrite.flushMetric(curMetric, curAcc, outDir, schema, merge, conf)
     if (flushed.add(curMetric)) metricsOut += 1
     pointsOut += curAcc.n
     curMetric = null

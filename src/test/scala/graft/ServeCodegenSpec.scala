@@ -97,4 +97,15 @@ class ServeCodegenSpec extends AnyFunSuite {
       assert(renderCompiles(target, cap) == 0)
     }
   }
+
+  // a generator beside the glob: its spine is an exploded array held by
+  // reference, not a `range` whose bounds are inlined
+  for (target <- Seq[String => String](
+      g => s"sumSeries($g, constantLine(1))",
+      g => s"group($g, threshold(5))")) {
+    test(s"the render ${target("<host>.*")} over the wsp source at a new window and host " +
+        "compiles no class") {
+      assert(renderCompiles(target) == 0)
+    }
+  }
 }

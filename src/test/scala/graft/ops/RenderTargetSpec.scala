@@ -23,6 +23,17 @@ class RenderTargetSpec extends AnyFunSuite {
     rows.toDF("metric", "ts_s", "value")
   }
 
+  // shuffle exchanges in an executed plan, through AQE's query stages
+  private def shuffles(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    plan match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => 1 + shuffles(e.child)
+      case o => (o.children ++ o.subqueries).map(shuffles).sum
+    }
+  }
+
   test("parser: nesting, quoted args, glob with braces and classes") {
     assert(RenderTarget.parse("servers.*.cpu") == Leaf("servers.*.cpu"))
     assert(RenderTarget.parse("perSecond(m.a)") == Call("perSecond", Leaf("m.a"), Nil))
@@ -285,6 +296,43 @@ class RenderTargetSpec extends AnyFunSuite {
     assert(xff.toSeq == Seq((60L, None), (180L, None)))
   }
 
+  test("members, a divisor and a generator render on the gathered aggregate") {
+    // targets whose members union or join: the rows are graphite's, and
+    // the only shuffle is the shared aggregate's (reused by every leaf)
+    val p = pts(("a.x", 65L, 1.0), ("a.x", 125L, 2.0), ("a.y", 65L, 3.0),
+      ("b.x", 65L, 4.0), ("b.x", 125L, 8.0))
+    for ((target, expect) <- Seq(
+        "sumSeries(a.*, b.*)" ->
+          Seq(("sumSeries", 60L, Some(8.0)), ("sumSeries", 120L, Some(10.0))),
+        "divideSeries(a.*, sumSeries(b.*))" ->
+          Seq(("a.x", 60L, Some(0.25)), ("a.x", 120L, Some(0.25)),
+            ("a.y", 60L, Some(0.75)), ("a.y", 120L, None)),
+        "sumSeries(a.*, constantLine(1))" ->
+          Seq(("sumSeries", 60L, Some(5.0)), ("sumSeries", 120L, Some(3.0))))) {
+      val df = RenderTarget.evaluate(spark, p, target, 0L, 120L, 60)
+      assert(df.collect().map(r => (r.getString(0), r.getLong(1), Option(r.get(2))))
+        .toSeq == expect, target)
+      assert(shuffles(df.queryExecution.executedPlan) == 1,
+        s"$target:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("an aggregate estimated above one partition keeps its exchanges") {
+    val p = pts(("a.x", 65L, 1.0), ("a.x", 125L, 2.0), ("a.y", 65L, 3.0),
+      ("b.x", 65L, 4.0), ("b.x", 125L, 8.0))
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val prior = spark.conf.get(key)
+    for (target <- Seq("sumSeries(a.*, b.*)", "movingAverage(a.*, 1)")) {
+      def render() = RenderTarget.evaluate(spark, p, target, 0L, 120L, 60)
+      val small = render()
+      spark.conf.set(key, "1")
+      val wide = try render() finally spark.conf.set(key, prior)
+      assert(wide.collect().toSeq == small.collect().toSeq, target)
+      assert(shuffles(wide.queryExecution.executedPlan) >
+        shuffles(small.queryExecution.executedPlan), target)
+    }
+  }
+
   test("diffSeries None-as-0; multiplySeries strict; range/stddev combines") {
     val p = pts(("m.a", 65L, 5.0), ("m.b", 65L, 3.0), ("m.a", 125L, 2.0))
     def vals(t: String) = RenderTarget.evaluate(spark, p, t, 0L, 120L, 60)
@@ -501,6 +549,42 @@ class RenderTargetSpec extends AnyFunSuite {
       "aliasByTags(seriesByTag('name=mem'), 'host', 'dc')", 0L, 60L, 60)
       .collect().map(_.getString(0)).toSeq
     assert(aliased == Seq("a.us-east"))
+  }
+
+  test("the gathered aggregate holds only series a tag selection or glob names") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val p = pts(("err;dc=a", 65L, 2.0), ("err;dc=a", 125L, 3.0),
+      ("req;dc=a", 65L, 4.0), ("req;dc=a", 125L, 6.0),
+      ("other;dc=a", 65L, 5.0), ("other;dc=a", 125L, 5.0),
+      ("app.x", 65L, 1.0), ("noise.y", 65L, 7.0))
+    def readsShuffle(q: SparkPlan): Boolean = q match {
+      case i: org.apache.spark.sql.execution.InputAdapter => readsShuffle(i.child)
+      case r: AQEShuffleReadExec => readsShuffle(r.child)
+      case _: ShuffleQueryStageExec => true
+      case _ => false
+    }
+    // output rows of each final aggregate: the one over the shuffle
+    def gathered(q: SparkPlan): Seq[Long] = q match {
+      case a: AdaptiveSparkPlanExec => gathered(a.executedPlan)
+      case s: QueryStageExec => gathered(s.plan)
+      case a: BaseAggregateExec if readsShuffle(a.child) =>
+        Seq(a.metrics("numOutputRows").value)
+      case o => (o.children ++ o.subqueries).flatMap(gathered)
+    }
+    for ((target, expect, rows) <- Seq(
+        ("divideSeries(seriesByTag('name=err'), sumSeries(seriesByTag('name=req')))",
+          Seq((60L, Some(0.5)), (120L, Some(0.5))), 4L),
+        ("sumSeries(seriesByTag('name=err'), app.*)",
+          Seq((60L, Some(3.0)), (120L, Some(3.0))), 3L))) {
+      val df = RenderTarget.evaluate(spark, p, target, 0L, 120L, 60)
+      assert(df.collect().map(r => (r.getLong(1), Option(r.get(2)))).toSeq == expect, target)
+      val got = gathered(df.queryExecution.executedPlan)
+      assert(got.nonEmpty && got.forall(_ == rows),
+        s"$target: final aggregates output $got rows, want $rows each:\n" +
+          df.queryExecution.executedPlan)
+    }
   }
 
   test("filterSeries/highest/lowest/removeEmptySeries selection forms") {

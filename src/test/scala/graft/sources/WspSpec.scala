@@ -1177,6 +1177,62 @@ class WspSpec extends AnyFunSuite {
     assert(n == 1, s"$n wsp scans in the final plan:\n${q.queryExecution.executedPlan}")
   }
 
+  test("a sumSeries render over a wsp glob runs one scan in at most two jobs") {
+    import graft.ops.RenderTarget
+    val (dir, _) = renderTree()
+    def q = RenderTarget.evaluate(spark, renderPoints(dir), "sumSeries(host.*)",
+      T0 + 600, T0 + 3600, 60)
+    q.collect() // warm: first-use set-up jobs are not the render's
+    val df = q
+    // the scan's shuffle-map job and one result job: the final
+    // aggregate gathers into one partition, so nothing above it shuffles
+    val jobs = org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext)(df.collect())
+    assert(jobs <= 2, s"render ran $jobs jobs:\n${df.queryExecution.executedPlan}")
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(s.plan)
+      case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => 1
+      case o => (o.children ++ o.subqueries).map(scans).sum
+    }
+    assert(scans(df.queryExecution.executedPlan) == 1)
+  }
+
+  test("a scan estimates its rows as selected files × slots of the pushed range") {
+    import org.apache.spark.sql.functions.col
+    val (dir, _) = renderTree()
+    val df = renderPoints(dir).filter(col("ts_s") >= T0 && col("ts_s") < T0 + 3600)
+    val est = df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics()
+    // host.a, host.b, host.c × 60 one-minute slots: a bound on the rows read
+    assert(est.numRows().getAsLong == 3 * 60)
+    assert(df.count() == 75)
+  }
+
+  test("the scan's reader factory ships without the Hadoop configuration") {
+    val (dir, fine) = renderTree()
+    val scan = new WspScanBuilder(Seq(dir)).build().asInstanceOf[WspScan]
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(scan.createReaderFactory())
+    out.close()
+    // every task above the scan deserializes it: an embedded conf is ~100 KiB
+    assert(bytes.size < 16 * 1024, s"reader factory serializes to ${bytes.size} bytes")
+    // and the shipped copy still reads, through the broadcast conf
+    val shipped = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+      .asInstanceOf[org.apache.spark.sql.connector.read.PartitionReaderFactory]
+    val got = scan.toBatch.planInputPartitions().toSeq.flatMap { p =>
+      val r = shipped.createReader(p)
+      val rows = Iterator.continually(r).takeWhile(_.next()).map(_.get())
+        .filter(_.getInt(1) == 0).map(row => (row.getUTF8String(0).toString, row.getLong(4)))
+        .toVector
+      r.close(); rows
+    }
+    assert(got.toSet == fine.keySet)
+  }
+
   test("render densify: partial members, history window, empty windows") {
     import graft.ops.{Buckets, RenderTarget}
     val (dir, fine) = renderTree()
