@@ -357,10 +357,9 @@ final class WhisperTable private (
     }
   }
 
-  /** Shared fetch prologue — the reference's fetch endpoint semantics
-    * stated ONCE for fetch/fetchMany/fetchGlob/checkEmpty (SURVEY §4.4
-    * trap 1: the range require, the F1 clamp, archive selection and the
-    * +step interval pair must never diverge between the four surfaces).
+  /** Shared fetch prologue of fetch/fetchMany/fetchGlob/checkEmpty: the
+    * range require, the F1 clamp, archive selection and the interval
+    * pair of the clamped range ([[Fetch.fetchWindow]]).
     */
   private def fetchWindow(
       fromS: Long, untilS: Long, nowS: Long): (Retention, Long, Long) = {
@@ -368,48 +367,27 @@ final class WhisperTable private (
     val from = math.max(fromS, nowS - maxRetention) // F1 clamp
     val until = math.min(untilS, nowS)
     val archive = Fetch.selectArchive(schema, nowS, from)
-    val spp = archive.secondsPerPoint
-    val fromI = Buckets.fetchInterval(from, spp)
-    val untilI0 = Buckets.fetchInterval(until, spp)
-    // whisper fetch: "if fromInterval == untilInterval, untilInterval
-    // += step — always include the next point" — a range inside one
-    // step bucket returns THAT bucket, never an empty series. The bump
-    // applies ONLY when the clamps left a forward range: a fully-expired
-    // or fully-future request clamps to until < from (go-whisper returns
-    // nil there), and bumping on the aligned intervals' accidental
-    // equality would return a bucket OUTSIDE the requested range — the
-    // empty spine must stand.
-    val untilI =
-      if (untilI0 == fromI && until >= from) untilI0 + spp else untilI0
+    val (fromI, untilI) = Fetch.fetchWindow(from, until, archive.secondsPerPoint)
     (archive, fromI, untilI)
   }
 
-  /** The one dense-fetch shape behind fetch/fetchMany: a one-partition
-    * spine (every bucket × every requested metric) left-joined to a
-    * broadcast of the partition-pruned, range- and metric-filtered level
-    * scan. Every scan row is a spine key, so the broadcast is bounded by
-    * the output; the single spine partition already satisfies the global
-    * order, so no exchange or sampling job runs. The spine explodes array
-    * literals over one row, which generated code holds by reference.
+  /** The one dense-fetch shape behind fetch/fetchMany: the requested
+    * series densified from the partition-pruned level scan
+    * ([[Buckets.densifyNamed]]). Its grid is one partition, which already
+    * satisfies the global order, so no exchange or sampling job runs.
     */
   private def denseFetch(
       fromS: Long, untilS: Long, nowS: Long, metrics: Seq[String]): DataFrame = {
     val (archive, fromI, untilI) = fetchWindow(fromS, untilS, nowS)
-    val scan = readLevelRange(archive, fromI, untilI)
-      .filter(col("metric").isin(metrics: _*))
-    spark.range(0, 1, 1, 1)
-      .select(explode(typedLit(metrics)).as("metric"))
-      .select(col("metric"),
-        explode(Buckets.spine(fromI, untilI, archive.secondsPerPoint.toLong)).as("bucket_ts"))
-      .join(broadcast(scan), Seq("metric", "bucket_ts"), "left")
-      .select(col("metric"), col("bucket_ts"), col("value"))
+    Buckets.densifyNamed(readLevelRange(archive, fromI, untilI), metrics,
+        fromI, untilI, archive.secondsPerPoint)
       .orderBy("metric", "bucket_ts")
   }
 
   /** Q1 batched: dense series for MANY metrics in one plan — the
     * one-table-many-series advantage over the reference's
     * file-per-series `Fetch` loop: one partition-pruned level scan and
-    * one spine join serve every requested series (N fetches
+    * one densify serve every requested series (N fetches
     * against the reference = N file opens; here = one query). Output:
     * (metric, bucket_ts, value) dense per metric with NULL gaps.
     */

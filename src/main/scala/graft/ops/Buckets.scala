@@ -2,6 +2,7 @@ package graft.ops
 
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
+import graft.functions.BoundParam.param
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, TimestampNTZType}
@@ -86,16 +87,17 @@ object Buckets {
   /** Whisper `Fetch` endpoint semantics (SURVEY.md §4.4 trap 1): the
     * returned series starts at `floor(from, spp) + spp` (excludes the
     * bucket containing `from`) and ends at `floor(until, spp) + spp`
-    * exclusive (includes the bucket containing `until`).
+    * exclusive (includes the bucket containing `until`). The pair, with
+    * whisper's equal-interval bump, is [[Fetch.fetchWindow]].
     */
   def fetchInterval(tSeconds: Long, spp: Int): Long =
     Math.floorDiv(tSeconds, spp.toLong) * spp + spp
 
-  /** Dense `(metric, bucket_ts, value)` frame of a sparse one: each
-    * metric of `sparse` on every bucket of `[fromI, untilI)` step `spp`,
-    * gaps NULL; a metric with no row is absent. One group-by of the input
-    * builds the metric list and the lookup map together, so densifying
-    * costs no second pass over the input and no spine join.
+  /** Dense `(metric, bucket_ts, value)` frame of a FOUND set of series:
+    * each metric of `sparse` on every bucket of `[fromI, untilI)` step
+    * `spp`, gaps NULL; a metric with no row is absent. One group-by of the
+    * input builds the metric list and the lookup map together, so
+    * densifying costs no second pass over the input and no spine join.
     */
   def densify(sparse: DataFrame, fromI: Long, untilI: Long, spp: Long): DataFrame =
     sparse.groupBy(col("metric"))
@@ -104,10 +106,34 @@ object Buckets {
       .select(col("metric"), explode(spine(fromI, untilI, spp)).as("bucket_ts"), col("values"))
       .select(col("metric"), col("bucket_ts"), col("values")(col("bucket_ts")).as("value"))
 
+  /** Dense `(metric, bucket_ts, value)` frame of a NAMED set of series:
+    * every name on every bucket of `[fromI, untilI)` step `spp`, gaps
+    * NULL; a name with no row is all-NULL. `sparse` is filtered to the
+    * names and the window, so every row it keeps is a key of the
+    * names × [[grid]] side and the broadcast is bounded by the output.
+    * The window bounds are bound parameters: a new window compiles no
+    * class.
+    */
+  def densifyNamed(sparse: DataFrame, names: Seq[String],
+      fromI: Long, untilI: Long, spp: Long): DataFrame = {
+    val rows = sparse.filter(col("metric").isin(names: _*) &&
+      col("bucket_ts") >= param(fromI) && col("bucket_ts") < param(untilI))
+    grid(sparse.sparkSession, fromI, untilI, spp)
+      .select(col("bucket_ts"), explode(typedLit(names)).as("metric"))
+      .join(broadcast(rows), Seq("metric", "bucket_ts"), "left")
+      .select(col("metric"), col("bucket_ts"), col("value"))
+  }
+
+  /** The buckets of `[fromI, untilI)` step `spp` as rows of one
+    * partition: the [[spine]] exploded over one row.
+    */
+  def grid(spark: SparkSession, fromI: Long, untilI: Long, spp: Long): DataFrame =
+    spark.range(0, 1, 1, 1).select(explode(spine(fromI, untilI, spp)).as("bucket_ts"))
+
   /** The buckets of `[fromI, untilI)` step `spp` as an array column that
     * folds to an array literal, which generated code holds by reference
-    * (a `range` inlines its bounds). Guarded: an empty `sequence` would
-    * fold to an error at planning.
+    * (a `range` inlines its bounds, so it compiles a class per window).
+    * Guarded: an empty `sequence` would fold to an error at planning.
     */
   def spine(fromI: Long, untilI: Long, spp: Long): Column =
     if (untilI <= fromI) typedLit(Array.empty[Long])

@@ -51,8 +51,7 @@ object CanaryQueries {
   }
 
   def renderTargetCanary(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     RenderTarget.evaluate(spark,
       Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExprCanary, Buckets.FromS, Buckets.UntilS, 60)
@@ -64,8 +63,7 @@ object CanaryQueries {
     * with `count(*)` replaced by the same sum.
     */
   val renderTargetCanarySql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     s"""WITH ${Buckets.pointsSql},
        |mets AS (

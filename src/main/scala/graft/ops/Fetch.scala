@@ -12,17 +12,18 @@ import org.apache.spark.sql.functions._
   * covers `now - from` (archive selection — the materialized-view-routing
   * analog, SURVEY.md §4.1), then returns a DENSE fixed-step series with
   * NaN for empty slots. Here: archive selection is a plain Scala resolver
-  * over the rollup-table list, and density comes from a generated spine
-  * LEFT-JOINed against the sparse aggregate (gaps become NULL, not NaN —
-  * SURVEY.md §4.4 trap 2).
+  * over the rollup-table list, the window is [[fetchWindow]], and density
+  * comes from [[Buckets]]' two entry points (gaps become NULL, not NaN —
+  * SURVEY.md §4.4 trap 2): a caller that NAMES its series densifies with
+  * [[Buckets.densifyNamed]], which left-joins the names × bucket grid to a
+  * broadcast of the window's aggregate rows; a caller that FINDS them
+  * (a glob, or every metric in the window) densifies with
+  * [[Buckets.densify]], one bucket → value map per found series.
   *
-  * Scale notes (100 TB): the spine has `(until-from)/step` rows — bounded
-  * by the query range, never by data volume — so Catalyst broadcasts it;
-  * the aggregate side reduces to ≤ one row per bucket before the join, so
-  * the join input is already tiny. The heavy lifting is the partial
-  * aggregation over the scan, which is shuffle-partitioned by bucket and
-  * benefits from Parquet row-group pruning on the pushed `ts_s` range
-  * filter.
+  * Scale notes (100 TB): both are bounded by the request (series ×
+  * `(until-from)/step` buckets), never by data volume. The heavy lifting
+  * is the partial aggregation over the scan, which benefits from Parquet
+  * row-group pruning on the pushed `ts` range filter.
   */
 object Fetch {
 
@@ -50,41 +51,47 @@ object Fetch {
       fromS: Long,
       untilS: Long,
       spp: Int): DataFrame = {
-    import spark.implicits._
-    require(fromS <= untilS, "invalid time interval") // F1 clamp/validate
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI0 = Buckets.fetchInterval(untilS, spp)
-    // whisper fetch: "if fromInterval == untilInterval, untilInterval
-    // += step — always include the next point" (r13 review: a range
-    // inside one step bucket returned an empty frame where whisper
-    // returns that single bucket)
-    val untilI = if (untilI0 == fromI) untilI0 + spp else untilI0
-    val spine = spark.range(fromI, untilI, spp.toLong).toDF("bucket_ts")
-    val agg = pts
-      .filter($"metric" === metric && $"ts_s" >= fromI && $"ts_s" < untilI)
-      .groupBy(Buckets.alignTs($"ts_s", spp).as("bucket_ts"))
-      .agg(Rollup.mean6($"value").as("value"))
-    spine.join(agg, Seq("bucket_ts"), "left")
-      .select($"bucket_ts", $"value")
-      .orderBy($"bucket_ts")
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
+    Buckets.densifyNamed(binned(pts, fromI, untilI, spp), Seq(metric), fromI, untilI, spp)
+      .select(col("bucket_ts"), col("value"))
+      .orderBy("bucket_ts")
   }
 
-  /** The whisper fetch window in ALIGNED seconds, including the
-    * equal-interval bump (fromI == untilI → one bucket, §4.4 trap /
-    * r13 review). Callers that pre-restrict the scan MUST take the
-    * until bound from here: computing the bump only inside
-    * [[denseSeries]] is too late when the pre-restriction already
-    * excluded that bucket's rows — pointsInRange(x, x) is the EMPTY
-    * range, so an equal-interval fetch returned the bucket as NULL
-    * where whisper returns its stored value (r16 review; the facade's
-    * fetchWindow bumps before restricting, which is the contract).
+  /** The whisper fetch window in ALIGNED seconds: the interval pair
+    * `floor(t, spp) + spp` of both ends, and whisper's equal-interval
+    * bump — "if fromInterval == untilInterval, untilInterval += step",
+    * so a range inside one step returns that step's bucket, never an
+    * empty series. The bump applies only to a forward range: a fully
+    * expired or fully future request clamps to `until < from`
+    * (go-whisper returns nil there), and bumping on the intervals'
+    * accidental equality would return a bucket outside the request.
+    * Every window, the oracle's included, comes from here; a caller that
+    * pre-restricts its scan must take the bounds from here too, or the
+    * bumped bucket's rows are already gone.
     */
-  private[ops] def fetchWindow(fromS: Long, untilS: Long,
+  private[graft] def fetchWindow(fromS: Long, untilS: Long,
       spp: Int): (Long, Long) = {
     val fromI = Buckets.fetchInterval(fromS, spp)
     val u0 = Buckets.fetchInterval(untilS, spp)
-    (fromI, if (u0 == fromI) u0 + spp else u0)
+    (fromI, if (u0 == fromI && untilS >= fromS) u0 + spp else u0)
   }
+
+  /** [[fetchWindow]] of a caller's request: an inverted one fails, as
+    * whisper's `InvalidTimeInterval` does.
+    */
+  private[ops] def requestWindow(fromS: Long, untilS: Long,
+      spp: Int): (Long, Long) = {
+    require(fromS <= untilS, "invalid time interval")
+    fetchWindow(fromS, untilS, spp)
+  }
+
+  /** Per-(metric, step bucket) mean of the raw points in
+    * `[fromI, untilI)`: the fetched value of every series at `spp`.
+    */
+  private def binned(pts: DataFrame, fromI: Long, untilI: Long, spp: Int): DataFrame =
+    pts.filter(col("ts_s") >= fromI && col("ts_s") < untilI)
+      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
+      .agg(Rollup.mean6(col("value")).as("value"))
 
   /** Query key `fetch_dense_series`: 1-minute average dense series for
     * metric 'view' over the fixed window [F, U] (FIXTURES.md §2). The
@@ -408,8 +415,7 @@ object Fetch {
       ("view", Buckets.FromS, Buckets.UntilS),
       ("view", Buckets.NowS + 86400L, Buckets.NowS + 2 * 86400L))
     probes.map { case (m, f, u) =>
-      val fromI = Buckets.fetchInterval(f, 60)
-      val untilI = Buckets.fetchInterval(u, 60)
+      val (fromI, untilI) = fetchWindow(f, u, 60)
       Buckets.pointsInRange(spark, sfDir, fromI, untilI)
         .filter(col("metric") === m)
         .limit(1)
@@ -421,8 +427,7 @@ object Fetch {
 
   val fetchCheckEmptySql: String = {
     def one(m: String, f: Long, u: Long): String = {
-      val fromI = Buckets.fetchInterval(f, 60)
-      val untilI = Buckets.fetchInterval(u, 60)
+      val (fromI, untilI) = fetchWindow(f, u, 60)
       s"""SELECT '$m' AS metric, CAST($fromI AS BIGINT) AS from_s,
          |  CAST($untilI AS BIGINT) AS until_s,
          |  NOT EXISTS(SELECT 1 FROM pts
@@ -439,11 +444,9 @@ object Fetch {
   /** `fetch_many`: the batched multi-metric fetch ([[graft.WhisperTable
     * .fetchMany]]'s shape as an oracle-checked key) — ONE query returns
     * the dense series of EVERY metric in the window, instead of one
-    * driver round-trip per metric. The spine is (metrics × range
-    * buckets) — still bounded by the request, never by data volume — and
-    * broadcasts against the per-(metric, bucket) aggregate. This is the
-    * serving shape a 100 TB dashboard fan-out needs: metric count scales
-    * the spine linearly while the scan stays one pass.
+    * driver round-trip per metric. The output is (metrics × buckets) —
+    * bounded by the request, never by data volume — and the scan stays
+    * one pass: the serving shape a 100 TB dashboard fan-out needs.
     */
   def fetchMany(spark: SparkSession, sfDir: String): DataFrame =
     denseMany(spark, sfDir, metricRx = None)
@@ -455,29 +458,10 @@ object Fetch {
     */
   private def denseMany(
       spark: SparkSession, sfDir: String, metricRx: Option[String]): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val all = Buckets.pointsInRange(spark, sfDir, fromI, untilI)
     val pts = metricRx.fold(all)(rx => all.filter(col("metric").rlike(rx)))
-    val agg = pts
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), 60).as("bucket_ts"))
-      .agg(Rollup.mean6(col("value")).as("value"))
-    // metric list on the RAW scan, deliberately (r16 review finding
-    // evaluated and REJECTED with plan evidence): deriving it from the
-    // aggregate does NOT enable AQE stage reuse — column pruning
-    // rewrites the metrics branch's aggregate (the mean drops out), so
-    // the subtrees stop being canonically identical and BOTH run, now
-    // at full width. The raw distinct is a NARROW columnar pass
-    // (metric column + pushed ts bounds), far cheaper than a second
-    // full aggregate; the one true single-scan form (an eager
-    // localCheckpoint, the facade fetchGlob's) buys one scan at the
-    // cost of an unreleased block per invocation — the leak class the
-    // DSIR path dropped this round.
-    val metrics = pts.select(col("metric")).distinct()
-    val spine = spark.range(fromI, untilI, 60L).toDF("bucket_ts")
-      .crossJoin(metrics)
-    spine.join(agg, Seq("metric", "bucket_ts"), "left")
-      .select(col("metric"), col("bucket_ts"), col("value"))
+    Buckets.densify(binned(pts, fromI, untilI, 60), fromI, untilI, 60)
       .orderBy("metric", "bucket_ts")
   }
 
@@ -555,12 +539,12 @@ object Fetch {
 
   /** `fetch_glob`: graphite's metric-FIND surface over one table —
     * [[fetchMany]] WITHOUT a driver-side metric list. The glob compiles
-    * to a regex filter on the scan, the matched metric set comes back
-    * distributed (a distinct over the already-filtered scan, bounded by
-    * matches), and the dense spine crosses it with the range. The
-    * reference layout resolves a glob by walking the filesystem tree and
-    * opening one file per match; here one pruned scan serves every
-    * matching series — the `servers.*.cpu.load` dashboard query shape.
+    * to a regex filter on the scan, and each matched series is densified
+    * from its own aggregate rows ([[Buckets.densify]]), so the matched
+    * set never reaches the driver. The reference layout resolves a glob
+    * by walking the filesystem tree and opening one file per match; here
+    * one pruned scan serves every matching series — the
+    * `servers.*.cpu.load` dashboard query shape.
     */
   def fetchGlob(spark: SparkSession, sfDir: String): DataFrame =
     denseMany(spark, sfDir, metricRx = Some(globToRegex(GlobPattern)))
@@ -701,8 +685,7 @@ object Fetch {
     * flags in one result.
     */
   def metricsFindRoot(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val mets = Buckets.pointsInRange(spark, sfDir, fromI, untilI)
       .select(col("metric"))
       .unionByName(
@@ -712,8 +695,7 @@ object Fetch {
   }
 
   val metricsFindRootSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = globToRegex("*")
     s"""WITH ${Buckets.pointsSql},
        |${Buckets.pointsPathedSqlNamed("ptsp")},
@@ -739,16 +721,14 @@ object Fetch {
     * leaves; exercises brace/star/question segments below the root.
     */
   def metricsFindGlob(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val mets = Buckets.pointsPathedInRange(spark, sfDir, fromI, untilI)
       .select(col("metric"))
     metricsFind(mets, s"shard*.$GlobPattern").orderBy("node")
   }
 
   val metricsFindGlobSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = globToRegex(s"shard*.$GlobPattern")
     s"""WITH ${Buckets.pointsPathedSql},
        |seg AS (
@@ -769,8 +749,7 @@ object Fetch {
     * (same r13 drift rationale as the Scala side).
     */
   private def denseManySql(metricRx: Option[String]): String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rxAnd = metricRx.fold("")(rx =>
       s"\n    AND regexp_matches(metric, '$rx')")
     s"""WITH ${Buckets.pointsSql},
@@ -819,10 +798,8 @@ object Fetch {
     * spine unnecessary — the coarse re-aggregate runs on the SPARSE
     * per-minute aggregate (≤ range/spp × metrics rows, bounded by the
     * request), and density is restored once at interval granularity
-    * against a generated spine that Catalyst broadcasts. Both
-    * aggregations shuffle on (metric, bucket), so AQE coalesces them
-    * into the same exchange lineage; the scan still sees the pushed
-    * `ts_s` range filter.
+    * ([[Buckets.densify]]); the scan still sees the pushed `ts_s` range
+    * filter.
     */
   def summarizeSeries(
       spark: SparkSession,
@@ -832,26 +809,14 @@ object Fetch {
       spp: Int,
       intervalS: Int): DataFrame = {
     require(intervalS % spp == 0, s"summarize interval $intervalS must be a multiple of step $spp")
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
-    val p = pts.filter(col("ts_s") >= fromI && col("ts_s") < untilI)
-    val agg60 = p
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("b"))
-      .agg(Rollup.mean6(col("value")).as("v"))
-    // metric list on the raw scan — a narrow columnar pass (see the
-    // denseMany rejection note)
-    val metrics = p.select(col("metric")).distinct()
-    val coarse = agg60
-      .groupBy(col("metric"), Buckets.alignTs(col("b"), intervalS).as("bucket_ts"))
-      .agg(round(sum(col("v")), 6).as("value"))
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
+    val coarse = binned(pts, fromI, untilI, spp)
+      .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), intervalS).as("bucket_ts"))
+      .agg(round(sum(col("value")), 6).as("value"))
     // coarse buckets intersecting [fromI, untilI): epoch-aligned starts
     val lo = Math.floorDiv(fromI, intervalS.toLong) * intervalS
     val hiExcl = Math.floorDiv(untilI - spp, intervalS.toLong) * intervalS + intervalS
-    val spine = spark.range(lo, hiExcl, intervalS.toLong).toDF("bucket_ts")
-      .crossJoin(metrics)
-    spine.join(coarse, Seq("metric", "bucket_ts"), "left")
-      .select(col("metric"), col("bucket_ts"), col("value"))
-      .orderBy("metric", "bucket_ts")
+    Buckets.densify(coarse, lo, hiExcl, intervalS).orderBy("metric", "bucket_ts")
   }
 
   /** Graphite-web render consolidation (public semantics:
@@ -868,7 +833,7 @@ object Fetch {
     * Scale notes: identical shape to summarize — sparse per-minute
     * aggregate, group-index arithmetic instead of epoch alignment,
     * density restored at output granularity (`ceil(n/factor)` × metrics
-    * rows) against a broadcast spine.
+    * rows).
     *
     * `func` selects the consolidation function (graphite's
     * `consolidateBy`: average/sum/min/max); `xff` is the render-API
@@ -888,46 +853,35 @@ object Fetch {
       maxDataPoints: Int,
       func: String = "average",
       xff: Double = 0.0): DataFrame = {
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
     val n = ((untilI - fromI) / spp).toInt
     val factor = math.max(1, (n + maxDataPoints - 1) / maxDataPoints)
     val stepS = spp.toLong * factor
     val groups = (n + factor - 1) / factor
-    val p = pts.filter(col("ts_s") >= fromI && col("ts_s") < untilI)
     // both averages fully pinned (ordered fold + shared round6): the
     // grid mean and the group mean are division-derived, and group
     // counts of 2^k land native round on cross-engine midpoints
-    val agg60 = p
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("b"))
-      .agg(Rollup.mean6(col("value")).as("v"))
-    // metric list on the raw scan — a narrow columnar pass (see the
-    // denseMany rejection note)
-    val metrics = p.select(col("metric")).distinct()
     val consFunc = func match {
       case "average" | "avg" =>
         Buckets.round6(Rollup.aggColumn(
-          graft.model.AggregationMethod.Average, col("v"), col("b")))
-      case "sum" => round(sum(col("v")), 6)
-      case "min" => round(min(col("v")), 6)
-      case "max" => round(max(col("v")), 6)
+          graft.model.AggregationMethod.Average, col("value"), col("bucket_ts")))
+      case "sum" => round(sum(col("value")), 6)
+      case "min" => round(min(col("value")), 6)
+      case "max" => round(max(col("value")), 6)
       case f => throw new IllegalArgumentException(
         s"unknown consolidation function '$f'")
     }
-    val cons = agg60
-      .groupBy(col("metric"),
-        (lit(fromI) + floor((col("b") - fromI) / stepS) * stepS).cast("long").as("bucket_ts"))
-      .agg(consFunc.as("cv"), count(col("v")).as("known"))
-    val spine = spark.range(fromI, fromI + groups * stepS, stepS).toDF("bucket_ts")
-      .crossJoin(metrics)
     // xff gate against the group's GRID size (the tail group may cover
     // fewer slots than `factor` — judge it by what it could have had)
     val slots = least(lit(factor.toDouble),
       (lit(untilI.toDouble) - col("bucket_ts")) / spp.toDouble)
-    spine.join(cons, Seq("metric", "bucket_ts"), "left")
+    val cons = binned(pts, fromI, untilI, spp)
+      .groupBy(col("metric"), (lit(fromI) +
+        floor((col("bucket_ts") - fromI) / stepS) * stepS).cast("long").as("bucket_ts"))
+      .agg(consFunc.as("cv"), count(col("value")).as("known"))
       .select(col("metric"), col("bucket_ts"),
         when(col("known") >= slots * xff, col("cv")).as("value"))
-      .orderBy("metric", "bucket_ts")
+    Buckets.densify(cons, fromI, fromI + groups * stepS, stepS).orderBy("metric", "bucket_ts")
   }
 
   /** Graphite `sumSeries(seriesList)` (render/functions.py
@@ -936,8 +890,9 @@ object Fetch {
     * member's fetched value; a bucket where every member is None stays
     * None. Runs sparse like [[summarizeSeries]]: sum the per-(metric,
     * bucket) averages grouped by bucket alone, then restore density
-    * against the bucket spine — the cross-series combine never needs
-    * the member series materialized dense.
+    * for the one named result series ([[Buckets.densifyNamed]]) — the
+    * cross-series combine never needs the member series materialized
+    * dense.
     */
   def sumSeries(
       spark: SparkSession,
@@ -945,15 +900,11 @@ object Fetch {
       fromS: Long,
       untilS: Long,
       spp: Int): DataFrame = {
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
-    val agg60 = pts.filter(col("ts_s") >= fromI && col("ts_s") < untilI)
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
-      .agg(Rollup.mean6(col("value")).as("v"))
-    val summed = agg60.groupBy(col("bucket_ts"))
-      .agg(round(sum(col("v")), 6).as("value"))
-    spark.range(fromI, untilI, spp.toLong).toDF("bucket_ts")
-      .join(summed, Seq("bucket_ts"), "left")
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
+    val summed = binned(pts, fromI, untilI, spp).groupBy(col("bucket_ts"))
+      .agg(round(sum(col("value")), 6).as("value"))
+      .select(lit("sumSeries").as("metric"), col("bucket_ts"), col("value"))
+    Buckets.densifyNamed(summed, Seq("sumSeries"), fromI, untilI, spp)
       .select(col("bucket_ts"), col("value"))
       .orderBy("bucket_ts")
   }
@@ -977,30 +928,17 @@ object Fetch {
       fromS: Long,
       untilS: Long,
       spp: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
-    val p = pts.filter(col("ts_s") >= fromI && col("ts_s") < untilI)
-    val agg60 = p
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
-      .agg(Rollup.mean6(col("value")).as("v"))
-    // metric list on the raw scan — a narrow columnar pass (see the
-    // denseMany rejection note)
-    val metrics = p.select(col("metric")).distinct()
-    val dense = spark.range(fromI, untilI, spp.toLong).toDF("bucket_ts")
-      .crossJoin(metrics)
-      .join(agg60, Seq("metric", "bucket_ts"), "left")
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
     val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-    dense
-      .withColumn("prev", lag(col("v"), 1).over(w))
-      .withColumn("value",
-        when(col("v").isNotNull && col("prev").isNotNull && col("v") >= col("prev"),
+    Buckets.densify(binned(pts, fromI, untilI, spp), fromI, untilI, spp)
+      .withColumn("prev", lag(col("value"), 1).over(w))
+      .select(col("metric"), col("bucket_ts"),
+        when(col("value").isNotNull && col("prev").isNotNull && col("value") >= col("prev"),
           // the rate is DIVISION-derived (grid deltas / spp land on
-          // 7th-decimal midpoints whenever v−prev = (60m+30)·1e-6), so
+          // 7th-decimal midpoints whenever value−prev = (60m+30)·1e-6), so
           // the output edge must round through the shared portable
-          // formula, not native round (the r10/r12 midpoint class)
-          Buckets.round6((col("v") - col("prev")) / spp)))
-      .select(col("metric"), col("bucket_ts"), col("value"))
+          // formula, not native round
+          Buckets.round6((col("value") - col("prev")) / spp)).as("value"))
       .orderBy("metric", "bucket_ts")
   }
 
@@ -1014,8 +952,8 @@ object Fetch {
     *
     * Scale notes: one bounded lag-window per metric (rows-between
     * frame), exactly [[perSecondSeries]]'s partitioning — the extra
-    * history widens the request-bounded spine by N buckets, nothing
-    * else.
+    * history widens the request-bounded dense series by N buckets,
+    * nothing else.
     */
   def movingAverageSeries(
       spark: SparkSession,
@@ -1024,28 +962,14 @@ object Fetch {
       untilS: Long,
       spp: Int,
       window: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(window > 0, "moving-average window must be positive")
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
+    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
     val extFromI = fromI - window.toLong * spp
-    val p = pts.filter(col("ts_s") >= extFromI && col("ts_s") < untilI)
-    val agg60 = p
-      .groupBy(col("metric"), Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
-      .agg(Rollup.mean6(col("value")).as("v"))
-    // metric list on the raw scan — a narrow columnar pass (see the
-    // denseMany rejection note)
-    val metrics = p.select(col("metric")).distinct()
-    val dense = spark.range(extFromI, untilI, spp.toLong).toDF("bucket_ts")
-      .crossJoin(metrics)
-      .join(agg60, Seq("metric", "bucket_ts"), "left")
     // graphite's movingWindow slice is `bootstrap[i+offset-windowPoints
     // : i+offset]` — the N points strictly BEFORE each point, current
-    // EXCLUDED (the r13 review found the inclusive form shifted every
-    // value one bucket vs graphite, invisible to the oracle because the
-    // twin shared the frame). This is also why the pre-fetch reaches
-    // exactly window·spp back: the first output bucket's window is
-    // fully inside it.
+    // EXCLUDED. This is also why the pre-fetch reaches exactly
+    // window·spp back: the first output bucket's window is fully inside
+    // it.
     val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
       .rowsBetween(-window, -1)
     // the window mean as a FRAME-ORDERED fold (collect_list preserves
@@ -1053,9 +977,9 @@ object Fetch {
     // the shared round6 — Spark's streaming window accumulation and
     // DuckDB's segment-tree re-association would otherwise differ by an
     // ulp before the round and flip a midpoint
-    val lst = collect_list(col("v")).over(w)
-    val cnt = count(col("v")).over(w)
-    dense
+    val lst = collect_list(col("value")).over(w)
+    val cnt = count(col("value")).over(w)
+    Buckets.densify(binned(pts, extFromI, untilI, spp), extFromI, untilI, spp)
       .withColumn("value",
         when(cnt > 0, Buckets.round6(
           aggregate(lst, lit(0d), (a, x) => a + x) / cnt)))
@@ -1069,15 +993,13 @@ object Fetch {
     * "10min", "sum")` in graphite terms.
     */
   def fetchSummarize(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     summarizeSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60, SummarizeIntervalS)
   }
 
   val fetchSummarizeSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val iv = SummarizeIntervalS
     val lo = Math.floorDiv(fromI, iv.toLong) * iv
     val hiExcl = Math.floorDiv(untilI - 60, iv.toLong) * iv + iv
@@ -1108,15 +1030,13 @@ object Fetch {
     * 15-minute averages per metric, groups aligned to the series start).
     */
   def fetchMaxDatapoints(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     consolidateSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60, MaxDataPoints)
   }
 
   val fetchMaxDatapointsSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val n = ((untilI - fromI) / 60).toInt
     val factor = math.max(1, (n + MaxDataPoints - 1) / MaxDataPoints)
     val stepS = 60L * factor
@@ -1147,15 +1067,13 @@ object Fetch {
     * event metrics collapsed to one 1440-point series.
     */
   def fetchSumSeries(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     sumSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60)
   }
 
   val fetchSumSeriesSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     s"""WITH ${Buckets.pointsSql},
        |agg AS (
        |  SELECT metric, (ts_s // 60) * 60 AS bucket_ts,
@@ -1178,15 +1096,13 @@ object Fetch {
     * resets, and the leading bucket).
     */
   def fetchPerSecond(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     perSecondSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60)
   }
 
   val fetchPerSecondSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     s"""WITH ${Buckets.pointsSql},
        |mets AS (
        |  SELECT DISTINCT metric FROM pts
@@ -1224,8 +1140,7 @@ object Fetch {
     * full-windowed.
     */
   def fetchMovingAvg(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - MovingAvgWindow.toLong * 60
     movingAverageSeries(spark,
       Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
@@ -1233,8 +1148,7 @@ object Fetch {
   }
 
   val fetchMovingAvgSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - MovingAvgWindow.toLong * 60
     s"""WITH ${Buckets.pointsSql},
        |mets AS (

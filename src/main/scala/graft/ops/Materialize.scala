@@ -234,22 +234,17 @@ object Materialize {
   def fetchArchiveSelection(s: SparkSession, dir: String): DataFrame = {
     val archive = Fetch.selectArchive(Retentions.std, Buckets.NowS, FetchOldFromS)
     val spp = archive.secondsPerPoint // = 3600 for a 9-day-old `from`
-    val fromI = Buckets.fetchInterval(FetchOldFromS, spp)
-    val untilI = Buckets.fetchInterval(FetchOldUntilS, spp)
+    val (fromI, untilI) = Fetch.fetchWindow(FetchOldFromS, FetchOldUntilS, spp)
     val level = levelFor(Buckets.points(s, dir), Retentions.std, spp)
-    val spine = s.range(fromI, untilI, spp.toLong).toDF("bucket_ts")
-    val agg = level.filter(col("metric") === "click" &&
-        col("bucket_ts") >= fromI && col("bucket_ts") < untilI)
-      .select(col("bucket_ts"), round(col("value"), 6).as("value"))
-    spine.join(agg, Seq("bucket_ts"), "left")
+      .select(col("metric"), col("bucket_ts"), round(col("value"), 6).as("value"))
+    Buckets.densifyNamed(level, Seq("click"), fromI, untilI, spp)
       .select(col("bucket_ts"), col("value"))
       .orderBy("bucket_ts")
   }
 
   val fetchArchiveSelectionSql: String = {
     val spp = 3600
-    val fromI = Buckets.fetchInterval(FetchOldFromS, spp)
-    val untilI = Buckets.fetchInterval(FetchOldUntilS, spp)
+    val (fromI, untilI) = Fetch.fetchWindow(FetchOldFromS, FetchOldUntilS, spp)
     s"""WITH ${Buckets.pointsSql},
        |lww1m AS (${Ingest.lwwAlignSql(60)}),
        |r5m AS (SELECT metric, bucket_ts, value FROM (

@@ -552,7 +552,7 @@ object RenderTarget {
       val src = AtTime.parse(unquote(args.head), untilS, tz)
       val step = stepS(c, spp)
       val lo = Math.floorDiv(src, step) * step
-      val fromI = Buckets.fetchInterval(fromS, spp)
+      val (fromI, _) = Fetch.fetchWindow(fromS, untilS, spp)
       historyExtS(c, spp, fromS, untilS, tz) + Math.max(0L, fromI - lo)
     case Call("applyByNode", cs, args) =>
       // the template may carry its own history need (a movingAverage
@@ -948,8 +948,7 @@ object RenderTarget {
       tz: java.time.ZoneId = java.time.ZoneOffset.UTC): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val expr0 = parse(target)
-    val fromI = Buckets.fetchInterval(fromS, spp)
-    val untilI = Buckets.fetchInterval(untilS, spp)
+    val (fromI, untilI) = Fetch.requestWindow(fromS, untilS, spp)
     val extFromI = fromI - historyExtS(expr0, spp, fromS, untilS, tz)
 
     // ONE base-table pass shared by every leaf: filter by the UNION of
@@ -975,7 +974,7 @@ object RenderTarget {
     // render ran 1.4–1.6× slower on 4 cores, even where the target
     // reduces it to one series. Member unions follow the same choice
     // ([[gathered]]); the generators are one partition either way
-    // ([[grid]]).
+    // ([[Buckets.grid]]).
     val leafRx = leafGlobs(expr0).distinct.map(Fetch.globToRegex)
     val tagSel = tagSelections(expr0)
     def tagSelect(exprs: Seq[String]): Column = exprs.map(tagPredicate).reduce(_ && _)
@@ -999,12 +998,6 @@ object RenderTarget {
     val sharedAgg = gather(aggregated)
     // member frames side by side
     def gathered(members: Seq[DataFrame]): DataFrame = gather(members.reduce(_ unionByName _))
-    // the buckets of [from, until) step `step`, one partition: a spine
-    // exploded over one row folds to an array held by reference, so a
-    // generator compiles no class at a new window (a `range` inlines
-    // its bounds)
-    def grid(from: Long, until: Long, step: Long): DataFrame =
-      spark.range(0, 1, 1, 1).select(explode(Buckets.spine(from, until, step)).as("bucket_ts"))
 
     // Per-leaf selection over [[sharedAgg]]. With two or more selectors
     // (glob leaves and seriesByTag selections both count) the predicate
@@ -1577,7 +1570,7 @@ object RenderTarget {
         // grid (the quoted series name arrives as a quoted Leaf —
         // the grammar's series slot always parses as an expression)
         val _ = f
-        (grid(extFromI, untilI, spp.toLong)
+        (Buckets.grid(spark, extFromI, untilI, spp.toLong)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             col("bucket_ts").cast("double").as("value")), spp.toLong)
       case Call("sinFunction" | "sin", Seq(Leaf(name)), args) =>
@@ -1589,7 +1582,7 @@ object RenderTarget {
         // equal-step combine pairs nothing and sums interleave on two
         // offset grids
         val genFrom = -Math.floorDiv(-extFromI, stepArg) * stepArg
-        (grid(genFrom, untilI, stepArg)
+        (Buckets.grid(spark, genFrom, untilI, stepArg)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             round(sin(col("bucket_ts")) * amp, 6).as("value")), stepArg)
       case Call("randomWalk" | "randomWalkFunction", Seq(Leaf(name)), args) =>
@@ -1614,7 +1607,7 @@ object RenderTarget {
         val h2 = (lit(48271L) * h1) % m
         val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
           .rowsBetween(Window.unboundedPreceding, -1)
-        (grid(genFrom, untilI, stepArg)
+        (Buckets.grid(spark, genFrom, untilI, stepArg)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             (h2.cast("double") / m - 0.5).as("inc"))
           .select(col("metric"), col("bucket_ts"),
@@ -1643,7 +1636,7 @@ object RenderTarget {
           .filter(sel && col("ts_s") >= extFromI && col("ts_s") < untilI)
           .groupBy(Buckets.alignTs(col("ts_s"), spp).as("bucket_ts"))
           .agg(count(lit(1)).cast("double").as("cnt")))
-        (grid(extFromI, untilI, spp.toLong)
+        (Buckets.grid(spark, extFromI, untilI, spp.toLong)
           .join(cnt, Seq("bucket_ts"), "left")
           .select(lit(name).as("metric"), col("bucket_ts"),
             coalesce(col("cnt"), lit(0.0)).as("value")), spp.toLong)
@@ -1880,7 +1873,7 @@ object RenderTarget {
         // (graphite draws 3 points; a full grid keeps the frame shape
         // uniform so combines over it behave)
         val k = v.toDouble
-        (grid(extFromI, untilI, spp.toLong)
+        (Buckets.grid(spark, extFromI, untilI, spp.toLong)
           .select(lit(v).as("metric"), col("bucket_ts"),
             lit(k).as("value")), spp.toLong)
       case Call("verticalLine", Seq(Leaf(ts)), args) =>
@@ -1903,7 +1896,7 @@ object RenderTarget {
           s"verticalLine time $tsV is outside the rendered " +
             s"window [$fromI, $untilS]")
         val label = args.headOption.getOrElse(unquote(ts))
-        (grid(tsV, tsV + 2, 1L)
+        (Buckets.grid(spark, tsV, tsV + 2, 1L)
           .select(lit(label).as("metric"), col("bucket_ts"),
             lit(1.0).as("value")), 1L)
       case Call("compressPeriodicGaps", Seq(c), _) =>
@@ -2254,7 +2247,7 @@ object RenderTarget {
         // line real dashboards overlay
         val name = args.headOption.map(unquote).filter(_.nonEmpty).getOrElse(v)
         val k = v.toDouble
-        (grid(extFromI, untilI, spp.toLong)
+        (Buckets.grid(spark, extFromI, untilI, spp.toLong)
           .select(lit(name).as("metric"), col("bucket_ts"),
             lit(k).as("value")), spp.toLong)
       case Call("fallbackSeries", Seq(c, fb), _) =>
@@ -2515,23 +2508,20 @@ object RenderTarget {
     s"movingAverage(sumSeries(${Fetch.GlobPattern}), 10)"
 
   def renderTarget(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExpr1, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetSmooth(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - 600L // movingAverage(10) × 60 s leaf step
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
       TargetExpr2, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   val renderTargetSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     val lo = Math.floorDiv(fromI, 600L) * 600
     s"""WITH ${Buckets.pointsSql},
@@ -2593,22 +2583,19 @@ object RenderTarget {
     s"timeShift(summarize(${Fetch.GlobPattern}, '10min', 'avg'), '1h')"
 
   def renderTargetRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExprRate, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetFill(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExprFill, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetTimeshift(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - 3600L // timeShift '1h' propagated to the leaf
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
       TargetExprShift, Buckets.FromS, Buckets.UntilS, 60)
@@ -2637,22 +2624,19 @@ object RenderTarget {
   val TargetExprTop = s"highestAverage($PathedGlob, 3)"
 
   def renderTargetRatio(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExprRatio, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetGroup(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsPathedInRange(spark, sfDir, fromI, untilI),
       TargetExprGroup, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetTop(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsPathedInRange(spark, sfDir, fromI, untilI),
       TargetExprTop, Buckets.FromS, Buckets.UntilS, 60)
   }
@@ -2670,22 +2654,19 @@ object RenderTarget {
     s"removeBelowValue(averageAbove($PathedGlob, 50), 40)"
 
   def renderTargetHitcount(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       TargetExprHitcount, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   def renderTargetAbove(spark: SparkSession, sfDir: String): DataFrame = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     evaluate(spark, Buckets.pointsPathedInRange(spark, sfDir, fromI, untilI),
       TargetExprAbove, Buckets.FromS, Buckets.UntilS, 60)
   }
 
   val renderTargetHitcountSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     val lo = Math.floorDiv(fromI, 3600L) * 3600
     s"""WITH ${Buckets.pointsSql},
@@ -2716,8 +2697,7 @@ object RenderTarget {
   }
 
   val renderTargetAboveSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(PathedGlob)
     s"""WITH ${Buckets.pointsPathedSql},
        |mets AS (
@@ -2747,8 +2727,7 @@ object RenderTarget {
   }
 
   val renderTargetRatioSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     s"""WITH ${Buckets.pointsSql},
        |mets AS (
@@ -2781,8 +2760,7 @@ object RenderTarget {
   }
 
   val renderTargetGroupSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(PathedGlob)
     s"""WITH ${Buckets.pointsPathedSql},
        |mets AS (
@@ -2811,8 +2789,7 @@ object RenderTarget {
   }
 
   val renderTargetTopSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(PathedGlob)
     s"""WITH ${Buckets.pointsPathedSql},
        |mets AS (
@@ -2844,8 +2821,7 @@ object RenderTarget {
   }
 
   val renderTargetRateSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     s"""WITH ${Buckets.pointsSql},
        |mets AS (
@@ -2878,8 +2854,7 @@ object RenderTarget {
   }
 
   val renderTargetFillSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     s"""WITH ${Buckets.pointsSql},
        |mets AS (
@@ -2924,8 +2899,7 @@ object RenderTarget {
   }
 
   val renderTargetTimeshiftSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - 3600L
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     val lo = Math.floorDiv(fromI, 600L) * 600
@@ -2961,8 +2935,8 @@ object RenderTarget {
 
   // ------------------------------------------- round-9 function keys
 
-  private def stdFromI: Long = Buckets.fetchInterval(Buckets.FromS, 60)
-  private def stdUntilI: Long = Buckets.fetchInterval(Buckets.UntilS, 60)
+  private def stdFromI: Long = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)._1
+  private def stdUntilI: Long = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)._2
 
   /** Evaluate `target` over the flat points view on the standard oracle
     * window, with `extS` seconds of history pre-fetched at the source.
@@ -4227,8 +4201,7 @@ object RenderTarget {
        |FROM dense GROUP BY metric ORDER BY metric""".stripMargin
 
   val renderTargetSmoothSql: String = {
-    val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
-    val untilI = Buckets.fetchInterval(Buckets.UntilS, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - 600L
     val rx = Fetch.globToRegex(Fetch.GlobPattern)
     s"""WITH ${Buckets.pointsSql},

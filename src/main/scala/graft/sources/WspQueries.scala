@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.{Buckets, Dedup, Ingest}
+import graft.ops.{Buckets, Dedup, Fetch, Ingest}
 import graft.model.Retentions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,36 +73,39 @@ object WspQueries {
        |ORDER BY metric, bucket_ts""".stripMargin
 
   /** Q1 fetch window over the exported tree: the last 2 hours up to
-    * pinned now, whisper endpoint semantics (`floor(t)+spp` exclusive
-    * start, inclusive-bucket end — [[Buckets.fetchInterval]]).
+    * pinned now ([[Fetch.fetchWindow]]).
     */
-  private val FetchFromI = Buckets.fetchInterval(NowS - 7200, 60)
-  private val FetchUntilI = Buckets.fetchInterval(NowS - 3600, 60)
+  private val (fetchFromI, fetchUntilI) = Fetch.fetchWindow(NowS - 7200, NowS - 3600, 60)
+
+  /** The named series of the exported tree, dense over the fetch window.
+    * The literal metric and `ts_s` filters reach the wsp scan: the
+    * metric prunes files at planning, the range reaches the slot decoder.
+    */
+  private def wspDense(s: SparkSession, dir: String, metrics: Seq[String]): DataFrame = {
+    val pts = s.read.format("wsp").load(ensureExported(s, dir))
+      .filter(col("metric").isin(metrics: _*) &&
+        col("ts_s") >= fetchFromI && col("ts_s") < fetchUntilI)
+      .select(col("metric"), col("ts_s").as("bucket_ts"), round(col("value"), 6).as("value"))
+    Buckets.densifyNamed(pts, metrics, fetchFromI, fetchUntilI, 60)
+  }
 
   /** `wsp_fetch`: whisper's Fetch served DIRECTLY off the `.wsp` tree —
     * the reference's one query, against the reference's actual storage
     * format, executed as a Spark plan: the metric equality prunes to ONE
     * file at planning (exactly whisper's single `Open`), the ts range
     * reaches the slot decoder, and the dense gap-filled series comes
-    * from the same broadcast spine join as [[graft.ops.Fetch]].
+    * from [[Buckets.densifyNamed]], as a facade fetch's does.
     */
-  def wspFetch(s: SparkSession, dir: String): DataFrame = {
-    val base = ensureExported(s, dir)
-    val pts = s.read.format("wsp").load(base)
-      .filter(col("metric") === "error" &&
-        col("ts_s") >= FetchFromI && col("ts_s") < FetchUntilI)
-      .select(col("ts_s").as("bucket_ts"), col("value"))
-    s.range(FetchFromI, FetchUntilI, 60L).toDF("bucket_ts")
-      .join(pts, Seq("bucket_ts"), "left")
-      .select(col("bucket_ts"), round(col("value"), 6).as("value"))
+  def wspFetch(s: SparkSession, dir: String): DataFrame =
+    wspDense(s, dir, Seq("error"))
+      .select(col("bucket_ts"), col("value"))
       .orderBy("bucket_ts")
-  }
 
   val wspFetchSql: String =
     s"""WITH $pointsSql,
        |lww1m AS (${Ingest.lwwAlignSql(60)}),
        |spine AS (SELECT range AS bucket_ts
-       |          FROM range($FetchFromI, $FetchUntilI, 60))
+       |          FROM range($fetchFromI, $fetchUntilI, 60))
        |SELECT s.bucket_ts, round(l.value, 6) AS value
        |FROM spine s LEFT JOIN lww1m l
        |  ON l.metric = 'error' AND l.bucket_ts = s.bucket_ts
@@ -132,8 +135,7 @@ object WspQueries {
   }
 
   val wspRenderTargetSql: String = {
-    val fromI = Buckets.fetchInterval(NowS - 7200, 60)
-    val untilI = Buckets.fetchInterval(NowS - 3600, 60)
+    val (fromI, untilI) = Fetch.fetchWindow(NowS - 7200, NowS - 3600, 60)
     val rx = graft.ops.Fetch.globToRegex(graft.ops.Fetch.GlobPattern)
     val lo = Math.floorDiv(fromI, 600L) * 600
     s"""WITH $pointsSql,
@@ -247,30 +249,18 @@ object WspQueries {
   /** `wsp_fetch_many`: the batched dashboard fan-out (the engine's
     * `fetchMany` advantage, SURVEY §2.7) against whisper storage — an
     * `isin` metric predicate pushes as `In` file pruning (N files opened
-    * for N requested series, never the tree), one broadcast spine serves
-    * every series' dense gap-filled frame.
+    * for N requested series, never the tree), one densify serves every
+    * series' dense gap-filled frame.
     */
-  def wspFetchMany(s: SparkSession, dir: String): DataFrame = {
-    val base = ensureExported(s, dir)
-    val ms = Seq("error", "click")
-    import s.implicits._
-    val pts = s.read.format("wsp").load(base)
-      .filter(col("metric").isin(ms: _*) &&
-        col("ts_s") >= FetchFromI && col("ts_s") < FetchUntilI)
-      .select(col("metric"), col("ts_s").as("bucket_ts"), col("value"))
-    s.range(FetchFromI, FetchUntilI, 60L).toDF("bucket_ts")
-      .crossJoin(broadcast(ms.toDF("metric")))
-      .join(pts, Seq("metric", "bucket_ts"), "left")
-      .select(col("metric"), col("bucket_ts"), round(col("value"), 6).as("value"))
-      .orderBy("metric", "bucket_ts")
-  }
+  def wspFetchMany(s: SparkSession, dir: String): DataFrame =
+    wspDense(s, dir, Seq("error", "click")).orderBy("metric", "bucket_ts")
 
   val wspFetchManySql: String =
     s"""WITH $pointsSql,
        |lww1m AS (${Ingest.lwwAlignSql(60)}),
        |req AS (SELECT unnest(['error', 'click']) AS metric),
        |spine AS (SELECT metric, range AS bucket_ts
-       |          FROM req, range($FetchFromI, $FetchUntilI, 60))
+       |          FROM req, range($fetchFromI, $fetchUntilI, 60))
        |SELECT s.metric, s.bucket_ts, round(l.value, 6) AS value
        |FROM spine s LEFT JOIN lww1m l
        |  ON l.metric = s.metric AND l.bucket_ts = s.bucket_ts

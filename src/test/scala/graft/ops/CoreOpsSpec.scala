@@ -267,6 +267,47 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(df.map(_.getLong(0)).toSeq == Seq(120L) && df(0).getDouble(1) == 4.0)
   }
 
+  // every entry point that derives a fetch window, as (name, (from, until)
+  // => frame) over `p` at a 60 s step; each frame has bucket_ts and value
+  private def windowed(p: org.apache.spark.sql.DataFrame)
+      : Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame)] = Seq(
+    "denseSeries" -> ((f, u) => Fetch.denseSeries(spark, p, "m.a", f, u, 60)),
+    "summarizeSeries" -> ((f, u) => Fetch.summarizeSeries(spark, p, f, u, 60, 60)),
+    "consolidateSeries" -> ((f, u) => Fetch.consolidateSeries(spark, p, f, u, 60, 1)),
+    "sumSeries" -> ((f, u) => Fetch.sumSeries(spark, p, f, u, 60)),
+    "perSecondSeries" -> ((f, u) => Fetch.perSecondSeries(spark, p, f, u, 60)),
+    "movingAverageSeries" -> ((f, u) => Fetch.movingAverageSeries(spark, p, f, u, 60, 1)),
+    "evaluate(m.*)" -> ((f, u) => RenderTarget.evaluate(spark, p, "m.*", f, u, 60)),
+    "evaluate(sumSeries(m.*))" ->
+      ((f, u) => RenderTarget.evaluate(spark, p, "sumSeries(m.*)", f, u, 60)))
+
+  test("a window inside one step returns that step's bucket from every entry point") {
+    // whisper's equal-interval bump: 100 → 110 is the bucket 120, which
+    // holds the point at 125. movingAverage(1) shows the bucket before it
+    // (the point at 65); perSecond has no predecessor, so None
+    val p = pts(("m.a", 65L, 2.0), ("m.a", 125L, 4.0))
+    val expected = Map("movingAverageSeries" -> Some(2.0), "perSecondSeries" -> None)
+    val wrong = windowed(p).flatMap { case (name, read) =>
+      val got = read(100L, 110L).collect().toSeq.map(r =>
+        (r.getAs[Long]("bucket_ts"), Option(r.getAs[java.lang.Double]("value")).map(_.toDouble)))
+      if (got == Seq((120L, expected.getOrElse(name, Some(4.0))))) None
+      else Some(s"$name returned $got")
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
+  test("an inverted window fails loudly from every entry point") {
+    // whisper raises InvalidTimeInterval when from > until
+    val quiet = windowed(pts(("m.a", 125L, 4.0))).flatMap { case (name, read) =>
+      scala.util.Try(read(200L, 100L).collect()) match {
+        case scala.util.Failure(e: IllegalArgumentException)
+            if e.getMessage.contains("invalid time interval") => None
+        case other => Some(s"$name: $other")
+      }
+    }
+    assert(quiet.isEmpty, quiet.mkString("; "))
+  }
+
   test("globToRegex class edges: leading ']', inner '[', '&&' (r16)") {
     def m(glob: String, s: String): Boolean = s.matches(Fetch.globToRegex(glob))
     // fnmatch: ']' FIRST in a class is a literal member (unescaped it

@@ -1258,11 +1258,19 @@ class WspSpec extends AnyFunSuite {
     val dense = rows(RenderTarget.evaluate(spark, renderPoints(dir), "host.*", fromS, untilS, 60))
     assert(dense == Seq("host.a", "host.b").flatMap(m =>
       (fromI until untilI by 60).map(b => (m, b, fine.get((m, b))))))
-    // an empty window (until <= the extended from) is 0 rows, no error
-    for (t <- Seq("host.*", "sumSeries(host.*)", "movingAverage(host.*, 3)");
-         (f, u) <- Seq((T0 + 1200, T0 + 1200), (T0 + 1800, T0 + 1200)))
-      assert(RenderTarget.evaluate(spark, renderPoints(dir), t, f, u, 60)
-        .collect().isEmpty, s"$t over [$f, $u)")
+    // a window inside one step renders that step's bucket (whisper's
+    // equal-interval bump), and an inverted window fails loudly
+    val b = T0 + 1260
+    assert(rows(RenderTarget.evaluate(spark, renderPoints(dir), "host.*", T0 + 1200, T0 + 1200, 60)) ==
+      Seq(("host.a", b, fine.get(("host.a", b)))))
+    for (t <- Seq("sumSeries(host.*)", "movingAverage(host.*, 3)"))
+      assert(rows(RenderTarget.evaluate(spark, renderPoints(dir), t, T0 + 1200, T0 + 1200, 60))
+        .map(_._2).distinct == Seq(b), t)
+    for (t <- Seq("host.*", "sumSeries(host.*)", "movingAverage(host.*, 3)")) {
+      val e = intercept[IllegalArgumentException](
+        RenderTarget.evaluate(spark, renderPoints(dir), t, T0 + 1800, T0 + 1200, 60))
+      assert(e.getMessage.contains("invalid time interval"), t)
+    }
   }
 
   test("pushed spp/archive filters choose the decoded archives, exactly") {
