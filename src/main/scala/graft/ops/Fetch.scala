@@ -45,7 +45,6 @@ object Fetch {
     * `align(ts) == t`, i.e. raw `ts_s` in `[t, t+spp)`.
     */
   def denseSeries(
-      spark: SparkSession,
       pts: DataFrame,
       metric: String,
       fromS: Long,
@@ -100,7 +99,7 @@ object Fetch {
     */
   def fetchDenseSeries(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    denseSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    denseSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       "view", Buckets.FromS, Buckets.UntilS, 60)
   }
 
@@ -367,7 +366,7 @@ object Fetch {
     val fromS = AtTime.parse("-1d", Buckets.NowS)
     val untilS = AtTime.parse("now", Buckets.NowS)
     val (fromI, untilI) = fetchWindow(fromS, untilS, 60)
-    denseSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    denseSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       "view", fromS, untilS, 60)
   }
 
@@ -392,7 +391,7 @@ object Fetch {
     val fromS = AtTime.parse("midnight", Buckets.NowS, tz)
     val untilS = AtTime.parse("midnight+6h", Buckets.NowS, tz)
     val (fromI, untilI) = fetchWindow(fromS, untilS, 60)
-    denseSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    denseSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       "view", fromS, untilS, 60)
   }
 
@@ -802,7 +801,6 @@ object Fetch {
     * filter.
     */
   def summarizeSeries(
-      spark: SparkSession,
       pts: DataFrame,
       fromS: Long,
       untilS: Long,
@@ -845,7 +843,6 @@ object Fetch {
     * equivalent control for direct Fetch-API callers.
     */
   def consolidateSeries(
-      spark: SparkSession,
       pts: DataFrame,
       fromS: Long,
       untilS: Long,
@@ -895,7 +892,6 @@ object Fetch {
     * dense.
     */
   def sumSeries(
-      spark: SparkSession,
       pts: DataFrame,
       fromS: Long,
       untilS: Long,
@@ -923,7 +919,6 @@ object Fetch {
     * heavy reduction to per-bucket averages happens before it.
     */
   def perSecondSeries(
-      spark: SparkSession,
       pts: DataFrame,
       fromS: Long,
       untilS: Long,
@@ -956,7 +951,6 @@ object Fetch {
     * nothing else.
     */
   def movingAverageSeries(
-      spark: SparkSession,
       pts: DataFrame,
       fromS: Long,
       untilS: Long,
@@ -994,7 +988,7 @@ object Fetch {
     */
   def fetchSummarize(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    summarizeSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    summarizeSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60, SummarizeIntervalS)
   }
 
@@ -1031,7 +1025,7 @@ object Fetch {
     */
   def fetchMaxDatapoints(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    consolidateSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    consolidateSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60, MaxDataPoints)
   }
 
@@ -1068,7 +1062,7 @@ object Fetch {
     */
   def fetchSumSeries(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    sumSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    sumSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60)
   }
 
@@ -1097,7 +1091,7 @@ object Fetch {
     */
   def fetchPerSecond(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    perSecondSeries(spark, Buckets.pointsInRange(spark, sfDir, fromI, untilI),
+    perSecondSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60)
   }
 
@@ -1142,8 +1136,7 @@ object Fetch {
   def fetchMovingAvg(spark: SparkSession, sfDir: String): DataFrame = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
     val extFromI = fromI - MovingAvgWindow.toLong * 60
-    movingAverageSeries(spark,
-      Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
+    movingAverageSeries(Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
       Buckets.FromS, Buckets.UntilS, 60, MovingAvgWindow)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import graft.functions.BoundParam.param
 import graft.functions.RegexFind
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graphite render-target expressions — the `?target=` surface of the
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   *   target   := func '(' target (',' target)* (',' literal)* ')' | glob
-  *   func     := ~137 functions — the full graphite 1.1 dashboard
+  *   func     := 147 functions — the full graphite 1.1 dashboard
   *               surface (see [[Funcs]]): pointwise transforms, rates,
   *               the combine family + the aggregate/movingWindow/
   *               sortBy/filterSeries umbrella forms, trailing windows,
@@ -97,6 +98,94 @@ object RenderTarget {
     "movingAverage", "movingSum", "movingMin", "movingMax", "movingMedian",
     "stdev")
 
+  /** Functions that return their one child unchanged: the presentation
+    * hints, the annotations that [[consolidationOf]] and [[xffOf]] read,
+    * `mapSeries` (reduceSeries reads the node structure off the names
+    * directly) and the bare sorts (the output contract already orders
+    * rows by (metric, bucket_ts); the selecting form is
+    * `limit(sortByX(…))`).
+    */
+  private val Passthrough = PresentationFuncs ++ Set(
+    "consolidateBy", "xFilesFactor", "cumulative", "setXFilesFactor",
+    "mapSeries", "sortByMaxima", "sortByTotal", "sortByName", "sortBy")
+
+  /** Pointwise transforms: each row's new `value` from its old one, the
+    * call's literal arguments and the series step. None propagates
+    * through null arithmetic for free; each keeps the child's grid and
+    * step, so it fuses into the child's projection under whole-stage
+    * codegen (no extra shuffle or window).
+    */
+  private val Pointwise: Map[String, (Seq[String], Long) => Column] = {
+    val v = col("value")
+    Map(
+      ("scale", (a, _) => round(v * argAt("scale", a, 0, "factor").toDouble, 6)),
+      ("offset", (a, _) => round(v + argAt("offset", a, 0, "factor").toDouble, 6)),
+      // graphite's literal-addition alias of offset
+      ("add", (a, _) => round(v + argAt("add", a, 0, "constant").toDouble, 6)),
+      ("absolute", (_, _) => abs(v)),
+      ("transformNull", (a, _) =>
+        coalesce(v, lit(a.headOption.map(_.toDouble).getOrElse(0.0)))),
+      // datapoints beyond n become None (the series stays on the grid)
+      ("removeBelowValue", (a, _) => when(v >= argAt("removeBelowValue", a, 0, "n").toDouble, v)),
+      ("removeAboveValue", (a, _) => when(v <= argAt("removeAboveValue", a, 0, "n").toDouble, v)),
+      ("logarithm", (a, _) =>
+        when(v > 0, round(log(a.headOption.map(_.toDouble).getOrElse(10.0), v), 6))),
+      ("pow", (a, _) => round(pow(v, argAt("pow", a, 0, "factor").toDouble), 6)),
+      ("squareRoot", (_, _) => when(v >= 0, round(sqrt(v), 6))),
+      ("invert", (_, _) => when(v =!= 0, round(lit(1.0) / v, 6))),
+      // per-step values re-expressed per N seconds: × N/step, the
+      // unit-conversion sibling of scale that tracks the series step
+      ("scaleToSeconds", (a, step) =>
+        round(v * (argAt("scaleToSeconds", a, 0, "seconds").toDouble / step), 6)),
+      ("isNonNull", (_, _) => when(v.isNotNull, 1.0).otherwise(0.0)),
+      ("sigmoid", (_, _) => round(lit(1.0) / (lit(1.0) + exp(-v)), 6)),
+      ("exp", (_, _) => round(exp(v), 6)),
+      // graphite's round(seriesList, precision); the frame already
+      // carries 6-place rounding, so precision is capped there
+      ("roundFunction", { (a, _) =>
+        val prec = a.headOption.map(_.toInt).getOrElse(0)
+        require(prec >= 0 && prec <= 6, "roundFunction precision must be in [0, 6]")
+        round(v, prec)
+      }),
+      // ln(v / (1−v)); outside (0, 1) graphite emits None
+      ("logit", (_, _) => when(v > 0 && v < 1, round(log(v / (lit(1.0) - v)), 6))))
+  }
+
+  /** Renames: each series' new `metric` from its old name and the call's
+    * literal arguments; values and grid are unchanged.
+    */
+  private val Renames: Map[String, Seq[String] => Column] = {
+    val parts = split(col("metric"), "\\.")
+    Map(
+      ("alias", a => lit(argAt("alias", a, 0, "newName"))),
+      // all node indices join with '.'; nodes use Python list semantics
+      // (-1 is the LAST dot-node)
+      ("aliasByNode", a => concat_ws(".", a.map(n => nodeAt(parts, n.toInt)): _*)),
+      ("aliasByMetric", _ => element_at(parts, -1)),
+      ("aliasByTags", { a =>
+        require(a.nonEmpty, "aliasByTags needs at least one tag")
+        concat_ws(".", a.map(tagValue): _*)
+      }),
+      // metric node slice [start, stop): stop 0 (or absent) = to the
+      // end, graphite's path-trimming helper
+      ("substr", { a =>
+        val start = a.headOption.map(_.toInt).getOrElse(0)
+        val stop = a.lift(1).map(_.toInt).getOrElse(0)
+        require(start >= 0 && stop >= 0 && (stop == 0 || stop > start),
+          s"substr needs 0 <= start < stop (or stop 0 for end)")
+        val sliceLen =
+          if (stop == 0) greatest(size(parts) - start, lit(0))
+          else lit(stop - start)
+        array_join(slice(parts, lit(start + 1), sliceLen), ".")
+      }),
+      // the replacement is PYTHON re.sub syntax in graphite (\1 =
+      // backreference): Java's replaceAll would read \1 as a literal '1'
+      // and throw on a bare '$'
+      ("aliasSub", a => regexp_replace(col("metric"), argAt("aliasSub", a, 0, "search"),
+        pyReplacement(argAt("aliasSub", a, 1, "replace"))))
+    )
+  }
+
   /** Functions whose LEADING arguments are all series and whose first
     * literal argument (if any) is always quoted — i.e. an unquoted
     * digit-leading token before any literal can only be a metric. For
@@ -114,48 +203,6 @@ object RenderTarget {
     "divideSeriesLists", "sumSeriesLists", "diffSeriesLists",
     "multiplySeriesLists", "aggregateSeriesLists")
 
-  private val Funcs = CombineFuncs ++ MovingFuncs ++ Set(
-    "perSecond", "summarize",
-    "scale", "offset", "absolute", "derivative", "nonNegativeDerivative",
-    "integral", "keepLastValue", "timeShift",
-    "divideSeries", "groupByNode", "aliasByNode",
-    "highestMax", "highestAverage",
-    "transformNull", "removeBelowValue", "removeAboveValue", "alias",
-    "hitcount", "averageAbove",
-    "asPercent", "exclude", "grep", "aliasSub",
-    "sortByMaxima", "sortByTotal", "sortByName", "limit",
-    "currentAbove", "currentBelow",
-    "percentileOfSeries", "removeAbovePercentile",
-    "constantLine", "consolidateBy", "xFilesFactor",
-    "diffSeries", "multiplySeries",
-    "logarithm", "pow", "squareRoot", "invert", "offsetToZero",
-    "scaleToSeconds", "isNonNull", "changed",
-    "removeBelowPercentile", "nPercentile",
-    "highestCurrent", "lowestCurrent", "lowestAverage", "averageBelow",
-    "maximumAbove", "maximumBelow", "minimumAbove", "minimumBelow",
-    "timeStack",
-    "interpolate", "aliasByMetric", "substr", "averageOutsidePercentile",
-    "group", "groupByNodes", "weightedAverage",
-    "smartSummarize", "delay", "minMax", "integralByInterval",
-    "exponentialMovingAverage",
-    "sumSeriesWithWildcards", "averageSeriesWithWildcards",
-    "add", "sigmoid", "exp", "roundFunction",
-    "identity", "timeFunction", "sinFunction",
-    "seriesByTag", "groupByTags", "aliasByTags",
-    "filterSeries", "highest", "lowest", "removeEmptySeries",
-    "aggregate", "aggregateWithWildcards", "multiplySeriesWithWildcards",
-    "movingWindow", "sortBy", "sortByMinima", "mostDeviant", "unique",
-    "divideSeriesLists", "sumSeriesLists", "diffSeriesLists",
-    "multiplySeriesLists", "aggregateSeriesLists",
-    "linearRegression", "timeSlice", "cumulative", "setXFilesFactor",
-    "aggregateLine", "threshold", "fallbackSeries",
-    "removeBetweenPercentile", "mapSeries", "reduceSeries",
-    "applyByNode", "useSeriesAbove", "powSeries", "logit",
-    "time", "sin",
-    "randomWalk", "randomWalkFunction", "events",
-    "verticalLine", "compressPeriodicGaps", "aliasQuery") ++
-    HoltWintersFuncs ++ PresentationFuncs
-
   /** graphite's threshold selectors as `filterSeries(series, stat, op, n)`:
     * the mean and the current value keep a series that ties the
     * threshold, the extremes compare strictly.
@@ -166,6 +213,31 @@ object RenderTarget {
     "maximumAbove" -> ("max", ">"), "maximumBelow" -> ("max", "<"),
     "minimumAbove" -> ("min", ">"), "minimumBelow" -> ("min", "<"))
 
+  /** Every function name the grammar parses: the tables' and the named
+    * sets' entries, and the functions that keep their own `eval` arm.
+    */
+  private val Funcs = CombineFuncs ++ MovingFuncs ++ HoltWintersFuncs ++
+    Passthrough ++ SeriesArgFuncs ++ Pointwise.keySet ++ Renames.keySet ++
+    ThresholdAliases.keySet ++ Set(
+    "perSecond", "derivative", "nonNegativeDerivative", "integral",
+    "integralByInterval", "keepLastValue", "interpolate", "changed", "delay",
+    "movingWindow", "exponentialMovingAverage",
+    "summarize", "smartSummarize", "hitcount", "timeShift", "timeStack",
+    "timeSlice", "linearRegression", "offsetToZero", "minMax",
+    "aggregateLine", "nPercentile", "removeBelowPercentile",
+    "removeAbovePercentile", "percentileOfSeries", "asPercent",
+    "groupByNode", "groupByNodes", "groupByTags", "aggregate",
+    "aggregateWithWildcards", "sumSeriesWithWildcards",
+    "averageSeriesWithWildcards", "multiplySeriesWithWildcards",
+    "weightedAverage", "reduceSeries", "applyByNode",
+    "highest", "lowest", "highestMax", "highestAverage", "lowestAverage",
+    "highestCurrent", "lowestCurrent", "mostDeviant", "filterSeries",
+    "removeEmptySeries", "averageOutsidePercentile",
+    "removeBetweenPercentile", "useSeriesAbove", "limit", "sortByMinima",
+    "exclude", "grep", "seriesByTag", "aliasQuery", "compressPeriodicGaps",
+    "constantLine", "threshold", "identity", "timeFunction", "time",
+    "sinFunction", "sin", "randomWalk", "randomWalkFunction", "events",
+    "verticalLine")
   /** Parse a target string. Globs may contain commas only inside
     * braces (graphite's own constraint), so argument splitting tracks
     * brace/paren depth.
@@ -514,11 +586,8 @@ object RenderTarget {
   def historyExtS(e: Expr, spp: Int, fromS: Long = 0L, untilS: Long = 0L,
       tz: java.time.ZoneId = java.time.ZoneOffset.UTC): Long = e match {
     case Leaf(_) => 0L
-    case Call(f, Seq(c), args) if MovingFuncs(f) =>
-      historyExtS(c, spp, fromS, untilS, tz) + windowPts(args.head, stepS(c, spp)) * stepS(c, spp)
-    case Call("movingWindow", Seq(c), args) =>
-      historyExtS(c, spp, fromS, untilS, tz) + windowPts(args.head, stepS(c, spp)) * stepS(c, spp)
-    case Call("exponentialMovingAverage", Seq(c), args) =>
+    case Call(f, Seq(c), args)
+        if MovingFuncs(f) || f == "movingWindow" || f == "exponentialMovingAverage" =>
       historyExtS(c, spp, fromS, untilS, tz) + windowPts(args.head, stepS(c, spp)) * stepS(c, spp)
     case Call(f, Seq(c), args) if HoltWintersFuncs(f) =>
       // bootstrap rounded UP to the child's step: a non-multiple (e.g.
@@ -687,6 +756,9 @@ object RenderTarget {
       case _ => summarizeAgg(func, c, lastBy)
     }
 
+  /** The per-series ordered window: each series' rows by bucket. */
+  private val bySeries = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
+
   /** Shared counter-delta kernel for nonNegativeDerivative/perSecond:
     * per-series lag; None on gaps; a decrease is None UNLESS `maxValue`
     * is given, in which case it is a counter wrap and the recovered
@@ -696,8 +768,6 @@ object RenderTarget {
     */
   private def counterDelta(df: DataFrame, maxValue: Option[Double],
       div: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
     val delta = maxValue match {
       case None =>
         when(col("value") >= col("prev"), col("value") - col("prev"))
@@ -709,7 +779,7 @@ object RenderTarget {
           .when(col("value") >= col("prev"), col("value") - col("prev"))
           .when(col("prev") <= mx, lit(mx) - col("prev") + col("value") + 1)
     }
-    df.withColumn("prev", lag(col("value"), 1).over(w))
+    df.withColumn("prev", lag(col("value"), 1).over(bySeries))
       .withColumn("value",
         when(col("value").isNotNull && col("prev").isNotNull,
           round(delta / div, 6)))
@@ -741,6 +811,16 @@ object RenderTarget {
           round(aggregate(col("vs"), lit(1.0),
             (acc, x) => acc * x.getField("value")), 6))
           .as("value"))
+
+  /** One series per `key` and bucket: the named aggregate `func` over
+    * the bucket's members, beside any `more` aggregates. Shared by
+    * groupByNode(s), groupByTags, aggregate and aggregateWithWildcards.
+    */
+  private def reduceBy(df: DataFrame, key: Column, func: String,
+      more: Column*): DataFrame =
+    df.groupBy(key.as("metric"), col("bucket_ts"))
+      .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6).as("value"),
+        more: _*)
 
   /** A window argument that is either an integer POINT COUNT or a
     * quoted DURATION ('5min') converted to points at the series step —
@@ -932,6 +1012,13 @@ object RenderTarget {
   /** Evaluate a target over the points table for `[from, until]` at the
     * base resolution `spp`. Output: `(metric, bucket_ts, value)` ordered,
     * trimmed to the coarse bucket containing `from` per the final step.
+    *
+    * Most per-series functions are table entries with one `eval` arm per
+    * table: [[Pointwise]] maps each value, [[Renames]] each name, and
+    * [[Passthrough]] returns its child. Member combines evaluate their
+    * members through `members` (one shared step, one gathered union);
+    * per-(key, bucket) named aggregates go through [[reduceBy]], and
+    * per-series ordered windows through [[bySeries]].
     */
   def evaluate(
       spark: SparkSession,
@@ -946,7 +1033,6 @@ object RenderTarget {
       // in the REQUEST zone, exactly like the from/until facade
       // ([[AtTime]]). UTC default keeps every existing call unchanged.
       tz: java.time.ZoneId = java.time.ZoneOffset.UTC): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val expr0 = parse(target)
     val (fromI, untilI) = Fetch.requestWindow(fromS, untilS, spp)
     val extFromI = fromI - historyExtS(expr0, spp, fromS, untilS, tz)
@@ -1038,6 +1124,17 @@ object RenderTarget {
       stats.orderBy(if (highest) col("stat_v").desc_nulls_last
         else col("stat_v").asc_nulls_last, col("metric")).limit(n)
 
+    // the member series of `f` side by side, each first passed through
+    // `each` with its position; members must share one step
+    def members(f: String, cs: Seq[Expr],
+        each: (DataFrame, Int) => DataFrame = (df, _) => df): (DataFrame, Long) = {
+      val evald = cs.map(eval)
+      val steps = evald.map(_._2).distinct
+      require(steps.size == 1,
+        s"$f: member series must share one step (got ${steps.mkString(", ")})")
+      (gathered(evald.map(_._1).zipWithIndex.map(each.tupled)), steps.head)
+    }
+
     // (dense series frame, step): every bucket of the node's grid has a
     // row; gaps are NULL values — graphite's None
     def eval(e: Expr): (DataFrame, Long) = e match {
@@ -1060,10 +1157,9 @@ object RenderTarget {
         val (df, step) = eval(c)
         val n = windowPts(args.head, step).toInt
         require(n > 0, s"$f window must be positive")
-        val base = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
         val w =
-          if (f == "stdev") base.rowsBetween(-(n - 1), Window.currentRow)
-          else base.rowsBetween(-n, -1)
+          if (f == "stdev") bySeries.rowsBetween(-(n - 1), Window.currentRow)
+          else bySeries.rowsBetween(-n, -1)
         val v = f match {
           case "movingAverage" => avg(col("value"))
           case "movingSum" => sum(col("value"))
@@ -1119,11 +1215,7 @@ object RenderTarget {
         // is dense. Aggregates skip None natively (all-None → None);
         // countSeries counts MEMBERS per bucket — graphite's constant
         // number-of-series line, None members included.
-        val evald = cs.map(eval)
-        val steps = evald.map(_._2).distinct
-        require(steps.size == 1,
-          s"$f: member series must share one step (got ${steps.mkString(", ")})")
-        val df = gathered(evald.map(_._1))
+        val (df, step) = members(f, cs)
         val v = f match {
           // sum of 6-decimal member values: 7th decimal is zero, never a
           // round-half midpoint — the unordered sum is safe as-is
@@ -1139,8 +1231,7 @@ object RenderTarget {
           case "stddevSeries" => round(stddev_pop(col("value")), 6)
         }
         (df.groupBy(col("bucket_ts")).agg(v.as("value"))
-          .select(lit(f).as("metric"), col("bucket_ts"), col("value")),
-          steps.head)
+          .select(lit(f).as("metric"), col("bucket_ts"), col("value")), step)
       case Call("divideSeries", Seq(num, den), _) =>
         // graphite requires a ONE-series divisor; statically demand a
         // combine so the contract is visible in the target string
@@ -1169,18 +1260,7 @@ object RenderTarget {
         val n = args.head.toInt
         val func = args.lift(1).getOrElse("avg")
         val (df, step) = eval(c)
-        (df.groupBy(nodeAt(split(col("metric"), "\\."), n).as("metric"),
-            col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
-            .as("value")), step)
-      case Call("aliasByNode", Seq(c), args) =>
-        // aliasByNode(seriesList, *nodes): ALL node indices join with
-        // '.'; nodes use Python list semantics (-1 is the LAST dot-node)
-        val nodes = args.map(_.toInt)
-        val (df, step) = eval(c)
-        val parts = split(col("metric"), "\\.")
-        (df.withColumn("metric",
-          concat_ws(".", nodes.map(nodeAt(parts, _)): _*)), step)
+        (reduceBy(df, nodeAt(split(col("metric"), "\\."), n), func), step)
       // graphite's pure selector aliases, each rewritten onto its
       // general form
       case Call(f @ ("highestMax" | "highestAverage" | "lowestAverage"), Seq(c), args) =>
@@ -1206,27 +1286,19 @@ object RenderTarget {
           else (floor(col("bucket_ts") / iv) * iv).cast("long").as("bucket_ts")
         (df.groupBy(col("metric"), bucket)
           .agg(round(summarizeAggOrdered(func, col("value"), lastInSeries), 6).as("value")), iv)
-      // ------------------------------------------ pointwise transforms:
-      // None propagates through null arithmetic for free; each keeps the
-      // child's grid and step, so they fuse into the child's projection
-      // under whole-stage codegen (no extra shuffle or window).
-      case Call("scale", Seq(c), args) =>
-        val k = args.head.toDouble
+      case Call(f, Seq(c), args) if Pointwise.contains(f) =>
         val (df, step) = eval(c)
-        (df.withColumn("value", round(col("value") * k, 6)), step)
-      case Call("offset", Seq(c), args) =>
-        val k = args.head.toDouble
+        (df.withColumn("value", Pointwise(f)(args, step)), step)
+      case Call(f, Seq(c), args) if Renames.contains(f) =>
         val (df, step) = eval(c)
-        (df.withColumn("value", round(col("value") + k, 6)), step)
-      case Call("absolute", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value", abs(col("value"))), step)
+        (df.withColumn("metric", Renames(f)(args)), step)
+      case Call(f, Seq(c), _) if Passthrough(f) =>
+        eval(c)
       case Call("derivative", Seq(c), _) =>
         // plain successive difference — unlike perSecond: no /step, and
         // no counter-reset rule (negative diffs pass through)
         val (df, step) = eval(c)
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-        (df.withColumn("prev", lag(col("value"), 1).over(w))
+        (df.withColumn("prev", lag(col("value"), 1).over(bySeries))
           .withColumn("value",
             when(col("value").isNotNull && col("prev").isNotNull,
               round(col("value") - col("prev"), 6)))
@@ -1243,8 +1315,7 @@ object RenderTarget {
         // running per-series total; accumulation skips None (native
         // null-skipping sum) and None points stay None in the output
         val (df, step) = eval(c)
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val w = bySeries.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         (df.withColumn("value",
             when(col("value").isNotNull, round(sum(col("value")).over(w), 6)))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
@@ -1259,8 +1330,7 @@ object RenderTarget {
         val limit = args.headOption.map(_.toLong).getOrElse(Long.MaxValue)
         require(limit > 0, "keepLastValue limit must be positive")
         val (df, step) = eval(c)
-        val wCum = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val wCum = bySeries.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wRun = Window.partitionBy(col("metric"), col("run_id"))
         (df.withColumn("run_id", count(col("value")).over(wCum))
           .withColumn("bridged", last(col("value"), ignoreNulls = true).over(wCum))
@@ -1271,22 +1341,6 @@ object RenderTarget {
               .when(col("run_id") > 0 && col("run_nulls") <= limit,
                 col("bridged")))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("transformNull", Seq(c), args) =>
-        val dflt = args.headOption.map(_.toDouble).getOrElse(0.0)
-        val (df, step) = eval(c)
-        (df.withColumn("value", coalesce(col("value"), lit(dflt))), step)
-      case Call("removeBelowValue", Seq(c), args) =>
-        // datapoints below n become None (the series stays on the grid)
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        (df.withColumn("value", when(col("value") >= n, col("value"))), step)
-      case Call("removeAboveValue", Seq(c), args) =>
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        (df.withColumn("value", when(col("value") <= n, col("value"))), step)
-      case Call("alias", Seq(c), args) =>
-        val (df, step) = eval(c)
-        (df.withColumn("metric", lit(args.head)), step)
       case Call("hitcount", Seq(c), args) =>
         // values are rates (hits per second) — re-bucket to TOTAL hits
         // per interval: sum(value × step), epoch-aligned buckets (the
@@ -1299,58 +1353,22 @@ object RenderTarget {
         (df.groupBy(col("metric"),
             (floor(col("bucket_ts") / iv) * iv).cast("long").as("bucket_ts"))
           .agg(round(sum(col("value") * step), 6).as("value")), iv)
-      case Call("diffSeries", cs, _) if cs.size >= 2 =>
+      case Call(f @ "diffSeries", cs, _) if cs.size >= 2 =>
         // series 1 minus the rest: tag member 0 positive, the rest
         // negated, then one null-skipping per-bucket sum — graphite's
         // rule (None counts as 0 unless EVERY member is None) for free
-        val evald = cs.map(eval)
-        val steps = evald.map(_._2).distinct
-        require(steps.size == 1,
-          s"diffSeries: member series must share one step (got ${steps.mkString(", ")})")
-        val tagged = evald.zipWithIndex.map { case ((df, _), i) =>
-          df.withColumn("value", if (i == 0) col("value") else -col("value"))
-        }
-        (gathered(tagged)
-          .groupBy(col("bucket_ts")).agg(round(sum(col("value")), 6).as("value"))
-          .select(lit("diffSeries").as("metric"), col("bucket_ts"), col("value")),
-          steps.head)
-      case Call("multiplySeries", cs, _) =>
+        val (df, step) = members(f, cs, (df, i) =>
+          df.withColumn("value", if (i == 0) col("value") else -col("value")))
+        (df.groupBy(col("bucket_ts")).agg(round(sum(col("value")), 6).as("value"))
+          .select(lit("diffSeries").as("metric"), col("bucket_ts"), col("value")), step)
+      case Call(f @ "multiplySeries", cs, _) =>
         // per-bucket product across members; no product aggregate in
         // Spark, so collect the (member-count-bounded) values and fold.
         // Graphite's safeMul is STRICT: any None member makes the
         // bucket None (unlike the None-as-0 sum family) — the
         // known-vs-total guard enforces it
-        val evald = cs.map(eval)
-        val steps = evald.map(_._2).distinct
-        require(steps.size == 1,
-          s"multiplySeries: member series must share one step (got ${steps.mkString(", ")})")
-        val u = gathered(evald.map(_._1))
-        (strictProduct(u, Seq(col("bucket_ts")), lit("multiplySeries")),
-          steps.head)
-      // --------------------------------------- pointwise math tier:
-      case Call("logarithm", Seq(c), args) =>
-        val base = args.headOption.map(_.toDouble).getOrElse(10.0)
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          when(col("value") > 0, round(log(base, col("value")), 6))), step)
-      case Call("pow", Seq(c), args) =>
-        val n = args.head.toDouble
-        val (df, step) = eval(c)
-        (df.withColumn("value", round(pow(col("value"), n), 6)), step)
-      case Call("squareRoot", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          when(col("value") >= 0, round(sqrt(col("value")), 6))), step)
-      case Call("invert", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          when(col("value") =!= 0, round(lit(1.0) / col("value"), 6))), step)
-      case Call("scaleToSeconds", Seq(c), args) =>
-        // per-step values re-expressed per N seconds: × N/step — the
-        // unit-conversion sibling of scale that tracks the series step
-        val sec = args.head.toDouble
-        val (df, step) = eval(c)
-        (df.withColumn("value", round(col("value") * (sec / step), 6)), step)
+        val (df, step) = members(f, cs)
+        (strictProduct(df, Seq(col("bucket_ts")), lit("multiplySeries")), step)
       case Call("offsetToZero", Seq(c), _) =>
         // shift each series down by its own displayed-window minimum —
         // per-series one-row frame, broadcast back
@@ -1358,16 +1376,11 @@ object RenderTarget {
         (withShownStats(df, step, min(col("value")).as("min_v"))
           .withColumn("value", round(col("value") - col("min_v"), 6))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("isNonNull", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          when(col("value").isNotNull, 1.0).otherwise(0.0)), step)
       case Call("changed", Seq(c), _) =>
         // 1 where the value differs from the previous KNOWN-pair point,
         // else 0 (graphite: None on either side compares unchanged)
         val (df, step) = eval(c)
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-        (df.withColumn("prev", lag(col("value"), 1).over(w))
+        (df.withColumn("prev", lag(col("value"), 1).over(bySeries))
           .withColumn("value",
             when(col("value").isNotNull && col("prev").isNotNull &&
               col("value") =!= col("prev"), 1.0).otherwise(0.0))
@@ -1440,10 +1453,7 @@ object RenderTarget {
         require(nodes.nonEmpty, "groupByNodes needs at least one node index")
         val (df, step) = eval(c)
         val parts = split(col("metric"), "\\.")
-        val key = concat_ws(".", nodes.map(n => nodeAt(parts, n)): _*)
-        (df.groupBy(key.as("metric"), col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
-            .as("value")), step)
+        (reduceBy(df, concat_ws(".", nodes.map(n => nodeAt(parts, n)): _*), func), step)
       case Call("weightedAverage", Seq(cv, cw), args) =>
         // ONE output series: Σ(value·weight)/Σ(weight) per bucket, the
         // value and weight series paired by the n-th dot-node of their
@@ -1540,31 +1550,7 @@ object RenderTarget {
         val key = concat(
           substring_index(col("metric"), ";", 1) +:
             tags.flatMap(t => Seq(lit(s";$t="), tagValue(t))): _*)
-        (df.groupBy(key.as("metric"), col("bucket_ts"))
-          .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
-            .as("value")), step)
-      case Call("aliasByTags", Seq(c), args) =>
-        require(args.nonEmpty, "aliasByTags needs at least one tag")
-        val (df, step) = eval(c)
-        (df.withColumn("metric", concat_ws(".", args.map(tagValue): _*)), step)
-      case Call("add", Seq(c), args) =>
-        // graphite's literal-addition alias of offset
-        eval(Call("offset", Seq(c), args))
-      case Call("sigmoid", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          round(lit(1.0) / (lit(1.0) + org.apache.spark.sql.functions.exp(-col("value"))), 6)), step)
-      case Call("exp", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          round(org.apache.spark.sql.functions.exp(col("value")), 6)), step)
-      case Call("roundFunction", Seq(c), args) =>
-        // graphite's round(seriesList, precision); our frame already
-        // carries 6-place rounding, so precision is capped there
-        val prec = args.headOption.map(_.toInt).getOrElse(0)
-        require(prec >= 0 && prec <= 6, "roundFunction precision must be in [0, 6]")
-        val (df, step) = eval(c)
-        (df.withColumn("value", round(col("value"), prec)), step)
+        (reduceBy(df, key, func), step)
       case Call(f @ ("identity" | "timeFunction" | "time"), Seq(Leaf(name)), _) =>
         // the timestamp generator: value = bucket_ts on the request
         // grid (the quoted series name arrives as a quoted Leaf —
@@ -1605,8 +1591,7 @@ object RenderTarget {
         val i = ((col("bucket_ts") - param(genFrom)) / stepArg).cast("long")
         val h1 = (lit(48271L) * ((lit(seed) + i) % m)) % m
         val h2 = (lit(48271L) * h1) % m
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(Window.unboundedPreceding, -1)
+        val w = bySeries.rowsBetween(Window.unboundedPreceding, -1)
         (Buckets.grid(spark, genFrom, untilI, stepArg)
           .select(lit(unquote(name)).as("metric"), col("bucket_ts"),
             (h2.cast("double") / m - 0.5).as("inc"))
@@ -1650,8 +1635,7 @@ object RenderTarget {
         // moves buckets; delay moves values — leading slots go None)
         val n = args.head.toInt
         val (df, step) = eval(c)
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-        (df.withColumn("value", lag(col("value"), n).over(w)), step)
+        (df.withColumn("value", lag(col("value"), n).over(bySeries)), step)
       case Call("minMax", Seq(c), _) =>
         // per-series [0,1] normalisation over the displayed window;
         // a flat series maps to 0 (graphite's zero-range rule)
@@ -1718,10 +1702,8 @@ object RenderTarget {
         val limit = args.headOption.map(_.toLong).getOrElse(Long.MaxValue)
         require(limit > 0, "interpolate limit must be positive")
         val (df, step) = eval(c)
-        val wB = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wF = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        val wB = bySeries.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val wF = bySeries.rowsBetween(Window.currentRow, Window.unboundedFollowing)
         val knownTs = when(col("value").isNotNull, col("bucket_ts"))
         (df
           .withColumn("pv", last(col("value"), ignoreNulls = true).over(wB))
@@ -1738,24 +1720,6 @@ object RenderTarget {
                 Buckets.round6(col("pv") + (col("nv") - col("pv")) *
                   (col("bucket_ts") - col("pt")) / (col("nt") - col("pt")))))
           .select(col("metric"), col("bucket_ts"), col("value")), step)
-      case Call("aliasByMetric", Seq(c), _) =>
-        val (df, step) = eval(c)
-        (df.withColumn("metric",
-          element_at(split(col("metric"), "\\."), -1)), step)
-      case Call("substr", Seq(c), args) =>
-        // metric node slice [start, stop) — stop 0 (or absent) = to the
-        // end, graphite's path-trimming helper
-        val start = args.headOption.map(_.toInt).getOrElse(0)
-        val stop = args.lift(1).map(_.toInt).getOrElse(0)
-        require(start >= 0 && stop >= 0 && (stop == 0 || stop > start),
-          s"substr needs 0 <= start < stop (or stop 0 for end)")
-        val (df, step) = eval(c)
-        val parts = split(col("metric"), "\\.")
-        val sliceLen =
-          if (stop == 0) greatest(size(parts) - start, lit(0))
-          else lit(stop - start)
-        (df.withColumn("metric",
-          array_join(slice(parts, lit(start + 1), sliceLen), ".")), step)
       case Call(f @ "averageOutsidePercentile", Seq(c), args) =>
         // keep series whose displayed-window average falls OUTSIDE the
         // [100−n, n] percentile band of all the averages — the outlier
@@ -1779,14 +1743,6 @@ object RenderTarget {
       case Call("grep", Seq(c), args) =>
         val (df, step) = eval(c)
         (df.filter(col("metric").rlike(args.head)), step)
-      case Call("aliasSub", Seq(c), args) =>
-        // the replacement is PYTHON re.sub syntax in graphite (\1 =
-        // backreference) — route through pyReplacement like aliasQuery,
-        // or Java's replaceAll reads \1 as a literal '1' and throws on
-        // a bare '$'
-        val (df, step) = eval(c)
-        (df.withColumn("metric",
-          regexp_replace(col("metric"), args(0), pyReplacement(args(1)))), step)
       case Call("asPercent", cs, args) =>
         // one-series-list form: each member as a percent of the
         // per-bucket total across ALL members; explicit-total form:
@@ -1852,12 +1808,6 @@ object RenderTarget {
         val n = countArg("limit", args)
         val (df, step) = eval(c)
         keep(df, step, df.select(col("metric")).distinct().orderBy(col("metric")).limit(n))
-      case Call("sortByMaxima" | "sortByTotal" | "sortByName" | "sortBy",
-          Seq(c), _) =>
-        // bare sort is presentational: the output contract already
-        // orders rows by (metric, bucket_ts); the selecting form is
-        // limit(sortByX(…)) above
-        eval(c)
       case Call("sortByMinima", Seq(c), _) =>
         // even bare, sortByMinima SELECTS: graphite drops series whose
         // maximum never goes positive before sorting
@@ -1994,17 +1944,6 @@ object RenderTarget {
         (df.join(broadcast(renamed), Seq("metric"))
           .select(col("metric_new").as("metric"), col("bucket_ts"),
             col("value")), step)
-      case Call(f, Seq(c), _) if PresentationFuncs(f) =>
-        // style-only: the data frame is unchanged
-        eval(c)
-      case Call("consolidateBy", Seq(c), _) =>
-        // annotation, not a transform: the consolidation function it
-        // names is read by [[consolidationOf]] when maxDataPoints
-        // consolidation applies (evaluateConsolidated)
-        eval(c)
-      case Call("xFilesFactor", Seq(c), _) =>
-        // annotation: read by [[xffOf]] at consolidation time
-        eval(c)
       case Call("timeShift", Seq(c), args) =>
         // value at t comes from t − delta; the delta was added to the
         // leaf's history extension by historyExtS, so the child grid
@@ -2050,18 +1989,13 @@ object RenderTarget {
                   col("value")), step)
             }
           case _ if xff > 0.0 =>
-            (df.groupBy(col("bucket_ts"))
-              .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6).as("cv"),
+            (reduceBy(df, lit(s"${func}Series"), func,
                 count(col("value")).as("kn"), count(lit(1)).as("tot"))
-              .select(lit(s"${func}Series").as("metric"), col("bucket_ts"),
-                when(col("kn").cast("double") >= col("tot") * xff, col("cv"))
+              .select(col("metric"), col("bucket_ts"),
+                when(col("kn").cast("double") >= col("tot") * xff, col("value"))
                   .as("value")), step)
           case _ =>
-            (df.groupBy(col("bucket_ts"))
-              .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
-                .as("value"))
-              .select(lit(s"${func}Series").as("metric"), col("bucket_ts"),
-                col("value")), step)
+            (reduceBy(df, lit(s"${func}Series"), func), step)
         }
       case Call(f @ ("sumSeriesWithWildcards" | "averageSeriesWithWildcards" |
           "multiplySeriesWithWildcards"), Seq(c), args) =>
@@ -2085,13 +2019,10 @@ object RenderTarget {
         val parts = split(col("metric"), "\\.")
         val kept = filter(parts, (_, i) =>
           positions.map(p => i =!= p).reduce(_ && _))
-        val key = array_join(kept, ".").as("metric")
+        val key = array_join(kept, ".")
         if (func == "multiply")
-          (strictProduct(df, Seq(key, col("bucket_ts")), col("metric")), step)
-        else
-          (df.groupBy(key, col("bucket_ts"))
-            .agg(round(summarizeAggOrdered(func, col("value"), lastAcrossSeries), 6)
-              .as("value")), step)
+          (strictProduct(df, Seq(key.as("metric"), col("bucket_ts")), col("metric")), step)
+        else (reduceBy(df, key, func), step)
       case Call("movingWindow", Seq(c), args) =>
         // the general trailing window: any named aggregator over the
         // last n points — the MovingFuncs family's umbrella (same
@@ -2102,8 +2033,7 @@ object RenderTarget {
         val func = args.lift(1).getOrElse("average")
         // graphite's movingWindow slice excludes the current point —
         // the same frame as the named moving* wrappers above
-        val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-          .rowsBetween(-n, -1)
+        val w = bySeries.rowsBetween(-n, -1)
         // `count` and `range` come out of summarizeAgg WRAPPED (a cast /
         // a subtraction); `.over` must attach to the aggregates
         // themselves, not the wrapper, or Catalyst sees a bare
@@ -2116,19 +2046,13 @@ object RenderTarget {
           case _ => summarizeAgg(func, col("value"), lastInSeries).over(w)
         }
         (df.withColumn("value", round(v, 6)), step)
-      case Call("unique", cs, _) if cs.nonEmpty =>
+      case Call(f @ "unique", cs, _) if cs.nonEmpty =>
         // union of the member lists keeping each series name ONCE —
         // first occurrence wins (list order = child order)
-        val evald = cs.map(eval)
-        val steps = evald.map(_._2).distinct
-        require(steps.size == 1,
-          s"unique: member series must share one step (got ${steps.mkString(", ")})")
-        val tagged = evald.map(_._1).zipWithIndex.map { case (df, i) =>
-          df.withColumn("src", lit(i)) }
-        val u = gathered(tagged)
+        val (u, step) = members(f, cs, (df, i) => df.withColumn("src", lit(i)))
         val firstSrc = u.groupBy(col("metric")).agg(min(col("src")).as("src"))
         (u.join(broadcast(firstSrc), Seq("metric", "src"), "left_semi")
-          .select(col("metric"), col("bucket_ts"), col("value")), steps.head)
+          .select(col("metric"), col("bucket_ts"), col("value")), step)
       case Call(f @ ("divideSeriesLists" | "sumSeriesLists" | "diffSeriesLists" |
           "multiplySeriesLists" | "aggregateSeriesLists"), Seq(ca, cb), args) =>
         // pairwise by POSITION: the i-th series of each list (name
@@ -2284,10 +2208,6 @@ object RenderTarget {
           .filter(col("value").isNotNull &&
             !(col("value") > col("lo_v") && col("value") < col("hi_v")))
           .select(col("metric")).distinct())
-      case Call("mapSeries", Seq(c), _) =>
-        // grouping annotation: reduceSeries below reads the node
-        // structure off the names directly, so the map is the identity
-        eval(c)
       case Call("reduceSeries", Seq(c), args) =>
         // reduceSeries(mapSeries(list, …), 'func', reduceNode, m1, m2):
         // within each series group agreeing on every node EXCEPT
@@ -2396,16 +2316,12 @@ object RenderTarget {
             java.util.regex.Matcher.quoteReplacement(replace)).as("metric"))
         (densify(sharedAgg.join(broadcast(rewritten), Seq("metric"), "left_semi")),
           spp.toLong)
-      case Call("powSeries", cs, _) if cs.nonEmpty =>
+      case Call(f @ "powSeries", cs, _) if cs.nonEmpty =>
         // left-fold power across members in name order (graphite's
         // safePow reduce) — strict like multiplySeries: any None member
         // makes the bucket None. Name-sorted struct array, fold from
         // the head.
-        val evald = cs.map(eval)
-        val steps = evald.map(_._2).distinct
-        require(steps.size == 1,
-          s"powSeries: member series must share one step (got ${steps.mkString(", ")})")
-        val u = gathered(evald.map(_._1))
+        val (u, step) = members(f, cs)
         (u.groupBy(col("bucket_ts"))
           .agg(sort_array(collect_list(struct(col("metric").as("m"),
             col("value").as("v")))).as("vs"),
@@ -2415,21 +2331,7 @@ object RenderTarget {
               round(aggregate(
                 expr("slice(vs, 2, size(vs) - 1)"),
                 element_at(col("vs"), 1).getField("v"),
-                (acc, x) => pow(acc, x.getField("v"))), 6)).as("value")),
-          steps.head)
-      case Call("logit", Seq(c), _) =>
-        // ln(v / (1−v)); outside (0, 1) graphite emits None
-        val (df, step) = eval(c)
-        (df.withColumn("value",
-          when(col("value") > 0 && col("value") < 1,
-            round(log(col("value") / (lit(1.0) - col("value"))), 6))), step)
-      case Call("cumulative", Seq(c), _) =>
-        // annotation: consolidateBy('sum') sugar, read by
-        // [[consolidationOf]] at maxDataPoints-consolidation time
-        eval(c)
-      case Call("setXFilesFactor", Seq(c), _) =>
-        // annotation: read by [[xffOf]] at consolidation time
-        eval(c)
+                (acc, x) => pow(acc, x.getField("v"))), 6)).as("value")), step)
       case Call(f, _, _) =>
         throw new IllegalArgumentException(s"unsupported render function '$f'")
     }

@@ -28,7 +28,7 @@ class CoreOpsSpec extends AnyFunSuite {
   }
 
   test("denseSeries length == (until' - from')/step and gaps are NULL") {
-    val df = Fetch.denseSeries(spark, pts(("m", 65L, 1.0), ("m", 200L, 4.0)),
+    val df = Fetch.denseSeries(pts(("m", 65L, 1.0), ("m", 200L, 4.0)),
       "m", 0L, 600L, 60)
     val rows = df.collect()
     assert(rows.length == 10) // (660-60)/60
@@ -44,13 +44,13 @@ class CoreOpsSpec extends AnyFunSuite {
   test("denseSeries excludes the bucket containing `from`, includes `until`'s") {
     // point in bucket 0 (ts 30) must NOT appear for from=0 (fromInterval=60);
     // until=119 lives in bucket 60, which is the last bucket returned.
-    val df = Fetch.denseSeries(spark, pts(("m", 30L, 9.0), ("m", 70L, 2.0)),
+    val df = Fetch.denseSeries(pts(("m", 30L, 9.0), ("m", 70L, 2.0)),
       "m", 0L, 119L, 60)
     val rows = df.collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(60L))
     assert(rows(0).getDouble(1) == 2.0)
     // aligned until=120 extends the series by one (empty) bucket
-    val rows2 = Fetch.denseSeries(spark, pts(("m", 30L, 9.0), ("m", 70L, 2.0)),
+    val rows2 = Fetch.denseSeries(pts(("m", 30L, 9.0), ("m", 70L, 2.0)),
       "m", 0L, 120L, 60).collect()
     assert(rows2.map(_.getLong(0)).toSeq == Seq(60L, 120L))
     assert(rows2(1).isNullAt(1))
@@ -245,7 +245,7 @@ class CoreOpsSpec extends AnyFunSuite {
   test("denseSeries: a range inside one step bucket returns that bucket") {
     // whisper fetch: fromInterval == untilInterval → untilInterval +=
     // step ("always include the next point"), never an empty series
-    val df = Fetch.denseSeries(spark, pts(("m", 125L, 4.0)), "m",
+    val df = Fetch.denseSeries(pts(("m", 125L, 4.0)), "m",
       100L, 110L, 60).collect()
     assert(df.map(_.getLong(0)).toSeq == Seq(120L))
     assert(df(0).getDouble(1) == 4.0)
@@ -263,7 +263,7 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(f2 == 120L && u2 == 240L)
     // end-to-end: a pre-restricted equal-interval fetch keeps the value
     val pre = pts(("m", 125L, 4.0)).filter(col("ts_s") >= f && col("ts_s") < u)
-    val df = Fetch.denseSeries(spark, pre, "m", 100L, 110L, 60).collect()
+    val df = Fetch.denseSeries(pre, "m", 100L, 110L, 60).collect()
     assert(df.map(_.getLong(0)).toSeq == Seq(120L) && df(0).getDouble(1) == 4.0)
   }
 
@@ -271,12 +271,12 @@ class CoreOpsSpec extends AnyFunSuite {
   // => frame) over `p` at a 60 s step; each frame has bucket_ts and value
   private def windowed(p: org.apache.spark.sql.DataFrame)
       : Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame)] = Seq(
-    "denseSeries" -> ((f, u) => Fetch.denseSeries(spark, p, "m.a", f, u, 60)),
-    "summarizeSeries" -> ((f, u) => Fetch.summarizeSeries(spark, p, f, u, 60, 60)),
-    "consolidateSeries" -> ((f, u) => Fetch.consolidateSeries(spark, p, f, u, 60, 1)),
-    "sumSeries" -> ((f, u) => Fetch.sumSeries(spark, p, f, u, 60)),
-    "perSecondSeries" -> ((f, u) => Fetch.perSecondSeries(spark, p, f, u, 60)),
-    "movingAverageSeries" -> ((f, u) => Fetch.movingAverageSeries(spark, p, f, u, 60, 1)),
+    "denseSeries" -> ((f, u) => Fetch.denseSeries(p, "m.a", f, u, 60)),
+    "summarizeSeries" -> ((f, u) => Fetch.summarizeSeries(p, f, u, 60, 60)),
+    "consolidateSeries" -> ((f, u) => Fetch.consolidateSeries(p, f, u, 60, 1)),
+    "sumSeries" -> ((f, u) => Fetch.sumSeries(p, f, u, 60)),
+    "perSecondSeries" -> ((f, u) => Fetch.perSecondSeries(p, f, u, 60)),
+    "movingAverageSeries" -> ((f, u) => Fetch.movingAverageSeries(p, f, u, 60, 1)),
     "evaluate(m.*)" -> ((f, u) => RenderTarget.evaluate(spark, p, "m.*", f, u, 60)),
     "evaluate(sumSeries(m.*))" ->
       ((f, u) => RenderTarget.evaluate(spark, p, "sumSeries(m.*)", f, u, 60)))
@@ -368,7 +368,7 @@ class CoreOpsSpec extends AnyFunSuite {
     // window [0, 1200): fetch minutes 60..1200; interval 600 → epoch
     // buckets 0 (minutes 60..540 — PARTIAL: excludes the from-bucket 0),
     // 600 (minutes 600..1140) and 1200 (minute 1200 only).
-    val df = Fetch.summarizeSeries(spark,
+    val df = Fetch.summarizeSeries(
       pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 650L, 10.0), ("m", 1205L, 7.0)),
       0L, 1200L, 60, 600)
     val rows = df.collect()
@@ -378,7 +378,7 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(rows(1).getDouble(2) == 10.0)
     assert(rows(2).getDouble(2) == 7.0)
     // a metric with no points in a coarse bucket gets NULL, not 0
-    val gap = Fetch.summarizeSeries(spark, pts(("m", 65L, 1.0), ("m", 1205L, 7.0)),
+    val gap = Fetch.summarizeSeries(pts(("m", 65L, 1.0), ("m", 1205L, 7.0)),
       0L, 1200L, 60, 600).collect()
     assert(gap(1).isNullAt(2))
   }
@@ -386,7 +386,7 @@ class CoreOpsSpec extends AnyFunSuite {
   test("summarizeSeries sums the fetched averages, not the raw points") {
     // two raw points in ONE minute average to 2.0 first; summarize(sum)
     // must add 2.0 — graphite operates on the fetched series
-    val df = Fetch.summarizeSeries(spark, pts(("m", 65L, 1.0), ("m", 70L, 3.0)),
+    val df = Fetch.summarizeSeries(pts(("m", 65L, 1.0), ("m", 70L, 3.0)),
       0L, 600L, 60, 600).collect()
     // aligned until=600 includes minute 600 → an empty trailing bucket
     assert(df.map(_.getLong(1)).toSeq == Seq(0L, 600L))
@@ -397,7 +397,7 @@ class CoreOpsSpec extends AnyFunSuite {
   test("consolidateSeries: origin-aligned groups, factor from maxDataPoints") {
     // 10 minutes at 60 s = 10 points, budget 4 → factor 3, groups 4 of
     // step 180 starting at fromI=60 (NOT epoch-aligned: 60, 240, 420, 600)
-    val df = Fetch.consolidateSeries(spark,
+    val df = Fetch.consolidateSeries(
       pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 250L, 8.0), ("m", 600L, 5.0)),
       0L, 600L, 60, 4)
     val rows = df.collect()
@@ -412,14 +412,14 @@ class CoreOpsSpec extends AnyFunSuite {
     val p = pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 250L, 8.0),
       ("m", 600L, 5.0))
     // 'max' consolidation over the same grid as the average test
-    val mx = Fetch.consolidateSeries(spark, p, 0L, 600L, 60, 4, func = "max")
+    val mx = Fetch.consolidateSeries(p, 0L, 600L, 60, 4, func = "max")
       .collect()
     assert(mx(0).getDouble(2) == 3.0 && mx(1).getDouble(2) == 8.0)
     assert(mx(2).isNullAt(2) && mx(3).getDouble(2) == 5.0)
     // xff 0.5: a 3-slot group needs ≥1.5 known → group 1 (2 known)
     // passes, group 2 (1 of 3) and the 1-slot tail (1 of 1) judge
     // against their own grid sizes
-    val gated = Fetch.consolidateSeries(spark, p, 0L, 600L, 60, 4,
+    val gated = Fetch.consolidateSeries(p, 0L, 600L, 60, 4,
       func = "avg", xff = 0.5).collect()
     assert(gated(0).getDouble(2) == 2.0)
     assert(gated(1).isNullAt(2)) // 1/3 known < 0.5
@@ -429,7 +429,7 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("sumSeries: cross-metric null-skipping sum, all-None bucket stays NULL") {
     // window [0, 180): buckets 60, 120. m1 covers both, m2 only 60.
-    val df = Fetch.sumSeries(spark,
+    val df = Fetch.sumSeries(
       pts(("m1", 65L, 1.0), ("m1", 125L, 4.0), ("m2", 70L, 2.0)),
       0L, 180L, 60).collect()
     assert(df.map(_.getLong(0)).toSeq == Seq(60L, 120L, 180L))
@@ -440,7 +440,7 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("perSecondSeries: rate over dense buckets, None on gap/reset/lead") {
     // m counter: 60→100, 120→160, 180 gap, 240→220 (RESET), 300→280
-    val df = Fetch.perSecondSeries(spark,
+    val df = Fetch.perSecondSeries(
       pts(("m", 65L, 100.0), ("m", 125L, 160.0), ("m", 245L, 220.0), ("m", 305L, 280.0)),
       0L, 300L, 60).collect()
     val v = df.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2)))
@@ -451,7 +451,7 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(v(3).isEmpty)          // predecessor None (gap breaks the pair)
     assert(v(4).contains(1.0))    // (280-220)/60
     // counter reset: v < prev → None, not a negative rate
-    val r2 = Fetch.perSecondSeries(spark,
+    val r2 = Fetch.perSecondSeries(
       pts(("m", 65L, 500.0), ("m", 125L, 20.0)), 0L, 120L, 60).collect()
     assert(r2(1).isNullAt(2))
   }
@@ -463,7 +463,7 @@ class CoreOpsSpec extends AnyFunSuite {
     // {60, 120} and bucket 240 sees {120, 180}. The point at ts 125
     // (bucket 120) is OUTSIDE the requested range but inside both
     // windows — graphite's extra-history fetch.
-    val df = Fetch.movingAverageSeries(spark,
+    val df = Fetch.movingAverageSeries(
       pts(("m", 125L, 6.0), ("m", 185L, 2.0), ("m", 245L, 10.0)),
       120L, 240L, 60, 2).collect()
     assert(df.map(_.getLong(1)).toSeq == Seq(180L, 240L))
@@ -473,7 +473,7 @@ class CoreOpsSpec extends AnyFunSuite {
     // output buckets 120, 180, 240: the 8.0@60 history point feeds
     // bucket 120's window (preceding {0, 60}); later windows with no
     // valid points stay None
-    val g = Fetch.movingAverageSeries(spark,
+    val g = Fetch.movingAverageSeries(
       pts(("m", 65L, 8.0)), 60L, 240L, 60, 2).collect()
     assert(g.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))).toSeq ==
       Seq(Some(8.0), Some(8.0), None))
@@ -481,9 +481,9 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("consolidateSeries under budget is the identity on the dense fetch") {
     val p = pts(("m", 65L, 1.0), ("m", 250L, 8.0))
-    val cons = Fetch.consolidateSeries(spark, p, 0L, 600L, 60, 100)
+    val cons = Fetch.consolidateSeries(p, 0L, 600L, 60, 100)
       .collect().map(r => (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-    val dense = Fetch.denseSeries(spark, p, "m", 0L, 600L, 60)
+    val dense = Fetch.denseSeries(p, "m", 0L, 600L, 60)
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
     assert(cons.toSeq == dense.toSeq)
   }

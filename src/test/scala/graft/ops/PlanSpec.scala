@@ -126,7 +126,7 @@ class PlanSpec extends AnyFunSuite {
       Buckets.FromS, Buckets.UntilS, 60)
     q.collect()
     val p = plan(q)
-    val scans = "Scan parquet".r.findAllIn(p).size
+    val scans = """\(\d+\) Scan parquet""".r.findAllIn(p).size
     assert(scans == 1 || p.contains("ReusedExchange") ||
       p.contains("ReusedQueryStage"),
       s"each leaf still scans the base table:\n$p")
@@ -147,7 +147,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters") && p.contains("LessThan(ts"),
       s"time bounds did not reach the canary's scan:\n$p")
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage") ||
-      "Scan parquet".r.findAllIn(p).size == 1,
+      """\(\d+\) Scan parquet""".r.findAllIn(p).size == 1,
       s"canary leaves stopped sharing the base scan:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"canary gained a non-broadcast join:\n$p")
@@ -209,7 +209,7 @@ class PlanSpec extends AnyFunSuite {
     q.collect()
     val p = plan(q)
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage") ||
-      "Scan parquet".r.findAllIn(p).size == 1,
+      """\(\d+\) Scan parquet""".r.findAllIn(p).size == 1,
       s"each prefix subtree still scans the base table:\n$p")
   }
 

@@ -125,7 +125,7 @@ class RenderTargetSpec extends AnyFunSuite {
       ("m.b", 65L, 7.0), ("m.b", 125L, 7.0))
     val viaTarget = RenderTarget.evaluate(spark, p, "perSecond(m.*)", 0L, 240L, 60)
       .collect().map(_.toString).toSeq
-    val direct = Fetch.perSecondSeries(spark, p, 0L, 240L, 60)
+    val direct = Fetch.perSecondSeries(p, 0L, 240L, 60)
       .collect().map(_.toString).toSeq
     assert(viaTarget == direct)
   }
@@ -509,6 +509,17 @@ class RenderTargetSpec extends AnyFunSuite {
       "averageSeriesWithWildcards(*.*.cpu, 0, 1)", 0L, 60L, 60).collect()
       .map(r => (r.getString(0), r.getDouble(2))).toSeq
     assert(aw == Seq(("cpu", 15.0)))
+    // the wildcard product is graphite's strict safeMul: a None member
+    // (dc2.web.cpu at 120) makes its bucket None
+    val pm = pts(("dc1.web.cpu", 65L, 10.0), ("dc2.web.cpu", 65L, 30.0),
+      ("dc1.web.cpu", 125L, 2.0), ("dc1.db.cpu", 65L, 5.0), ("dc1.db.cpu", 125L, 4.0))
+    for (t <- Seq("multiplySeriesWithWildcards(*.*.cpu, 0)",
+        "aggregateWithWildcards(*.*.cpu, 'multiply', 0)")) {
+      val rows = RenderTarget.evaluate(spark, pm, t, 0L, 120L, 60).collect()
+        .map(r => (r.getString(0), r.getLong(1), Option(r.get(2)))).toSeq
+      assert(rows == Seq(("db.cpu", 60L, Some(5.0)), ("db.cpu", 120L, Some(4.0)),
+        ("web.cpu", 60L, Some(300.0)), ("web.cpu", 120L, None)), t)
+    }
     def one(t: String) = RenderTarget.evaluate(spark,
       pts(("m.a", 65L, 2.0)), t, 0L, 60L, 60).collect().head
     assert(one("add(m.a, 5)").getDouble(2) == 7.0)
@@ -1318,7 +1329,17 @@ class RenderTargetSpec extends AnyFunSuite {
         ("highestCurrent(m.*)", "highestCurrent", "n"),
         ("limit(sortByMaxima(m.*))", "limit", "n"),
         ("nPercentile(m.*)", "nPercentile", "n"),
-        ("timeSlice(m.*)", "timeSlice", "startSliceAt"))) {
+        ("timeSlice(m.*)", "timeSlice", "startSliceAt"),
+        ("scale(m.*)", "scale", "factor"),
+        ("offset(m.*)", "offset", "factor"),
+        ("add(m.*)", "add", "constant"),
+        ("pow(m.*)", "pow", "factor"),
+        ("removeBelowValue(m.*)", "removeBelowValue", "n"),
+        ("removeAboveValue(m.*)", "removeAboveValue", "n"),
+        ("scaleToSeconds(m.*)", "scaleToSeconds", "seconds"),
+        ("alias(m.*)", "alias", "newName"),
+        ("aliasSub(m.*)", "aliasSub", "search"),
+        ("aliasSub(m.*, 'a')", "aliasSub", "replace"))) {
       val e = intercept[IllegalArgumentException](
         RenderTarget.evaluate(spark, p, target, 0L, 120L, 60))
       assert(e.getMessage == s"$f: missing argument '$arg'", target)

@@ -39,7 +39,7 @@ class SparkPropsSpec extends AnyFunSuite {
       val spp = Seq(10, 60, 300)(rng.nextInt(3))
       val from = rng.between(0L, 50000L)
       val until = from + rng.between(0L, 20000L)
-      val df = Fetch.denseSeries(spark, randomPts(rng, 200), "m", from, until, spp)
+      val df = Fetch.denseSeries(randomPts(rng, 200), "m", from, until, spp)
       val fromI = Buckets.fetchInterval(from, spp)
       val untilI = Buckets.fetchInterval(until, spp)
       assert(df.count() == (untilI - fromI) / spp)
@@ -139,8 +139,8 @@ class SparkPropsSpec extends AnyFunSuite {
       val iv = Seq(300, 600, 1800)(rng.nextInt(3))
       def tot(df: org.apache.spark.sql.DataFrame, c: String): Double =
         Option(df.agg(sum(c)).collect().head.get(0)).fold(0.0)(_.asInstanceOf[Double])
-      val coarse = Fetch.summarizeSeries(spark, pts, from, until, 60, iv)
-      val dense = Fetch.sumSeries(spark, pts, from, until, 60)
+      val coarse = Fetch.summarizeSeries(pts, from, until, 60, iv)
+      val dense = Fetch.sumSeries(pts, from, until, 60)
       // tolerance: each output bucket's round(…, 6) contributes ≤5e-7
       assert(math.abs(tot(coarse, "value") - tot(dense, "value")) < 1e-3)
     }
@@ -158,7 +158,7 @@ class SparkPropsSpec extends AnyFunSuite {
       val n = ((untilI - fromI) / 60).toInt
       val factor = math.max(1, (n + budget - 1) / budget)
       val groups = (n + factor - 1) / factor
-      val df = Fetch.consolidateSeries(spark, pts, from, until, 60, budget)
+      val df = Fetch.consolidateSeries(pts, from, until, 60, budget)
       val mets = df.select("metric").distinct().count()
       assert(df.count() == mets * groups)
       // every output bucket lands on the origin-aligned step' grid
