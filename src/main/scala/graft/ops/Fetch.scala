@@ -772,7 +772,10 @@ object Fetch {
 
   val fetchManySql: String = denseManySql(None)
 
-  // ------------------------------------- render-layer consolidation ops
+  // ------------------------------- graphite render fixtures (events.*)
+  // Each key renders a target string through RenderTarget.evaluate over
+  // the window's points; `*` matches exactly the five single-node event
+  // metrics, the set the oracle's `DISTINCT metric` yields.
 
   /** `summarize()` interval for the `fetch_summarize` key: 10 minutes
     * over the fixed 24 h fixture window → ≤145 coarse buckets/metric.
@@ -784,213 +787,13 @@ object Fetch {
     */
   val MaxDataPoints = 100
 
-  /** Graphite `summarize(series, interval, 'sum')` over the multi-metric
-    * fetch (public graphite-web semantics, render/functions.py
-    * `summarize` with alignToFrom=False): re-bucket the FETCHED series —
-    * the per-minute consolidated averages, not the raw points — into
-    * epoch-aligned `intervalS` buckets, value = null-skipping sum of the
-    * member series values, bucket with no live members = NULL. Partial
-    * edge buckets (the window rarely starts on an interval boundary —
-    * here `from+spp` lands mid-bucket) are emitted, as graphite does.
-    *
-    * Scale notes (100 TB): the null-skipping sum makes the dense 60 s
-    * spine unnecessary — the coarse re-aggregate runs on the SPARSE
-    * per-minute aggregate (≤ range/spp × metrics rows, bounded by the
-    * request), and density is restored once at interval granularity
-    * ([[Buckets.densify]]); the scan still sees the pushed `ts_s` range
-    * filter.
-    */
-  def summarizeSeries(
-      pts: DataFrame,
-      fromS: Long,
-      untilS: Long,
-      spp: Int,
-      intervalS: Int): DataFrame = {
-    require(intervalS % spp == 0, s"summarize interval $intervalS must be a multiple of step $spp")
-    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
-    val coarse = binned(pts, fromI, untilI, spp)
-      .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), intervalS).as("bucket_ts"))
-      .agg(round(sum(col("value")), 6).as("value"))
-    // coarse buckets intersecting [fromI, untilI): epoch-aligned starts
-    val lo = Math.floorDiv(fromI, intervalS.toLong) * intervalS
-    val hiExcl = Math.floorDiv(untilI - spp, intervalS.toLong) * intervalS + intervalS
-    Buckets.densify(coarse, lo, hiExcl, intervalS).orderBy("metric", "bucket_ts")
-  }
-
-  /** Graphite-web render consolidation (public semantics:
-    * render/datalib.py `TimeSeries.consolidate` + the maxDataPoints
-    * check in render/views.py): when a fetched series has more points
-    * than the client can plot, group `factor = ceil(n/maxDataPoints)`
-    * consecutive values from the series START, aggregate each group with
-    * the consolidation function (default 'average', null-skipping,
-    * all-null group → None), and stretch the step to `spp × factor`.
-    * Unlike [[summarizeSeries]] the groups align to the series origin
-    * (`from`), not to epoch — the two ops disagree on purpose, exactly
-    * as graphite's do.
-    *
-    * Scale notes: identical shape to summarize — sparse per-minute
-    * aggregate, group-index arithmetic instead of epoch alignment,
-    * density restored at output granularity (`ceil(n/factor)` × metrics
-    * rows).
-    *
-    * `func` selects the consolidation function (graphite's
-    * `consolidateBy`: average/sum/min/max); `xff` is the render-API
-    * xFilesFactor gate — a consolidated group is None unless at least
-    * that fraction of its slots are known. Defaults preserve graphite's
-    * own (average, no gate). The render-target surface routes
-    * `consolidateBy`/`xFilesFactor` annotations through
-    * [[RenderTarget.evaluate]]'s own consolidation; this is the
-    * equivalent control for direct Fetch-API callers.
-    */
-  def consolidateSeries(
-      pts: DataFrame,
-      fromS: Long,
-      untilS: Long,
-      spp: Int,
-      maxDataPoints: Int,
-      func: String = "average",
-      xff: Double = 0.0): DataFrame = {
-    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
-    val n = ((untilI - fromI) / spp).toInt
-    val factor = math.max(1, (n + maxDataPoints - 1) / maxDataPoints)
-    val stepS = spp.toLong * factor
-    val groups = (n + factor - 1) / factor
-    // both averages fully pinned (ordered fold + shared round6): the
-    // grid mean and the group mean are division-derived, and group
-    // counts of 2^k land native round on cross-engine midpoints
-    val consFunc = func match {
-      case "average" | "avg" =>
-        Buckets.round6(Rollup.aggColumn(
-          graft.model.AggregationMethod.Average, col("value"), col("bucket_ts")))
-      case "sum" => round(sum(col("value")), 6)
-      case "min" => round(min(col("value")), 6)
-      case "max" => round(max(col("value")), 6)
-      case f => throw new IllegalArgumentException(
-        s"unknown consolidation function '$f'")
-    }
-    // xff gate against the group's GRID size (the tail group may cover
-    // fewer slots than `factor` — judge it by what it could have had)
-    val slots = least(lit(factor.toDouble),
-      (lit(untilI.toDouble) - col("bucket_ts")) / spp.toDouble)
-    val cons = binned(pts, fromI, untilI, spp)
-      .groupBy(col("metric"), (lit(fromI) +
-        floor((col("bucket_ts") - fromI) / stepS) * stepS).cast("long").as("bucket_ts"))
-      .agg(consFunc.as("cv"), count(col("value")).as("known"))
-      .select(col("metric"), col("bucket_ts"),
-        when(col("known") >= slots * xff, col("cv")).as("value"))
-    Buckets.densify(cons, fromI, fromI + groups * stepS, stepS).orderBy("metric", "bucket_ts")
-  }
-
-  /** Graphite `sumSeries(seriesList)` (render/functions.py
-    * `sumSeries` / `aggregate('sum')`): collapse the multi-metric fetch
-    * into ONE series — per bucket, the null-skipping sum of every
-    * member's fetched value; a bucket where every member is None stays
-    * None. Runs sparse like [[summarizeSeries]]: sum the per-(metric,
-    * bucket) averages grouped by bucket alone, then restore density
-    * for the one named result series ([[Buckets.densifyNamed]]) — the
-    * cross-series combine never needs the member series materialized
-    * dense.
-    */
-  def sumSeries(
-      pts: DataFrame,
-      fromS: Long,
-      untilS: Long,
-      spp: Int): DataFrame = {
-    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
-    val summed = binned(pts, fromI, untilI, spp).groupBy(col("bucket_ts"))
-      .agg(round(sum(col("value")), 6).as("value"))
-      .select(lit("sumSeries").as("metric"), col("bucket_ts"), col("value"))
-    Buckets.densifyNamed(summed, Seq("sumSeries"), fromI, untilI, spp)
-      .select(col("bucket_ts"), col("value"))
-      .orderBy("bucket_ts")
-  }
-
-  /** Graphite `perSecond(seriesList)` (render/functions.py): the
-    * counter-to-rate transform — per metric, `(v[t] − v[t−step]) / step`
-    * over the DENSE fetched series, None when either endpoint is None
-    * or the delta is negative (counter reset — graphite emits None, not
-    * a bogus negative rate). The first bucket has no predecessor →
-    * None. Works on the dense series because the predecessor is the
-    * previous BUCKET, not the previous stored point — a gap breaks the
-    * rate pair exactly as graphite's None-propagation does.
-    *
-    * Scale notes: the window partitions BY METRIC over request-bounded
-    * rows (buckets/metric), so no global single-partition window; the
-    * heavy reduction to per-bucket averages happens before it.
-    */
-  def perSecondSeries(
-      pts: DataFrame,
-      fromS: Long,
-      untilS: Long,
-      spp: Int): DataFrame = {
-    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
-    val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-    Buckets.densify(binned(pts, fromI, untilI, spp), fromI, untilI, spp)
-      .withColumn("prev", lag(col("value"), 1).over(w))
-      .select(col("metric"), col("bucket_ts"),
-        when(col("value").isNotNull && col("prev").isNotNull && col("value") >= col("prev"),
-          // the rate is DIVISION-derived (grid deltas / spp land on
-          // 7th-decimal midpoints whenever value−prev = (60m+30)·1e-6), so
-          // the output edge must round through the shared portable
-          // formula, not native round
-          Buckets.round6((col("value") - col("prev")) / spp)).as("value"))
-      .orderBy("metric", "bucket_ts")
-  }
-
-  /** Graphite `movingAverage(seriesList, N)` (render/functions.py):
-    * per metric, the average of the trailing N fetched values ending at
-    * each bucket. Graphite pre-fetches N×step of EXTRA HISTORY so the
-    * first requested bucket already has a full trailing window — the
-    * dense series is built over `[from − N·spp, until]` and the output
-    * trimmed back to the requested range. The window average skips
-    * None members (graphite's safeAvg); an all-None window yields None.
-    *
-    * Scale notes: one bounded lag-window per metric (rows-between
-    * frame), exactly [[perSecondSeries]]'s partitioning — the extra
-    * history widens the request-bounded dense series by N buckets,
-    * nothing else.
-    */
-  def movingAverageSeries(
-      pts: DataFrame,
-      fromS: Long,
-      untilS: Long,
-      spp: Int,
-      window: Int): DataFrame = {
-    require(window > 0, "moving-average window must be positive")
-    val (fromI, untilI) = requestWindow(fromS, untilS, spp)
-    val extFromI = fromI - window.toLong * spp
-    // graphite's movingWindow slice is `bootstrap[i+offset-windowPoints
-    // : i+offset]` — the N points strictly BEFORE each point, current
-    // EXCLUDED. This is also why the pre-fetch reaches exactly
-    // window·spp back: the first output bucket's window is fully inside
-    // it.
-    val w = Window.partitionBy(col("metric")).orderBy(col("bucket_ts"))
-      .rowsBetween(-window, -1)
-    // the window mean as a FRAME-ORDERED fold (collect_list preserves
-    // frame order; nulls are skipped natively), divided and rounded via
-    // the shared round6 — Spark's streaming window accumulation and
-    // DuckDB's segment-tree re-association would otherwise differ by an
-    // ulp before the round and flip a midpoint
-    val lst = collect_list(col("value")).over(w)
-    val cnt = count(col("value")).over(w)
-    Buckets.densify(binned(pts, extFromI, untilI, spp), extFromI, untilI, spp)
-      .withColumn("value",
-        when(cnt > 0, Buckets.round6(
-          aggregate(lst, lit(0d), (a, x) => a + x) / cnt)))
-      .filter(col("bucket_ts") >= fromI)
-      .select(col("metric"), col("bucket_ts"), col("value"))
-      .orderBy("metric", "bucket_ts")
-  }
-
   /** Query key `fetch_summarize`: 10-minute sums of the per-minute
     * multi-metric fetch over the fixed window — `summarize(events.*,
     * "10min", "sum")` in graphite terms.
     */
-  def fetchSummarize(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    summarizeSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
-      Buckets.FromS, Buckets.UntilS, 60, SummarizeIntervalS)
-  }
+  def fetchSummarize(spark: SparkSession, sfDir: String): DataFrame =
+    RenderTarget.evalFlat(spark, sfDir,
+      s"summarize(*, '${SummarizeIntervalS / 60}min', 'sum')")
 
   val fetchSummarizeSql: String = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
@@ -1023,11 +826,8 @@ object Fetch {
     * consolidated under a 100-point render budget (factor 15 → 96
     * 15-minute averages per metric, groups aligned to the series start).
     */
-  def fetchMaxDatapoints(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    consolidateSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
-      Buckets.FromS, Buckets.UntilS, 60, MaxDataPoints)
-  }
+  def fetchMaxDatapoints(spark: SparkSession, sfDir: String): DataFrame =
+    RenderTarget.evalFlat(spark, sfDir, "*", maxDataPoints = MaxDataPoints)
 
   val fetchMaxDatapointsSql: String = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
@@ -1060,11 +860,8 @@ object Fetch {
   /** Query key `fetch_sum_series`: `sumSeries(events.*)` — the five
     * event metrics collapsed to one 1440-point series.
     */
-  def fetchSumSeries(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    sumSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
-      Buckets.FromS, Buckets.UntilS, 60)
-  }
+  def fetchSumSeries(spark: SparkSession, sfDir: String): DataFrame =
+    RenderTarget.evalFlat(spark, sfDir, "sumSeries(*)").select("bucket_ts", "value")
 
   val fetchSumSeriesSql: String = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
@@ -1089,11 +886,8 @@ object Fetch {
     * counter rates over the dense per-minute fetch (None on gaps,
     * resets, and the leading bucket).
     */
-  def fetchPerSecond(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    perSecondSeries(Buckets.pointsInRange(spark, sfDir, fromI, untilI),
-      Buckets.FromS, Buckets.UntilS, 60)
-  }
+  def fetchPerSecond(spark: SparkSession, sfDir: String): DataFrame =
+    RenderTarget.evalFlat(spark, sfDir, "perSecond(*)")
 
   val fetchPerSecondSql: String = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
@@ -1133,12 +927,9 @@ object Fetch {
     * graphite's extra-history pre-fetch so bucket one is already
     * full-windowed.
     */
-  def fetchMovingAvg(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)
-    val extFromI = fromI - MovingAvgWindow.toLong * 60
-    movingAverageSeries(Buckets.pointsInRange(spark, sfDir, extFromI, untilI),
-      Buckets.FromS, Buckets.UntilS, 60, MovingAvgWindow)
-  }
+  def fetchMovingAvg(spark: SparkSession, sfDir: String): DataFrame =
+    RenderTarget.evalFlat(spark, sfDir, s"movingAverage(*, $MovingAvgWindow)",
+      extS = MovingAvgWindow.toLong * 60)
 
   val fetchMovingAvgSql: String = {
     val (fromI, untilI) = fetchWindow(Buckets.FromS, Buckets.UntilS, 60)

@@ -41,12 +41,14 @@ import org.apache.spark.sql.functions._
   *    above it (a rate's divisor, a window's row count) see the new
   *    step, exactly as graphite's TimeSeries carries `step`.
   *
-  * Scale: every stage is the corresponding [[Fetch]] plan shape — the
-  * leaf is one glob-pruned scan whose per-metric group explodes onto
-  * the request grid (density then propagates through group-bys for
-  * free, no further densify),
-  * windows partition by metric, and all cardinalities are bounded by
-  * the request range, never data volume.
+  * This is the one implementation of each graphite function; the
+  * graphite fixture keys in [[Fetch]] are target strings rendered here.
+  *
+  * Scale: the leaf is one glob-pruned scan whose per-metric group
+  * explodes onto the request grid (density then propagates through
+  * group-bys for free, no further densify), windows partition by
+  * metric, and all cardinalities are bounded by the request range,
+  * never data volume.
   */
 object RenderTarget {
 
@@ -91,12 +93,18 @@ object RenderTarget {
     "color", "dashed", "lineWidth", "secondYAxis", "stacked",
     "areaBetween", "cactiStyle", "alpha", "drawAsInfinite", "legendValue")
 
+  /** graphite's named moving functions: each is `movingWindow` with a
+    * fixed aggregator, as functions.py defines them.
+    */
+  private val MovingAliases = Map(
+    "movingAverage" -> "average", "movingSum" -> "sum", "movingMin" -> "min",
+    "movingMax" -> "max", "movingMedian" -> "median")
+
   /** Trailing-window functions: `f(series, N)` computes over the last N
     * points — all share movingAverage's history pre-fetch rule.
     */
-  private val MovingFuncs = Set(
-    "movingAverage", "movingSum", "movingMin", "movingMax", "movingMedian",
-    "stdev")
+  private val MovingFuncs = MovingAliases.keySet ++
+    Set("movingWindow", "stdev", "exponentialMovingAverage")
 
   /** Functions that return their one child unchanged: the presentation
     * hints, the annotations that [[consolidationOf]] and [[xffOf]] read,
@@ -221,7 +229,6 @@ object RenderTarget {
     ThresholdAliases.keySet ++ Set(
     "perSecond", "derivative", "nonNegativeDerivative", "integral",
     "integralByInterval", "keepLastValue", "interpolate", "changed", "delay",
-    "movingWindow", "exponentialMovingAverage",
     "summarize", "smartSummarize", "hitcount", "timeShift", "timeStack",
     "timeSlice", "linearRegression", "offsetToZero", "minMax",
     "aggregateLine", "nPercentile", "removeBelowPercentile",
@@ -586,8 +593,7 @@ object RenderTarget {
   def historyExtS(e: Expr, spp: Int, fromS: Long = 0L, untilS: Long = 0L,
       tz: java.time.ZoneId = java.time.ZoneOffset.UTC): Long = e match {
     case Leaf(_) => 0L
-    case Call(f, Seq(c), args)
-        if MovingFuncs(f) || f == "movingWindow" || f == "exponentialMovingAverage" =>
+    case Call(f, Seq(c), args) if MovingFuncs(f) =>
       historyExtS(c, spp, fromS, untilS, tz) + windowPts(args.head, stepS(c, spp)) * stepS(c, spp)
     case Call(f, Seq(c), args) if HoltWintersFuncs(f) =>
       // bootstrap rounded UP to the child's step: a non-multiple (e.g.
@@ -708,6 +714,7 @@ object RenderTarget {
     case "avg" | "average" => avg(c)
     case "max" => max(c)
     case "min" => min(c)
+    // the continuous median; unlike `median`, it accepts a rows frame
     case "median" => percentile(c, lit(0.5))
     case "count" => count(c).cast("double")
     case "range" | "rangeOf" => max(c) - min(c)
@@ -744,10 +751,9 @@ object RenderTarget {
     * 7th decimal, never a midpoint), so it stays on the plain form —
     * as do ranking/filter contexts (sortBy, filterSeries, highest/
     * lowest: an ulp can only flip a selection on a macroscopically
-    * exact tie between DIFFERENT series) and window contexts
-    * (movingWindow: frame accumulation is deterministic per engine, so
-    * the sf0.1 sweep is conclusive; the fold wrapper also cannot take
-    * `.over`).
+    * exact tie between DIFFERENT series). Window contexts cannot take
+    * the fold wrapper's `.over`: movingWindow pins its window mean as
+    * its own frame-ordered fold instead.
     */
   private def summarizeAggOrdered(func: String, c: Column, lastBy: Column): Column =
     func match {
@@ -782,7 +788,7 @@ object RenderTarget {
     df.withColumn("prev", lag(col("value"), 1).over(bySeries))
       .withColumn("value",
         when(col("value").isNotNull && col("prev").isNotNull,
-          round(delta / div, 6)))
+          Buckets.round6(delta / div)))
       .select(col("metric"), col("bucket_ts"), col("value"))
   }
 
@@ -1145,32 +1151,15 @@ object RenderTarget {
         // nonNegativeDerivative
         val (df, step) = eval(c)
         (counterDelta(df, args.headOption.map(_.toDouble), lit(step)), step)
-      case Call(f, Seq(c), args) if MovingFuncs(f) =>
-        // trailing window, one metric-partitioned sort shared by the
-        // whole family; nulls are skipped natively (all-null window →
-        // null). Frame edges are graphite's own, which DIFFER inside
-        // the family: the moving* functions slice
-        // `bootstrap[i+offset-windowPoints : i+offset]` — the n points
-        // strictly BEFORE each point, current EXCLUDED — while stdev
-        // (a separate lineage in functions.py) accumulates the last n
-        // values INCLUDING the current one, population form.
+      case Call(f @ "stdev", Seq(c), args) =>
+        // a separate lineage from movingWindow in functions.py: the
+        // population deviation of the last n values INCLUDING the
+        // current one; nulls are skipped natively
         val (df, step) = eval(c)
         val n = windowPts(args.head, step).toInt
         require(n > 0, s"$f window must be positive")
-        val w =
-          if (f == "stdev") bySeries.rowsBetween(-(n - 1), Window.currentRow)
-          else bySeries.rowsBetween(-n, -1)
-        val v = f match {
-          case "movingAverage" => avg(col("value"))
-          case "movingSum" => sum(col("value"))
-          case "movingMin" => min(col("value"))
-          case "movingMax" => max(col("value"))
-          // median is frame-restricted in Spark; percentile(0.5) is the
-          // same continuous median and accepts a rows frame
-          case "movingMedian" => percentile(col("value"), lit(0.5))
-          case "stdev" => stddev_pop(col("value"))
-        }
-        (df.withColumn("value", round(v.over(w), 6)), step)
+        val w = bySeries.rowsBetween(-(n - 1), Window.currentRow)
+        (df.withColumn("value", round(stddev_pop(col("value")).over(w), 6)), step)
       case Call(f, Seq(c), args) if HoltWintersFuncs(f) =>
         // sequential recurrence → typed per-series pass; each group
         // holds one request+bootstrap window (bounded), sorted in
@@ -2023,16 +2012,17 @@ object RenderTarget {
         if (func == "multiply")
           (strictProduct(df, Seq(key.as("metric"), col("bucket_ts")), col("metric")), step)
         else (reduceBy(df, key, func), step)
-      case Call("movingWindow", Seq(c), args) =>
-        // the general trailing window: any named aggregator over the
-        // last n points — the MovingFuncs family's umbrella (same
-        // history pre-fetch, same metric-partitioned sort)
+      case Call(f, Seq(c), args) if f == "movingWindow" || MovingAliases.contains(f) =>
+        // the trailing window: a named aggregator over the n points
+        // strictly BEFORE each point — graphite's slice
+        // `bootstrap[i+offset-windowPoints : i+offset]`, current
+        // EXCLUDED. The named moving functions are this window with
+        // their fixed aggregator. Nulls are skipped natively (all-null
+        // window → null).
         val (df, step) = eval(c)
         val n = windowPts(args.head, step).toInt
-        require(n > 0, "movingWindow window must be positive")
-        val func = args.lift(1).getOrElse("average")
-        // graphite's movingWindow slice excludes the current point —
-        // the same frame as the named moving* wrappers above
+        require(n > 0, s"$f window must be positive")
+        val func = MovingAliases.getOrElse(f, args.lift(1).getOrElse("average"))
         val w = bySeries.rowsBetween(-n, -1)
         // `count` and `range` come out of summarizeAgg WRAPPED (a cast /
         // a subtraction); `.over` must attach to the aggregates
@@ -2040,6 +2030,15 @@ object RenderTarget {
         // aggregate and demands a GROUP BY (found by the evaluator
         // fuzz) — window them explicitly
         val v = func match {
+          // the window mean as a FRAME-ORDERED fold (collect_list keeps
+          // frame order and skips nulls) divided by the count and
+          // rounded through the shared round6, the oracle's op-for-op
+          // form: native avg and native round disagree with it on
+          // 6th-decimal midpoints (the outer round keeps a round6 value)
+          case "average" | "avg" =>
+            val cnt = count(col("value")).over(w)
+            when(cnt > 0, Buckets.round6(
+              aggregate(collect_list(col("value")).over(w), lit(0d), (a, x) => a + x) / cnt))
           case "count" => count(col("value")).over(w).cast("double")
           case "range" | "rangeOf" =>
             max(col("value")).over(w) - min(col("value")).over(w)
@@ -2843,7 +2842,7 @@ object RenderTarget {
   /** Evaluate `target` over the flat points view on the standard oracle
     * window, with `extS` seconds of history pre-fetched at the source.
     */
-  private def evalFlat(spark: SparkSession, sfDir: String, target: String,
+  private[ops] def evalFlat(spark: SparkSession, sfDir: String, target: String,
       extS: Long = 0, maxDataPoints: Int = 0): DataFrame =
     evaluate(spark,
       Buckets.pointsInRange(spark, sfDir, stdFromI - extS, stdUntilI),

@@ -20,6 +20,11 @@ class CoreOpsSpec extends AnyFunSuite {
     rows.toDF("metric", "ts_s", "value")
   }
 
+  // a render target over `p` on [from, until] at a 60 s step
+  private def render(p: org.apache.spark.sql.DataFrame, target: String,
+      from: Long, until: Long, maxDataPoints: Int = 0) =
+    RenderTarget.evaluate(spark, p, target, from, until, 60, maxDataPoints)
+
   test("fetchInterval endpoints: floor + step (trap 1)") {
     assert(Buckets.fetchInterval(120, 60) == 180) // aligned → next bucket
     assert(Buckets.fetchInterval(121, 60) == 180)
@@ -272,21 +277,21 @@ class CoreOpsSpec extends AnyFunSuite {
   private def windowed(p: org.apache.spark.sql.DataFrame)
       : Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame)] = Seq(
     "denseSeries" -> ((f, u) => Fetch.denseSeries(p, "m.a", f, u, 60)),
-    "summarizeSeries" -> ((f, u) => Fetch.summarizeSeries(p, f, u, 60, 60)),
-    "consolidateSeries" -> ((f, u) => Fetch.consolidateSeries(p, f, u, 60, 1)),
-    "sumSeries" -> ((f, u) => Fetch.sumSeries(p, f, u, 60)),
-    "perSecondSeries" -> ((f, u) => Fetch.perSecondSeries(p, f, u, 60)),
-    "movingAverageSeries" -> ((f, u) => Fetch.movingAverageSeries(p, f, u, 60, 1)),
-    "evaluate(m.*)" -> ((f, u) => RenderTarget.evaluate(spark, p, "m.*", f, u, 60)),
-    "evaluate(sumSeries(m.*))" ->
-      ((f, u) => RenderTarget.evaluate(spark, p, "sumSeries(m.*)", f, u, 60)))
+    "evaluate(m.*)" -> ((f, u) => render(p, "m.*", f, u)),
+    "evaluate(m.*) at maxDataPoints 1" -> ((f, u) => render(p, "m.*", f, u, 1)),
+    "evaluate(summarize(m.*, '1min', 'sum'))" ->
+      ((f, u) => render(p, "summarize(m.*, '1min', 'sum')", f, u)),
+    "evaluate(sumSeries(m.*))" -> ((f, u) => render(p, "sumSeries(m.*)", f, u)),
+    "evaluate(perSecond(m.*))" -> ((f, u) => render(p, "perSecond(m.*)", f, u)),
+    "evaluate(movingAverage(m.*, 1))" -> ((f, u) => render(p, "movingAverage(m.*, 1)", f, u)))
 
   test("a window inside one step returns that step's bucket from every entry point") {
     // whisper's equal-interval bump: 100 → 110 is the bucket 120, which
     // holds the point at 125. movingAverage(1) shows the bucket before it
     // (the point at 65); perSecond has no predecessor, so None
     val p = pts(("m.a", 65L, 2.0), ("m.a", 125L, 4.0))
-    val expected = Map("movingAverageSeries" -> Some(2.0), "perSecondSeries" -> None)
+    val expected = Map("evaluate(movingAverage(m.*, 1))" -> Some(2.0),
+      "evaluate(perSecond(m.*))" -> None)
     val wrong = windowed(p).flatMap { case (name, read) =>
       val got = read(100L, 110L).collect().toSeq.map(r =>
         (r.getAs[Long]("bucket_ts"), Option(r.getAs[java.lang.Double]("value")).map(_.toDouble)))
@@ -368,9 +373,9 @@ class CoreOpsSpec extends AnyFunSuite {
     // window [0, 1200): fetch minutes 60..1200; interval 600 → epoch
     // buckets 0 (minutes 60..540 — PARTIAL: excludes the from-bucket 0),
     // 600 (minutes 600..1140) and 1200 (minute 1200 only).
-    val df = Fetch.summarizeSeries(
+    val df = render(
       pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 650L, 10.0), ("m", 1205L, 7.0)),
-      0L, 1200L, 60, 600)
+      "summarize(m, '10min', 'sum')", 0L, 1200L)
     val rows = df.collect()
     assert(rows.map(_.getLong(1)).toSeq == Seq(0L, 600L, 1200L))
     // bucket 0 sums the minute-averages 1.0 (ts 65) + 3.0 (ts 130)
@@ -378,16 +383,16 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(rows(1).getDouble(2) == 10.0)
     assert(rows(2).getDouble(2) == 7.0)
     // a metric with no points in a coarse bucket gets NULL, not 0
-    val gap = Fetch.summarizeSeries(pts(("m", 65L, 1.0), ("m", 1205L, 7.0)),
-      0L, 1200L, 60, 600).collect()
+    val gap = render(pts(("m", 65L, 1.0), ("m", 1205L, 7.0)),
+      "summarize(m, '10min', 'sum')", 0L, 1200L).collect()
     assert(gap(1).isNullAt(2))
   }
 
   test("summarizeSeries sums the fetched averages, not the raw points") {
     // two raw points in ONE minute average to 2.0 first; summarize(sum)
     // must add 2.0 — graphite operates on the fetched series
-    val df = Fetch.summarizeSeries(pts(("m", 65L, 1.0), ("m", 70L, 3.0)),
-      0L, 600L, 60, 600).collect()
+    val df = render(pts(("m", 65L, 1.0), ("m", 70L, 3.0)),
+      "summarize(m, '10min', 'sum')", 0L, 600L).collect()
     // aligned until=600 includes minute 600 → an empty trailing bucket
     assert(df.map(_.getLong(1)).toSeq == Seq(0L, 600L))
     assert(df(0).getDouble(2) == 2.0)
@@ -397,9 +402,9 @@ class CoreOpsSpec extends AnyFunSuite {
   test("consolidateSeries: origin-aligned groups, factor from maxDataPoints") {
     // 10 minutes at 60 s = 10 points, budget 4 → factor 3, groups 4 of
     // step 180 starting at fromI=60 (NOT epoch-aligned: 60, 240, 420, 600)
-    val df = Fetch.consolidateSeries(
+    val df = render(
       pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 250L, 8.0), ("m", 600L, 5.0)),
-      0L, 600L, 60, 4)
+      "m", 0L, 600L, maxDataPoints = 4)
     val rows = df.collect()
     assert(rows.map(_.getLong(1)).toSeq == Seq(60L, 240L, 420L, 600L))
     assert(rows(0).getDouble(2) == 2.0) // avg(1.0, 3.0) — null minute skipped
@@ -412,15 +417,15 @@ class CoreOpsSpec extends AnyFunSuite {
     val p = pts(("m", 65L, 1.0), ("m", 130L, 3.0), ("m", 250L, 8.0),
       ("m", 600L, 5.0))
     // 'max' consolidation over the same grid as the average test
-    val mx = Fetch.consolidateSeries(p, 0L, 600L, 60, 4, func = "max")
+    val mx = render(p, "consolidateBy(m, 'max')", 0L, 600L, maxDataPoints = 4)
       .collect()
     assert(mx(0).getDouble(2) == 3.0 && mx(1).getDouble(2) == 8.0)
     assert(mx(2).isNullAt(2) && mx(3).getDouble(2) == 5.0)
     // xff 0.5: a 3-slot group needs ≥1.5 known → group 1 (2 known)
     // passes, group 2 (1 of 3) and the 1-slot tail (1 of 1) judge
     // against their own grid sizes
-    val gated = Fetch.consolidateSeries(p, 0L, 600L, 60, 4,
-      func = "avg", xff = 0.5).collect()
+    val gated = render(p, "xFilesFactor(consolidateBy(m, 'avg'), 0.5)", 0L, 600L,
+      maxDataPoints = 4).collect()
     assert(gated(0).getDouble(2) == 2.0)
     assert(gated(1).isNullAt(2)) // 1/3 known < 0.5
     assert(gated(2).isNullAt(2))
@@ -429,9 +434,9 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("sumSeries: cross-metric null-skipping sum, all-None bucket stays NULL") {
     // window [0, 180): buckets 60, 120. m1 covers both, m2 only 60.
-    val df = Fetch.sumSeries(
+    val df = render(
       pts(("m1", 65L, 1.0), ("m1", 125L, 4.0), ("m2", 70L, 2.0)),
-      0L, 180L, 60).collect()
+      "sumSeries(m*)", 0L, 180L).select("bucket_ts", "value").collect()
     assert(df.map(_.getLong(0)).toSeq == Seq(60L, 120L, 180L))
     assert(df(0).getDouble(1) == 3.0) // 1.0 + 2.0, m2's gap skipped at 120
     assert(df(1).getDouble(1) == 4.0)
@@ -440,9 +445,9 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("perSecondSeries: rate over dense buckets, None on gap/reset/lead") {
     // m counter: 60→100, 120→160, 180 gap, 240→220 (RESET), 300→280
-    val df = Fetch.perSecondSeries(
+    val df = render(
       pts(("m", 65L, 100.0), ("m", 125L, 160.0), ("m", 245L, 220.0), ("m", 305L, 280.0)),
-      0L, 300L, 60).collect()
+      "perSecond(m)", 0L, 300L).collect()
     val v = df.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2)))
     assert(df.map(_.getLong(1)).toSeq == Seq(60L, 120L, 180L, 240L, 300L))
     assert(v(0).isEmpty)          // leading bucket: no predecessor
@@ -451,8 +456,8 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(v(3).isEmpty)          // predecessor None (gap breaks the pair)
     assert(v(4).contains(1.0))    // (280-220)/60
     // counter reset: v < prev → None, not a negative rate
-    val r2 = Fetch.perSecondSeries(
-      pts(("m", 65L, 500.0), ("m", 125L, 20.0)), 0L, 120L, 60).collect()
+    val r2 = render(
+      pts(("m", 65L, 500.0), ("m", 125L, 20.0)), "perSecond(m)", 0L, 120L).collect()
     assert(r2(1).isNullAt(2))
   }
 
@@ -463,9 +468,9 @@ class CoreOpsSpec extends AnyFunSuite {
     // {60, 120} and bucket 240 sees {120, 180}. The point at ts 125
     // (bucket 120) is OUTSIDE the requested range but inside both
     // windows — graphite's extra-history fetch.
-    val df = Fetch.movingAverageSeries(
+    val df = render(
       pts(("m", 125L, 6.0), ("m", 185L, 2.0), ("m", 245L, 10.0)),
-      120L, 240L, 60, 2).collect()
+      "movingAverage(m, 2)", 120L, 240L).collect()
     assert(df.map(_.getLong(1)).toSeq == Seq(180L, 240L))
     assert(df(0).getDouble(2) == 6.0) // avg of preceding {6.0@120}
     assert(df(1).getDouble(2) == 4.0) // avg of preceding {6.0@120, 2.0@180}
@@ -473,15 +478,14 @@ class CoreOpsSpec extends AnyFunSuite {
     // output buckets 120, 180, 240: the 8.0@60 history point feeds
     // bucket 120's window (preceding {0, 60}); later windows with no
     // valid points stay None
-    val g = Fetch.movingAverageSeries(
-      pts(("m", 65L, 8.0)), 60L, 240L, 60, 2).collect()
+    val g = render(pts(("m", 65L, 8.0)), "movingAverage(m, 2)", 60L, 240L).collect()
     assert(g.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))).toSeq ==
       Seq(Some(8.0), Some(8.0), None))
   }
 
   test("consolidateSeries under budget is the identity on the dense fetch") {
     val p = pts(("m", 65L, 1.0), ("m", 250L, 8.0))
-    val cons = Fetch.consolidateSeries(p, 0L, 600L, 60, 100)
+    val cons = render(p, "m", 0L, 600L, maxDataPoints = 100)
       .collect().map(r => (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
     val dense = Fetch.denseSeries(p, "m", 0L, 600L, 60)
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))

@@ -23,6 +23,13 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  // parquet scans in the executed tree of a collected adaptive query: the
+  // formatted explain also prints the initial plan and the details of
+  // both plans' nodes, so only the tree under "== Final Plan ==" counts
+  private def finalScans(p: String): Int =
+    p.linesIterator.dropWhile(!_.contains("== Final Plan ==")).drop(1)
+      .takeWhile(!_.contains("== Initial Plan ==")).count(_.contains("Scan parquet"))
+
   test("fetch queries push the time range into the parquet scan") {
     // Pin BOTH bounds, on the RAW ts column, in either timestamp
     // encoding (micros NTZ / tz-adjusted): a range filter on the derived
@@ -67,12 +74,11 @@ class PlanSpec extends AnyFunSuite {
       s"expected a broadcast join for the bounded spine:\n$p")
   }
 
-  test("render consolidation re-aggregates sparse — no window, no 60s dense pass") {
-    // summarize and maxDataPoints both re-bucket the SPARSE per-minute
-    // aggregate; density is restored only at output granularity, where
-    // Buckets' densify entry points explode the bucket spine over the
-    // re-bucketed rows. A Window (or a dense-60s intermediate) would mean
-    // the sparse-first shape regressed.
+  test("summarize, maxDataPoints and sumSeries renders re-aggregate with no window") {
+    // each render densifies its leaf by exploding the bucket spine
+    // (Generate) over the map-side partially aggregated per-minute
+    // series, then re-buckets or combines that dense frame with a
+    // grouped aggregate. None of the three needs a Window operator.
     for (q <- Seq(Fetch.fetchSummarize(spark, dir),
                   Fetch.fetchMaxDatapoints(spark, dir),
                   Fetch.fetchSumSeries(spark, dir))) {
@@ -99,7 +105,7 @@ class PlanSpec extends AnyFunSuite {
     // scale(nonNegativeDerivative(g), 60) must cost exactly what
     // perSecond(g) costs: the arithmetic fuses into the window's
     // downstream projection — same number of exchanges; and the render
-    // rate plan costs no more than the hand-built rate fetch
+    // rate plan costs no more than the fetch_per_second fixture's
     def exchanges(p: String) = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(p).size
     val rate = plan(RenderTarget.renderTargetRate(spark, dir))
     val fromI = Buckets.fetchInterval(Buckets.FromS, 60)
@@ -126,8 +132,7 @@ class PlanSpec extends AnyFunSuite {
       Buckets.FromS, Buckets.UntilS, 60)
     q.collect()
     val p = plan(q)
-    val scans = """\(\d+\) Scan parquet""".r.findAllIn(p).size
-    assert(scans == 1 || p.contains("ReusedExchange") ||
+    assert(finalScans(p) == 1 || p.contains("ReusedExchange") ||
       p.contains("ReusedQueryStage"),
       s"each leaf still scans the base table:\n$p")
     // the fence is the explicit OptimizerFence expression, not the old
@@ -147,7 +152,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters") && p.contains("LessThan(ts"),
       s"time bounds did not reach the canary's scan:\n$p")
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage") ||
-      """\(\d+\) Scan parquet""".r.findAllIn(p).size == 1,
+      finalScans(p) == 1,
       s"canary leaves stopped sharing the base scan:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"canary gained a non-broadcast join:\n$p")
@@ -209,7 +214,7 @@ class PlanSpec extends AnyFunSuite {
     q.collect()
     val p = plan(q)
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage") ||
-      """\(\d+\) Scan parquet""".r.findAllIn(p).size == 1,
+      finalScans(p) == 1,
       s"each prefix subtree still scans the base table:\n$p")
   }
 

@@ -139,8 +139,9 @@ class SparkPropsSpec extends AnyFunSuite {
       val iv = Seq(300, 600, 1800)(rng.nextInt(3))
       def tot(df: org.apache.spark.sql.DataFrame, c: String): Double =
         Option(df.agg(sum(c)).collect().head.get(0)).fold(0.0)(_.asInstanceOf[Double])
-      val coarse = Fetch.summarizeSeries(pts, from, until, 60, iv)
-      val dense = Fetch.sumSeries(pts, from, until, 60)
+      val coarse = RenderTarget.evaluate(spark, pts, s"summarize(*, '${iv}s', 'sum')",
+        from, until, 60)
+      val dense = RenderTarget.evaluate(spark, pts, "sumSeries(*)", from, until, 60)
       // tolerance: each output bucket's round(…, 6) contributes ≤5e-7
       assert(math.abs(tot(coarse, "value") - tot(dense, "value")) < 1e-3)
     }
@@ -158,7 +159,7 @@ class SparkPropsSpec extends AnyFunSuite {
       val n = ((untilI - fromI) / 60).toInt
       val factor = math.max(1, (n + budget - 1) / budget)
       val groups = (n + factor - 1) / factor
-      val df = Fetch.consolidateSeries(pts, from, until, 60, budget)
+      val df = RenderTarget.evaluate(spark, pts, "*", from, until, 60, budget)
       val mets = df.select("metric").distinct().count()
       assert(df.count() == mets * groups)
       // every output bucket lands on the origin-aligned step' grid
