@@ -30,22 +30,14 @@ object WspQueries {
     * gets new files, built exactly once per JVM, shared by both wsp
     * query keys.
     */
-  /** Write the 1m LWW window as a `.wsp` tree at `path` through the
-    * public DSv2 write surface (save() is an action — files exist on
+  /** Write the 1m LWW window as a `.wsp` tree at `path` (files exist on
     * return). ONE definition shared by [[ensureExported]] and
-    * [[ensureSetAgg]]'s private copy: the schema options are derived,
-    * not restated, so a fixture-schema change cannot leave one caller
-    * silently testing a different geometry.
+    * [[ensureSetAgg]]'s private copy, so a fixture-schema change cannot
+    * leave one caller silently testing a different geometry.
     */
   private def writeLwwTree(s: SparkSession, dir: String, path: String): Unit =
-    Ingest.lwwAlign(Buckets.points(s, dir), 60)
-      .filter(col("bucket_ts") >= FromB && col("bucket_ts") < NowS)
-      .withColumn("archive", lit(0))
-      .write.format("wsp")
-      .option("retentions", graft.model.Retentions.render(schema.retentions))
-      .option("aggregationMethod", schema.method.name)
-      .option("xFilesFactor", schema.xFilesFactor.toString)
-      .mode("overwrite").save(path)
+    WspWrite.exportLevel(Ingest.lwwAlign(Buckets.points(s, dir), 60)
+      .filter(col("bucket_ts") >= FromB && col("bucket_ts") < NowS), path, schema)
 
   private def ensureExported(s: SparkSession, dir: String): String =
     Dedup.sharedIndexPath(s, dir, "events.parquet", "wsp") { base =>

@@ -171,7 +171,7 @@ object WspTools {
     * dropped (the r6 data-loss finding). The source geometry is read
     * from the tree's own binary header ([[treeHeader]]), never trusted
     * from the caller, and every scanned row is validated against it.
-    * Returns the export manifest.
+    * Returns the export manifest (the write has run on return).
     */
   def resize(
       spark: SparkSession,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.model.WhisperSchema
+import graft.model.{Retentions, WhisperSchema}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,13 +10,14 @@ import org.apache.spark.sql.functions._
   * of [[WspDataSource]]: results computed here can be handed back to a
   * stock graphite/go-whisper stack.
   *
-  * Scale shape: `groupByKey(metric).mapGroups` — one shuffle keyed by
-  * metric, then each executor writes its metrics' files in parallel
-  * through the Hadoop `FileSystem` API (`file:`/`hdfs:`/`s3a:` all
-  * work; the driver never sees a point). Memory per task is one file
-  * image (a pure function of the retention config — whisper
-  * pre-allocates the full ring), not the input size: points beyond a
-  * ring's capacity overwrite their slot, exactly like the reference.
+  * [[export]] and [[merge]] are `df.write.format("wsp")` saves
+  * ([[WspWriteBuilder]]): one shuffle clustered and sorted by metric,
+  * then each task writes its metrics' files through the Hadoop
+  * `FileSystem` API (`file:`/`hdfs:`/`s3a:` all work; the driver never
+  * sees a point). Memory per task is one file image (a pure function of
+  * the retention config — whisper pre-allocates the full ring), not the
+  * input size: points beyond a ring's capacity overwrite their slot,
+  * exactly like the reference.
   */
 object WspWrite {
 
@@ -26,14 +27,14 @@ object WspWrite {
     * routing and alignment happen upstream (e.g. [[graft.ops.Ingest]]),
     * this writer only packs rings. Metrics absent from `points` get no
     * file; archives with no rows stay zeroed (whisper's never-written
-    * state). Returns a manifest (metric, n_points, bytes) — an action
-    * has already run when this returns.
+    * state). Returns a manifest (metric, n_points, bytes) — the write
+    * has run, once, when this returns.
     */
   def export(
       points: DataFrame,
       outDir: String,
       schema: WhisperSchema): DataFrame =
-    write(points, outDir, schema, mergeExisting = false)
+    write(points, outDir, schema, "overwrite")
 
   /** Like [[export]], but an existing `<metric>.wsp` is read first and
     * its rings updated IN PLACE — prior slots survive, same-slot writes
@@ -41,136 +42,43 @@ object WspWrite {
     * (slot 0 pinned at first write, like the reference). This is the
     * carbon-daemon write shape: repeated batches against a live tree.
     * Read-modify-write is safe under the one-writer-per-file contract
-    * the shuffle guarantees (each metric lands in exactly one task).
+    * the write's required distribution guarantees (each metric lands in
+    * exactly one task).
     */
   def merge(
       points: DataFrame,
       outDir: String,
       schema: WhisperSchema): DataFrame =
-    write(points, outDir, schema, mergeExisting = true)
+    write(points, outDir, schema, "append")
+
+  /** The `format("wsp")` write options that state `schema`;
+    * [[WspWriteBuilder.schemaOf]] parses them back to an equal schema. */
+  private[sources] def schemaOptions(schema: WhisperSchema): Map[String, String] = Map(
+    "retentions" -> Retentions.render(schema.retentions),
+    "aggregationMethod" -> schema.method.name,
+    "xFilesFactor" -> schema.xFilesFactor.toString)
+
+  /** The manifest rows of the [[export]]/[[merge]] save running on this
+    * thread; the write captures the buffer when it is built and fills it
+    * from its tasks' commit messages. */
+  private[sources] val committed =
+    new scala.util.DynamicVariable[Option[collection.mutable.ArrayBuffer[(String, Long, Long)]]](None)
 
   private def write(
       points: DataFrame,
       outDir: String,
       schema: WhisperSchema,
-      mergeExisting: Boolean): DataFrame = {
+      mode: String): DataFrame = {
     val s = points.sparkSession
     import s.implicits._
-    val conf = WspTable.taskConf(s)
-    val manifest = points
-      .select(col("metric").cast("string"), col("archive").cast("int"),
-        col("bucket_ts").cast("long"), col("value").cast("double"))
-      .as[(String, Int, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (metric, rows) =>
-        val acc = new RingAccumulator(schema)
-        rows.foreach { case (_, a, ts, v) => acc.add(metric, a, ts, v) }
-        flushMetric(metric, acc, outDir, schema, mergeExisting, conf.value.value)
-      }
-      .toDF("metric", "n_points", "bytes")
-    manifest.localCheckpoint(true) // run the write NOW, exactly once
-  }
-
-  /** One metric's pending ring state: one-pass slot-level LWW, O(ring)
-    * memory — per archive keep the max-interval point of each slot
-    * CLASS (interval/spp mod N; the base choice only rotates slots, it
-    * never splits or merges classes), so a months-long backfill of a
-    * 1440-slot ring holds 1440 winners, not every input point. Max
-    * interval per class = exactly what applying points in time order
-    * leaves behind. Shared by the [[export]]/[[merge]] `mapGroups` path
-    * and the DSv2 [[WspBatchWriter]].
-    */
-  private[sources] final class RingAccumulator(schema: WhisperSchema) {
-    private val retentions = schema.retentions.toArray
-    private[sources] val byArchive =
-      Array.fill(retentions.length)(
-        scala.collection.mutable.LongMap.empty[(Long, Double)])
-    private[sources] var n = 0L
-
-    def add(metric: String, a: Int, ts: Long, v: Double): Unit = {
-      require(a >= 0 && a < retentions.length,
-        s"archive index $a out of range for $metric")
-      val r = retentions(a)
-      val cls = java.lang.Math.floorMod(
-        ts / r.secondsPerPoint, r.numberOfPoints.toLong)
-      val prev = byArchive(a).getOrNull(cls)
-      // the engine-wide LWW total order (Ingest.lwwKey: max_by(value,
-      // struct(ts, value))) — ties on ts break by LARGER value, never by
-      // row-arrival order, so a task retry or shuffled iteration order
-      // publishes the identical file image and the slot winner matches
-      // the relational U2 path and the DuckDB oracle
-      if (prev == null || ts > prev._1 || (ts == prev._1 && v > prev._2))
-        byArchive(a)(cls) = (ts, v)
-      n += 1
+    val rows = collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    committed.withValue(Some(rows)) {
+      points
+        .select(col("metric").cast("string"), col("archive").cast("int"),
+          col("bucket_ts").cast("long"), col("value").cast("double"))
+        .write.format("wsp").options(schemaOptions(schema)).mode(mode).save(outDir)
     }
-  }
-
-  /** Pack one metric's accumulated rings into `outDir/<metric>.wsp` and
-    * publish atomically. Returns the manifest row (metric, n_points,
-    * bytes). Safe under task retry: re-flushing the same points is
-    * idempotent (slot-level LWW of identical data), and [[publish]]
-    * replaces whole file images only.
-    */
-  private[sources] def flushMetric(
-      metric: String,
-      acc: RingAccumulator,
-      outDir: String,
-      schema: WhisperSchema,
-      mergeExisting: Boolean,
-      conf: org.apache.hadoop.conf.Configuration): (String, Long, Long) = {
-    // same named guard as the DSv2 writer and Carbon.format (review
-    // r10): a null metric (a left-join artifact in the caller's frame)
-    // must fail with the column named, not as a bare executor NPE from
-    // metric.replace below
-    require(metric != null, "whisper points cannot have a null metric")
-    val expectedLen = WspCodec.fileSize(schema)
-    // graphite tree layout: metric path components become DIRECTORIES
-    // (`a.b.c` → `a/b/c.wsp`), the inverse of the read side's
-    // [[WspTable.metricFor]] ('/'→'.'), so an exported tree is what a
-    // stock graphite-web/go-carbon stack resolves — a flat `a.b.c.wsp`
-    // file is invisible to their finder. Round-trips through THIS
-    // engine's source are unaffected (metricFor recovers the same
-    // dotted name from either layout).
-    val path = new org.apache.hadoop.fs.Path(
-      outDir, s"${metric.replace('.', '/')}.wsp")
-    val fs = path.getFileSystem(conf)
-    val file =
-      if (mergeExisting && fs.exists(path)) {
-        val st = fs.getFileStatus(path)
-        require(st.getLen == expectedLen,
-          s"$path: ${st.getLen} bytes, schema expects $expectedLen — " +
-            "refusing to merge into a file with a different retention config")
-        val bytes = new Array[Byte](expectedLen)
-        val in = fs.open(path)
-        try in.readFully(0, bytes) finally in.close()
-        // ring geometry must match exactly — same total size does not
-        // imply same (spp, points) layout, and a mismatched merge
-        // would scatter points into the wrong rings
-        val hdr = WspCodec.readHeader(bytes, path.toString)
-        require(
-          hdr.archives.map(a => (a.secondsPerPoint, a.numberOfPoints)) ==
-            schema.retentions.map(r => (r.secondsPerPoint, r.numberOfPoints)),
-          s"$path: on-disk archives ${hdr.archives} do not match schema " +
-            s"${schema.retentions} — refusing to merge")
-        bytes
-      } else WspCodec.emptyFile(schema)
-    val infos = WspCodec.archiveInfos(schema)
-    infos.zipWithIndex.foreach { case (info, i) =>
-      WspCodec.writeArchive(file, info, acc.byArchive(i).values.toSeq)
-    }
-    // write-to-temp + publish: a killed task or a speculative duplicate
-    // attempt must never leave a truncated file (which would wedge
-    // every later merge on the length check), and a concurrent READER
-    // — the streaming-tail use case — must never see a missing file.
-    // The tmp lives in the DESTINATION's directory (a nested metric
-    // like a/b puts the file at outDir/a/b.wsp — a tmp rooted at
-    // outDir would make the publish a cross-directory move), so the
-    // replace is a same-dir atomic rename. See [[publish]] for the
-    // per-scheme guarantee.
-    val tmpPath = new org.apache.hadoop.fs.Path(path.getParent,
-      s".${path.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    publish(fs, conf, tmpPath, path, file)
-    (metric, acc.n, file.length.toLong)
+    rows.toSeq.toDF("metric", "n_points", "bytes")
   }
 
   /** Write the complete file image to `tmpPath`, then replace `dst` with

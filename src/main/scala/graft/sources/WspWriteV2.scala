@@ -7,12 +7,14 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 write path for `.wsp` trees — the DSv2 twin of
-  * [[WspWrite.export]]/[[WspWrite.merge]] (reference: whisper.go →
-  * `Create` + `UpdateMany`; SURVEY.md §2.1 S6):
+/** DataSource V2 write path for `.wsp` trees — the one sink every
+  * `.wsp` write goes through, [[WspWrite.export]]/[[WspWrite.merge]]
+  * included (reference: whisper.go → `Create` + `UpdateMany`; SURVEY.md
+  * §2.1 S6):
   *
   * {{{
   * df.write.format("wsp")
@@ -43,7 +45,7 @@ import org.apache.spark.util.SerializableConfiguration
   * Scale shape: the Write REQUIRES a distribution clustered by
   * `metric` AND a sort by `metric`, so Spark shuffles each series to
   * exactly one task (the one-writer-per-file contract) and the writer
-  * holds ONE [[WspWrite.RingAccumulator]] at a time, flushing on key
+  * holds ONE metric's ring state at a time, flushing on key
   * change — O(ring) task memory, independent of both input size and
   * metrics-per-task. Publishing is per-file atomic replace
   * ([[WspWrite.publish]]); task retries re-publish identical images.
@@ -63,18 +65,25 @@ final class WspWriteBuilder(
   override def build(): Write = {
     require(roots.size == 1,
       s"wsp write needs exactly one destination directory, got $roots")
-    val opts = info.options
+    val schema = WspWriteBuilder.schemaOf(info.options)
+    WspBatchWriter.validateInput(info.schema())
+    new WspWrite2(roots.head, schema, info.schema(), mergeExisting, WspWrite.committed.value)
+  }
+}
+
+object WspWriteBuilder {
+  /** The header a write's options describe ([[WspWrite.schemaOptions]]
+    * renders them from a schema). */
+  private[sources] def schemaOf(opts: CaseInsensitiveStringMap): WhisperSchema = {
     val retStr = Option(opts.get("retentions")).getOrElse(
       throw new IllegalArgumentException(
         "wsp write requires .option(\"retentions\", \"1m:1d,...\") — " +
           "the whisper retention DSL"))
-    val schema = WhisperSchema(
+    WhisperSchema(
       Retentions.parseRetentionDefs(retStr),
       AggregationMethod.fromName(
         Option(opts.get("aggregationMethod")).getOrElse("average")),
       Option(opts.get("xFilesFactor")).map(_.toDouble).getOrElse(0.5))
-    WspBatchWriter.validateInput(info.schema())
-    new WspWrite2(roots.head, schema, info.schema(), mergeExisting)
   }
 }
 
@@ -82,7 +91,9 @@ final class WspWrite2(
     outDir: String,
     schema: WhisperSchema,
     inputSchema: StructType,
-    mergeExisting: Boolean) extends Write with RequiresDistributionAndOrdering {
+    mergeExisting: Boolean,
+    manifest: Option[collection.mutable.ArrayBuffer[(String, Long, Long)]])
+  extends Write with RequiresDistributionAndOrdering {
 
   // one writer per series: cluster by metric, SORT by metric. The sort
   // lets the writer hold ONE ring accumulator at a time and flush on
@@ -107,8 +118,10 @@ final class WspWrite2(
       factory()
     // publication is per-file atomic inside each task ([[WspWrite
     // .publish]]); there is nothing tree-wide to commit or roll back —
-    // whisper semantics, same as the reference's per-file UpdateMany
-    override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+    // whisper semantics, same as the reference's per-file UpdateMany.
+    // Commit only hands the tasks' manifest rows to the calling export
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      manifest.foreach(m => messages.foreach { case WspCommitMessage(rows) => m ++= rows })
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
 
@@ -131,7 +144,8 @@ final class WspWrite2(
   }
 }
 
-final case class WspCommitMessage(metrics: Long, points: Long)
+/** One task's manifest rows: (metric, n_points, bytes) per file written. */
+final case class WspCommitMessage(rows: Seq[(String, Long, Long)])
   extends WriterCommitMessage
 
 final class WspWriterFactory(
@@ -182,10 +196,10 @@ object WspBatchWriter {
   }
 }
 
-/** Accumulates rows into per-metric ring state, packs + publishes one
-  * `.wsp` per metric at commit. Columns resolved by NAME from the
-  * input schema; `spp`/`points`, when present, are cross-checked
-  * against the retention config.
+/** Accumulates rows into one metric's ring state at a time, packs and
+  * publishes its `.wsp` when the metric changes. Columns resolved by NAME
+  * from the input schema; `spp`/`points`, when present, are
+  * cross-checked against the retention config.
   */
 final class WspBatchWriter(
     outDir: String,
@@ -202,17 +216,24 @@ final class WspBatchWriter(
   private val iValue = inputSchema.fieldIndex("value")
   private val retentions = schema.retentions.toArray
 
-  // ONE live accumulator: rows arrive metric-sorted (requiredOrdering),
-  // so a key change flushes the finished series and frees its ring —
-  // task memory is O(ring), independent of how many metrics the task
-  // owns. `flushed` (names only) makes correctness independent of the
-  // sort actually holding: a reappearing metric merges into its own
-  // just-published file instead of truncating it in overwrite mode.
+  // ONE live metric: rows arrive metric-sorted (requiredOrdering), so a
+  // key change flushes the finished series and frees its ring — task
+  // memory is O(ring), independent of how many metrics the task owns.
+  // `written` (one manifest row per name) makes correctness independent
+  // of the sort actually holding: a reappearing metric merges into its
+  // own just-published file instead of truncating it in overwrite mode.
+  //
+  // Ring state is one-pass slot-level LWW: per archive keep the
+  // max-interval point of each slot CLASS (interval/spp mod N; the base
+  // choice only rotates slots, it never splits or merges classes), so a
+  // months-long backfill of a 1440-slot ring holds 1440 winners, not
+  // every input point — exactly what applying points in time order
+  // leaves behind.
   private var curMetric: String = null
-  private var curAcc: WspWrite.RingAccumulator = null
-  private var metricsOut = 0L
-  private var pointsOut = 0L
-  private val flushed = scala.collection.mutable.HashSet.empty[String]
+  private val slots = Array.fill(retentions.length)(
+    scala.collection.mutable.LongMap.empty[(Long, Double)])
+  private var curPoints = 0L
+  private val written = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
 
   override def write(row: InternalRow): Unit = {
     // whisper slots cannot represent nulls, and ACCEPT_ANY_SCHEMA means
@@ -243,27 +264,93 @@ final class WspBatchWriter(
     if (metric != curMetric) {
       flushCurrent()
       curMetric = metric
-      curAcc = new WspWrite.RingAccumulator(schema)
     }
-    curAcc.add(metric, a, row.getLong(iTs), row.getDouble(iValue))
+    val ts = row.getLong(iTs)
+    val v = row.getDouble(iValue)
+    val cls = java.lang.Math.floorMod(ts / r.secondsPerPoint, r.numberOfPoints.toLong)
+    val prev = slots(a).getOrNull(cls)
+    // the engine-wide LWW total order (Ingest.lwwKey: max_by(value,
+    // struct(ts, value))) — ties on ts break by LARGER value, never by
+    // row-arrival order, so a task retry or shuffled iteration order
+    // publishes the identical file image and the slot winner matches
+    // the relational U2 path and the DuckDB oracle
+    if (prev == null || ts > prev._1 || (ts == prev._1 && v > prev._2))
+      slots(a)(cls) = (ts, v)
+    curPoints += 1
   }
 
   private def flushCurrent(): Unit = if (curMetric != null) {
-    val merge = mergeExisting || flushed.contains(curMetric)
-    WspWrite.flushMetric(curMetric, curAcc, outDir, schema, merge, conf)
-    if (flushed.add(curMetric)) metricsOut += 1
-    pointsOut += curAcc.n
+    val (n, _) = written.getOrElse(curMetric, (0L, 0L))
+    val bytes = flush(curMetric, mergeExisting || written.contains(curMetric))
+    written(curMetric) = (n + curPoints, bytes)
+    slots.foreach(_.clear())
+    curPoints = 0L
     curMetric = null
-    curAcc = null
+  }
+
+  /** Pack the current metric's rings into `outDir/<metric>.wsp` and
+    * publish atomically; returns the file's size. Safe under task retry:
+    * re-flushing the same points is idempotent (slot-level LWW of
+    * identical data), and [[WspWrite.publish]] replaces whole file
+    * images only.
+    */
+  private def flush(metric: String, mergeFile: Boolean): Long = {
+    val expectedLen = WspCodec.fileSize(schema)
+    // graphite tree layout: metric path components become DIRECTORIES
+    // (`a.b.c` → `a/b/c.wsp`), the inverse of the read side's
+    // [[WspTable.metricFor]] ('/'→'.'), so an exported tree is what a
+    // stock graphite-web/go-carbon stack resolves — a flat `a.b.c.wsp`
+    // file is invisible to their finder. Round-trips through THIS
+    // engine's source are unaffected (metricFor recovers the same
+    // dotted name from either layout).
+    val path = new org.apache.hadoop.fs.Path(
+      outDir, s"${metric.replace('.', '/')}.wsp")
+    val fs = path.getFileSystem(conf)
+    val file =
+      if (mergeFile && fs.exists(path)) {
+        val st = fs.getFileStatus(path)
+        require(st.getLen == expectedLen,
+          s"$path: ${st.getLen} bytes, schema expects $expectedLen — " +
+            "refusing to merge into a file with a different retention config")
+        val bytes = new Array[Byte](expectedLen)
+        val in = fs.open(path)
+        try in.readFully(0, bytes) finally in.close()
+        // ring geometry must match exactly — same total size does not
+        // imply same (spp, points) layout, and a mismatched merge
+        // would scatter points into the wrong rings
+        val hdr = WspCodec.readHeader(bytes, path.toString)
+        require(
+          hdr.archives.map(a => (a.secondsPerPoint, a.numberOfPoints)) ==
+            schema.retentions.map(r => (r.secondsPerPoint, r.numberOfPoints)),
+          s"$path: on-disk archives ${hdr.archives} do not match schema " +
+            s"${schema.retentions} — refusing to merge")
+        bytes
+      } else WspCodec.emptyFile(schema)
+    WspCodec.archiveInfos(schema).zipWithIndex.foreach { case (info, i) =>
+      WspCodec.writeArchive(file, info, slots(i).values.toSeq)
+    }
+    // write-to-temp + publish: a killed task or a speculative duplicate
+    // attempt must never leave a truncated file (which would wedge
+    // every later merge on the length check), and a concurrent READER
+    // — the streaming-tail use case — must never see a missing file.
+    // The tmp lives in the DESTINATION's directory (a nested metric
+    // like a/b puts the file at outDir/a/b.wsp — a tmp rooted at
+    // outDir would make the publish a cross-directory move), so the
+    // replace is a same-dir atomic rename. See [[WspWrite.publish]] for
+    // the per-scheme guarantee.
+    val tmpPath = new org.apache.hadoop.fs.Path(path.getParent,
+      s".${path.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
+    WspWrite.publish(fs, conf, tmpPath, path, file)
+    file.length.toLong
   }
 
   override def commit(): WriterCommitMessage = {
     flushCurrent()
-    WspCommitMessage(metricsOut, pointsOut)
+    WspCommitMessage(written.iterator.map { case (m, (n, b)) => (m, n, b) }.toList)
   }
 
-  // nothing staged outside flushMetric's tmp files (swept by
+  // nothing staged outside flush's tmp files (swept by
   // [[WspWrite.vacuumTmp]]); published files are whole consistent images
   override def abort(): Unit = ()
-  override def close(): Unit = { curMetric = null; curAcc = null }
+  override def close(): Unit = ()
 }

@@ -137,10 +137,11 @@ object StreamIngest {
   /** Carbon-daemon-shaped sink: write a point stream into a live tree of
     * whisper `.wsp` files. Each micro-batch is F3-gated, U3-routed to
     * its level, LWW-aligned per level, then slot-merged into the tree
-    * ([[graft.sources.WspWrite.merge]]) — existing slots survive, rings
-    * lap, every archive keeps its established base. This is what the
-    * reference's companion daemon does to whisper files, distributed:
-    * one shuffle per batch keyed by metric, one writer task per file.
+    * ([[graft.sources.WspWrite.merge]], a `format("wsp")` append) —
+    * existing slots survive, rings lap, every archive keeps its
+    * established base. This is what the reference's companion daemon
+    * does to whisper files, distributed: one shuffle per batch
+    * clustered by metric, one writer task per file.
     * No propagation cascade here (carbon's whisper `update` propagates;
     * this sink writes routed levels only) — use [[tableWriter]] +
     * `WhisperTable.exportWsp` when cascade semantics must hold.

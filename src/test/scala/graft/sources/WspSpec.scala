@@ -557,7 +557,82 @@ class WspSpec extends AnyFunSuite {
         Seq(("cpu", 0, 1000L, 2.0)).toDF("metric", "archive", "bucket_ts", "value"),
         dir, other)
     }
-    assert(err.getMessage != null)
+    assert(causes(err).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("refusing to merge")), causes(err).map(_.getMessage).mkString(" | "))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** Files of `metrics` under `dir` are whole before the manifest is
+    * touched; the manifest holds one row per metric whose points sum to
+    * `nRows`, and collecting it twice runs no job and rewrites no file. */
+  private def checkWritten(manifest: org.apache.spark.sql.DataFrame, dir: String,
+      metrics: Seq[String], nRows: Long): Unit = {
+    val files = metrics.map(m => new java.io.File(dir, s"$m.wsp"))
+    assert(files.forall(f => f.isFile && f.length == WspCodec.fileSize(schema)))
+    val mtimes = files.map(_.lastModified)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext) {
+      rows = manifest.collect()
+      manifest.collect()
+    }
+    assert(jobs == 0)
+    assert(files.map(_.lastModified) == mtimes)
+    assert(rows.map(_.getString(0)).sorted.toSeq == metrics)
+    assert(rows.map(_.getLong(1)).sum == nRows)
+    assert(rows.forall(_.getLong(2) == WspCodec.fileSize(schema)))
+  }
+
+  test("export and merge write every file once before returning; the manifest needs no job") {
+    import spark.implicits._
+    val metrics = (0 until 20).map(i => f"m$i%02d")
+    // slots k..k+2 of each archive from 1200
+    def batch(k: Int) = for (m <- metrics; a <- 0 to 1; j <- k until k + 3)
+      yield (m, a, 1200L + j * schema.retentions(a).secondsPerPoint, j + 0.5)
+    val dir = tmp()
+    val b1 = batch(0)
+    checkWritten(WspWrite.export(b1.toDF("metric", "archive", "bucket_ts", "value")
+      .repartition(7), dir, schema), dir, metrics, b1.size)
+    val b2 = batch(3)
+    checkWritten(WspWrite.merge(b2.toDF("metric", "archive", "bucket_ts", "value")
+      .repartition(7), dir, schema), dir, metrics, b2.size)
+    // the merge kept batch 1's slots its own did not overwrite
+    assert(spark.read.format("wsp").load(dir).filter($"metric" === "m00" && $"archive" === 0)
+      .select("ts_s").as[Long].collect().sorted.toSeq == (1200L to 1250L by 10L))
+  }
+
+  test("export into a directory that does not exist yet creates it") {
+    import spark.implicits._
+    val dir = s"${tmp()}/not/yet"
+    val rows = Seq(("cpu", 0, 1000L, 1.0), ("mem", 1, 960L, 2.0), ("mem", 0, 1000L, 3.0))
+    checkWritten(WspWrite.export(rows.toDF("metric", "archive", "bucket_ts", "value"), dir, schema),
+      dir, Seq("cpu", "mem"), rows.size)
+  }
+
+  test("export refuses a null value or bucket_ts with the writer's named message") {
+    import spark.implicits._
+    val nullValue = Seq(("cpu", 0, 1000L, Some(1.0)), ("cpu", 0, 1010L, None))
+      .toDF("metric", "archive", "bucket_ts", "value")
+    val nullTs = Seq(("cpu", 0, Some(1000L), 1.0), ("cpu", 0, None, 2.0))
+      .toDF("metric", "archive", "bucket_ts", "value")
+    for (df <- Seq(nullValue, nullTs)) {
+      val chain = causes(intercept[org.apache.spark.SparkException] {
+        WspWrite.export(df, tmp(), schema)
+      }).map(t => String.valueOf(t.getMessage))
+      assert(chain.exists(_.contains("whisper points cannot be null")), chain.mkString(" | "))
+    }
+  }
+
+  test("schemaOptions round-trips every method, xFilesFactor and retention list") {
+    import scala.jdk.CollectionConverters._
+    for (method <- AggregationMethod.all; xff <- Seq(0.0, 0.1, 0.5, 1.0);
+         rets <- Seq(Retentions.std.retentions, schema.retentions)) {
+      val s = WhisperSchema(rets, method, xff)
+      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        WspWrite.schemaOptions(s).asJava)
+      assert(WspWriteBuilder.schemaOf(opts) == s, WspWrite.schemaOptions(s))
+    }
   }
 
   test("streaming read tails a live tree across merge writes") {
