@@ -20,6 +20,12 @@ import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Expression
   * from the same codegen'd [[DotProductF]] nodes the DataFrame path
   * uses, so SQL and Column queries plan identically), and
   * `parse_retention(str)` (whisper's retention DSL → archive structs).
+  *
+  * Optimizer rule: [[graft.plans.RollupRewrite]], which serves a
+  * re-aggregation of a materialized rollup level from the coarser level
+  * whose facts that level's `value` column carries. A session that
+  * exists before the query (built without these extensions) gets the
+  * rule from `RollupRewrite.setup`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -44,9 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
     e.injectFunction(fn("parse_retention", 1, classOf[ParseRetentions])(
       x => ParseRetentions(x.head)))
-    // materialized-rollup rewrite (aggregate navigator): serve coarser
-    // re-aggregations of a materialized level from the pre-materialized
-    // coarser table (see graft.plans.RollupRewrite)
+    // materialized-rollup rewrite (aggregate navigator)
     e.injectOptimizerRule(_ => graft.plans.RollupRewrite)
   }
 }

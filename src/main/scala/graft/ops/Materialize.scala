@@ -71,10 +71,11 @@ object Materialize {
   /** The materialization root for a data dir — derived from a digest of
     * the dir path plus the input's (mtime, length)
     * ([[Dedup.freshDigest]]), so two dirs materialized in one JVM never
-    * overwrite each other's levels (and [[graft.plans.RollupCatalog]],
-    * keyed by base, never serves one dir's queries from the other's
-    * files), and re-generating the data under an already-materialized
-    * path yields a NEW root instead of serving stale levels.
+    * overwrite each other's levels (and the rewrite, which never serves
+    * one chain from another, never serves one dir's queries from the
+    * other's files), and re-generating the data under an
+    * already-materialized path yields a NEW root instead of serving
+    * stale levels.
     */
   def rollupBase(s: SparkSession, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_rollups_" +
@@ -83,32 +84,26 @@ object Materialize {
   def createRollupTables(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = rollupBase(s, dir)
-    val rows = materialized.getOrElseUpdate(base, {
+    materialized.getOrElseUpdate(base, {
       // same lifecycle as the dedup-family shared indexes: swept at JVM
       // exit, and creating under a fresh key prunes superseded/dead-pid
       // siblings of the graft_rollups family
       Dedup.registerTmpRoot(base)
       materializeLevels(s, dir, base, AggregationMethod.Average, 0.0)
-    })
-    // re-register OUTSIDE the memo (idempotent): a memo hit skips the
-    // build thunk, so a RollupCatalog.clear() since the build would
-    // otherwise leave the rewrite silently disabled for this dir — and
-    // the serving keys' plans pinned on the rewrite would quietly fall
-    // back to the unrewritten aggregation
-    rows.map(_._2).sorted.foldLeft(0) { (parentSpp, spp) =>
-      graft.plans.RollupCatalog.register(graft.plans.RollupCatalog.LevelInfo(
-        spp, parentSpp, s"$base/points_${spp}s", base,
-        AggregationMethod.Average, 0.0))
-      spp
-    }
-    rows.toDF("level", "spp", "rows", "day_partitions").orderBy("spp")
+    }).toDF("level", "spp", "rows", "day_partitions").orderBy("spp")
   }
+
+  /** The std schema's levels under `base`, finest first. */
+  private def levels(base: String, method: AggregationMethod, xff: Double) =
+    graft.plans.RollupCatalog.chain(base, method, xff,
+      Retentions.std.retentions.map(_.secondsPerPoint))
 
   /** The materialization engine behind [[createRollupTables]],
     * parametrized by chain root / method / xff so alternative chains
     * (e.g. a Max chain for the decomposable-rewrite path) share the one
-    * implementation. Registers every written level with
-    * [[graft.plans.RollupCatalog]].
+    * implementation. Each level's `value` column carries the level's
+    * facts ([[graft.plans.RollupCatalog.metadata]]), which is what lets
+    * [[graft.plans.RollupRewrite]] serve from it.
     */
   def materializeLevels(
       s: SparkSession,
@@ -118,19 +113,19 @@ object Materialize {
       xff: Double): Seq[(String, Int, Long, Long)] = {
     import s.implicits._
     val pts = Buckets.points(s, dir)
-    var prev: Option[(DataFrame, Int)] = None
-    Retentions.std.retentions.map { r =>
-      val spp = r.secondsPerPoint
+    val chain = levels(base, method, xff)
+    var prev: Option[DataFrame] = None
+    chain.map { level =>
+      val spp = level.spp
       // single-pass cascade: level N derives from level N-1's written
       // output, not by re-folding from raw (the round-1 form was O(L²)
       // passes over the fact table)
       val lvl = prev match {
         case None => Ingest.lwwAlign(pts, spp)
-        case Some((p, pspp)) =>
-          Rollup.propagate(p, pspp, spp, method, xff)
+        case Some(p) =>
+          Rollup.propagate(p, level.parentSpp, spp, method, xff)
             .select(col("metric"), col("bucket_ts"), col("value"))
       }
-      val path = s"$base/points_${spp}s"
       // ONE materializing pass per level: the partitioned write itself.
       // The summary aggregation and the next level's derivation both
       // read the written parquet back (columnar, pruned — cheaper than
@@ -138,24 +133,19 @@ object Materialize {
       // Repartition by day first: otherwise each of the shuffle
       // partitions sprays a file into every day directory (32×30 ≈ 960
       // tiny files).
-      lvl.withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
+      lvl.withColumn("value",
+          col("value").as("value", graft.plans.RollupCatalog.metadata(chain, level)))
+        .withColumn("day", to_date(timestamp_seconds(col("bucket_ts"))))
         .repartition(col("day"))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-      // the rewrite rule and the serving keys cache resolved relations
-      // per level path (write-once dirs); this write is the one same-JVM
-      // event that changes a path's files, so drop those entries here
-      graft.plans.RollupRewrite.invalidateScan(path)
-      invalidateServe(path)
-      val written = s.read.parquet(path)
+        .write.mode("overwrite").partitionBy("day").parquet(level.path)
+      // read back WITHOUT the facts: the next level's derivation is the
+      // very aggregate the rewrite would serve from that next level's
+      // path, which this loop has not written yet
+      val written = s.read.schema(graft.plans.RollupCatalog.levelSchema())
+        .parquet(level.path)
       val (rows, days) = written
         .agg(count(lit(1)), countDistinct(col("day"))).as[(Long, Long)].head()
-      // make the level visible to the RollupRewrite optimizer rule:
-      // level `spp` is exactly this aggregation of its parent, so
-      // re-aggregates of the parent at this resolution may be served
-      // from it
-      graft.plans.RollupCatalog.register(graft.plans.RollupCatalog.LevelInfo(
-        spp, prev.map(_._2).getOrElse(0), path, base, method, xff))
-      prev = Some((written.select(col("metric"), col("bucket_ts"), col("value")), spp))
+      prev = Some(written.select(col("metric"), col("bucket_ts"), col("value")))
       (s"points_${spp}s", spp, rows, days)
     }
   }
@@ -168,16 +158,14 @@ object Materialize {
     * is by construction: the 1h table IS avg-of-5m with xff = 0.
     */
   def rollupServe1h(s: SparkSession, dir: String): DataFrame = {
-    createRollupTables(s, dir) // idempotent; registers the level catalog
-    if (!s.experimental.extraOptimizations.contains(graft.plans.RollupRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.RollupRewrite
+    createRollupTables(s, dir) // idempotent
+    graft.plans.RollupRewrite.setup(s)
     serve1hQuery(s, rollupBase(s, dir))
   }
 
   /** The serving aggregation itself — the PINNED mean
     * (round6(fixedSum/count)), not native avg: if the rewrite ever
-    * fails to fire (catalog cleared, matcher drift), the fallback
+    * fails to fire (metadata dropped, matcher drift), the fallback
     * aggregation must still hash-match the DuckDB oracle — native
     * double avg diverges at round6 midpoints (the r10 class).
     * [[graft.plans.RollupRewrite]] recognizes this exact shape
@@ -185,31 +173,13 @@ object Materialize {
     * round6 wrapper is idempotent over the stored values. Exposed so
     * the spec can pin rewritten ≡ fallback on the SAME query.
     */
-  private[graft] def serve1hQuery(s: SparkSession, base: String): DataFrame =
-    serveSrcFor(s).getOrElseUpdate(s"$base/points_300s",
-        s.read.parquet(s"$base/points_300s"))
+  private[graft] def serve1hQuery(s: SparkSession, base: String): DataFrame = {
+    val chain = levels(base, AggregationMethod.Average, 0.0)
+    graft.plans.RollupCatalog.read(s, chain, chain.find(_.spp == 300).get)
       .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), 3600).as("bucket_ts"))
       .agg(Rollup.mean6(col("value")).as("value"))
       .orderBy("metric", "bucket_ts")
-
-  /** Source DataFrames for the serving keys, per (session, level path):
-    * `spark.read.parquet` re-lists and re-infers the level directory on
-    * every call (~0.13 s at sf0.1 — the larger half of the r12
-    * `rollup_serve_1h` driver regression, alongside the rewrite rule's
-    * own in-rule read, cached in [[graft.plans.RollupRewrite]]). Level
-    * dirs are write-once per content-addressed root; the same-JVM
-    * rewrite case invalidates at the write site above. Per-session via
-    * [[SessionCache]] — a cached DataFrame strongly references its
-    * session, so weak keys alone leaked stopped sessions (r13 ADVICE);
-    * the cache evicts on application end instead.
-    */
-  private val serveSrc = new SessionCache[DataFrame]
-
-  private def serveSrcFor(s: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, DataFrame] =
-    serveSrc.forSession(s)
-
-  private def invalidateServe(path: String): Unit = serveSrc.invalidate(path)
+  }
 
   val rollupServe1hSql: String =
     s"""WITH ${Buckets.pointsSql},

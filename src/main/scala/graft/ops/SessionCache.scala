@@ -6,11 +6,10 @@ import org.apache.spark.sql.SparkSession
   * the session.
   *
   * The r13 form was a bare `WeakHashMap[SparkSession, TrieMap[...]]` in
-  * each call site — but the cached values (a `LogicalRelation`'s
-  * `HadoopFsRelation`, a `DataFrame`) strongly reference their owning
-  * session, so the value chain pinned the weak KEY and no entry could
-  * ever be collected: a stopped session plus its `InMemoryFileIndex`
-  * leaked for the JVM lifetime (r13 ADVICE). Weak keys alone cannot fix
+  * each call site — but a cached `DataFrame` strongly references its
+  * owning session, so the value chain pinned the weak KEY and no entry
+  * could ever be collected: a stopped session leaked for the JVM
+  * lifetime (r13 ADVICE). Weak keys alone cannot fix
   * a value→key strong reference; this helper evicts EXPLICITLY instead,
   * two ways:
   *
@@ -90,13 +89,6 @@ final class SessionCache[V] {
       }
       m
     }
-
-  /** Drop `path`'s entry in EVERY session's map — the write-site
-    * invalidation hook (a level directory was just rewritten).
-    */
-  def invalidate(path: String): Unit = cache.synchronized {
-    cache.values.forEach(m => { m.remove(path); () })
-  }
 
   /** Live session entries — test/introspection hook for the LRU cap. */
   private[ops] def size: Int = cache.synchronized(cache.size)

@@ -1,69 +1,101 @@
 package graft.plans
 
 import graft.model.AggregationMethod
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types._
 
-/** Registry of materialized rollup levels, consulted by [[RollupRewrite]].
-  * [[graft.ops.Materialize.createRollupTables]] registers each level it
-  * writes, with a pointer to the level it was derived from — the rewrite
-  * is only valid along that derivation edge (avg-of-avg is not avg, so a
-  * 1h level derived from 5m may only replace re-aggregations OF the 5m
-  * level, never of the 1m level).
+/** The facts of materialized rollup levels, carried by the levels
+  * themselves. [[graft.ops.Materialize.materializeLevels]] stamps them
+  * into the field metadata of each level's `value` column, and
+  * [[RollupRewrite]] reads them back from the relation it matches. The
+  * rewrite is only valid along a derivation edge (avg-of-avg is not avg,
+  * so a 1h level derived from 5m may only replace re-aggregations OF the
+  * 5m level, never of the 1m level), so every level carries its whole
+  * chain: each level's spp, the spp it was derived from and its gate.
   */
 object RollupCatalog {
 
   /** One materialized level. `base` names the chain it belongs to (one
     * chain per materialization root — levels of different chains never
-    * serve each other); `parentSpp` is the level it was derived from;
-    * `xff` the gate it was derived with.
+    * serve each other); `parentSpp` is the level it was derived from (0
+    * for the finest, aligned from raw points); `xff` the gate it was
+    * derived with.
     */
   final case class LevelInfo(
-      spp: Int, parentSpp: Int, path: String, base: String,
-      method: AggregationMethod, xff: Double)
-
-  private val levels =
-    new scala.collection.concurrent.TrieMap[(String, Int), LevelInfo]
-
-  def register(info: LevelInfo): Unit = {
-    levels.put((info.base, info.spp), info); ()
+      spp: Int, parentSpp: Int, base: String,
+      method: AggregationMethod, xff: Double) {
+    def path: String = s"$base/points_${spp}s"
   }
-  def clear(): Unit = levels.clear()
-  def isEmpty: Boolean = levels.isEmpty
 
-  def lookup(base: String, spp: Long): Option[LevelInfo] =
-    if (spp.isValidInt) levels.get((base, spp.toInt)) else None
-
-  /** The level whose storage location equals `root`: URI paths must
-    * match AND schemes AND authorities must agree when both sides carry
-    * one — a remote filesystem mirroring the local tmp layout
-    * (scheme), or a different bucket/namenode with the same layout
-    * (authority: `s3://bucketA/x` vs `s3://bucketB/x`), must never be
-    * served the local materialized table.
+  /** The chain of levels at `spps`, finest first, each derived from the
+    * one before it.
     */
-  def levelAtPath(root: org.apache.hadoop.fs.Path): Option[LevelInfo] =
-    levels.values.find { i =>
-      val reg = new org.apache.hadoop.fs.Path(i.path).toUri
-      val got = root.toUri
-      def agree(a: String, b: String) = a == null || b == null || a == b
-      reg.getPath == got.getPath &&
-        agree(reg.getScheme, got.getScheme) &&
-        agree(reg.getAuthority, got.getAuthority)
-    }
+  def chain(base: String, method: AggregationMethod, xff: Double, spps: Seq[Int]): Seq[LevelInfo] =
+    spps.zip(0 +: spps).map { case (spp, parent) => LevelInfo(spp, parent, base, method, xff) }
+
+  private def key(fact: String) = s"graft.rollup.$fact"
+
+  /** The `value` field metadata stating `level` of `chain`. Field
+    * metadata holds no nested arrays, so the chain is one flat string of
+    * `spp:parentSpp:xff` entries, e.g. `"60:0:0.0,300:60:0.0,…"`.
+    */
+  def metadata(chain: Seq[LevelInfo], level: LevelInfo): Metadata = new MetadataBuilder()
+    .putLong(key("spp"), level.spp).putString(key("base"), level.base)
+    .putString(key("method"), level.method.name)
+    .putString(key("chain"), chain.map(l => s"${l.spp}:${l.parentSpp}:${l.xff}").mkString(","))
+    .build()
+
+  /** The level `m` states, with its chain; None for any other column. */
+  def fromMetadata(m: Metadata): Option[(LevelInfo, Seq[LevelInfo])] =
+    Option.when(m.contains(key("chain"))) {
+      val method = AggregationMethod.fromName(m.getString(key("method")))
+      m.getString(key("chain")).split(',').toSeq.map(_.split(':')).map {
+        case Array(spp, parent, xff) =>
+          LevelInfo(spp.toInt, parent.toInt, m.getString(key("base")), method, xff.toDouble)
+      }
+    }.flatMap(chain => chain.find(_.spp == m.getLong(key("spp"))).map((_, chain)))
+
+  /** The columns of a level's files plus its `day` partition column,
+    * with `facts` on `value`.
+    */
+  def levelSchema(facts: Metadata = Metadata.empty): StructType = StructType(Seq(
+    StructField("metric", StringType), StructField("bucket_ts", LongType),
+    StructField("value", DoubleType, nullable = true, facts), StructField("day", DateType)))
+
+  /** Read `level` of `chain` with its facts on `value`. The schema is
+    * stated, so the read opens no footer to infer it.
+    */
+  def read(s: SparkSession, chain: Seq[LevelInfo], level: LevelInfo): DataFrame =
+    s.read.schema(levelSchema(metadata(chain, level))).parquet(level.path)
+
+  /** Whether `root` is `level`'s own location: URI paths must match AND
+    * schemes AND authorities must agree when both sides carry one — a
+    * remote filesystem mirroring the local tmp layout (scheme), or a
+    * different bucket/namenode with the same layout (authority:
+    * `s3://bucketA/x` vs `s3://bucketB/x`), is not the level. A copy of a
+    * level elsewhere keeps the metadata but is no level either.
+    */
+  def storedAt(level: LevelInfo, root: org.apache.hadoop.fs.Path): Boolean = {
+    val (own, got) = (new org.apache.hadoop.fs.Path(level.path).toUri, root.toUri)
+    def agree(part: java.net.URI => String) =
+      part(own) == null || part(got) == null || part(own) == part(got)
+    own.getPath == got.getPath && agree(_.getScheme) && agree(_.getAuthority)
+  }
 
   /** Whether `target` can legally serve a `target.method`-aggregation of
-    * level `finer` at `target.spp` resolution.
+    * level `finer` at `target.spp` resolution, both levels of `chain`.
     *
     * Any xFilesFactor gate above 0 disqualifies a level outright — even
     * on its direct derivation edge: a gated level DROPPED buckets whose
     * fill ratio fell below the gate, so it answers a user's plain
-    * (ungated) re-aggregation with fewer rows. Both registered cascades
-    * use xff 0.0, but `materializeLevels` is public API parametrized by
-    * xff, so the guard must hold structurally.
+    * (ungated) re-aggregation with fewer rows. Both materialized
+    * cascades use xff 0.0, but `materializeLevels` is public API
+    * parametrized by xff, so the guard must hold structurally.
     *
     * With the chain ungated, direct edges are exact (the target IS that
     * aggregation of its parent). Across a SKIPPED level the rewrite is
@@ -72,7 +104,8 @@ object RollupCatalog {
     * aggregate. Average never composes (avg-of-avg ≠ avg), so it stays
     * direct-edge-only.
     */
-  def servableFrom(finer: LevelInfo, target: LevelInfo): Boolean = {
+  def servableFrom(
+      chain: Seq[LevelInfo], finer: LevelInfo, target: LevelInfo): Boolean = {
     if (target.base != finer.base || target.method != finer.method) false
     else if (target.xff != 0.0) false
     else if (target.parentSpp == finer.spp) true
@@ -91,8 +124,8 @@ object RollupCatalog {
         case _ => false
       }
       decomposable && target.parentSpp > finer.spp &&
-        lookup(target.base, target.parentSpp)
-          .exists(p => servableFrom(finer, p))
+        chain.find(_.spp == target.parentSpp)
+          .exists(p => servableFrom(chain, finer, p))
     }
   }
 }
@@ -113,72 +146,49 @@ object RollupCatalog {
   * value is the level's GRID-QUANTIZED mean (stored values round to 6
   * decimals at emission — the engine's canonical average semantics at
   * every output edge), which can differ from the full-mantissa double
-  * mean by ≤5e-7: callers needing unquantized means must not register
-  * the catalog for those tables. Serving the scan of the coarser table
-  * skips both the (spp-ratio×) larger scan and the whole shuffle — at 100 TB this is the
-  * difference between reading the 1h archive (~0.03% of raw) and
+  * mean by ≤5e-7. Serving the scan of the coarser table skips both the
+  * (spp-ratio×) larger scan and the whole shuffle — at 100 TB this is
+  * the difference between reading the 1h archive (~0.03% of raw) and
   * re-shuffling the 5m archive. For DECOMPOSABLE methods (max, min, and
   * sum under xff = 0) the rewrite also fires across skipped levels —
   * max-of-max over exactly-nested windows is the flat max — while
   * Average stays direct-edge-only (avg-of-avg ≠ avg); see
   * [[RollupCatalog.servableFrom]].
   *
+  * The rule has no state of its own: a relation is a level when its
+  * `value` column carries the facts [[RollupCatalog.metadata]] states and
+  * it reads exactly that level's location ([[RollupCatalog.storedAt]]).
+  * A writer that drops the metadata disables the rewrite for its copy;
+  * the unrewritten aggregation stays exact.
+  *
   * Deployment: injected via [[graft.functions.GraftExtensions]]
-  * (`spark.sql.extensions`) or per-session through
-  * `spark.experimental.extraOptimizations`. Matching is conservative: the
-  * rule fires only on the canonical align shape
-  * `cast(floor(bucket_ts / S) * S as long)` (what [[graft.ops.Buckets.alignTs]]
-  * emits) over a direct scan (optionally a column-pruning Project and/or
-  * Filters on the metric column — the common "one metric, coarse
-  * resolution" fetch; metric selection commutes with the aggregation and
-  * is preserved above the substituted scan) of a registered level,
-  * grouped by columns named `metric`/`bucket_ts` and aggregating `value`
-  * with the level's own method — anything else is left untouched.
+  * (`spark.sql.extensions`), or added to a running session once by
+  * [[setup]]. Matching is conservative: the rule fires only on the
+  * canonical align shape `cast(floor(bucket_ts / S) * S as long)` (what
+  * [[graft.ops.Buckets.alignTs]] emits) over a direct scan (optionally a
+  * column-pruning Project and/or Filters on the metric column — the
+  * common "one metric, coarse resolution" fetch; metric selection
+  * commutes with the aggregation and is preserved above the substituted
+  * scan) of a level, grouped by columns named `metric`/`bucket_ts` and
+  * aggregating `value` with the level's own method — anything else is
+  * left untouched.
   */
 object RollupRewrite extends Rule[LogicalPlan] {
 
+  /** Add the rule to `session`'s extra optimizations, once. Sessions
+    * built with [[graft.functions.GraftExtensions]] already run it; this
+    * covers a session that exists before the query does (the driver's,
+    * or one shared through `getOrCreate`, where extensions apply only at
+    * construction).
+    */
+  def setup(session: SparkSession): Unit =
+    if (!session.experimental.extraOptimizations.contains(RollupRewrite))
+      session.experimental.extraOptimizations =
+        session.experimental.extraOptimizations :+ RollupRewrite
+
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (RollupCatalog.isEmpty) plan
-    else plan.transformUp {
-      case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
-    }
-
-  /** Resolved relation for a level path, cached per (session, path).
-    *
-    * The substituted scan used to be built with `session.read.parquet`
-    * INSIDE the rule — a full file listing + schema inference of the
-    * level directory on EVERY optimizer pass over a matching plan (and
-    * `df.count()` plans again), which the r12 driver measured as a
-    * consistent ~0.3 s/query regression on `rollup_serve_1h`. Level
-    * directories are write-once per materialization root (roots are
-    * content-addressed by input digest), so the resolved
-    * `LogicalRelation` — whose `HadoopFsRelation` owns the expensive
-    * `InMemoryFileIndex` — is safely reusable; the one same-JVM rewrite
-    * case ([[graft.ops.Materialize.materializeLevels]] overwriting a
-    * path it wrote before) invalidates explicitly at write time.
-    *
-    * Each USE goes through `newInstance()` for fresh output ExprIds: a
-    * single query may rewrite several aggregates onto the same level
-    * (e.g. a union of re-aggregations), and duplicate attribute ids in
-    * one tree corrupt resolution after analysis has already run.
-    */
-  // per-session outer map with EXPLICIT application-end eviction
-  // (graft.ops.SessionCache): the cached LogicalRelation strongly
-  // references its session through HadoopFsRelation, so a bare weak-key
-  // map could never collect a stopped session (r13 ADVICE)
-  private val scanCache = new graft.ops.SessionCache[LogicalRelation]
-
-  private def cachedRelation(
-      session: SparkSession, path: String): LogicalRelation =
-    scanCache.forSession(session).getOrElseUpdate(path,
-      session.read.parquet(path).queryExecution.analyzed.collectFirst {
-        case l: LogicalRelation => l
-      }.getOrElse(sys.error(s"level read did not analyze to a relation: $path")))
-
-  /** Drop cached relations for a level path whose files just changed —
-    * called by the materializer after (re)writing a level directory.
-    */
-  def invalidateScan(path: String): Unit = scanCache.invalidate(path)
+    if (!plan.exists { case l: LogicalRelation => levelOf(l).isDefined; case _ => false }) plan
+    else plan.transformUp { case agg: Aggregate => tryRewrite(agg).getOrElse(agg) }
 
   // ---- matching helpers -------------------------------------------------
 
@@ -251,13 +261,19 @@ object RollupRewrite extends Rule[LogicalPlan] {
       case a: Attribute if binds.contains(a.exprId) => binds(a.exprId)
     }
 
-  private def levelOf(rel: LogicalRelation): Option[RollupCatalog.LevelInfo] =
+  /** The level `rel` reads, with its chain and file relation: the facts
+    * its `value` column carries, honoured only while its single root is
+    * that level's own location.
+    */
+  private def levelOf(rel: LogicalRelation)
+      : Option[(HadoopFsRelation, RollupCatalog.LevelInfo, Seq[RollupCatalog.LevelInfo])] =
     rel.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.toSeq match {
-          case Seq(root) => RollupCatalog.levelAtPath(root)
-          case _ => None
-        }
+      case h: HadoopFsRelation => for {
+          value <- rel.output.find(_.name == "value")
+          (level, chain) <- RollupCatalog.fromMetadata(value.metadata)
+          roots = h.location.rootPaths
+          if roots.length == 1 && RollupCatalog.storedAt(level, roots.head)
+        } yield (h, level, chain)
       case _ => None
     }
 
@@ -348,7 +364,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     for {
       (rel, binds, filters) <- dealias(agg.child)
-      finer <- levelOf(rel)
+      (files, finer, chain) <- levelOf(rel)
       // a filter below the Aggregate must commute with it to survive the
       // substitution: selecting on the group-preserved dimension column
       // (metric) filters whole groups, so applying it above the coarser
@@ -372,8 +388,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
           })
         case _ => None
       }
-      coarser <- RollupCatalog.lookup(finer.base, alignedSpp)
-      if RollupCatalog.servableFrom(finer, coarser)
+      coarser <- chain.find(_.spp == alignedSpp)
+      if RollupCatalog.servableFrom(chain, finer, coarser)
       // result exprs: the two groupings plus AT MOST one matching
       // aggregate — zero is the column-pruned shape `df.count()` leaves
       // behind (grouping keys only), which the coarser level also
@@ -386,12 +402,11 @@ object RollupRewrite extends Rule[LogicalPlan] {
       // resolve the substituted scan under the SESSION THAT OWNS the
       // matched relation, never the thread-local active one — in a
       // multi-session JVM the singleton rule can run while another
-      // session (with different conf/catalog) is active
-      val session = rel.relation match {
-        case h: HadoopFsRelation => h.sparkSession
-        case _ => SparkSession.active
-      }
-      val level = cachedRelation(session, coarser.path).newInstance()
+      // session (with different conf/catalog) is active. Each rewrite
+      // analyzes its own read, so two aggregates served from one level
+      // in one query get distinct output ExprIds
+      val level = RollupCatalog.read(files.sparkSession, chain, coarser)
+        .queryExecution.analyzed
       val byName = level.output.map(a => a.name -> a).toMap
       val (sMetric, sBucket, sValue) =
         (byName("metric"), byName("bucket_ts"), byName("value"))
@@ -437,8 +452,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
       // both shapes substitute to a pure Project — no re-group: a
       // level's (metric, bucket_ts) rows are key-UNIQUE by construction
       // (each written from a groupBy on exactly those keys by
-      // [[graft.ops.Materialize.materializeLevels]], the only writer of
-      // catalog-registered paths), so the original Aggregate's distinct
+      // [[graft.ops.Materialize.materializeLevels]], the only writer
+      // that stamps level facts), so the original Aggregate's distinct
       // key set IS the level's row set and a re-group would re-shuffle
       // the whole level for nothing
       Project(projected, filtered)

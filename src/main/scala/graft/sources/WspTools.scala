@@ -367,7 +367,8 @@ object WspTools {
     val conf = WspTable.taskConf(spark)
     val methodId = method.map(_.id)
     import spark.implicits._
-    val manifest = spark.sparkContext
+    // the patch runs here, once; the manifest is its collected rows
+    spark.sparkContext
       .parallelize(all, math.min(256, math.max(1, all.size / 64)))
       .mapPartitions { paths =>
         paths.map { case (p, len) =>
@@ -399,7 +400,7 @@ object WspTools {
           (p, h.aggregationType, h.xFilesFactor.toDouble, !already)
         }
       }
+      .collect().toSeq
       .toDF("path", "old_method", "old_xff", "patched")
-    manifest.localCheckpoint(true) // run the rewrite NOW, exactly once
   }
 }

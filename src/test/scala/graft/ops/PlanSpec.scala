@@ -601,9 +601,7 @@ class PlanSpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_rollups_max"
     Materialize.materializeLevels(spark, dir, base,
       graft.model.AggregationMethod.Max, 0.0)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RollupRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RollupRewrite
+    graft.plans.RollupRewrite.setup(spark)
     // 1m → 1h SKIPS the 5m derivation edge, but max-of-max over nested
     // windows composes exactly: the rewrite must fire transitively
     val q = spark.read.parquet(s"$base/points_60s")
@@ -622,7 +620,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("RollupRewrite leaves non-derivation-edge aggregates untouched") {
     import org.apache.spark.sql.functions._
-    Materialize.rollupServe1h(spark, dir) // ensures catalog + rule active
+    Materialize.rollupServe1h(spark, dir) // ensures levels + rule active
     val base = Materialize.rollupBase(spark, dir)
     // 1m → 1h skips the 5m derivation edge: avg-of-avg would be wrong,
     // so the rule must NOT fire and the plan keeps its Aggregate
@@ -639,7 +637,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("RollupRewrite fires through a metric filter and preserves it") {
     import org.apache.spark.sql.functions._
-    Materialize.rollupServe1h(spark, dir) // ensures catalog + rule active
+    Materialize.rollupServe1h(spark, dir) // ensures levels + rule active
     val base = Materialize.rollupBase(spark, dir)
     // the most common real fetch shape: ONE metric at a coarse resolution
     val q = spark.read.parquet(s"$base/points_300s")
@@ -676,30 +674,27 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("servableFrom refuses any chain with a nonzero xFF gate") {
-    // structural guard, tested at the catalog level (materializing a
+    // structural guard, tested on chain values (materializing a
     // gated chain on this sparse testdata empties mid-cascade): a gated
     // level DROPPED low-fill buckets, so it must not answer a user's
     // plain re-aggregation — not even on its direct derivation edge
     import graft.plans.RollupCatalog._
     import graft.model.AggregationMethod.Max
-    val g = "plan-spec-gated-chain"
-    val g60 = LevelInfo(60, 0, s"/tmp/$g/60", g, Max, 0.0)
-    val g300 = LevelInfo(300, 60, s"/tmp/$g/300", g, Max, 0.5)
-    val g3600 = LevelInfo(3600, 300, s"/tmp/$g/3600", g, Max, 0.0)
-    Seq(g60, g300, g3600).foreach(register)
-    assert(!servableFrom(g60, g300), "gated direct edge served")
-    assert(!servableFrom(g60, g3600), "gated Max intermediate served")
+    val g = "/tmp/plan-spec-gated-chain"
+    val g60 = LevelInfo(60, 0, g, Max, 0.0)
+    val g300 = LevelInfo(300, 60, g, Max, 0.5)
+    val g3600 = LevelInfo(3600, 300, g, Max, 0.0)
+    val gated = Seq(g60, g300, g3600)
+    assert(!servableFrom(gated, g60, g300), "gated direct edge served")
+    assert(!servableFrom(gated, g60, g3600), "gated Max intermediate served")
     // the direct edge ABOVE the gated level stays exact: g3600 was
     // derived ungated from g300-as-stored, so re-aggregating the g300
     // table itself is servable
-    assert(servableFrom(g300, g3600))
+    assert(servableFrom(gated, g300, g3600))
     // control: the identical chain ungated serves transitively
-    val u = "plan-spec-ungated-chain"
-    val u60 = LevelInfo(60, 0, s"/tmp/$u/60", u, Max, 0.0)
-    val u300 = LevelInfo(300, 60, s"/tmp/$u/300", u, Max, 0.0)
-    val u3600 = LevelInfo(3600, 300, s"/tmp/$u/3600", u, Max, 0.0)
-    Seq(u60, u300, u3600).foreach(register)
-    assert(servableFrom(u60, u3600) && servableFrom(u60, u300))
+    val ungated = chain("/tmp/plan-spec-ungated-chain", Max, 0.0, Seq(60, 300, 3600))
+    val Seq(u60, u300, u3600) = ungated
+    assert(servableFrom(ungated, u60, u3600) && servableFrom(ungated, u60, u300))
   }
 
   test("RollupRewrite serves Last (max_by) chains transitively") {
@@ -707,9 +702,7 @@ class PlanSpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_rollups_last"
     Materialize.materializeLevels(spark, dir, base,
       graft.model.AggregationMethod.Last, 0.0)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RollupRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RollupRewrite
+    graft.plans.RollupRewrite.setup(spark)
     // 1m → 1h skips the 5m edge; last-of-last composes like max
     val q = spark.read.parquet(s"$base/points_60s")
       .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), 3600).as("bucket_ts"))
@@ -729,9 +722,7 @@ class PlanSpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_rollups_absmax"
     Materialize.materializeLevels(spark, dir, base,
       graft.model.AggregationMethod.AbsMax, 0.0)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RollupRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RollupRewrite
+    graft.plans.RollupRewrite.setup(spark)
     // 1m → 1h skips the 5m edge; the earliest-first magnitude winner
     // composes exactly (servableFrom scaladoc) — the canonical
     // aggColumn struct shape must be recognized and rewritten away
@@ -749,18 +740,61 @@ class PlanSpec extends AnyFunSuite {
     assert(got == direct)
     // AvgZero must NOT compose across a skipped edge (it would divide by
     // the window size twice). methodMatches has no AvgZero shape today,
-    // so a plan-level check would pass vacuously — pin the catalog rule
+    // so a plan-level check would pass vacuously — pin the chain rule
     // itself: direct edge servable, skipped edge refused
-    import graft.plans.RollupCatalog.{LevelInfo, servableFrom}
-    def az(spp: Int, parent: Int) = LevelInfo(spp, parent, s"/az/$spp", "az",
-      graft.model.AggregationMethod.AvgZero, 0.0)
-    val (az60, az300, az3600) = (az(60, 0), az(300, 60), az(3600, 300))
-    graft.plans.RollupCatalog.register(az60)
-    graft.plans.RollupCatalog.register(az300)
-    graft.plans.RollupCatalog.register(az3600)
-    assert(servableFrom(az300, az3600), "direct avg_zero edge must serve")
-    assert(!servableFrom(az60, az3600),
+    import graft.plans.RollupCatalog.{chain, servableFrom}
+    val az = chain("/az", graft.model.AggregationMethod.AvgZero, 0.0, Seq(60, 300, 3600))
+    val Seq(az60, az300, az3600) = az
+    assert(servableFrom(az, az300, az3600), "direct avg_zero edge must serve")
+    assert(!servableFrom(az, az60, az3600),
       "avg_zero served across a skipped edge (double-divides the window)")
+  }
+
+  test("a copy of a level keeps its facts but is not served as that level") {
+    import org.apache.spark.sql.functions._
+    Materialize.rollupServe1h(spark, dir) // ensures levels + rule active
+    val base = Materialize.rollupBase(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_level_copy")
+    try {
+      // same last path segment as the level: only the full path differs
+      val copy = s"$tmp/points_300s"
+      spark.read.parquet(s"$base/points_300s").write.parquet(copy)
+      def at1h(level: String) = spark.read.parquet(level)
+        .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), 3600).as("bucket_ts"))
+        .agg(avg(col("value")).as("value"))
+      assert(graft.plans.RollupCatalog.fromMetadata(
+          spark.read.parquet(copy).schema("value").metadata).isDefined,
+        "the copy lost the level metadata")
+      val copied = at1h(copy)
+      assert(hasAggregate(copied), "a copy was served as the level it was copied from")
+      assert(!scannedPaths(copied).exists(_.contains("points_3600s")))
+      // control: the same aggregation of the level itself is served
+      assert(!hasAggregate(at1h(s"$base/points_300s")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("with the Average and Max chains both materialized, Max is served from the Max chain") {
+    import org.apache.spark.sql.functions._
+    Materialize.rollupServe1h(spark, dir) // the Average chain + the rule
+    val avgBase = Materialize.rollupBase(spark, dir)
+    val maxBase = s"${System.getProperty("java.io.tmpdir")}/graft_rollups_max"
+    Materialize.materializeLevels(spark, dir, maxBase,
+      graft.model.AggregationMethod.Max, 0.0)
+    def maxAt1h(level: String) = spark.read.parquet(level)
+      .groupBy(col("metric"), Buckets.alignTs(col("bucket_ts"), 3600).as("bucket_ts"))
+      .agg(max(col("value")).as("value"))
+    val fromMax = maxAt1h(s"$maxBase/points_300s")
+    assert(!hasAggregate(fromMax), "Max re-aggregation of the Max chain not served")
+    assert(scannedPaths(fromMax).nonEmpty &&
+      scannedPaths(fromMax).forall(_.endsWith("graft_rollups_max/points_3600s")),
+      s"served from outside the Max chain's 1h level: ${scannedPaths(fromMax)}")
+    // Max over the Average chain's level is not that chain's method: it
+    // stays an aggregation of its own level, never a Max-chain scan
+    val fromAvg = maxAt1h(s"$avgBase/points_300s")
+    assert(hasAggregate(fromAvg), "Max served from the Average chain")
+    val avgRoot = new java.io.File(avgBase).getName
+    assert(scannedPaths(fromAvg).forall(_.endsWith(s"$avgRoot/points_300s")),
+      s"Average-chain Max read another level: ${scannedPaths(fromAvg)}")
   }
 
   test("dedup_incremental probes the bloom in-plan; confirm join stays anti") {

@@ -45,16 +45,4 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(c.size <= SessionCache.MaxSessions, "eviction never fired")
     assert(c.forSession(hot).get("p").contains("hot"))
   }
-
-  test("invalidate drops the path in every resident session") {
-    val c = new SessionCache[String]
-    val a = spark.newSession()
-    val b = spark.newSession()
-    c.forSession(a).put("p", "va"); c.forSession(a).put("q", "qa")
-    c.forSession(b).put("p", "vb")
-    c.invalidate("p")
-    assert(c.forSession(a).get("p").isEmpty)
-    assert(c.forSession(b).get("p").isEmpty)
-    assert(c.forSession(a).get("q").contains("qa"))
-  }
 }

@@ -417,7 +417,10 @@ class WspSpec extends AnyFunSuite {
       bad.write.format("wsp").option("retentions", "10s:6")
         .mode("overwrite").save(dir)
     }
-    assert(e.getMessage != null)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => Option(c.getMessage)
+        .exists(_.contains("whisper points cannot be null"))),
+      s"no null-point error in the cause chain: $e")
     // overwrite with MANY metrics through the sorted flush-on-key-change
     // path: every file lands complete (one ring live at a time)
     val many = (0 until 40).map(i => (s"m$i", 0, 1000L + (i % 6) * 10, i.toDouble))
@@ -983,10 +986,20 @@ class WspSpec extends AnyFunSuite {
     WspWrite.export(Seq(
       ("cpu", 0, 1000L, 1.5), ("mem", 1, 960L, 2.5))
       .toDF("metric", "archive", "bucket_ts", "value"), dir, schema)
-    val manifest = WspTools.rewriteHeaders(spark, dir,
+    val rewritten = WspTools.rewriteHeaders(spark, dir,
       Some(AggregationMethod.Max), Some(0.25))
-      .collect().map(r => (r.getInt(1), r.getDouble(2), r.getBoolean(3))).toSet
-    assert(manifest == Set((2, 0.0, true))) // both files were Sum/0.0
+    // the patch ran inside the call: the manifest is driver-local rows,
+    // so collecting it runs no job, and no file changes again
+    def mtimes = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".wsp")).map(f => f.getName -> f.lastModified).toMap
+    def manifest() = rewritten.collect().toSeq
+      .map(r => (r.getInt(1), r.getDouble(2), r.getBoolean(3)))
+    val stamped = mtimes
+    val jobs = org.apache.spark.graftprobe.Jobs.counted(spark.sparkContext)(
+      assert(manifest() == manifest()))
+    assert(jobs == 0, s"collecting the manifest twice ran $jobs jobs")
+    assert(stamped.size == 2 && mtimes == stamped, "a file changed after the call")
+    assert(manifest().toSet == Set((2, 0.0, true))) // both files were Sum/0.0
     // idempotent: a second run (the task-retry shape) finds both headers
     // already patched, touches nothing, and reports the CURRENT values
     // with patched=false — not the pre-rewrite ones
